@@ -169,3 +169,60 @@ def test_src_log_files_later_compact_and_warning(tmp_path):
         assert SS._src_log_files(str(ck), 43) == []
     assert len(rec) == 1
     assert "no entry covering batch 42" in str(rec[0].message)
+
+
+def _write_src_log(logdir, name: str, entries: list) -> None:
+    import json
+
+    os.makedirs(logdir, exist_ok=True)
+    with open(os.path.join(logdir, name), "w") as f:
+        f.write("v1\n")
+        for e in entries:
+            f.write(json.dumps(e) + "\n")
+
+
+def test_src_log_files_compacted_empty_batch_is_silent(tmp_path):
+    """An empty batch whose per-batch entry was compacted away: a
+    compact at or past its id covers it, so [] comes back without the
+    layout warning."""
+    import warnings
+
+    import ziggurat_spark.queries.streaming_surface as SS
+
+    ck = tmp_path / "ck"
+    logdir = ck / "sources" / "0"
+    # batch 4 read no files; batches 3 and 5 did, all folded into 9
+    _write_src_log(
+        logdir,
+        "9.compact",
+        [
+            {"path": "file:/a.parquet", "batchId": 3},
+            {"path": "file:/b.parquet", "batchId": 5},
+        ],
+    )
+    SS._SRC_LOG_WARNED.clear()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert SS._src_log_files(str(ck), 4) == []
+        assert SS._src_log_files(str(ck), 9) == []
+    assert SS._SRC_LOG_WARNED == []
+    assert SS._src_log_files(str(ck), 5) == ["file:/b.parquet"]
+
+
+def test_src_log_files_uncovered_batch_warns(tmp_path):
+    """A batch past every compact and with no per-batch file is not
+    covered by the log at all: the layout warning still fires."""
+    import warnings
+
+    import ziggurat_spark.queries.streaming_surface as SS
+
+    ck = tmp_path / "ck"
+    logdir = ck / "sources" / "0"
+    _write_src_log(logdir, "9.compact", [{"path": "file:/a.parquet", "batchId": 3}])
+    _write_src_log(logdir, "10", [{"path": "file:/c.parquet"}])
+    SS._SRC_LOG_WARNED.clear()
+    with warnings.catch_warnings(record=True) as rec:
+        warnings.simplefilter("always")
+        assert SS._src_log_files(str(ck), 11) == []
+    assert len(rec) == 1
+    assert "no entry covering batch 11" in str(rec[0].message)

@@ -370,6 +370,134 @@ def test_handler_sees_rabbitmq_retry_count(spark, engine, envelope_df):
     assert seen[1] == {1}
 
 
+# -- the one-tally job chain and the tally's failure/split paths ---------
+
+#: a horizon that leaves part of the (January) events table stale
+STALE_NOW = datetime(2024, 1, 20, tzinfo=timezone.utc)
+WEEK_S = 7 * 86400
+
+
+def _next_job_id(spark) -> int:
+    """The JVM's monotone job counter (one read is ~0.2 ms)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_process_batch_job_count_pin(spark, engine, envelope_df):
+    """One tally per batch: a batch with every outcome class plus stale
+    rows runs two cache builds, the tally's map and result jobs, and
+    the retry and dead-set appends — six jobs, no probe or recount."""
+    route = make_route(
+        engine, channels={"audit": lambda df: None}, oldest_processed_s=WEEK_S
+    )
+    j0 = _next_job_id(spark)
+    stats = engine.process_batch(route, envelope_df, now=STALE_NOW)
+    jobs = _next_job_id(spark) - j0
+    for cls in ("success", "skip", "retry", "dead_letter", "channel"):
+        assert getattr(stats, cls) > 0, cls
+    assert 0 < stats.stale_dropped < 1000
+    assert jobs == 6
+
+
+def test_pump_cycle_job_count_pin(spark, engine, envelope_df):
+    """A pump cycle over main-route retry rows: one schema inference,
+    the inflight write, one per-channel count aggregation (map +
+    result), the residue probe, and the redelivered batch's five jobs
+    (its rows all retry again, so one append)."""
+    route = make_route(
+        engine, channels={"audit": lambda df: None}, oldest_processed_s=WEEK_S
+    )
+    stats = engine.process_batch(route, envelope_df, now=STALE_NOW)
+    assert stats.retry > 0
+    j0 = _next_job_id(spark)
+    pumped = engine.pump_retries(
+        "events", now=STALE_NOW + timedelta(seconds=1)
+    )
+    jobs = _next_job_id(spark) - j0
+    assert pumped == stats.retry
+    assert jobs == 10
+
+
+def test_handler_failure_with_staleness_filter(spark, engine, envelope_df):
+    """A handler that raises inside the tally: the raw half re-runs
+    alone, so stale rows are still counted at the filter, the fresh
+    rows are the failures, and exactly the fresh rows queue for
+    retry."""
+
+    def raising(df):
+        return df.withColumn(
+            "outcome",
+            F.when(F.assert_true(F.length("topic") > 9000).isNull(), "success"),
+        )
+
+    route = Route(
+        name="fails_fresh",
+        source=lambda: None,
+        handler=raising,
+        retry=RetryConfig(max_attempts=2, timeout_ms=0),
+        oldest_processed_s=WEEK_S,
+    )
+    engine.register_route(route)
+    horizon = STALE_NOW - timedelta(seconds=WEEK_S)
+    want = sorted(
+        r["offset"]
+        for r in envelope_df.filter(F.col("timestamp") >= F.lit(horizon))
+        .select("offset")
+        .collect()
+    )
+    stats = engine.process_batch(route, envelope_df, now=STALE_NOW)
+    assert stats.failure == len(want) > 0
+    assert stats.stale_dropped == 1000 - len(want) > 0
+    assert stats.total == 0
+    assert (
+        engine.metrics.counter("message-processing.failure") == stats.failure
+    )
+    rt = engine.fabric.retry_table()
+    got = sorted(r["offset"] for r in rt.select("offset").collect())
+    assert got == want
+    assert {r["attempt"] for r in rt.select("attempt").collect()} == {1}
+    assert engine.fabric.dead_set_table() is None
+
+
+def test_retry_split_by_attempt_in_one_call(spark, engine, envelope_df):
+    """One batch whose retry rows carry attempt NULL, 1 and 0: the
+    tally's split sends the attempt-0 rows to the dead set and the
+    rest to the retry queue, one countdown step lower."""
+    off = F.col("offset") % 3
+    batch = envelope_df.limit(30).withColumn(
+        "attempt",
+        F.when(off == 0, F.lit(None)).when(off == 1, F.lit(1)).otherwise(F.lit(0))
+        .cast("int"),
+    )
+    route = Route(
+        name="split",
+        source=lambda: None,
+        handler=lambda df: df.withColumn("outcome", F.lit("retry")),
+        retry=RetryConfig(max_attempts=2, timeout_ms=0),
+        oldest_processed_s=None,
+    )
+    engine.register_route(route)
+    stats = engine.process_batch(route, batch, now=NOW)
+    assert stats.retry == 30
+    want = {
+        r["offset"]: r["attempt"] for r in batch.select("offset", "attempt").collect()
+    }
+    queued = {
+        r["offset"]: r["attempt"]
+        for r in engine.fabric.retry_table().select("offset", "attempt").collect()
+    }
+    dead = {
+        r["offset"]: r["attempts_exhausted"]
+        for r in engine.fabric.dead_set_table()
+        .select("offset", "attempts_exhausted")
+        .collect()
+    }
+    # NULL (first failure of max 2) → 1 remaining; 1 → 0; 0 → dead
+    step = {None: 1, 1: 0}
+    assert queued == {o: step[a] for o, a in want.items() if a != 0}
+    assert dead == {o: 0 for o, a in want.items() if a == 0}
+    assert queued and dead
+
+
 def test_two_routes_run_concurrently(spark, engine, envelope_df, tmp_path):
     """R10 at fleet scope: two streaming routes run on one engine at
     the same time with independent sources, checkpoints, commit

@@ -806,11 +806,13 @@ def _src_log_files(ckpt: str, bid: int) -> list[str]:
     when the per-batch file is missing, ANY ``<n>.compact`` with
     n >= bid is consulted (a compaction cycle folds older per-batch
     files into the newest compact file, not necessarily
-    ``<bid>.compact``); and when the source log directory EXISTS but
-    no entry covers ``bid`` — the engine commits the entry before
-    foreachBatch runs, so this can only mean the log layout changed —
-    a once-per-process warning fires instead of the idempotence
-    replay silently never running again."""
+    ``<bid>.compact``), and a compact that covers ``bid`` but lists
+    no file for it is an empty batch (silent []); when the source log
+    directory EXISTS but neither a per-batch file nor any compact
+    covers ``bid`` — the engine commits the entry before foreachBatch
+    runs, so this can only mean the log layout changed — a
+    once-per-process warning fires instead of the idempotence replay
+    silently never running again."""
     logdir = os.path.join(ckpt, "sources", "0")
     p = os.path.join(logdir, str(bid))
 
@@ -857,6 +859,11 @@ def _src_log_files(ckpt: str, bid: int) -> list[str]:
         )
         if got:
             return got
+    if compacts:
+        # a compact at or past bid covers bid: no entry for it means
+        # the batch read no files (an empty trigger whose per-batch
+        # entry was compacted away), not a layout change
+        return []
     # the log dir exists but nothing covers bid: the engine writes
     # the entry before foreachBatch runs, so the layout must have
     # changed — warn once instead of silently skipping every replay

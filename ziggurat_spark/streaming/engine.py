@@ -9,20 +9,28 @@ around it (init.clj:244-273 validates exactly this shape at
       → staleness filter (T2, timestamp_transformer.clj:9-12)
       → middleware chain (DataFrame → DataFrame fns)
       → handler → `outcome` column (R1 contract, mapper.clj:55-65)
-      → one cached pass, split into success/skip/retry/dead/channel
-        (filtered writes; retry & dead go through RetryFabric)
+      → one tally, then filtered writes per success/skip/retry/dead/
+        channel outcome (retry & dead go through RetryFabric)
 
 Streaming execution wraps the same batch function in
 ``foreachBatch`` — identical semantics in both modes, which is how
 the reference's at-least-once ack-after-process maps onto Spark's
 checkpointed micro-batches (stronger: effectively-once bookkeeping).
 
-Scale: the handler output is persisted once per micro-batch and the
-outcome splits are metadata-only filters on top — the batch is never
-recomputed per sink (the reference similarly publishes from one
-in-memory record, mapper.clj:55-65). Parallelism is decoupled from
-source partitions with an optional repartition(n) — the Spark-native
-replacement for the channels scale-out pattern (doc/CONCEPTS.md:20-43).
+Scale: per-batch cost is set by the driver's job chain, not compute,
+so a batch runs ONE aggregation for every count it needs. The raw
+batch and the handler output are each persisted once; a single
+groupBy over the output's outcome keys unioned with the raw rows'
+fresh/stale tag yields the outcome counts, the consume-delay means,
+the read count, the staleness drops and the retry rows' dead-set
+split. The sinks then filter the cached output — never recomputing
+the handler per sink (the reference similarly publishes from one
+in-memory record, mapper.clj:55-65) — and take their counts from the
+tally instead of probing. A batch with every outcome class runs six
+Spark jobs: two cache builds, the tally's two, and the retry and
+dead-set appends. Parallelism is decoupled from source partitions
+with an optional repartition(n) — the Spark-native replacement for
+the channels scale-out pattern (doc/CONCEPTS.md:20-43).
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +52,11 @@ from ziggurat_spark.streaming.metrics import (
     MESSAGE_READ_NS,
     MetricsRegistry,
 )
-from ziggurat_spark.streaming.retry_fabric import RetryConfig, RetryFabric
+from ziggurat_spark.streaming.retry_fabric import (
+    RetryConfig,
+    RetryFabric,
+    exhausted,
+)
 
 #: T2 default: drop records older than 7 days (streams.clj:26).
 DEFAULT_OLDEST_PROCESSED_S = 604_800
@@ -85,6 +98,16 @@ class BatchStats:
     stale_dropped: int = 0
     failure: int = 0
     processing_s: float = 0.0
+
+
+class _Group(NamedTuple):
+    """One group of the batch tally (see ``ZigguratEngine._tally``)."""
+
+    n: int = 0
+    #: mean consume delay, None when the rows carry no timestamp
+    delay_ms: float | None = None
+    #: rows the retry split sends to the dead set
+    dead: int = 0
 
 
 class ZigguratEngine:
@@ -174,24 +197,25 @@ class ZigguratEngine:
         if batch_id >= 0 and self._is_committed(route.name, batch_id):
             return stats
 
-        # Persist the raw batch: total_in and the outcome pass would
-        # otherwise EACH rescan the source (2x read amplification per
-        # micro-batch — observed via numInputRows doubling).
+        # Persist the raw batch: the tally and the handler's input both
+        # read it, and without the cache each would rescan the source
+        # (2x read amplification per micro-batch — observed via
+        # numInputRows doubling).
         batch = batch.persist()
         df = batch
-        total_in = df.count()
+        fresh = F.lit(True)
         # T2 staleness filter, placed first (streams.clj:185-186);
         # Catalyst pushes it into the scan anyway.
-        n_fresh = total_in
         if route.oldest_processed_s is not None:
             horizon = now - timedelta(seconds=route.oldest_processed_s)
-            df = df.filter(F.col(route.timestamp_col) >= F.lit(horizon))
-            # honest staleness accounting: measured AT the filter, not
-            # inferred from handler-output cardinality (which filters/
-            # fan-outs would corrupt); the parent batch is cached so
-            # this is a cheap second count, not a rescan
-            n_fresh = df.count()
-        stats.stale_dropped = total_in - n_fresh
+            keep = F.col(route.timestamp_col) >= F.lit(horizon)
+            df = df.filter(keep)
+            # honest staleness accounting: the tally tags each raw row
+            # with the filter's own predicate (a NULL timestamp is
+            # dropped, so it counts as stale), not an inference from
+            # handler-output cardinality, which filters/fan-outs
+            # would corrupt
+            fresh = F.coalesce(keep, F.lit(False))
         if route.parallelism:
             # channels-style scale-out (doc/CONCEPTS.md:20-43): decouple
             # worker parallelism from source partition count.
@@ -216,45 +240,45 @@ class ZigguratEngine:
                 f"route {route.name}: handler must add an 'outcome' column"
             )
         out = out.persist()
+        raw = self._raw_tally(route, batch, fresh)
         try:
-            # One pass tallies outcomes AND the consume-delay mean —
-            # the read counter (T10), delay histogram (kafka_delay.clj
-            # :5-13) and processing counters (mapper.clj:56-65) all
-            # come from this single aggregation, no per-record taps.
-            aggs = [F.count("*").alias("n")]
-            has_ts = route.timestamp_col in out.columns
-            if has_ts:
-                aggs.append(
-                    F.avg(
-                        F.lit(int(now.timestamp() * 1000))
-                        - F.unix_millis(
-                            F.col(route.timestamp_col).cast("timestamp")
-                        )
-                    ).alias("delay_ms")
-                )
             try:
-                rows = out.groupBy("outcome").agg(*aggs).collect()
+                tally = self._tally(
+                    self._outcome_tally(route, out, now).unionByName(raw)
+                )
             except Exception:
                 # R1 catch-Throwable parity (mapper.clj:66-69): failure
                 # metric + the whole delivery goes back through retry,
                 # then processing CONTINUES (the reference acks and
                 # moves on; it never crashes the stream thread). Not
                 # re-raising is also what keeps the retry pump from
-                # double-enqueueing a failed redelivery.
+                # double-enqueueing a failed redelivery. The raw half
+                # of the tally, re-run alone, still measures staleness
+                # at the filter.
+                tally = self._tally(raw)
+                fresh_g = tally.get(("raw", "fresh"), _Group())
+                stats.stale_dropped = tally.get(("raw", "stale"), _Group()).n
                 self.metrics.inc(
-                    route.name, MESSAGE_PROCESSING, "failure", n_fresh
+                    route.name, MESSAGE_PROCESSING, "failure", fresh_g.n
                 )
-                stats.failure = n_fresh
+                stats.failure = fresh_g.n
                 if route.retry.enabled:
                     self.fabric.enqueue_retry(
-                        pre_middleware, route.name, route.retry, now=now
+                        pre_middleware,
+                        route.name,
+                        route.retry,
+                        now=now,
+                        split=(fresh_g.dead, fresh_g.n - fresh_g.dead),
                     )
                 stats.processing_s = time.perf_counter() - t0
                 self.stats.append(stats)
                 if batch_id >= 0:
                     self._mark_committed(route.name, batch_id)
                 return stats
-            counts = {r["outcome"]: r["n"] for r in rows}
+            n_fresh = tally.get(("raw", "fresh"), _Group()).n
+            stats.stale_dropped = tally.get(("raw", "stale"), _Group()).n
+            outcomes = {o: g for (part, o), g in tally.items() if part == "out"}
+            counts = {o: g.n for o, g in outcomes.items()}
             unknown = [
                 o
                 for o in counts
@@ -289,31 +313,33 @@ class ZigguratEngine:
                     metric,
                     counts.get(metric, 0),
                 )
-            if has_ts:
-                for r in rows:
-                    if r["delay_ms"] is not None:
-                        self.metrics.report_histogram(
-                            route.name, DELAY_NS, float(r["delay_ms"]), n=r["n"]
-                        )
+            for g in outcomes.values():
+                if g.delay_ms is not None:
+                    self.metrics.report_histogram(
+                        route.name, DELAY_NS, g.delay_ms, n=g.n
+                    )
 
             oc = F.col("outcome")
             if stats.retry:
+                n_dead = outcomes["retry"].dead
                 self.fabric.enqueue_retry(
-                    out.filter(oc == "retry"), route.name, route.retry, now=now
+                    out.filter(oc == "retry"),
+                    route.name,
+                    route.retry,
+                    now=now,
+                    split=(n_dead, stats.retry - n_dead),
                 )
             if stats.dead_letter:
                 self.fabric.enqueue_dead(
                     out.filter(oc == "dead-letter"), route.name, now=now
                 )
             for ch in route.channels:
-                # the one-pass tally already counted this channel —
-                # a second count() job per channel would rescan the
-                # cached batch for nothing
                 n_ch = counts.get(f"channel:{ch}", 0)
                 if n_ch:
                     stats.channel += n_ch
                     self._deliver_channel(
-                        route, ch, out.filter(oc == f"channel:{ch}"), now
+                        route, ch, out.filter(oc == f"channel:{ch}"), now,
+                        n_rows=n_ch,
                     )
         finally:
             out.unpersist()
@@ -324,17 +350,97 @@ class ZigguratEngine:
             self._mark_committed(route.name, batch_id)
         return stats
 
+    # -- the batch tally ----------------------------------------------------
+    #
+    # One aggregation per batch feeds every count the batch needs: the
+    # handler output's rows keyed ("out", outcome) and the raw batch's
+    # rows keyed ("raw", "fresh" | "stale"), unioned and grouped once.
+    # Each group carries its row count, its mean consume delay, and how
+    # many of its rows the retry split sends to the dead set.
+
+    @staticmethod
+    def _tally_cols(part: str, key, delay_ms, dead) -> list:
+        return [
+            F.lit(part).alias("part"),
+            key.cast("string").alias("key"),
+            delay_ms.cast("long").alias("delay_ms"),
+            dead.alias("dead"),
+        ]
+
+    def _raw_tally(self, route: Route, batch: DataFrame, fresh) -> DataFrame:
+        """Raw-batch rows tagged by the staleness filter's predicate;
+        the fresh rows' dead-set split is what a handler failure
+        re-enqueues."""
+        return batch.select(
+            *self._tally_cols(
+                "raw",
+                F.when(fresh, "fresh").otherwise("stale"),
+                F.lit(None),
+                fresh & self._exhausted(route, batch),
+            )
+        )
+
+    def _outcome_tally(
+        self, route: Route, out: DataFrame, now: datetime
+    ) -> DataFrame:
+        """Handler-output rows keyed by outcome, with the consume delay
+        (kafka_delay.clj:5-13) when the output keeps the timestamp."""
+        delay = F.lit(None)
+        if route.timestamp_col in out.columns:
+            delay = F.lit(int(now.timestamp() * 1000)) - F.unix_millis(
+                F.col(route.timestamp_col).cast("timestamp")
+            )
+        return out.select(
+            *self._tally_cols(
+                "out", F.col("outcome"), delay, self._exhausted(route, out)
+            )
+        )
+
+    @staticmethod
+    def _exhausted(route: Route, df: DataFrame):
+        """The retry split of ``df``'s rows under the route policy; a
+        frame without an ``attempt`` column is on its first delivery."""
+        attempt = F.col("attempt") if "attempt" in df.columns else F.lit(None)
+        return exhausted(route.retry, attempt)
+
+    @staticmethod
+    def _tally(rows: DataFrame) -> dict[tuple[str, str], _Group]:
+        """Run the tally: one ``_Group`` per ``(part, key)``."""
+        return {
+            (r["part"], r["key"]): _Group(
+                r["n"],
+                None if r["delay_ms"] is None else float(r["delay_ms"]),
+                r["dead"],
+            )
+            for r in rows.groupBy("part", "key")
+            .agg(
+                F.count("*").alias("n"),
+                F.avg("delay_ms").alias("delay_ms"),
+                F.count_if("dead").alias("dead"),
+            )
+            .collect()
+        }
+
     def _deliver_channel(
-        self, route: Route, channel: str, rows: DataFrame, now: datetime
+        self,
+        route: Route,
+        channel: str,
+        rows: DataFrame,
+        now: datetime,
+        n_rows: int | None = None,
     ) -> None:
         """Channel delivery (R8): run the channel handler immediately
         (Spark already decouples parallelism); failures take the
-        channel retry path (mapper.clj:71-111)."""
+        channel retry path (mapper.clj:71-111). ``n_rows`` is the
+        caller's count of ``rows`` when it holds one (the batch tally);
+        otherwise one count job runs."""
         handler = route.channels[channel]
         # per-channel retry override (config.clj:117-121) with the
         # route policy as fallback
         cfg = route.channel_retry.get(channel, route.retry)
         ns = f"{channel}.{MESSAGE_PROCESSING}"  # mapper.clj:76-86 naming
+        if n_rows is None:
+            n_rows = rows.count()
         try:
             result = handler(rows.drop("outcome"))
             n_retry = 0
@@ -346,9 +452,9 @@ class ZigguratEngine:
                         retries, route.name, cfg, channel=channel, now=now
                     )
             self.metrics.inc(route.name, ns, "retry", n_retry)
-            self.metrics.inc(route.name, ns, "success", rows.count() - n_retry)
+            self.metrics.inc(route.name, ns, "success", n_rows - n_retry)
         except Exception:
-            self.metrics.inc(route.name, ns, "failure", rows.count())
+            self.metrics.inc(route.name, ns, "failure", n_rows)
             self.fabric.enqueue_retry(
                 rows, route.name, cfg, channel=channel, now=now
             )

@@ -57,7 +57,7 @@ import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ziggurat_spark.envelope import ENVELOPE_COLUMNS, ensure_envelope
@@ -94,6 +94,37 @@ class RetryConfig:
     max_attempts: int = DEFAULT_RETRY_COUNT
     timeout_ms: int = DEFAULT_QUEUE_TIMEOUT_MS
     exponential: bool = False
+
+
+def remaining_attempts(
+    cfg: RetryConfig, attempt: Column | None = None
+) -> Column:
+    """Attempts left after this failure (producer.clj:288-293): the
+    countdown starts at ``max_attempts`` on a first failure (NULL
+    ``attempt``) and goes down by one per hop."""
+    attempt = F.col("attempt") if attempt is None else attempt
+    return (
+        F.when(attempt.isNull(), F.lit(cfg.max_attempts))
+        .otherwise(attempt)
+        .cast("int")
+        - 1
+    )
+
+
+def exhausted(cfg: RetryConfig, attempt: Column | None = None) -> Column:
+    """True for a failed row that goes to the dead set, not back to the
+    retry queue: its countdown ran out, or retries are disabled. The
+    one spelling of the split, shared by ``enqueue_retry`` and callers
+    that count the split ahead of it (the engine's batch tally)."""
+    if not cfg.enabled:
+        return F.lit(True)
+    return remaining_attempts(cfg, attempt) < 0
+
+
+def _nonempty(df: DataFrame, known: int | None) -> bool:
+    """``known`` when the caller already counted ``df``'s rows, else
+    one ``isEmpty()`` probe job."""
+    return known > 0 if known is not None else not df.isEmpty()
 
 
 class RetryFabric:
@@ -359,33 +390,33 @@ class RetryFabric:
         cfg: RetryConfig,
         channel: str | None = None,
         now: datetime | None = None,
+        split: tuple[int, int] | None = None,
     ) -> None:
         """One hop of R2 (producer.clj:288-293) + R3 backoff timing:
         split the failed rows into retry-again vs dead-set and append
-        to the right table. Pure column logic, one pass."""
+        to the right table. Pure column logic, one pass. ``split`` is
+        the caller's ``(dead, retry)`` row count under ``exhausted(cfg)``
+        when it already holds one; each side is then appended only when
+        non-empty, without a probe job."""
         now = now or datetime.now(timezone.utc)
         env = ensure_envelope(failed).select(*ENVELOPE_COLUMNS)
+        n_dead, n_retry = split or (None, None)
         if not cfg.enabled:
-            self._append_dead(
-                self._as_dead(env, route, channel, now, poison=False), route
-            )
+            if n_dead is None or n_dead:
+                self._append_dead(
+                    self._as_dead(env, route, channel, now, poison=False),
+                    route,
+                )
             return
-        attempt = F.col("attempt")
-        # remaining attempts after this failure
-        remaining = (
-            F.when(attempt.isNull(), F.lit(cfg.max_attempts))
-            .otherwise(attempt)
-            .cast("int")
-            - 1
-        )
-        env = env.withColumn("_remaining", remaining)
-        to_dead = env.filter(F.col("_remaining") < 0).drop("_remaining")
-        if to_dead.isEmpty() is False:
+        to_dead = env.filter(exhausted(cfg))
+        if _nonempty(to_dead, n_dead):
             self._append_dead(
                 self._as_dead(to_dead, route, channel, now, poison=False),
                 route,
             )
-        to_retry = env.filter(F.col("_remaining") >= 0)
+        to_retry = env.filter(~exhausted(cfg)).withColumn(
+            "_remaining", remaining_attempts(cfg)
+        )
         # The reference passes the REMAINING count into the formula
         # (producer.clj:204): n = min(25, max) - remaining, so the
         # delay grows as retries are consumed (first hop n=1).
@@ -407,7 +438,7 @@ class RetryFabric:
             .withColumn("attempt", F.col("_remaining"))
             .drop("_remaining")
         )
-        if retry_rows.isEmpty() is False:
+        if _nonempty(retry_rows, n_retry):
             self._append_retry(retry_rows, route)
 
     def enqueue_dead(
@@ -500,6 +531,8 @@ class RetryFabric:
         due_buckets = sorted(b for b in buckets if b <= bucket_now)
         if not due_buckets:
             return 0
+        # the cycle's one schema inference: the inflight and residue
+        # reads below reuse what this read resolved
         df = self.spark.read.option("basePath", self.retry_dir).parquet(
             *[buckets[b] for b in due_buckets]
         )
@@ -511,8 +544,13 @@ class RetryFabric:
         token = uuid.uuid4().hex[:8]
         inflight = os.path.join(self.inflight_dir, f"route={route}", token)
         due_full.write.mode("overwrite").parquet(inflight)
-        delivered = self.spark.read.parquet(inflight)
-        n = delivered.count()
+        delivered = self.spark.read.schema(due_full.schema).parquet(inflight)
+        # one aggregation yields both the row count and the channels
+        per_channel = {
+            r["channel"]: r["count"]
+            for r in delivered.groupBy("channel").count().collect()
+        }
+        n = sum(per_channel.values())
         if n == 0:
             shutil.rmtree(inflight, ignore_errors=True)
             return 0
@@ -521,6 +559,7 @@ class RetryFabric:
         if bucket_now in buckets:
             residue = (
                 self.spark.read.option("basePath", self.retry_dir)
+                .schema(df.schema)
                 .parquet(buckets[bucket_now])
                 .filter(F.col("next_attempt_at") > F.lit(now))
                 .drop("route", "bucket")
@@ -535,10 +574,7 @@ class RetryFabric:
         # 3. deliver per channel, marking each completed slice; an
         #    unexpected handler error leaves the inflight directory in
         #    place — recovery re-enqueues the unmarked slices verbatim
-        channels = [
-            r["channel"] for r in delivered.select("channel").distinct().collect()
-        ]
-        for ch in sorted(channels, key=lambda c: (c is not None, c)):
+        for ch in sorted(per_channel, key=lambda c: (c is not None, c)):
             slice_df = delivered.filter(
                 F.col("channel").eqNullSafe(F.lit(ch))
             ).select(*ENVELOPE_COLUMNS)
