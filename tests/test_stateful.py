@@ -445,7 +445,7 @@ def test_stream_dsir_maintain_batching_independent(spark):
     """Mergeable-count state via keyed per-batch partials: the final
     ratio table must be identical at ANY chunking — 1 file (one
     micro-batch = the batch answer by construction) vs 7 files —
-    including the in-op verbatim re-delivery of the first batch
+    including the in-op verbatim re-delivery of the newest batch
     (a naive in-place sum would double-count it)."""
     from ziggurat_spark.queries import streaming_surface as ss
 
@@ -573,7 +573,7 @@ def test_stream_lsh_maintain_batching_independent(spark):
     """Online LSH detection must converge to the SAME candidate-pair
     set at any chunking: 1 file (everything is within-batch) vs 7
     files (most pairs cross the history boundary), both including
-    the in-op first-batch replay."""
+    the in-op newest-batch replay."""
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
@@ -684,7 +684,7 @@ def test_stream_select_corpus_batching_independent(spark):
     chunking — 1 file (= the batch pipeline by construction) vs 7
     files (dedup winners cross many batch boundaries and the
     min-winner merge must converge), both including the in-op
-    first-batch replay."""
+    newest-batch replay."""
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
@@ -879,7 +879,7 @@ def test_stream_components_batching_independent(spark):
     identically at ANY pair chunking — 1 file (one union = the batch
     answer) vs 7 files (components assemble across many triggers,
     including pairs that BRIDGE previously separate components) —
-    both including the in-op first-batch replay."""
+    both including the in-op newest-batch replay."""
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
@@ -1002,7 +1002,7 @@ def test_stream_multimodal_batching_independent(spark):
     verified pair set (with identical integer squared-cosine ppm) at
     any chunking: 1 file (everything within-batch) vs 7 files (most
     pairs cross the history boundary), both including the in-op
-    first-batch replay."""
+    newest-batch replay."""
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
@@ -1021,7 +1021,7 @@ def test_stream_multimodal_batching_independent(spark):
 def test_stream_ivf_cadence_refresh_contract(spark):
     """The in-stream Lloyd cadence: (a) refreshes actually fire
     MID-STREAM (not only at close), (b) the final in-op refresh —
-    after replaying batch 0 and after the closing refresh — changes
+    after the closing refresh and a replay of the newest batch — changes
     ZERO cells (idempotence = replay proof), and (c) the post-stream
     SERVING state carries exactly the batch retrain's (vec, cell1)
     assignment."""

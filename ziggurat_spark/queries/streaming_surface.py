@@ -15,6 +15,22 @@ Scale shape: these are the same plans as their batch counterparts
 through micro-batches with checkpointing — at 100 TB the file source
 becomes Kafka (sources/kafka.py) and availableNow becomes a
 continuous trigger; nothing else changes.
+
+Fold scaffold: ``run_fold_stream`` is the only spelling of the
+consume → fold → commit loop (stage a parquet source, drain it one
+file per trigger under availableNow through a foreachBatch fold); an
+op supplies its fold and its grade, nothing else. Replay contract:
+when an op passes ``replay``, the NEWEST non-empty batch — the only
+batch a checkpointed engine re-delivers — is re-delivered once, its
+files read from the source's own metadata log (zero Spark jobs), and
+only after the checkpoint dir is gone. Hand-rolled on purpose: the
+restart ops (x_stream_exactly_once_restart, x_stream_budget_restart,
+x_stream_dedup_historic_loop) reuse ONE checkpoint across two runs;
+the outputMode aggregation and join streams keep their state in the
+engine, not in a fold; x_stream_upsert_keyed drains 4 files per
+trigger; x_stream_poison_shunt drains its whole source in one
+trigger; x_stream_listener_metrics names its query and taps it with
+observe() for the listener under test.
 """
 
 from __future__ import annotations
@@ -23,6 +39,7 @@ import json
 import os
 import shutil
 import tempfile
+import time
 import uuid
 import warnings
 from concurrent.futures import ThreadPoolExecutor
@@ -683,13 +700,8 @@ def _events_split_dir(spark: SparkSession, sf: str, n: int) -> str:
 )
 @_sized_state
 def x_stream_max_poll_batches(spark: SparkSession, sf: str) -> DataFrame:
-    src_dir = _events_split_dir(spark, sf, 8)
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    from ziggurat_spark.tables import load_table
+
     stats_dir = scratch_dir("zs_stream_poll_") + "/stats"
 
     def bookkeep(batch_df: DataFrame, batch_id: int) -> None:
@@ -697,14 +709,7 @@ def x_stream_max_poll_batches(spark: SparkSession, sf: str) -> DataFrame:
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(stats_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(bookkeep)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(spark, load_table(spark, sf, "events"), 8, bookkeep)
     stats = spark.read.parquet(stats_dir)
     return stats.agg(
         F.count("*").alias("n_batches"), F.sum("n").alias("n_rows")
@@ -881,6 +886,99 @@ def _src_log_files(ckpt: str, bid: int) -> list[str]:
 
 #: one-shot latch for the _src_log_files layout warning
 _SRC_LOG_WARNED: list = []
+
+
+def run_fold_stream(
+    spark: SparkSession,
+    src: DataFrame,
+    n_files: int,
+    fold,
+    *,
+    replay=None,
+) -> str:
+    """The streaming fold scaffold, spelled once: consume → fold →
+    commit, with crash re-delivery of the newest batch.
+
+    Stages ``src.repartition(n_files)`` as a parquet source dir (the
+    write-time schema is pinned, so stream setup runs no footer
+    inference), drains it with ``maxFilesPerTrigger=1`` under
+    ``availableNow`` — exactly ``n_files`` micro-batches in part-file
+    order, each handed to ``fold(batch, bid)`` through foreachBatch,
+    so a run's batch composition repeats exactly — and returns the
+    source dir. The checkpoint lives in its own temp dir OUTSIDE the
+    scratch tree (so state footprints count fold state only) and is
+    removed on every exit path, a raising fold included.
+
+    ``replay(batch, bid)``, when given, re-delivers the NEWEST
+    non-empty batch once the stream has closed — the only batch a
+    checkpoint-coordinated engine can legitimately replay (older
+    ones are committed, which is what makes folding them into epochs
+    safe). Its target is read per trigger from the source's own
+    metadata log (_src_log_files — zero Spark jobs, no data-plane
+    probe write); a trigger whose files hold no rows keeps the prior
+    target, and a zero-row stream never replays. The call comes
+    after the checkpoint is gone, with the recorded files re-read
+    verbatim as a lazy local checkpoint (the replay's first action
+    materializes it)."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    src_dir = scratch_dir("zs_stream_src_")
+    schema = _write_src(src.repartition(n_files), src_dir)
+    # the file source takes files oldest-first by modification time,
+    # which the parallel write leaves in task-finish order (same-ms
+    # ties broken by listing order): pin part-file order instead, so
+    # batch i is part file i on every run
+    parts = sorted(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
+    t0 = time.time() - len(parts)
+    for i, f in enumerate(parts):
+        os.utime(os.path.join(src_dir, f), (t0 + i, t0 + i))
+    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
+    log = os.path.join(ckpt, "ck")
+    target: dict = {}
+
+    def _batch(b: DataFrame, bid: int) -> None:
+        fold(b, bid)
+        if replay is not None:
+            files = _src_log_files(log, bid)
+            # rows from the files' footers (driver-side): a staging
+            # write always leaves one file, empty for a zero-row source
+            if files and sum(
+                pq.read_metadata(unquote(urlparse(f).path)).num_rows
+                for f in files
+            ):
+                target["bid"], target["files"] = bid, files
+
+    try:
+        (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir)
+            .writeStream.foreachBatch(_batch)
+            .option("checkpointLocation", log)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    if target:
+        replay(
+            spark.read.schema(schema)
+            .parquet(*target["files"])
+            .localCheckpoint(eager=False),
+            target["bid"],
+        )
+    return src_dir
+
+
+def _result_dir(prefix: str) -> str:
+    """Output dir for a stateless fold's per-batch appends: the
+    sibling of a fresh (empty) scratch dir, so it is removed with the
+    scratch root but stays out of the op's state footprint — the
+    appended rows are the op's result, not fold state."""
+    return scratch_dir(prefix) + "_out"
 
 
 def _sum_epoch_compact(
@@ -1175,17 +1273,12 @@ def bucketed_lww_merge(
 )
 @_sized_state
 def x_stream_upsert_state(spark: SparkSession, sf: str) -> DataFrame:
+    from ziggurat_spark.tables import load_table
+
     # 4 micro-batches exercise multi-batch merging; 8 buckets keep
     # the per-batch file count proportionate at bench scale (at
     # 100 TB you'd raise both — the touched-only I/O bound is what
     # matters, not these two dials)
-    src_dir = _events_split_dir(spark, sf, 4)
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_upsert_")
     n_buckets = 8
     state: dict[int, str] = {}  # key-bucket -> current directory
@@ -1208,14 +1301,7 @@ def x_stream_upsert_state(spark: SparkSession, sf: str) -> DataFrame:
             order_cols=(F.desc("ts"), F.desc("event_id")),
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(spark, load_table(spark, sf, "events"), 4, merge)
     return (
         _pq_read(spark, ("lww", workdir), sorted(state.values()))
         .select(
@@ -1864,35 +1950,17 @@ def x_stream_dedup_historic(spark: SparkSession, sf: str) -> DataFrame:
         .select(F.md5("text").alias("h"))
         .distinct()
     )
-    src_dir = scratch_dir("zs_stream_histdedup_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.filter(F.col("doc_id") >= 250).select(
-        "doc_id", F.md5("text").alias("h")
-    ).repartition(4),
-        src_dir,
+    out_dir = _result_dir("zs_stream_histdedup_")
+    run_fold_stream(
+        spark,
+        docs.filter(F.col("doc_id") >= 250).select(
+            "doc_id", F.md5("text").alias("h")
+        ),
+        4,
+        lambda b, _i: b.join(F.broadcast(hist), "h", "left_anti")
+        .write.mode("append")
+        .parquet(out_dir),
     )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    fresh = stream.join(F.broadcast(hist), "h", "left_anti")
-    # sibling of the source dir, never nested under it: the file
-    # stream lists src_dir, and a non-partition subdir there could be
-    # picked up or conflict depending on trigger timing (works under
-    # availableNow only because the listing snapshots at start)
-    out_dir = src_dir + "_fresh"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            fresh.writeStream.foreachBatch(
-                lambda b, i: b.write.mode("append").parquet(out_dir)
-            )
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     surv = spark.read.parquet(out_dir)
     return surv.agg(
         F.count("*").alias("fresh_docs"),
@@ -2152,20 +2220,7 @@ def x_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
         # lazy: the first micro-batch's broadcast build materializes
         .localCheckpoint(eager=False)
     )
-    src_dir = scratch_dir("zs_stream_qgate_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.filter(F.col("doc_id") >= 250).select(
-        "doc_id", "text"
-    ).repartition(4),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out_dir = src_dir + "_kept"
+    out_dir = _result_dir("zs_stream_qgate_")
 
     def _gate(b, _i):
         w = b.select(
@@ -2191,14 +2246,12 @@ def x_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
         ).select("doc_id", "n_tok")
         keep.write.mode("append").parquet(out_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_gate)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(
+        spark,
+        docs.filter(F.col("doc_id") >= 250).select("doc_id", "text"),
+        4,
+        _gate,
+    )
     kept = spark.read.parquet(out_dir)
     return kept.agg(
         F.count("*").alias("kept_docs"),
@@ -2236,18 +2289,7 @@ def x_stream_mixture_monitor(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_mixmon_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "source", "text").repartition(4),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out_dir = src_dir + "_partials"
+    out_dir = _result_dir("zs_stream_mixmon_")
 
     def _account(b, _i):
         (
@@ -2261,14 +2303,9 @@ def x_stream_mixture_monitor(spark: SparkSession, sf: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_account)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(
+        spark, docs.select("doc_id", "source", "text"), 4, _account
+    )
     per = (
         spark.read.parquet(out_dir)
         .groupBy("source")
@@ -2319,17 +2356,6 @@ def x_stream_bottomk_sample(spark: SparkSession, sf: str) -> DataFrame:
 
     k = 5
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_bottomk_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "source").repartition(4),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_bottomk_state_")
     state = {"path": None, "v": 0}
     w = W.partitionBy("source").orderBy("hk", "doc_id")
@@ -2364,14 +2390,7 @@ def x_stream_bottomk_sample(spark: SparkSession, sf: str) -> DataFrame:
         merged.coalesce(1).write.mode("overwrite").parquet(new_path)
         state["path"], state["v"] = new_path, state["v"] + 1
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(spark, docs.select("doc_id", "source"), 4, _fold)
     final = _pq_read(spark, ("st", workdir), [state["path"]])
     return (
         final.withColumn("rnk", F.row_number().over(w))
@@ -2425,20 +2444,7 @@ def x_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         # lazy: the first micro-batch's use materializes it once
         .localCheckpoint(eager=False)
     )
-    src_dir = scratch_dir("zs_stream_decon_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.filter(F.col("doc_id") % 50 != 0).select(
-        "doc_id", "text"
-    ).repartition(4),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out_dir = src_dir + "_clean"
+    out_dir = _result_dir("zs_stream_decon_")
 
     def _scrub(b, _i):
         sh = b.select("doc_id", F.expr(sh_expr).alias("sh"))
@@ -2446,14 +2452,12 @@ def x_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         clean = b.join(dirty, "doc_id", "left_anti").select("doc_id")
         clean.write.mode("append").parquet(out_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_scrub)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(
+        spark,
+        docs.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text"),
+        4,
+        _scrub,
+    )
     kept = spark.read.parquet(out_dir)
     return kept.agg(
         F.count("*").alias("clean_docs"),
@@ -2515,18 +2519,7 @@ def x_stream_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_pii_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "text").repartition(4),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out_dir = src_dir + "_partials"
+    out_dir = _result_dir("zs_stream_pii_")
 
     def _scrub(b, _i):
         aug = b.select("doc_id", F.expr(_PII_AUG_SPARK).alias("t"))
@@ -2559,14 +2552,7 @@ def x_stream_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_scrub)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(spark, docs.select("doc_id", "text"), 4, _scrub)
     part = spark.read.parquet(out_dir)
     return part.agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -3062,33 +3048,20 @@ def x_stream_budget_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_budget_")
-    _bsrc = docs.select(
-        "doc_id",
-        "source",
-        F.size(F.split(F.trim(F.col("text")), r"\s+"))
-        .cast("bigint")
-        .alias("nt"),
-    ).repartition(STREAM_BUDGET_SRC_FILES)
-    _READ_SCHEMA[("src", src_dir)] = _write_src(_bsrc, src_dir)
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_budget_state_")
     state: dict = {}
-    _fold = _budget_fold(spark, workdir, state)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(
+        spark,
+        docs.select(
+            "doc_id",
+            "source",
+            F.size(F.split(F.trim(F.col("text")), r"\s+"))
+            .cast("bigint")
+            .alias("nt"),
+        ),
+        STREAM_BUDGET_SRC_FILES,
+        _budget_fold(spark, workdir, state),
+    )
     return _budget_grade(spark, docs, state)
 
 
@@ -3348,13 +3321,6 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     emb = load_table(spark, sf, "embeddings")
-    src_dir = scratch_dir("zs_stream_ann_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        emb.select("vec_id", "embedding").repartition(
-            ANN_MAINT_SRC_FILES
-        ),
-        src_dir,
-    )
     # the trained codebook, fixed before the stream starts (and
     # pinned: a per-batch-derived codebook would drift the cells)
     cent = (
@@ -3366,26 +3332,16 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
         # lazy: the first fold's use materializes it once
         .localCheckpoint(eager=False)
     )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_ann_state_")
     state: dict = {}
-
-    def _fold(b, bid):
-        _ann_upsert_batch(spark, workdir, state, b, bid, cent)
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_fold_stream(
+        spark,
+        emb.select("vec_id", "embedding"),
+        ANN_MAINT_SRC_FILES,
+        lambda b, bid: _ann_upsert_batch(
+            spark, workdir, state, b, bid, cent
+        ),
+    )
 
     # audit path: per-cell counts read the whole index (that IS the
     # audit); the QUERY path below must not
@@ -3571,7 +3527,7 @@ def _dsir_ratio_table(spark: SparkSession, paths: list) -> DataFrame:
         "micro-batch overwrites its own (batch_id)-keyed partial "
         "count file, and the final table is one sum over the "
         "partials — so re-delivery rewrites the same partial instead "
-        "of inflating it (proven in-op: the first batch is "
+        "of inflating it (proven in-op: the newest batch is "
         "re-delivered verbatim before grading). Graded: the full "
         "64-row (bucket, raw count, target count, Laplace ratio_ppm) "
         "table equals the batch-computed one exactly. Taxonomy now "
@@ -3589,56 +3545,23 @@ def x_stream_dsir_maintain(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_dsir_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "source", "text").repartition(
-        STREAM_DSIR_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_dsir_state_")
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
-    def _fold(b, bid):
-        # keyed overwrite: THIS batch's partial, replay-idempotent
+    def _partial(b, bid):
+        # keyed overwrite: THIS batch's partial, replay-idempotent —
+        # the crash re-delivery before grading rewrites its own
+        # partial, it never adds a new one
         _dsir_partial(b).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(statedir, f"part_b{bid}")
         )
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading: the first batch arrives again
-    # (re-read verbatim from its recorded source files) and must
-    # rewrite its own partial, not add a new one
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(*probe["files"])
-        _dsir_partial(replayed).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(statedir, f"part_b{probe['bid']}"))
-
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "source", "text"),
+        STREAM_DSIR_SRC_FILES,
+        _partial,
+        replay=_partial,
+    )
     parts = [
         os.path.join(statedir, d)
         for d in sorted(os.listdir(statedir))
@@ -3661,19 +3584,6 @@ def _dsir_compacted_state(spark: SparkSession, sf: str) -> tuple:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_dsirc_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "source", "text").repartition(
-        STREAM_DSIR_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_dsirc_state_")
     seen: dict = {}
 
@@ -3687,15 +3597,12 @@ def _dsir_compacted_state(spark: SparkSession, sf: str) -> tuple:
         )
         seen[bid] = True
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "source", "text"),
+        STREAM_DSIR_SRC_FILES,
+        _fold,
+    )
     last = max(seen)
     olds = [
         os.path.join(statedir, f"part_b{bid}")
@@ -4240,7 +4147,7 @@ def _lsh_fold(spark: SparkSession, statedir: str, io: list | None = None):
         "crash re-delivery rewrites (the replay may legitimately see "
         "pairs involving LATER docs — those are already recorded "
         "under the later batches' keys, and the graded DISTINCT "
-        "union is unchanged; proven in-op by replaying the first "
+        "union is unchanged; proven in-op by replaying the newest "
         "batch before grading). Graded: the union of per-batch "
         "detections equals the one-shot batch LSH candidate set "
         "exactly (same oracle as x_minhash_lsh_pairs). Per-batch "
@@ -4255,53 +4162,17 @@ def x_stream_lsh_maintain(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_lsh_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "text").repartition(
-        STREAM_LSH_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_lsh_state_")
-    probe: dict = {}
     fold = _lsh_fold(spark, statedir)
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
-
-    def _fold(b, bid):
-        fold(b, bid)
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading: the first batch arrives again
-    # (re-read verbatim from its recorded source files); keyed
-    # overwrites + own-key-excluded history keep the graded union
-    # unchanged
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(*probe["files"])
-        _fold(replayed, probe["bid"])
-
+    # crash re-delivery before grading: keyed overwrites +
+    # own-key-excluded history keep the graded union unchanged
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "text"),
+        STREAM_LSH_SRC_FILES,
+        fold,
+        replay=fold,
+    )
     pair_dirs = [
         os.path.join(statedir, d)
         for d in sorted(os.listdir(statedir))
@@ -4335,19 +4206,6 @@ def _lsh_compacted_state(spark: SparkSession, sf: str) -> str:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_lshc_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "text").repartition(
-        STREAM_LSH_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_lshc_state_")
     seen: dict = {}
     fold = _lsh_fold(spark, statedir)
@@ -4360,15 +4218,9 @@ def _lsh_compacted_state(spark: SparkSession, sf: str) -> str:
         )
         seen[bid] = True
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
+    run_fold_stream(
+        spark, docs.select("doc_id", "text"), STREAM_LSH_SRC_FILES, _fold
+    )
     last = max(seen)
     committed = [bid for bid in sorted(seen) if bid != last]
     if committed:
@@ -4501,7 +4353,7 @@ def _select_corpus_oracle() -> str:
         "selection is a corpus decision). Graded with the identical "
         "oracle as x_corpus_pipeline_v4: the streamed state must "
         "reproduce the batch pipeline bit-for-bit, replay of the "
-        "first batch included. At 100 TB: per-trigger work is "
+        "newest batch included. At 100 TB: per-trigger work is "
         "O(batch + touched buckets), the corpus state is a real "
         "hash-bucketed table, and the grade-time tail is the "
         "same 100×-safe v4 plan."
@@ -4533,7 +4385,7 @@ def _select_corpus_state(
 ) -> tuple[dict, str]:
     """Run the streaming selection-corpus maintenance (QC gate +
     bucketed min-id content-hash merge per micro-batch, in-op replay
-    of the first batch included) and return (state, workdir): state
+    of the newest batch included) and return (state, workdir): state
     maps hash bucket → current directory — O(16) dirs, one row per
     distinct content hash. Extracted so the skew-arrival drill can
     assert the state bounds directly."""
@@ -4544,23 +4396,8 @@ def _select_corpus_state(
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_sel_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "source", "text").repartition(
-        STREAM_SEL_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_sel_state_")
     state: dict = {}
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         qc = (
@@ -4586,31 +4423,17 @@ def _select_corpus_state(
             key="h",
             order_cols=(F.asc("doc_id"),),  # smallest id wins = batch dedup
         )
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading: the first batch arrives again
-    # (re-read verbatim from its recorded source files); the merge is
-    # a keyed min-winner fold, so the replayed batch changes nothing
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(*probe["files"])
-        _fold(replayed, probe["bid"] + 1000)
+    # crash re-delivery before grading: the merge is a keyed
+    # min-winner fold, so the replayed batch changes nothing (its
+    # merge writes under a fresh version id)
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "source", "text"),
+        STREAM_SEL_SRC_FILES,
+        _fold,
+        replay=lambda b, bid: _fold(b, bid + 1000),
+    )
     return state, workdir
 
 
@@ -4647,22 +4470,8 @@ def _lsh_cadence_state(
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_lshcad_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "text").repartition(
-        STREAM_LSH_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_lshcad_state_")
     fold = _lsh_fold(spark, statedir)
-    probe: dict = {}
     live_counts: list = []
     folds: list = []
     _tier_compact = make_tier_compactor(
@@ -4672,8 +4481,6 @@ def _lsh_cadence_state(
         {"bands": _lsh_write_band_epoch, "pairs": _lsh_write_pairs_epoch},
         folds,
     )
-
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         _tier_compact(bid)
@@ -4687,39 +4494,17 @@ def _lsh_cadence_state(
                 ]
             )
         )
-        # record the NEWEST batch's source files on every trigger
-        # (driver-side read of the source's own metadata log — zero
-        # jobs): it is the one legitimate crash-replay target (the
-        # engine never replays committed offsets, and compaction
-        # folds strictly-older ids only, so the newest batch is
-        # always still keyed)
-        files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-        if files:  # an empty restart trigger keeps the prior target
-            probe["bid"] = bid
-            probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # gone before the replay call below, so its _src_log_files
-        # lookup yields [] and the recorded target is kept
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading: the newest batch arrives
-    # again (re-read verbatim from its recorded source files) — the
-    # tier compactor sees no new strictly-older runs and the keyed
-    # files rewrite in place against the TIERED state
-    if probe.get("files"):  # an all-empty stream has no replay target
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["bid"])
+    # crash re-delivery before grading: the tier compactor sees no
+    # new strictly-older runs and the newest batch's keyed files
+    # rewrite in place against the TIERED state
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "text"),
+        STREAM_LSH_SRC_FILES,
+        _fold,
+        replay=_fold,
+    )
     return statedir, live_counts, folds
 
 
@@ -5060,24 +4845,20 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
     mb_parts = spark.conf.get(sp_key)
     spark.conf.set(sp_key, str(spark.sparkContext.defaultParallelism))
     try:
-        pairs = _jaccard_pairs(spark, sf).select("a", "b")
-        src_dir = scratch_dir("zs_stream_cc_")
-        _READ_SCHEMA[("src", src_dir)] = _write_src(
-            pairs.repartition(STREAM_CC_SRC_FILES), src_dir
+        # a lazy checkpoint plans the pair joins NOW, under this
+        # conf (adaptive execution also runs their shuffle stages
+        # here); the source staging write runs the final stage
+        pairs = (
+            _jaccard_pairs(spark, sf)
+            .select("a", "b")
+            .localCheckpoint(eager=False)
         )
     finally:
         spark.conf.set(sp_key, mb_parts)
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_cc_state_")
     state: dict = {}
     ridx: dict = {}
     audit: list = []
-    probe: dict = {}
     # converge ONLY the components the batch touches: a star fixed
     # point preserves connectivity exactly, so unioning the arrivals
     # with just the AFFECTED components' forest rows and
@@ -5088,39 +4869,20 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
     # root→bucket bit index for member gathering; bucketed_lww_merge
     # rewrites only buckets holding re-labeled nodes) — at 100 TB
     # per-trigger I/O is O(touched + batch), never O(forest)
-    inner = _cc_forest_fold(spark, statedir, state, ridx, audit)
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
-
-    def _fold(b, bid):
-        inner(b, bid)
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
-
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading (the first batch re-read
-    # verbatim from its recorded source files): min-parent
-    # connectivity is associative, commutative AND idempotent
-    # (re-unioning absorbed pairs cannot move any component minimum),
-    # so the replayed batch re-converges to the identical forest (the
-    # LWW merge overwrites re-labeled nodes with identical targets)
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(*probe["files"])
-        _fold(replayed, probe["bid"] + 1000)
+    fold = _cc_forest_fold(spark, statedir, state, ridx, audit)
+    # crash re-delivery before grading: min-parent connectivity is
+    # associative, commutative AND idempotent (re-unioning absorbed
+    # pairs cannot move any component minimum), so the replayed batch
+    # re-converges to the identical forest (the LWW merge overwrites
+    # re-labeled nodes with identical targets)
+    run_fold_stream(
+        spark,
+        pairs,
+        STREAM_CC_SRC_FILES,
+        fold,
+        replay=lambda b, bid: fold(b, bid + 1000),
+    )
+    release_checkpoint(pairs)
     return statedir, state
 
 
@@ -5331,21 +5093,7 @@ def _mm_stream_state(
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_mm_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.select("doc_id", "text").repartition(
-        STREAM_MM_SRC_FILES
-    ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_mm_state_")
-    probe: dict = {}
     live_counts: list = []
     folds: list = []
     # the shared size-tiered compactor over ALL THREE state kinds.
@@ -5404,8 +5152,6 @@ def _mm_stream_state(
                 ).alias("bks"),
             )
         )
-
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         _tier_compact(bid)
@@ -5567,38 +5313,18 @@ def _mm_stream_state(
                 ]
             )
         )
-        # record the NEWEST batch's source files (driver-side read
-        # of the source's own metadata log — zero jobs, not a
-        # per-trigger data-plane write): it is always still keyed
-        # (compaction folds strictly-older ids only), so it is the
-        # one legitimate crash-replay target
-        files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-        if files:  # an empty restart trigger keeps the prior target
-            probe["bid"] = bid
-            probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # gone before the replay call below, so its _src_log_files
-        # lookup yields [] and the recorded target is kept
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery BEFORE grading: the newest batch arrives
-    # again (re-read verbatim from its recorded source files) —
-    # keyed overwrite + own-key-excluded history keep the graded
-    # union unchanged even against the compacted state
-    if probe.get("files"):  # an all-empty stream has no replay target
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["bid"])
+    # crash re-delivery before grading: keyed overwrite +
+    # own-key-excluded history keep the graded union unchanged even
+    # against the compacted state (compaction folds strictly-older
+    # ids only, so the newest batch is always still keyed)
+    run_fold_stream(
+        spark,
+        docs.select("doc_id", "text"),
+        STREAM_MM_SRC_FILES,
+        _fold,
+        replay=_fold,
+    )
     return statedir, live_counts, folds
 
 
@@ -5734,21 +5460,12 @@ def _ivf_cadence_state(
 
     Returns (serve, refresh_log): serve maps cell → current serving
     directory; refresh_log records {changed, cells} per refresh —
-    the last entry is the in-op replay proof (a refresh after
-    replaying batch 0 and after the closing refresh changes ZERO
+    the last entry is the in-op replay proof (a refresh after the
+    closing refresh and a replay of the newest batch changes ZERO
     cells)."""
-    import shutil as _sh  # noqa: F401  (parallel with siblings)
-
     from ziggurat_spark.tables import load_table
 
     emb = load_table(spark, sf, "embeddings")
-    src_dir = scratch_dir("zs_stream_ivfcad_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        emb.select("vec_id", "embedding").repartition(
-            ANN_MAINT_SRC_FILES
-        ),
-        src_dir,
-    )
     cent = (
         emb.filter(F.col("vec_id") % 97 == 0)
         .select(
@@ -5758,18 +5475,11 @@ def _ivf_cadence_state(
         # lazy: the first fold's use materializes it once
         .localCheckpoint(eager=False)
     )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_ivfcad_state_")
     a0_state: dict = {}
     serve: dict = {}
     prev: dict = {"a1": None, "v": 0, "since": 0}
     refresh_log: list = []
-    probe: dict = {}
 
     def _refresh() -> None:
         from ziggurat_spark.functions.texthash_udfs import qdot_int_udf
@@ -5884,45 +5594,32 @@ def _ivf_cadence_state(
             release_checkpoint(prev["a1"])
         prev["a1"] = a1
 
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
-
     def _fold(b, bid):
         _ann_upsert_batch(spark, workdir, a0_state, b, bid, cent)
         prev["since"] += 1
         if prev["since"] >= cadence:
             _refresh()
             prev["since"] = 0
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # closing refresh: the serving state now covers the FULL corpus
-    # — i.e. exactly the batch x_ivf_retrain state
-    _refresh()
-    # crash re-delivery + idempotence proof: replay batch 0 (re-read
-    # verbatim from its recorded source files; keyed upsert — a0
-    # unchanged), refresh again — ZERO cells may change
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(*probe["files"])
-        _ann_upsert_batch(
-            spark, workdir, a0_state, replayed, probe["bid"] + 1000, cent
-        )
+    def _replay(b, bid):
+        # closing refresh: the serving state now covers the FULL
+        # corpus — i.e. exactly the batch x_ivf_retrain state
         _refresh()
+        # crash re-delivery + idempotence proof: the newest batch
+        # again (keyed upsert — a0 unchanged), refresh again — ZERO
+        # cells may change
+        _ann_upsert_batch(spark, workdir, a0_state, b, bid + 1000, cent)
+        _refresh()
+
+    # every non-empty stream replays, so the closing refresh rides the
+    # replay call; an empty one has no ingest index to refresh
+    run_fold_stream(
+        spark,
+        emb.select("vec_id", "embedding"),
+        ANN_MAINT_SRC_FILES,
+        _fold,
+        replay=_replay,
+    )
     return serve, refresh_log
 
 
@@ -5943,8 +5640,8 @@ def _ivf_cadence_state(
         "x_ivf_retrain's touched-only accounting kept live). A "
         "refresh is a pure, idempotent function of the ingest "
         "index, which is what makes the cadence replay-safe: the "
-        "op replays batch 0 AND re-runs the refresh in-op, and the "
-        "final refresh must change ZERO cells (pinned in "
+        "op replays the newest batch AND re-runs the refresh in-op, "
+        "and the final refresh must change ZERO cells (pinned in "
         "tests/test_stateful.py together with the cadence actually "
         "firing mid-stream). Graded FROM THE SERVED STATE: per-cell "
         "counts + id checksums and the top-3 integer-dot neighbors "
@@ -6103,7 +5800,7 @@ _HLL_ORACLE = (
         "merge is MAX — associative, commutative AND idempotent, so "
         "the state is replay- and batching-invariant by algebra "
         "(the same argument as the min-parent CC merge), proven "
-        "in-op by re-delivering the first batch after the stream "
+        "in-op by re-delivering the newest batch after the stream "
         "ends. The state table is O(types x 64) rows NO MATTER HOW "
         "MUCH DATA ARRIVES — the whole point of a sketch at 100 TB: "
         "per-trigger work is one map-side-combining hash-agg of the "
@@ -6125,24 +5822,9 @@ def x_stream_hll_maintain(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     events = load_table(spark, sf, "events")
-    src_dir = scratch_dir("zs_stream_hll_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        events.filter(F.col("user_id").isNotNull())
-        .select("event_type", "user_id")
-        .repartition(STREAM_HLL_SRC_FILES),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_hll_state_")
     state = {"path": None, "v": 0}
     reg_e, rho_e = _hll_exprs("div")
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         regs = (
@@ -6167,33 +5849,18 @@ def x_stream_hll_maintain(spark: SparkSession, sf: str) -> DataFrame:
         # sketch (O(types * 64) rows regardless of stream volume)
         regs.coalesce(1).write.mode("overwrite").parquet(new_path)
         state["path"], state["v"] = new_path, state["v"] + 1
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery (the first batch re-read verbatim from its
-    # recorded source files): max-merge is idempotent, so re-folding
-    # it must leave the graded registers unchanged
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's action materializes
-        _fold(replayed, probe["bid"])
+    # crash re-delivery: max-merge is idempotent, so re-folding the
+    # newest batch must leave the graded registers unchanged
+    run_fold_stream(
+        spark,
+        events.filter(F.col("user_id").isNotNull()).select(
+            "event_type", "user_id"
+        ),
+        STREAM_HLL_SRC_FILES,
+        _fold,
+        replay=_fold,
+    )
 
     # grade via one SQL pass sharing the oracle's expression text
     _pq_read(
@@ -6289,22 +5956,7 @@ def _loghist_stream_state(spark: SparkSession, sf: str) -> str:
     from ziggurat_spark.tables import load_table
 
     li = load_table(spark, sf, "lineitem")
-    src_dir = scratch_dir("zs_stream_loghist_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        li.select("l_extendedprice").repartition(
-            STREAM_LOGHIST_SRC_FILES
-        ),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_loghist_state_")
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         # fold committed history into ONE epoch first (sum of sums =
@@ -6314,34 +5966,17 @@ def _loghist_stream_state(spark: SparkSession, sf: str) -> str:
         loghist_buckets(b).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(workdir, f"part_b{bid}")
         )
-        # driver-side read of the source's metadata log — zero jobs
-        files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-        if files:  # an empty restart trigger keeps the prior target
-            probe["bid"] = bid
-            probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # gone before the replay call below, so its _src_log_files
-        # lookup yields [] and the recorded target is kept
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery of the NEWEST batch AFTER compaction (the
-    # only batch a checkpoint-coordinated engine can replay): the
+    # crash re-delivery of the newest batch AFTER compaction: the
     # keyed overwrite makes the SUM-fold replay-exact even though
     # SUM itself is not idempotent
-    if probe.get("files"):  # an all-empty stream has no replay target
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["bid"])
+    run_fold_stream(
+        spark,
+        li.select("l_extendedprice"),
+        STREAM_LOGHIST_SRC_FILES,
+        _fold,
+        replay=_fold,
+    )
     return workdir
 
 
@@ -6381,8 +6016,7 @@ def x_stream_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    src_dir = scratch_dir("zs_stream_wbk_")
-    _wsrc = docs.select(
+    wsrc = docs.select(
         "source",
         "doc_id",
         F.expr(_WBK_HV).alias("hv"),
@@ -6392,21 +6026,10 @@ def x_stream_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
             ),
             F.lit(1).cast("bigint"),
         ).alias("w"),
-    ).select(
-        "source", "doc_id", F.expr("hv div w").alias("pri")
-    ).repartition(STREAM_WBK_SRC_FILES)
-    _READ_SCHEMA[("src", src_dir)] = _write_src(_wsrc, src_dir)
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    ).select("source", "doc_id", F.expr("hv div w").alias("pri"))
     workdir = scratch_dir("zs_stream_wbk_state_")
     state = {"path": None, "v": 0}
     w_ = W.partitionBy("source").orderBy("pri", "doc_id")
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         cand = (
@@ -6426,33 +6049,12 @@ def x_stream_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
         new_path = os.path.join(workdir, f"v{state['v']}")
         merged.coalesce(1).write.mode("overwrite").parquet(new_path)
         state["path"], state["v"] = new_path, state["v"] + 1
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery (the first batch re-read verbatim from its
-    # recorded source files): dropDuplicates + re-truncate make the
-    # merge idempotent — the graded sample must not move
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's action materializes
-        _fold(replayed, probe["bid"])
+    # crash re-delivery: dropDuplicates + re-truncate make the merge
+    # idempotent — the graded sample must not move
+    run_fold_stream(
+        spark, wsrc, STREAM_WBK_SRC_FILES, _fold, replay=_fold
+    )
 
     final = _pq_read(spark, ("st", workdir), [state["path"]])
     return (
@@ -6492,7 +6094,7 @@ from ziggurat_spark.queries.corpus_ops import (  # noqa: E402
         "no tombstones: v2 is a full snapshot, so absence from the "
         "maintained state IS the removal signal. Upsert is "
         "idempotent (same doc -> same hash row), proven in-op by "
-        "re-delivering the first batch after the stream ends. At "
+        "re-delivering the newest batch after the stream ends. At "
         "100 TB: per-trigger I/O O(batch + touched buckets); the "
         "diff is the batch op's hash-only join."
     ),
@@ -6509,21 +6111,9 @@ def x_stream_snapshot_apply(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     # v2 dump: the SAME deterministic hash frame the batch diff uses
     v2 = _snapshot_v2_hashes(docs)
-    src_dir = scratch_dir("zs_stream_snap_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        v2.repartition(STREAM_SNAP_SRC_FILES), src_dir
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_snap_state_")
     n_buckets = 16
     state: dict = {}
-    probe: dict = {}
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
     #: monotonic merge counter: a RE-DELIVERED batch id must still
     #: get a fresh state version — reusing the original delivery's
     #: version would make the merge overwrite the very directory its
@@ -6545,33 +6135,12 @@ def x_stream_snapshot_apply(spark: SparkSession, sf: str) -> DataFrame:
             key="doc_id",
             order_cols=(F.desc("ob"), F.desc("doc_id")),
         )
-        if not probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-            if files:
-                probe["bid"] = bid
-                probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery (the first batch re-read verbatim from its
-    # recorded source files): the LWW upsert of identical rows is a
+    # crash re-delivery: the LWW upsert of identical rows is a
     # byte-level no-op for the graded diff
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's action materializes
-        _fold(replayed, probe["bid"])
+    run_fold_stream(
+        spark, v2, STREAM_SNAP_SRC_FILES, _fold, replay=_fold
+    )
 
     cur = _pq_read(
         spark, ("lww", workdir), sorted(state.values())
@@ -6644,18 +6213,7 @@ def _cms_stream_state(
         .filter(F.col("user_id").isNotNull())
         .select("user_id")
     )
-    src_dir = scratch_dir("zs_stream_cms_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-        ev.repartition(STREAM_CMS_SRC_FILES), src_dir
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     workdir = scratch_dir("zs_stream_cms_state_")
-    probe: dict = {}
 
     def _partial(b: DataFrame) -> DataFrame:
         return (
@@ -6663,8 +6221,6 @@ def _cms_stream_state(
             .groupBy("co.j", "co.cell")
             .agg(F.count("*").cast("bigint").alias("c"))
         )
-
-    ckpt = tempfile.mkdtemp(prefix="zs_ck_")
 
     def _fold(b, bid):
         # fold committed history into ONE epoch first (sum of sums =
@@ -6674,35 +6230,14 @@ def _cms_stream_state(
         _partial(b).coalesce(1).write.mode("overwrite").parquet(
             os.path.join(workdir, f"part_b{bid}")
         )
-        # driver-side read of the source's metadata log — zero jobs
-        files = _src_log_files(os.path.join(ckpt, "ck"), bid)
-        if files:  # an empty restart trigger keeps the prior target
-            probe["bid"] = bid
-            probe["files"] = files
 
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # gone before the replay call below, so its _src_log_files
-        # lookup yields [] and the recorded target is kept
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-    # crash re-delivery of the NEWEST batch (the only one a
-    # checkpoint-coordinated engine can replay — its partial is
-    # still keyed; strictly-older ones are committed, which is why
+    # crash re-delivery of the newest batch (its partial is still
+    # keyed; strictly-older ones are committed, which is why
     # compacting them was safe): the keyed overwrite makes the
     # SUM-fold replay-exact even though SUM itself is not idempotent
-    if probe.get("files"):  # an all-empty stream has no replay target
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["bid"])
+    run_fold_stream(
+        spark, ev, STREAM_CMS_SRC_FILES, _fold, replay=_fold
+    )
     return workdir, ev
 
 
@@ -6845,13 +6380,10 @@ def _pipe_oracle(verify: bool = False) -> str:
     )
 
 
-def _pipe_gate(docs: DataFrame, carry: tuple = ()) -> DataFrame:
+def _pipe_gate(docs: DataFrame) -> DataFrame:
     """Quality gate + content hash in ONE scan: the x_quality_
     classifier integer head (shared _qc_feature_frame) filtered at
-    QC_KEEP_MICRO, projecting (doc_id, source, text, h) plus any
-    ``carry`` passthrough columns (the stream fold threads the
-    batch's source-file name through so ONE collect yields both the
-    touched buckets and the replay target)."""
+    QC_KEEP_MICRO, projecting (doc_id, source, text, h)."""
     from ziggurat_spark.queries.training_ops import (
         QC_KEEP_MICRO,
         _qc_feature_frame,
@@ -6859,14 +6391,10 @@ def _pipe_gate(docs: DataFrame, carry: tuple = ()) -> DataFrame:
 
     p = _qc_feature_frame(
         docs,
-        extra={
-            "source": F.col("source"),
-            "text": F.col("text"),
-            **{c: F.col(c) for c in carry},
-        },
+        extra={"source": F.col("source"), "text": F.col("text")},
     )
     return p.filter(F.col("score_micro") >= QC_KEEP_MICRO).select(
-        "doc_id", "source", "text", F.md5("text").alias("h"), *carry
+        "doc_id", "source", "text", F.md5("text").alias("h")
     )
 
 
@@ -6895,17 +6423,6 @@ def _pipe_stream_state(
     docs = load_table(spark, sf, "documents").select(
         "doc_id", "source", "text"
     )
-    src_dir = scratch_dir("zs_stream_pipe_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    docs.repartition(STREAM_PIPE_SRC_FILES),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_pipe_state_")
     exact_dir = os.path.join(statedir, "exact")
     lsh_dir = os.path.join(statedir, "lsh")
@@ -6922,7 +6439,6 @@ def _pipe_stream_state(
     live_counts: list = []
     io_audit: list = []
     seq = {"n": 0}
-    probe: dict = {}
     cc_fold = _cc_forest_fold(spark, cc_dir, cc_state, cc_ridx, cc_audit)
     # in the unverified pipeline, bands is the ONLY tiered state
     # kind: detected pairs feed the forest absorb directly and are
@@ -6942,7 +6458,7 @@ def _pipe_stream_state(
         spark, lsh_dir, STREAM_PIPE_CADENCE, kinds, folds
     )
 
-    def _fold(b, bid):
+    def _fold(b, bid, cc_bid=None):
         # 0) size-tier the band history (strictly-older runs)
         tier(bid)
         # every localCheckpoint below is consumed within this fold —
@@ -6955,9 +6471,7 @@ def _pipe_stream_state(
         # aggregation and materializes it in the same job — per-
         # trigger action count is wall-clock in a stream fold
         gated = _pipe_gate(
-            b.select("*", F.input_file_name().alias("_src"))
-            .repartition(spark.sparkContext.defaultParallelism),
-            carry=("_src",),
+            b.repartition(spark.sparkContext.defaultParallelism)
         ).localCheckpoint(eager=False)
         spent.append(gated)
         # 2) EXACT-HASH MERGE: per content hash keep (min doc_id =
@@ -6977,29 +6491,16 @@ def _pipe_stream_state(
                 "kb", F.pmod(F.xxhash64("h"), F.lit(16)).cast("int")
             )
         )
-        # ONE control-plane pass over the gated batch yields BOTH
-        # the exact-state touched buckets (kb is a pure function of
-        # h, so gated's kb set == cand's kb set) AND the batch's
-        # source files (the close-time replay target — riding this
-        # collect instead of a per-trigger job or a driver-side
-        # _src_log_files read, which this fold predates). On the
-        # close-time replay (a checkpointed read) _src is '' and the
-        # prior replay target is kept; a batch whose rows ALL fail
-        # the quality gate likewise keeps the prior target (it
-        # contributes no state, so replaying its predecessor proves
-        # the same idempotence).
-        kf = (
-            gated.select(
-                F.pmod(F.xxhash64("h"), F.lit(16))
-                .cast("int")
-                .alias("kb"),
-                F.col("_src").alias("f"),
+        # exact-state touched buckets: kb is a pure function of h,
+        # so gated's kb set == cand's kb set
+        tkbs = sorted(
+            r["kb"]
+            for r in gated.select(
+                F.pmod(F.xxhash64("h"), F.lit(16)).cast("int").alias("kb")
             )
             .distinct()
             .collect()
         )
-        tkbs = sorted({r["kb"] for r in kf})
-        files = sorted({r["f"] for r in kf if r["f"]})
         old_dirs = [exact_state[k] for k in tkbs if k in exact_state]
         merged = cand.select("h", "doc_id", "hid", "fb")
         if old_dirs:
@@ -7247,13 +6748,13 @@ def _pipe_stream_state(
             # side; an isEmpty() job re-computed what the write
             # already recorded)
             if _parquet_dir_rows(os.path.join(lsh_dir, f"ver_{key}")):
-                cc_fold(ver, bid if bid not in probe else bid + 1000)
+                cc_fold(ver, bid if cc_bid is None else cc_bid)
         else:
             # 4) FOREST ABSORB this trigger's new pairs
             # (bucket-pruned reads + root→bucket index inside
             # _cc_forest_fold)
             if not pairs.isEmpty():
-                cc_fold(pairs, bid if bid not in probe else bid + 1000)
+                cc_fold(pairs, bid if cc_bid is None else cc_bid)
         for fu in futs:
             fu.result()
         pool.shutdown()
@@ -7274,32 +6775,21 @@ def _pipe_stream_state(
                 **pio[0],
             }
         )
-        probe[bid] = True
-        if files:  # an empty restart trigger keeps the prior target
-            probe["files"] = files
-            probe["last"] = bid
         for df in spent:  # all consumed above; release the blocks
             release_checkpoint(df)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # crash re-delivery of the NEWEST batch before grading: the
-    # exact merge re-aggregates to identical rows (min is
-    # idempotent), the fb construction reproduces the identical
-    # fresh set so the keyed band runs rewrite in place, and
-    # the forest absorb re-converges to identical targets
-    if probe.get("files"):  # an all-empty stream has no replay target
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["last"])
+    # crash re-delivery before grading: the exact merge
+    # re-aggregates to identical rows (min is idempotent), the fb
+    # construction reproduces the identical fresh set so the keyed
+    # band runs rewrite in place, and the forest absorb re-converges
+    # to identical targets (under a fresh version id)
+    run_fold_stream(
+        spark,
+        docs,
+        STREAM_PIPE_SRC_FILES,
+        _fold,
+        replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
+    )
     return {
         "statedir": statedir,
         "exact": exact_state,
@@ -7541,17 +7031,6 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     )
 
     reg = _registry(spark, sf)
-    src_dir = scratch_dir("zs_stream_er_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    reg.repartition(STREAM_ER_SRC_FILES),
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     statedir = scratch_dir("zs_stream_er_state_")
     lsh_dir = os.path.join(statedir, "lsh")
     cc_dir = os.path.join(statedir, "cc")
@@ -7565,7 +7044,6 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     folds: list = []
     io_audit: list = []
     seq = {"n": 0}
-    probe: dict = {}
     cc_fold = _cc_forest_fold(spark, cc_dir, cc_state, cc_ridx, cc_audit)
     # "bands" is the blocking-key index (symmetric-delete keys ARE a
     # 1-band LSH whose bucket is the (segment, key) string); the ver
@@ -7591,7 +7069,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         spark, lsh_dir, STREAM_ER_CADENCE, kinds, folds
     )
 
-    def _fold(b, bid):
+    def _fold(b, bid, cc_bid=None):
         tier(bid)
         # every localCheckpoint below is consumed within this fold —
         # released at the end (the CC-fold GC lesson)
@@ -7602,30 +7080,21 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # and its result doubles as the record-store merge's
         # touched set (skipping that merge's internal collect job)
         feat = featurize_records(
-            b.select("*", F.input_file_name().alias("_src"))
-            .repartition(spark.sparkContext.defaultParallelism)
+            b.repartition(spark.sparkContext.defaultParallelism)
         ).localCheckpoint(eager=False)
         spent.append(feat)
         # blocking keys as a 1-band index: bucket = the (segment,
         # deletion-key) STRING — the probe joins on bucket equality,
         # so parity with the oracle's (seg, key) join is exact, and
         # segment equality never materializes a cross-segment pair.
-        # _src rides along (projected away before the run write) so
-        # the fused sync below can read it; it was projected BEFORE
-        # the repartition, so it is evaluated in the scan stage where
-        # input_file_name() is defined; on the close-time replay (a
-        # checkpointed read) it yields '' and the prior replay target
-        # is kept, exactly as before.
         kdf = (
             feat.select(
                 "rec_id",
                 "seg",
-                "_src",
                 F.explode(F.expr(ER_DELKEYS_SQL)).alias("dk"),
             )
             .select(
                 "rec_id",
-                "_src",
                 F.concat_ws("|", "seg", "dk").alias("bucket"),
             )
             .withColumn("band", F.lit(0).cast("int"))
@@ -7635,27 +7104,23 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         )
         spent.append(kdf)
         # ONE control-plane aggregation (round-10: was TWO full
-        # passes — a (store-bucket, file) distinct-collect over feat
-        # plus the probe's own (band, shard) collect over kdf) yields
-        # the store-bucket touched set, the batch's source files (the
-        # close-time replay target), AND the probe's (band,
+        # passes — a store-bucket distinct-collect over feat plus the
+        # probe's own (band, shard) collect over kdf) yields the
+        # store-bucket touched set AND the probe's (band,
         # bucket-shard) set. Lossless fusion: every record emits >= 1
         # deletion key (ER_DELKEYS_SQL always contains dstr itself),
-        # so kdf's rec_id/_src sets equal feat's, and the (k, f)
-        # association was never used — only the two sets.
+        # so kdf's rec_id set equals feat's.
         sync = kdf.agg(
             F.collect_set(
                 F.pmod(F.xxhash64("rec_id"), F.lit(ER_STORE_KB)).cast(
                     "int"
                 )
             ).alias("ks"),
-            F.collect_set("_src").alias("fs"),
             F.collect_set(
                 F.struct("band", _bucket_shard("bucket").alias("bs"))
             ).alias("ws"),
         ).collect()[0]
         fkbs = sorted(sync["ks"])
-        files = sorted(f for f in sync["fs"] if f)
         wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
         key = f"b{bid}"
         pio: list = []
@@ -7680,13 +7145,11 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # trigger reads it back — submit it on a small pool so the
         # verify/absorb chain's jobs back-fill it instead of paying
         # its full job latency serially (guide §2.6); joined before
-        # the fold returns. _src is projected away: the band-run
-        # layout on disk is unchanged.
+        # the fold returns
         pool = ThreadPoolExecutor(max_workers=2)
         futs = [
             pool.submit(
-                lambda: kdf.select("rec_id", "bucket", "band")
-                .coalesce(1)
+                lambda: kdf.coalesce(1)
                 .write.mode("overwrite")
                 .parquet(os.path.join(lsh_dir, f"bands_{key}"))
             )
@@ -7822,39 +7285,28 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # (driver-side; an isEmpty() job re-computed what the write
         # already recorded)
         if _parquet_dir_rows(os.path.join(lsh_dir, f"ver_{key}")):
-            cc_fold(ver, bid if bid not in probe else bid + 1000)
+            cc_fold(ver, bid if cc_bid is None else cc_bid)
         for fu in futs:
             fu.result()
         pool.shutdown()
         io_audit.append(
             {"bid": bid, "store_bks_read": len(sdirs), **pio[0]}
         )
-        probe[bid] = True
-        if files:  # an empty restart trigger keeps the prior target
-            probe["files"] = files
-            probe["last"] = bid
         for df in spent:
             release_checkpoint(df)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(_fold)
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # crash re-delivery of the NEWEST batch before grading: blocking
-    # keys and pair sets are pure functions of the records, the
-    # record store is keyed LWW over immutable rows, and min-parent
-    # connectivity is idempotent — the replay must land identical
-    # state
-    if probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *probe["files"]
-        ).localCheckpoint(eager=False)  # fold's first action materializes
-        _fold(replayed, probe["last"])
+    # crash re-delivery before grading: blocking keys and pair sets
+    # are pure functions of the records, the record store is keyed
+    # LWW over immutable rows, and min-parent connectivity is
+    # idempotent — the replay must land identical state (the forest
+    # absorb writes under a fresh version id)
+    run_fold_stream(
+        spark,
+        reg,
+        STREAM_ER_SRC_FILES,
+        _fold,
+        replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
+    )
     return {
         "statedir": statedir,
         "lsh_dir": lsh_dir,
