@@ -16,21 +16,37 @@ through micro-batches with checkpointing — at 100 TB the file source
 becomes Kafka (sources/kafka.py) and availableNow becomes a
 continuous trigger; nothing else changes.
 
-Fold scaffold: ``run_fold_stream`` is the only spelling of the
-consume → fold → commit loop (stage a parquet source, drain it one
-file per trigger under availableNow through a foreachBatch fold); an
-op supplies its fold and its grade, nothing else. Replay contract:
-when an op passes ``replay``, the NEWEST non-empty batch — the only
-batch a checkpointed engine re-delivers — is re-delivered once, its
-files read from the source's own metadata log (zero Spark jobs), and
-only after the checkpoint dir is gone. Hand-rolled on purpose: the
-restart ops (x_stream_exactly_once_restart, x_stream_budget_restart,
-x_stream_dedup_historic_loop) reuse ONE checkpoint across two runs;
-the outputMode aggregation and join streams keep their state in the
-engine, not in a fold; x_stream_upsert_keyed drains 4 files per
-trigger; x_stream_poison_shunt drains its whole source in one
-trigger; x_stream_listener_metrics names its query and taps it with
-observe() for the listener under test.
+Stream scaffold, three spellings:
+
+- ``_stage_src`` stages a frame as a parquet source dir of exactly
+  ``n_files`` files, batch order pinned to part-file order, and
+  returns it with its write-time schema (no footer inference).
+- ``run_fold_stream`` is the consume → fold → commit loop: it stages
+  the source, drains it one file per trigger under availableNow
+  through a foreachBatch fold, and owns the checkpoint; an op
+  supplies its fold and its grade, nothing else. A list of frames
+  runs once per frame over ONE checkpoint (stop → new files →
+  restart), which is how x_stream_dedup_historic_loop and
+  x_stream_budget_restart grade a restart. Replay contract: when an
+  op passes ``replay``, the NEWEST non-empty batch — the only batch a
+  checkpointed engine re-delivers — is re-delivered once, its files
+  read from the source's own metadata log (zero Spark jobs), and only
+  after the checkpoint dir is gone.
+- ``_drain_memory`` drains an outputMode stream (the aggregation and
+  join streams, whose state lives in the engine, not in a fold) into
+  a memory sink.
+
+Streams that stage through ``_stage_src`` but keep their own
+writeStream, because the engine behaviour is what they grade:
+x_stream_exactly_once_restart (a second run over already-committed
+files) and x_stream_state_recovery (a state-store reload under a
+fresh runId) — neither has a fold to run, and staging their halves
+as separate arrivals would only add staging jobs;
+x_stream_upsert_keyed (applyInPandasWithState on the stream); and
+x_stream_listener_metrics (a named query tapped with observe() for
+the listener under test). x_stream_poison_shunt (whole source in one
+trigger) and x_stream_window_finalize (two parts in reversed time
+order) write their own sources.
 """
 
 from __future__ import annotations
@@ -54,11 +70,17 @@ from ziggurat_spark.tables import _nanos_ts_columns, ensure_runtime_confs
 
 def _stream_events(spark: SparkSession, sf: str) -> DataFrame:
     """readStream over the events parquet, with the same ns→µs
-    timestamp handling as tables.load_table."""
+    timestamp handling as tables.load_table. The raw schema is
+    inferred once per path (a schema-less read runs one Spark job on
+    every call; the join ops open the table two or three times)."""
     ensure_runtime_confs(spark)
     path = f"{sf}/events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _READ_SCHEMA.get(("events", path))
+    if raw_schema is None:
+        raw_schema = _READ_SCHEMA[("events", path)] = (
+            spark.read.parquet(path).schema
+        )
     # the file source requires a directory; glob-filter to one table
     df = (
         spark.readStream.schema(raw_schema)
@@ -104,6 +126,24 @@ def _sized_state(fn):
     return wrapped
 
 
+def _drain_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Drain a streaming frame under availableNow into a memory sink
+    with outputMode ``mode`` and return the sink's table. The
+    checkpoint lives in a temp dir removed once the drain ends."""
+    name = f"stream_mem_{uuid.uuid4().hex[:12]}"
+    with tempfile.TemporaryDirectory() as ckpt:
+        (
+            df.writeStream.queryName(name)
+            .outputMode(mode)
+            .format("memory")
+            .option("checkpointLocation", os.path.join(ckpt, "ck"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return df.sparkSession.table(name)
+
+
 @register(
     "x_stream_tumbling_counts",
     oracle=(
@@ -132,18 +172,7 @@ def x_stream_tumbling_counts(spark: SparkSession, sf: str) -> DataFrame:
             "n",
         )
     )
-    name = f"stream_tumbling_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.queryName(name)
-            .outputMode("complete")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("win_start")
+    return _drain_memory(agg, "complete").orderBy("win_start")
 
 
 @register(
@@ -238,18 +267,7 @@ def x_stream_windowed_join(spark: SparkSession, sf: str) -> DataFrame:
     ).select(
         F.col("click.event_id").alias("l"), F.col("view.event_id").alias("r")
     )
-    name = f"stream_join_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.queryName(name)
-            .outputMode("append")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("l", "r").limit(5000)
+    return _drain_memory(joined, "append").orderBy("l", "r").limit(5000)
 
 
 @register(
@@ -292,18 +310,7 @@ def x_stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
             "n",
         )
     )
-    name = f"stream_session_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.queryName(name)
-            .outputMode("complete")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "session_start")
+    return _drain_memory(agg, "complete").orderBy("user_id", "session_start")
 
 
 @register(
@@ -367,19 +374,8 @@ def x_stream_left_join(spark: SparkSession, sf: str) -> DataFrame:
         F.col("click.event_id").alias("l"),
         F.coalesce(F.col("view.event_id"), F.lit(-1)).alias("r"),
     )
-    name = f"stream_ljoin_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.queryName(name)
-            .outputMode("append")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_memory(joined, "append")
         .filter(F.col("l") >= 0)
         .select("l", "r")
         .orderBy("l", "r")
@@ -446,19 +442,8 @@ def x_stream_full_outer_join(spark: SparkSession, sf: str) -> DataFrame:
         F.coalesce(F.col("click.event_id"), F.lit(-1)).alias("l"),
         F.coalesce(F.col("view.event_id"), F.lit(-1)).alias("r"),
     )
-    name = f"stream_fjoin_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.queryName(name)
-            .outputMode("append")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_memory(joined, "append")
         .filter(~((F.col("l") == -1) & (F.col("r") == -1)))
         .orderBy("l", "r")
         .limit(5000)
@@ -491,18 +476,7 @@ def x_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     deduped = src.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            deduped.writeStream.queryName(name)
-            .outputMode("append")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).agg(F.count("*").alias("n"))
+    return _drain_memory(deduped, "append").agg(F.count("*").alias("n"))
 
 
 @register(
@@ -538,18 +512,7 @@ def x_stream_sliding_counts(spark: SparkSession, sf: str) -> DataFrame:
             F.col("w.start").cast("string").alias("win_start"), "n", "sv100"
         )
     )
-    name = f"stream_sliding_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            agg.writeStream.queryName(name)
-            .outputMode("complete")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("win_start")
+    return _drain_memory(agg, "complete").orderBy("win_start")
 
 
 @register(
@@ -599,19 +562,8 @@ def x_stream_join_chain(spark: SparkSession, sf: str) -> DataFrame:
         F.col("view.event_id").alias("view_id"),
         F.col("purchase.event_id").alias("purchase_id"),
     )
-    name = f"stream_chain_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            chained.writeStream.queryName(name)
-            .outputMode("append")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_memory(chained, "append")
         .orderBy("click_id", "view_id", "purchase_id")
         .limit(5000)
     )
@@ -646,37 +598,12 @@ def x_stream_stateful_counts(spark: SparkSession, sf: str) -> DataFrame:
         F.col("event_type").cast("string").alias("key")
     )
     counted = keyed_running_counts(src, "key")
-    name = f"stream_stateful_{uuid.uuid4().hex[:12]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            counted.writeStream.queryName(name)
-            .outputMode("update")
-            .format("memory")
-            .option("checkpointLocation", os.path.join(ckpt, "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        _drain_memory(counted, "update")
         .groupBy("key")
         .agg(F.max("total_rows").alias("total"))
         .orderBy("key")
     )
-
-
-def _events_split_dir(spark: SparkSession, sf: str, n: int) -> str:
-    """Materialize events as exactly ``n`` parquet files so the file
-    source's maxFilesPerTrigger can carve a deterministic number of
-    micro-batches — the test stand-in for Kafka's max-poll-records
-    bounded batches (S3, consumer_handler.clj:98-115)."""
-    from ziggurat_spark.tables import load_table
-
-    out = scratch_dir("zs_stream_split_")
-    _READ_SCHEMA[("src", out)] = _write_src(
-        load_table(spark, sf, "events").repartition(n), out
-    )
-    return out
 
 
 @register(
@@ -726,7 +653,10 @@ _LWW_KEY_DUCK = "printf('%020d#%012d', epoch_us(ts), event_id)"
 #: of times per query. Keys EMBED the scratch directory, which is
 #: unique per run, so entries can never collide across runs or ops;
 #: LWW state schemas are captured at WRITE time (no inference job at
-#: all), everything else pays inference exactly once per run.
+#: all), everything else pays inference exactly once per run. The one
+#: exception is ``("events", path)``, the raw events table schema
+#: behind _stream_events: input-table files never change, so it is
+#: inferred once per path per process, like tables.load_table's.
 #: Growth note (round-9 ADVICE #3): entries are never evicted, so a
 #: long-lived session accrues one tiny StructType per query run per
 #: scratch dir (~KB each; a full 3-pass bench leaves ~2k entries).
@@ -775,17 +705,6 @@ def _write_src(df: DataFrame, src_dir: str):
     schema-less spark.read.parquet(src_dir) runs."""
     df.write.mode("overwrite").parquet(src_dir)
     return _nullable_top(df.schema)
-
-
-def _src_schema(spark: SparkSession, src_dir: str):
-    """Schema of a just-written stream-source dir: the write-side
-    capture when the writer recorded one (zero jobs — see
-    _write_src), else one cached inference per dir."""
-    sch = _READ_SCHEMA.get(("src", src_dir))
-    if sch is None:
-        sch = spark.read.parquet(src_dir).schema
-        _READ_SCHEMA[("src", src_dir)] = sch
-    return sch
 
 
 def _src_log_files(ckpt: str, bid: int) -> list[str]:
@@ -888,9 +807,34 @@ def _src_log_files(ckpt: str, bid: int) -> list[str]:
 _SRC_LOG_WARNED: list = []
 
 
+def _part_files(d: str) -> list[str]:
+    """The parquet part-file names in ``d``, in part-file order."""
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _stage_src(spark: SparkSession, df: DataFrame, n_files: int):
+    """Stage ``df.repartition(n_files)`` as a fresh parquet stream-source
+    dir and return ``(src_dir, schema)`` — the write-time schema, so
+    stream setup runs no footer inference. ``n_files`` bounds the
+    micro-batches a file source carves (the test stand-in for Kafka's
+    max-poll bounded batches, S3, consumer_handler.clj:98-115). The
+    file source takes files oldest-first by modification time, which
+    the parallel write leaves in task-finish order (same-ms ties
+    broken by listing order), so the mtimes are pinned to part-file
+    order: drained one file per trigger, trigger i reads part file i
+    on every run."""
+    src_dir = scratch_dir("zs_stream_src_")
+    schema = _write_src(df.repartition(n_files), src_dir)
+    parts = _part_files(src_dir)
+    t0 = time.time() - len(parts)
+    for i, f in enumerate(parts):
+        os.utime(os.path.join(src_dir, f), (t0 + i, t0 + i))
+    return src_dir, schema
+
+
 def run_fold_stream(
     spark: SparkSession,
-    src: DataFrame,
+    src: DataFrame | list[DataFrame],
     n_files: int,
     fold,
     *,
@@ -899,18 +843,23 @@ def run_fold_stream(
     """The streaming fold scaffold, spelled once: consume → fold →
     commit, with crash re-delivery of the newest batch.
 
-    Stages ``src.repartition(n_files)`` as a parquet source dir (the
-    write-time schema is pinned, so stream setup runs no footer
-    inference), drains it with ``maxFilesPerTrigger=1`` under
-    ``availableNow`` — exactly ``n_files`` micro-batches in part-file
-    order, each handed to ``fold(batch, bid)`` through foreachBatch,
-    so a run's batch composition repeats exactly — and returns the
-    source dir. The checkpoint lives in its own temp dir OUTSIDE the
-    scratch tree (so state footprints count fold state only) and is
-    removed on every exit path, a raising fold included.
+    Stages ``src`` through _stage_src as ``n_files`` parquet files,
+    drains them with ``maxFilesPerTrigger=1`` under ``availableNow`` —
+    exactly ``n_files`` micro-batches in part-file order, each handed
+    to ``fold(batch, bid)`` through foreachBatch, so a run's batch
+    composition repeats exactly — and returns the source dir. The
+    checkpoint lives in its own temp dir OUTSIDE the scratch tree (so
+    state footprints count fold state only) and is removed on every
+    exit path, a raising fold included.
+
+    ``src`` may also be a list of frames, one per run over ONE shared
+    checkpoint (stop → new files → restart): frame i is staged as
+    ``n_files`` more files, strictly newer than every earlier file,
+    just before run i's availableNow start, so run i folds exactly
+    frame i's files and batch ids continue across runs.
 
     ``replay(batch, bid)``, when given, re-delivers the NEWEST
-    non-empty batch once the stream has closed — the only batch a
+    non-empty batch once the last run has closed — the only batch a
     checkpoint-coordinated engine can legitimately replay (older
     ones are committed, which is what makes folding them into epochs
     safe). Its target is read per trigger from the source's own
@@ -924,16 +873,8 @@ def run_fold_stream(
 
     import pyarrow.parquet as pq
 
-    src_dir = scratch_dir("zs_stream_src_")
-    schema = _write_src(src.repartition(n_files), src_dir)
-    # the file source takes files oldest-first by modification time,
-    # which the parallel write leaves in task-finish order (same-ms
-    # ties broken by listing order): pin part-file order instead, so
-    # batch i is part file i on every run
-    parts = sorted(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
-    t0 = time.time() - len(parts)
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src_dir, f), (t0 + i, t0 + i))
+    frames = src if isinstance(src, list) else [src]
+    src_dir, schema = _stage_src(spark, frames[0], n_files)
     ckpt = tempfile.mkdtemp(prefix="zs_ck_")
     log = os.path.join(ckpt, "ck")
     target: dict = {}
@@ -951,16 +892,32 @@ def run_fold_stream(
                 target["bid"], target["files"] = bid, files
 
     try:
-        (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .writeStream.foreachBatch(_batch)
-            .option("checkpointLocation", log)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        for i, frame in enumerate(frames):
+            if i:
+                newest = max(
+                    os.path.getmtime(os.path.join(src_dir, f))
+                    for f in _part_files(src_dir)
+                )
+                arrival, _ = _stage_src(spark, frame, n_files)
+                for j, f in enumerate(_part_files(arrival)):
+                    os.replace(
+                        os.path.join(arrival, f), os.path.join(src_dir, f)
+                    )
+                    os.utime(
+                        os.path.join(src_dir, f),
+                        (newest + 1 + j, newest + 1 + j),
+                    )
+                shutil.rmtree(arrival)
+            (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src_dir)
+                .writeStream.foreachBatch(_batch)
+                .option("checkpointLocation", log)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     if target:
@@ -1340,16 +1297,17 @@ def x_stream_upsert_keyed(spark: SparkSession, sf: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src_dir = _events_split_dir(spark, sf, 8)
-    schema = _src_schema(spark, src_dir)
-    # 2 micro-batches (4 files each): the graded LWW result is
+    from ziggurat_spark.tables import load_table
+
+    src_dir, schema = _stage_src(spark, load_table(spark, sf, "events"), 2)
+    # 2 micro-batches (one file each): the graded LWW result is
     # batching-invariant (same oracle at ANY batching), two batches
     # still prove cross-batch state carry, and per-batch fixed costs
     # (state-store init + Python worker round-trip) are this op's
     # dominant term — measured ~1 s per micro-batch at sf0.1
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
+        .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
     proj = stream.select(
@@ -1482,11 +1440,7 @@ def x_stream_poison_shunt(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("value"),
     )
     src_dir = scratch_dir("zs_poison_src_")
-    _READ_SCHEMA[("src", src_dir)] = _write_src(
-    src,
-        src_dir,
-    )
-    schema = _src_schema(spark, src_dir)
+    schema = _write_src(src, src_dir)
     stream = spark.readStream.schema(schema).parquet(src_dir)
 
     out_root = scratch_dir("zs_poison_out_")
@@ -1612,8 +1566,9 @@ def x_stream_channel_fanout(spark: SparkSession, sf: str) -> DataFrame:
 )
 @_sized_state
 def x_stream_exactly_once_restart(spark: SparkSession, sf: str) -> DataFrame:
-    src_dir = _events_split_dir(spark, sf, 4)
-    schema = _src_schema(spark, src_dir)
+    from ziggurat_spark.tables import load_table
+
+    src_dir, schema = _stage_src(spark, load_table(spark, sf, "events"), 4)
     workdir = scratch_dir("zs_stream_restart_")
     ckpt = os.path.join(workdir, "ck")
     stats_dir = os.path.join(workdir, "stats")
@@ -1701,9 +1656,8 @@ def x_stream_window_finalize(spark: SparkSession, sf: str) -> DataFrame:
         if f.endswith(".parquet"):
             os.utime(os.path.join(src, f), (base + 100, base + 100))
 
-    schema = _src_schema(spark, src)
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_nullable_top(e.schema))
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
@@ -1766,9 +1720,9 @@ def x_stream_listener_metrics(spark: SparkSession, sf: str) -> DataFrame:
         MetricsRegistry,
         ZigguratQueryListener,
     )
+    from ziggurat_spark.tables import load_table
 
-    src_dir = _events_split_dir(spark, sf, 4)
-    schema = _src_schema(spark, src_dir)
+    src_dir, schema = _stage_src(spark, load_table(spark, sf, "events"), 4)
     registry = MetricsRegistry()
     listener = ZigguratQueryListener(registry).attach(spark)
     route = "listener_metrics_route"
@@ -1847,18 +1801,15 @@ def x_stream_listener_metrics(spark: SparkSession, sf: str) -> DataFrame:
 )
 @_sized_state
 def x_stream_state_recovery(spark: SparkSession, sf: str) -> DataFrame:
-    src_all = _events_split_dir(spark, sf, 4)
-    schema = _src_schema(spark, src_all)
+    from ziggurat_spark.tables import load_table
+
+    src_all, schema = _stage_src(spark, load_table(spark, sf, "events"), 4)
     workdir = scratch_dir("zs_stream_recov_")
     src = os.path.join(workdir, "src")
     ckpt = os.path.join(workdir, "ck")
     out_dir = os.path.join(workdir, "upd")
     os.makedirs(src)
-    files = sorted(
-        f for f in os.listdir(src_all) if f.endswith(".parquet")
-    )
-    import shutil as _sh
-
+    files = _part_files(src_all)
     run_marker = {"run": 0}
 
     def capture(batch_df: DataFrame, batch_id: int) -> None:
@@ -1897,10 +1848,10 @@ def x_stream_state_recovery(spark: SparkSession, sf: str) -> DataFrame:
     # run 1: half the files; then the query stops, new data lands,
     # and a NEW query resumes from the same checkpoint (run 2)
     for f in files[:2]:
-        _sh.copy(os.path.join(src_all, f), os.path.join(src, f))
+        shutil.copy(os.path.join(src_all, f), os.path.join(src, f))
     n_in = run_once()
     for f in files[2:]:
-        _sh.copy(os.path.join(src_all, f), os.path.join(src, f))
+        shutil.copy(os.path.join(src_all, f), os.path.join(src, f))
     n_in += run_once()
 
     upd = spark.read.parquet(out_dir)
@@ -2000,10 +1951,10 @@ def x_stream_dedup_historic(spark: SparkSession, sf: str) -> DataFrame:
         "read. Two runs share one checkpoint (stop → new files → "
         "restart), so run 2 must dedup against hashes run 1 wrote — "
         "the table provably grew and dedups against ITSELF — and "
-        "after run 2 the first run-1 batch is re-delivered verbatim "
-        "through the same callback (the crash-redelivery case): all "
-        "graded numbers must be unchanged. Graded: per-run distinct "
-        "surviving hashes, final table size, and a survivors "
+        "after run 2 the newest batch (run 2's last) is re-delivered "
+        "verbatim through the same callback (the crash-redelivery "
+        "case): all graded numbers must be unchanged. Graded: per-run "
+        "distinct surviving hashes, final table size, and a survivors "
         "checksum (first 8 hex digits as int, order-independent) — "
         "computed AFTER the re-delivery. Per-batch work stays "
         "O(batch + hist-read); at 100 TB the hist side becomes a "
@@ -2014,116 +1965,62 @@ def x_stream_dedup_historic(spark: SparkSession, sf: str) -> DataFrame:
 )
 @_sized_state
 def x_stream_dedup_historic_loop(spark: SparkSession, sf: str) -> DataFrame:
-    import shutil as _sh
-
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
     base = scratch_dir("zs_histdedup_loop_")
-    src = os.path.join(base, "incoming")
     hist_dir = os.path.join(base, "hist")
     out_dir = os.path.join(base, "fresh")
-    stage = os.path.join(base, "stage")
-    os.makedirs(src)
 
     docs.filter(F.col("doc_id") < 250).select(
         F.md5("text").alias("h")
     ).distinct().coalesce(1).write.parquet(os.path.join(hist_dir, "seed"))
 
-    def _stage(name: str, cond):
-        d = os.path.join(stage, name)
-        docs.filter(cond).select(
-            "doc_id", F.md5("text").alias("h")
-        ).repartition(4).write.parquet(d)
-        return sorted(
-            f for f in os.listdir(d) if f.endswith(".parquet")
-        ), d
-
-    a_files, a_dir = _stage(
-        "a", (F.col("doc_id") >= 250) & (F.col("doc_id") < 450)
-    )
-    b_files, b_dir = _stage("b", F.col("doc_id") >= 400)
-    schema = _src_schema(spark, a_dir)
-
-    #: first processed (run, batch) kept for the re-delivery probe
-    replay_probe: dict = {}
-
-    def batch_fn(run: int):
-        def fn(b: DataFrame, bid: int) -> None:
-            key = f"run{run}_b{bid}"
-            # historic = every write-back EXCEPT this batch's own key
-            # (re-delivery must not self-anti-join to empty)
-            others = [
-                os.path.join(hist_dir, k)
-                for k in sorted(os.listdir(hist_dir))
-                if k != key
-            ]
-            # schema pinned per hist_dir (this read runs EVERY
-            # trigger; unpinned it pays a footer-inference job each
-            # time — guide §6)
-            hsch = _READ_SCHEMA.get(("hist", hist_dir))
-            hr = spark.read.option("recursiveFileLookup", "true")
-            if hsch is not None:
-                hr = hr.schema(hsch)
-            hist = hr.parquet(*others)
-            if hsch is None:
-                _READ_SCHEMA[("hist", hist_dir)] = hist.schema
-            surv = b.dropDuplicates(["h"]).join(
-                F.broadcast(hist), "h", "left_anti"
-            )
-            # lazy: the first write below materializes it; the
-            # second reads the persisted blocks (one compute, two
-            # writes — minus the eager checkpoint's own job)
-            surv = surv.localCheckpoint(eager=False)
-            surv.select("h").coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(hist_dir, key)
-            )
-            surv.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(out_dir, key)
-            )
-            if run == 1 and not replay_probe:
-                # replay target from the source's metadata log —
-                # zero jobs, no O(batch) probe_input write
-                files = _src_log_files(ckpt, bid)
-                if files:
-                    replay_probe["run"] = run
-                    replay_probe["bid"] = bid
-                    replay_probe["files"] = files
-
-        return fn
-
-    ckpt = os.path.join(base, "ckpt")
-
-    def run_once(run: int) -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
+    def fold(b: DataFrame, bid: int) -> None:
+        # two files per arrival, one per trigger: run 1 is bids 0-1
+        key = f"run{1 + bid // 2}_b{bid}"
+        # historic = every write-back EXCEPT this batch's own key
+        # (re-delivery must not self-anti-join to empty)
+        others = [
+            os.path.join(hist_dir, k)
+            for k in sorted(os.listdir(hist_dir))
+            if k != key
+        ]
+        # schema pinned per hist_dir (this read runs EVERY trigger;
+        # unpinned it pays a footer-inference job each time — guide §6)
+        hsch = _READ_SCHEMA.get(("hist", hist_dir))
+        hr = spark.read.option("recursiveFileLookup", "true")
+        if hsch is not None:
+            hr = hr.schema(hsch)
+        hist = hr.parquet(*others)
+        if hsch is None:
+            _READ_SCHEMA[("hist", hist_dir)] = hist.schema
+        surv = b.dropDuplicates(["h"]).join(
+            F.broadcast(hist), "h", "left_anti"
         )
-        q = (
-            stream.writeStream.foreachBatch(batch_fn(run))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # lazy: the first write below materializes it; the second
+        # reads the persisted blocks (one compute, two writes — minus
+        # the eager checkpoint's own job)
+        surv = surv.localCheckpoint(eager=False)
+        surv.select("h").coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(hist_dir, key)
         )
-        q.awaitTermination()
-
-    for f in a_files:
-        _sh.copy(os.path.join(a_dir, f), os.path.join(src, f"a_{f}"))
-    run_once(1)
-    for f in b_files:
-        _sh.copy(os.path.join(b_dir, f), os.path.join(src, f"b_{f}"))
-    run_once(2)
-
-    # crash-redelivery: run 1's first batch arrives AGAIN with the
-    # same key (re-read verbatim from its recorded source files);
-    # keyed overwrite + own-key-excluded historic read must leave
-    # every graded number unchanged
-    if replay_probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *replay_probe["files"]
+        surv.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(out_dir, key)
         )
-        batch_fn(replay_probe["run"])(replayed, replay_probe["bid"])
+
+    # run 1 folds arrival A and stops; arrival B lands; run 2 resumes
+    # from the shared checkpoint; then the newest batch is re-delivered
+    # with its own key — keyed overwrite + own-key-excluded historic
+    # read must leave every graded number unchanged
+    arrivals = [
+        docs.filter(cond).select("doc_id", F.md5("text").alias("h"))
+        for cond in (
+            (F.col("doc_id") >= 250) & (F.col("doc_id") < 450),
+            F.col("doc_id") >= 400,
+        )
+    ]
+    run_fold_stream(spark, arrivals, 2, fold, replay=fold)
 
     def _distinct_h(prefix: str):
         dirs = [
@@ -3074,11 +2971,12 @@ def x_stream_budget_maintenance(spark: SparkSession, sf: str) -> DataFrame:
         "x_stream_budget_maintenance, but run as TWO streaming runs "
         "sharing ONE checkpoint — run 1 folds the first half of the "
         "corpus and STOPS; run 2 restarts from the on-disk checkpoint "
-        "and state table and folds the rest; then run 1's first "
-        "micro-batch is re-delivered VERBATIM through the same fold "
-        "(the crash-redelivery case). The graded per-source numbers — "
-        "computed AFTER the re-delivery — must equal the one-shot "
-        "batch prefix exactly: watermark rejection plus keyed "
+        "and state table and folds the rest; then the newest "
+        "micro-batch (run 2's last) is re-delivered VERBATIM through "
+        "the same fold (the crash-redelivery case). The graded "
+        "per-source numbers — computed AFTER the re-delivery — must "
+        "equal the one-shot batch prefix exactly: watermark rejection "
+        "plus keyed "
         "dropDuplicates make the fold idempotent, so neither the "
         "restart boundary nor the replay may move a single document. "
         "Same oracle as the maintenance op: the selection is "
@@ -3088,16 +2986,9 @@ def x_stream_budget_maintenance(spark: SparkSession, sf: str) -> DataFrame:
 )
 @_sized_state
 def x_stream_budget_restart(spark: SparkSession, sf: str) -> DataFrame:
-    import shutil as _sh
-
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    base = scratch_dir("zs_stream_budget_restart_")
-    src = os.path.join(base, "incoming")
-    stage = os.path.join(base, "stage")
-    os.makedirs(src)
-
     proj = docs.select(
         "doc_id",
         "source",
@@ -3108,67 +2999,19 @@ def x_stream_budget_restart(spark: SparkSession, sf: str) -> DataFrame:
     mid = docs.agg(
         F.expr("percentile_approx(doc_id, 0.5, 100000)")
     ).collect()[0][0]
-
-    def _stage(name: str, cond):
-        d = os.path.join(stage, name)
-        proj.filter(cond).repartition(2).write.parquet(d)
-        return sorted(
-            f for f in os.listdir(d) if f.endswith(".parquet")
-        ), d
-
-    a_files, a_dir = _stage("a", F.col("doc_id") <= mid)
-    b_files, b_dir = _stage("b", F.col("doc_id") > mid)
-    schema = _src_schema(spark, a_dir)
-
-    workdir = os.path.join(base, "state")
     state: dict = {}
-    fold = _budget_fold(spark, workdir, state)
-    replay_probe: dict = {}
-
-    def _fold_with_probe(b, bid):
-        if not replay_probe:
-            # replay target from the source's metadata log — zero
-            # jobs, no O(batch) probe_input write
-            files = _src_log_files(ckpt, bid)
-            if files:
-                replay_probe["bid"] = bid
-                replay_probe["files"] = files
-        fold(b, bid)
-
-    ckpt = os.path.join(base, "ckpt")
-
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(_fold_with_probe)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    for f in a_files:
-        _sh.copy(os.path.join(a_dir, f), os.path.join(src, f"a_{f}"))
-    run_once()  # run 1: first half, then STOP
-    # restart boundary: the second run rebuilds the reader from the
-    # shared checkpoint; only the new b_* files are unprocessed
-    for f in b_files:
-        _sh.copy(os.path.join(b_dir, f), os.path.join(src, f"b_{f}"))
-    run_once()  # run 2: resumes from the on-disk checkpoint + state
-
-    # crash-redelivery: run 1's first micro-batch arrives AGAIN
-    # through the same fold (re-read verbatim from its recorded
-    # source files); the graded numbers below are computed AFTER
-    # this and must be unchanged (watermark + dropDuplicates)
-    if replay_probe.get("files"):
-        replayed = spark.read.schema(schema).parquet(
-            *replay_probe["files"]
-        )
-        fold(replayed, replay_probe["bid"])
+    fold = _budget_fold(
+        spark, scratch_dir("zs_stream_budget_restart_"), state
+    )
+    # run 1 folds the first half and STOPS; run 2 resumes from the
+    # shared checkpoint and the on-disk state over the second half;
+    # then the newest micro-batch is re-delivered through the same
+    # fold — the graded numbers below are computed AFTER it and must
+    # be unchanged (watermark + dropDuplicates)
+    halves = [F.col("doc_id") <= mid, F.col("doc_id") > mid]
+    run_fold_stream(
+        spark, [proj.filter(c) for c in halves], 2, fold, replay=fold
+    )
     return _budget_grade(spark, docs, state)
 
 
