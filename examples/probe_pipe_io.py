@@ -80,13 +80,7 @@ def run_pipe(spark, sf: str, n_files: int) -> dict:
         st = ss._pipe_stream_state(spark, sf)
     finally:
         ss.STREAM_PIPE_SRC_FILES = prev
-    lsh_dir = os.path.join(st["statedir"], "lsh")
-    band_dirs = [
-        os.path.join(lsh_dir, d)
-        for d in os.listdir(lsh_dir)
-        if d.startswith("bands_")
-    ]
-    bbytes, bfiles = dir_footprint(band_dirs)
+    bbytes, bfiles = dir_footprint(st["lsh"].live("bands"))
     return {
         "io_audit": st["io_audit"],
         "index_bytes_final": bbytes,
@@ -145,9 +139,12 @@ def selective_probe(spark, sf: str) -> dict:
                     "doc_id",
                 ).localCheckpoint()
                 io: list = []
-                # key "b0" excludes nothing (epoch is L1): pure probe
+                # the epoch is the whole history: a pure probe
                 ss._lsh_probe_pairs(
-                    spark, statedir, "b0", batch, io=io
+                    spark,
+                    [os.path.join(statedir, "bands_L1_000001")],
+                    batch,
+                    io=io,
                 ).count()
                 r = io[0]
                 rows.append(

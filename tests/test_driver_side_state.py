@@ -13,30 +13,38 @@ import os
 
 
 def test_count_state_fold_layout_and_totals(tmp_path):
-    """_count_state_fold keeps the _sum_epoch_compact contract: after
-    folding at batch b, state is ONE epoch (sum of all strictly-older
-    partials) + the live partial; a replayed bid overwrites its own
-    partial idempotently; the total over the dirs equals the sum of
-    the per-batch counts."""
+    """The count state keeps the sketch-policy contract: after folding
+    at batch b, the store's live count dirs are ONE epoch (sum of all
+    strictly-older partials) + the live partial; a replayed bid
+    replaces its own partial; the total over the live dirs equals the
+    sum of the per-batch counts."""
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
-        _count_state_fold,
-        _count_state_total,
+        _count_fold,
+        _count_rows,
     )
 
-    wd = str(tmp_path / "candn")
-    os.makedirs(wd)
+    store = EpochStore(str(tmp_path / "candn"))
     counts = {0: 5, 1: 7, 2: 11, 3: 0}
     for bid in sorted(counts):
-        _count_state_fold(wd, bid, counts[bid])
+        _count_fold(store, bid, counts[bid])
     # batches 0..2 folded into one epoch, partial 3 live
-    dirs = sorted(os.listdir(wd))
-    assert [d for d in dirs if d.startswith("part_b")] == ["part_b3"]
-    assert len([d for d in dirs if d.startswith("epoch_")]) == 1
-    assert _count_state_total(wd) == sum(counts.values())
-    # replay of the newest batch: overwrite in place, total unchanged
-    _count_state_fold(wd, 3, counts[3])
-    assert _count_state_total(wd) == sum(counts.values())
-    assert sorted(os.listdir(wd)) == dirs
+    live = store.live("n")
+    assert list(store.runs("n")) == [3]
+    assert len(live) == 2 and live[1] == store.runs("n")[3]
+
+    def total():
+        return sum(_count_rows(store.live("n")).values())
+
+    assert total() == sum(counts.values())
+    # replay of the newest batch: replaced in place, total unchanged
+    _count_fold(store, 3, counts[3])
+    assert total() == sum(counts.values())
+    assert list(store.runs("n")) == [3]
+    assert store.live("n")[0] == live[0]  # the epoch is untouched
+    assert sorted(os.listdir(store.root)) == sorted(
+        [os.path.basename(p) for p in store.live("n")] + ["manifest.json"]
+    )
 
 
 def test_count_state_parquet_readable_by_spark(spark, tmp_path):
@@ -45,16 +53,13 @@ def test_count_state_parquet_readable_by_spark(spark, tmp_path):
     spark.range(1) writes had — the graded read-back is unchanged."""
     from pyspark.sql import functions as F
 
-    from ziggurat_spark.queries.streaming_surface import (
-        _count_state_fold,
-    )
+    from ziggurat_spark.queries.epoch_store import EpochStore
+    from ziggurat_spark.queries.streaming_surface import _count_fold
 
-    wd = str(tmp_path / "candn")
-    os.makedirs(wd)
+    store = EpochStore(str(tmp_path / "candn"))
     for bid, n in ((0, 3), (1, 4)):
-        _count_state_fold(wd, bid, n)
-    dirs = [os.path.join(wd, d) for d in sorted(os.listdir(wd))]
-    df = spark.read.parquet(*dirs)
+        _count_fold(store, bid, n)
+    df = spark.read.parquet(*store.live("n"))
     assert [f.dataType.simpleString() for f in df.schema] == [
         "int",
         "bigint",

@@ -304,11 +304,11 @@ def test_lsh_fold_hundredfold_identical_batch(spark, tmp_path):
     arrivals. The pair union must be the complete clique over all
     102 docs, and state stays 2 files per batch key (bands_ +
     pairs_), with the history side never replicated."""
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import _lsh_fold
 
-    statedir = str(tmp_path / "state")
-    os.makedirs(statedir)
-    fold = _lsh_fold(spark, statedir)
+    store = EpochStore(str(tmp_path / "state"))
+    fold = _lsh_fold(spark, store)
     text = " ".join(f"tok{i % 7}" for i in range(30))
     big = spark.createDataFrame(
         [(i, text) for i in range(100)], "doc_id long, text string"
@@ -321,17 +321,9 @@ def test_lsh_fold_hundredfold_identical_batch(spark, tmp_path):
             ),
             j + 1,
         )
-    names = sorted(os.listdir(statedir))
-    assert [n for n in names if n.startswith("bands_")] == [
-        "bands_b0",
-        "bands_b1",
-        "bands_b2",
-    ]
-    pair_dirs = [
-        os.path.join(statedir, d)
-        for d in names
-        if d.startswith("pairs_")
-    ]
+    assert list(store.runs("bands")) == [0, 1, 2]
+    assert store.live("bands") == list(store.runs("bands").values())
+    pair_dirs = store.live("pairs")
     got = {
         (r["a"], r["b"])
         for r in spark.read.parquet(*pair_dirs).distinct().collect()

@@ -462,21 +462,28 @@ def test_stream_dsir_maintain_batching_independent(spark):
     assert len(one) > 0
 
 
+def _store_shape(store, kind: str) -> tuple[int, int]:
+    """(epochs, runs) among an EpochStore's live dirs of ``kind``."""
+    runs = len(store.runs(kind))
+    return len(store.live(kind)) - runs, runs
+
+
 def test_stream_dsir_compact_state_layout_bounded(spark):
-    """After compaction the state directory holds exactly ONE epoch
-    file and ONE live keyed partial (plus the retained raw inputs) —
-    O(epochs + live batches), not O(batches) — and the ratio table
-    from the compacted state matches the uncompacted op's."""
+    """After compaction the store's live state is exactly ONE epoch
+    and ONE live keyed partial — O(epochs + live batches), not
+    O(batches), and nothing else on disk — and the ratio table from
+    the compacted state matches the uncompacted op's."""
     import os
 
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
-    statedir, live = ss._dsir_compacted_state(spark, sf)
-    names = sorted(os.listdir(statedir))
-    assert [n for n in names if n.startswith("epoch_")] == ["epoch_0"]
-    assert len([n for n in names if n.startswith("part_b")]) == 1
-    got = ss._dsir_ratio_table(spark, live).collect()
+    store = ss._dsir_compacted_state(spark, sf)
+    assert _store_shape(store, "part") == (1, 1)
+    assert sorted(os.listdir(store.root)) == sorted(
+        [os.path.basename(p) for p in store.live("part")] + ["manifest.json"]
+    )
+    got = ss._dsir_ratio_table(spark, store.live("part")).collect()
     want = ss.x_stream_dsir_maintain(spark, sf).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) > 0
@@ -496,17 +503,15 @@ def test_stream_sketch_maintain_state_layout_bounded(spark):
         ss._loghist_stream_state,
         lambda s, f: ss._cms_stream_state(s, f)[0],
     ):
-        workdir = build(spark, sf)
-        names = sorted(os.listdir(workdir))
-        assert len([n for n in names if n.startswith("epoch_")]) == 1, names
-        assert len([n for n in names if n.startswith("part_b")]) == 1, names
+        store = build(spark, sf)
+        assert _store_shape(store, "part") == (1, 1), os.listdir(store.root)
 
 
 def test_stream_lsh_compact_state_layout_bounded(spark):
     """After compaction the LSH state holds exactly ONE epoch
     DIRECTORY per kind and ONE live keyed partial per kind — and
-    nothing else (committed raw inputs are deleted too): state is
-    O(epochs + live batch), not O(batches). The bands epoch is a
+    nothing else on disk: state is O(epochs + live batch), not
+    O(batches). The bands epoch is a
     partitionBy(band) directory written at parallelism — band=*
     subdirectories, MULTIPLE data files overall — never one
     coalesce(1) file carrying the O(corpus) band union (the
@@ -517,20 +522,17 @@ def test_stream_lsh_compact_state_layout_bounded(spark):
     from ziggurat_spark.queries import streaming_surface as ss
 
     sf = "/root/testdata/sf0.001"
-    statedir = ss._lsh_compacted_state(spark, sf)
-    names = sorted(os.listdir(statedir))
-    assert [n for n in names if n.startswith("bands_epoch")] == [
-        "bands_epoch_0"
-    ]
-    assert [n for n in names if n.startswith("pairs_epoch")] == [
-        "pairs_epoch_0"
-    ]
-    assert len([n for n in names if n.startswith("bands_b")]) == 1
-    assert len([n for n in names if n.startswith("pairs_b")]) == 1
-    assert len([n for n in names if n.startswith("input_b")]) == 1
+    store = ss._lsh_compacted_state(spark, sf)
+    assert _store_shape(store, "bands") == (1, 1)
+    assert _store_shape(store, "pairs") == (1, 1)
+    assert sorted(os.listdir(store.root)) == sorted(
+        [os.path.basename(p) for p in store.live("bands")]
+        + [os.path.basename(p) for p in store.live("pairs")]
+        + ["manifest.json"]
+    )
     # DIRECTORY-structure pin: the epoch is band-partitioned and
     # multi-file (written by parallel tasks), not a single file
-    epoch = os.path.join(statedir, "bands_epoch_0")
+    epoch = store.live("bands")[0]
     band_dirs = [
         d for d in sorted(os.listdir(epoch)) if d.startswith("band=")
     ]
@@ -552,14 +554,11 @@ def test_stream_lsh_compact_state_layout_bounded(spark):
         if f.endswith(".parquet")
     ]
     assert len(epoch_files) >= 2, epoch_files
-    pair_dirs = [
-        os.path.join(statedir, d)
-        for d in names
-        if d.startswith("pairs_")
-    ]
     got = sorted(
         (r["a"], r["b"])
-        for r in spark.read.parquet(*pair_dirs).distinct().collect()
+        for r in spark.read.parquet(*store.live("pairs"))
+        .distinct()
+        .collect()
     )
     want = sorted(
         (r["a"], r["b"])
@@ -718,9 +717,7 @@ def test_stream_lsh_cadence_tiered_bounds(spark):
     prev = ss.STREAM_LSH_SRC_FILES
     try:
         ss.STREAM_LSH_SRC_FILES = 6  # enough triggers to cascade
-        statedir, live_counts, folds = ss._lsh_cadence_state(
-            spark, sf, K
-        )
+        store, live_counts, folds = ss._lsh_cadence_state(spark, sf, K)
         want = sorted(
             (r["a"], r["b"])
             for r in ss.x_stream_lsh_maintain(spark, sf).collect()
@@ -734,7 +731,7 @@ def test_stream_lsh_cadence_tiered_bounds(spark):
     assert folds, "no fold ever ran"
     assert all(f["inputs"] == K for f in folds), folds
     assert any(f["level"] >= 1 for f in folds), folds
-    names = sorted(os.listdir(statedir))
+    names = [os.path.basename(p) for p in store.live("bands")]
     # per-level epoch-count bound: < K at every level
     levels = {
         int(n[len("bands_L") :].split("_")[0])
@@ -747,17 +744,11 @@ def test_stream_lsh_cadence_tiered_bounds(spark):
         assert len(runs) < K, (lv, runs)
         # directory-structure pin: band-partitioned, never one file
         for r in runs:
-            sub = sorted(os.listdir(os.path.join(statedir, r)))
+            sub = sorted(os.listdir(os.path.join(store.root, r)))
             assert any(d.startswith("band=") for d in sub), (r, sub)
     got = sorted(
         (r["a"], r["b"])
-        for r in spark.read.parquet(
-            *[
-                os.path.join(statedir, d)
-                for d in names
-                if d.startswith("pairs_")
-            ]
-        )
+        for r in spark.read.parquet(*store.live("pairs"))
         .distinct()
         .collect()
     )
@@ -1073,16 +1064,10 @@ def test_stream_multimodal_tiered_bounds(spark):
     prev = ss.STREAM_MM_SRC_FILES
     try:
         ss.STREAM_MM_SRC_FILES = 6
-        statedir, live_counts, folds = ss._mm_stream_state(spark, sf)
+        store, live_counts, folds = ss._mm_stream_state(spark, sf)
         got = sorted(
             tuple(r)
-            for r in spark.read.parquet(
-                *[
-                    os.path.join(statedir, d)
-                    for d in sorted(os.listdir(statedir))
-                    if d.startswith("pairs_")
-                ]
-            )
+            for r in spark.read.parquet(*store.live("pairs"))
             .distinct()
             .collect()
         )
@@ -1092,24 +1077,28 @@ def test_stream_multimodal_tiered_bounds(spark):
     assert max(live_counts) <= K + 1
     assert folds and all(f["inputs"] == K for f in folds), folds
     assert any(f["level"] >= 1 for f in folds), folds
-    names = sorted(os.listdir(statedir))
+    names = [
+        os.path.basename(p)
+        for kind in ("bands", "pairs", "feat")
+        for p in store.live(kind)
+    ]
     for kind in ("bands", "pairs", "feat"):
         tiered = [n for n in names if n.startswith(f"{kind}_L")]
         assert tiered, (kind, names)
     for n in names:
         if n.startswith("bands_L"):
-            sub = sorted(os.listdir(os.path.join(statedir, n)))
+            sub = sorted(os.listdir(os.path.join(store.root, n)))
             assert any(d.startswith("band=") for d in sub), (n, sub)
         if n.startswith("feat_L"):
             # prunable-layout pin (round 9): every O(corpus) feat
             # EPOCH is fkb-partitioned on the asset hash (per-batch
             # runs stay flat — O(batch), read whole either way)
-            sub = sorted(os.listdir(os.path.join(statedir, n)))
+            sub = sorted(os.listdir(os.path.join(store.root, n)))
             assert any(d.startswith("fkb=") for d in sub), (n, sub)
     # one feature row per banded asset across the whole history
     # (append-only over disjoint per-batch asset sets)
     frows = ss._mm_read_feat_pruned(
-        spark, statedir, "nosuchkey", set(range(ss.MM_FEAT_KB))
+        spark, store.live("feat"), set(range(ss.MM_FEAT_KB))
     )
     assert frows.count() == frows.select("asset_id").distinct().count()
     from ziggurat_spark.queries.dedup import x_multimodal_neardup
@@ -1193,17 +1182,15 @@ def test_lsh_probe_reads_touched_shards_only(spark, tmp_path):
     schema = "doc_id long, band int, bucket long"
     statedir = str(tmp_path / "st")
     os.makedirs(statedir)
-    ss._lsh_write_band_epoch(
-        spark.createDataFrame(a_rows, schema),
-        os.path.join(statedir, "bands_L1_000001"),
-    )
+    epoch = os.path.join(statedir, "bands_L1_000001")
+    ss._lsh_write_band_epoch(spark.createDataFrame(a_rows, schema), epoch)
     io: list = []
     batch = spark.createDataFrame(b_rows, schema)
     got = sorted(
         {
             (r["a"], r["b"])
             for r in ss._lsh_probe_pairs(
-                spark, statedir, "b9", batch, io=io
+                spark, [epoch], batch, io=io
             ).collect()
         }
     )
@@ -1350,8 +1337,6 @@ def test_mm_feat_pruned_read_touches_only_named_buckets(spark, tmp_path):
     rows whose asset hash lands in the named buckets — a strict
     subset when the bucket set is — and the whole-grid read returns
     everything."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ziggurat_spark.queries import streaming_surface as ss
@@ -1360,9 +1345,8 @@ def test_mm_feat_pruned_read_touches_only_named_buckets(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "asset_id long, bv array<int>, n2 long"
     )
-    statedir = str(tmp_path / "mmfeat")
-    os.makedirs(statedir)
-    ss._mm_write_feat(df, os.path.join(statedir, "feat_L1_000001"))
+    epoch = str(tmp_path / "mmfeat" / "feat_L1_000001")
+    ss._mm_write_feat(df, epoch)
     kb = {
         r["k"]
         for r in spark.range(0, 4)
@@ -1374,9 +1358,9 @@ def test_mm_feat_pruned_read_touches_only_named_buckets(spark, tmp_path):
         .collect()
     }
     assert len(kb) < ss.MM_FEAT_KB
-    pruned = ss._mm_read_feat_pruned(spark, statedir, "b9", kb)
+    pruned = ss._mm_read_feat_pruned(spark, [epoch], kb)
     full = ss._mm_read_feat_pruned(
-        spark, statedir, "b9", set(range(ss.MM_FEAT_KB))
+        spark, [epoch], set(range(ss.MM_FEAT_KB))
     )
     got = {r["asset_id"] for r in pruned.collect()}
     allids = {r["asset_id"] for r in full.collect()}

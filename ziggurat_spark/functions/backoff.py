@@ -46,22 +46,3 @@ def backoff_ms_expr(
         - message_retry_count,
     )
     return (F.pow(F.lit(2), n) - F.lit(1)) * F.lit(timeout_ms)
-
-
-def next_attempt_at_expr(
-    enqueued_at: Column,
-    message_retry_count: Column,
-    retry_count: int = DEFAULT_RETRY_COUNT,
-    timeout_ms: int = DEFAULT_QUEUE_TIMEOUT_MS,
-    exponential: bool = False,
-) -> Column:
-    """Absolute re-delivery deadline: RMQ's per-message TTL + delay
-    queue (producer.clj:250-254) collapses to one timestamp column —
-    the retry pump filters ``next_attempt_at <= now()``."""
-    ms = backoff_ms_expr(
-        message_retry_count,
-        retry_count=retry_count,
-        timeout_ms=timeout_ms,
-        exponential=exponential,
-    )
-    return F.timestamp_add("MILLISECOND", ms.cast("long"), enqueued_at)

@@ -167,52 +167,6 @@ def protobuf_value_py(
     return mw
 
 
-def protobuf_encode_py(desc, struct_col: str, output_col: str = "value"):
-    """Inverse of ``protobuf_value_py`` for producing proto payloads
-    (K1 producer-side serde): struct column → wire bytes. Struct-typed
-    ("google.protobuf.Struct") fields are carried as JSON strings in
-    the input struct; bytes fields as base64 strings."""
-    import json as _json
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from ziggurat_spark.functions import protowire
-
-    def _pythonify(obj: dict) -> dict:
-        import base64
-
-        out = {}
-        for f in desc.fields:
-            v = obj.get(f.name)
-            if v is None:
-                out[f.name] = None
-            elif f.type == "bytes":
-                out[f.name] = base64.b64decode(v)
-            elif f.type == "struct" and isinstance(v, str):
-                out[f.name] = _json.loads(v)
-            else:
-                out[f.name] = v
-        return out
-
-    @pandas_udf("binary")
-    def _encode(col: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None
-                if row is None
-                else protowire.encode(_pythonify(_json.loads(row)), desc)
-                for row in col
-            ],
-            dtype=object,
-        )
-
-    def mw(df: DataFrame) -> DataFrame:
-        return df.withColumn(output_col, _encode(F.to_json(F.col(struct_col))))
-
-    return mw
-
-
 def protobuf_key_value(
     key_message: str,
     value_message: str,

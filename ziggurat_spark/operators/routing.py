@@ -17,9 +17,7 @@ cached plan.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Valid handler outcomes (mapper.clj:55-65). ``:block`` is a TODO in
@@ -39,26 +37,6 @@ def outcome_expr(value: Column) -> Column:
     )
 
 
-def validate_outcomes(df: DataFrame, outcome_col: str = "outcome") -> DataFrame:
-    """Fail fast on an unknown outcome, mirroring the reference's
-    InvalidReturnTypeException on malformed handler returns
-    (consumer_handler.clj:36-44) and the "unknown keyword → exception"
-    arm of the mapper dispatch (mapper.clj:62-64).
-
-    Implemented as a side-effect-free column assertion:
-    ``raise_error`` only fires if an invalid row is actually present,
-    so the common path stays fully codegen'd.
-    """
-    oc = F.col(outcome_col)
-    ok = oc.isin(*VALID_OUTCOMES) | oc.startswith("channel:")
-    return df.withColumn(
-        outcome_col,
-        F.when(ok, oc).otherwise(
-            F.raise_error(F.concat(F.lit("invalid outcome: "), oc))
-        ),
-    )
-
-
 def retry_step_exprs(attempt: Column, max_retries: int) -> tuple[Column, Column]:
     """One hop of the retry state machine (producer.clj:288-293).
 
@@ -75,58 +53,3 @@ def retry_step_exprs(attempt: Column, max_retries: int) -> tuple[Column, Column]
     next_attempt = F.when(fresh, F.lit(max_retries)).otherwise(attempt - 1)
     to_dead_set = F.coalesce(attempt == 0, F.lit(False))
     return next_attempt.cast("int"), to_dead_set
-
-
-def split_by_outcome(
-    df: DataFrame, outcome_col: str = "outcome"
-) -> dict[str, DataFrame]:
-    """Split one (cached) batch into per-outcome DataFrames.
-
-    Caller is expected to ``df.persist()`` first so the handler runs
-    once, not once per sink — mirrors 'process once, publish to the
-    right queue' (mapper.clj:55-65) without recomputation.
-    """
-    oc = F.col(outcome_col)
-    return {
-        "success": df.filter(oc == "success"),
-        "retry": df.filter(oc == "retry"),
-        "skip": df.filter(oc == "skip"),
-        "dead-letter": df.filter(oc == "dead-letter"),
-        "channel": df.filter(oc.startswith("channel:")),
-    }
-
-
-def apply_handler_in_pandas(
-    df: DataFrame,
-    handler: Callable,
-    output_schema: str,
-) -> DataFrame:
-    """Run an arbitrary Python handler over a batch, vectorized.
-
-    The reference invokes the user fn per record on stream threads
-    (streams.clj:66-71). Here the handler receives pandas DataFrames
-    (Arrow batches) and must return them with an ``outcome`` column —
-    the validated contract of consumer_handler.clj:36-44. This is the
-    ONE deliberately-Python hot path; everything SQL-expressible
-    belongs in column expressions instead.
-    """
-
-    def _runner(batches):
-        for pdf in batches:
-            out = handler(pdf)
-            if out is None or "outcome" not in out.columns:
-                raise TypeError(
-                    "handler must return a DataFrame with an 'outcome' column "
-                    f"(one of {VALID_OUTCOMES} or 'channel:<name>')"
-                )
-            bad = ~(
-                out["outcome"].isin(VALID_OUTCOMES)
-                | out["outcome"].str.startswith("channel:")
-            )
-            if bad.any():
-                raise TypeError(
-                    f"invalid outcomes from handler: {sorted(out['outcome'][bad].unique())}"
-                )
-            yield out
-
-    return df.mapInPandas(_runner, schema=output_schema)

@@ -61,15 +61,6 @@ _MHS_SQL = (
 )
 
 
-def _with_shingles(spark: SparkSession, sf: str, k: int) -> DataFrame:
-    d = load_table(spark, sf, "documents", fan_out=True)
-    return (
-        d.withColumn("words", F.expr(TH.tokens("text")[0]))
-        .withColumn("whash", F.expr(TH.word_hashes("words")[0]))
-        .withColumn("sh", F.expr(TH.shingle_hashes("whash", k)[0]))
-    )
-
-
 def _duck_shingle_cte(k: int) -> str:
     return (
         "WITH tok AS (SELECT doc_id, "

@@ -14,7 +14,8 @@ trigger count (e.g. the round-7 sketch-partial leak: 60+ files where
 the bound says 30).
 
 File counts include everything the op's scratch dirs retain
-(source-split inputs, _SUCCESS markers, .crc twins), which is why
+(source-split inputs, _SUCCESS markers, .crc twins, one
+``manifest.json`` per EpochStore), which is why
 bounds are calibrated, not derived: the DESIGN quantity (live state
 objects) is pinned shape-exactly in tests/test_stateful.py; this
 gate is the cheap in-record backstop that rides every bench run.
