@@ -73,6 +73,7 @@ def test_fold_without_faults_keeps_every_row(tmp_path, cadence):
     events = store.fold(4, {"a": _fold_writer}, cadence)
     assert events and _state(store) == want
     assert list(store.runs("a")) == []
+    assert _clean(store)  # the store that folded deleted its inputs
     reopened = EpochStore(store.root)
     assert _state(reopened) == want and _clean(reopened)
 
@@ -209,6 +210,45 @@ def test_restart_of_the_tier_fold_loses_no_rows(tmp_path):
         _put(store, bid)
     assert _state(store)["a"] == {k: 1 for k in range(50)}
     assert len(store.live("a")) == 2  # one level-2 epoch + run 4
+    assert _clean(store)
+
+
+def test_tier_cascade_keeps_epochs_oldest_first(tmp_path):
+    """Six unfolded runs (a restart that found many) folded at K=2 in
+    one call: three level-1 epochs, the oldest two of which climb to
+    level 2. Epochs stay oldest first, every row is live once, and
+    the store that folded deleted every input."""
+    store = EpochStore(str(tmp_path / "st"))
+    for bid in range(6):
+        _put(store, bid)
+    want = _state(store)
+    events = store.fold(6, {"a": _fold_writer}, 2)
+    assert [e["level"] for e in events] == [0, 0, 0, 1]
+    assert _state(store) == want and _clean(store)
+    # the level-2 epoch (batches 0-3) before the level-1 one (4-5)
+    assert [min(_count_rows([p])) for p in store.live("a")] == [0, 40]
+    assert EpochStore(store.root).live("a") == store.live("a")
+
+
+def test_failed_delete_raises_after_the_commit(tmp_path, monkeypatch):
+    """A superseded dir that cannot be deleted raises, after the fold
+    committed; the next open removes it."""
+    store = _committed(tmp_path)
+    want = _state(store)
+    real = es.shutil.rmtree
+
+    def denied(path, *a, **kw):
+        if not kw.get("ignore_errors"):
+            raise PermissionError(path)
+        return real(path, *a, **kw)
+
+    monkeypatch.setattr(es.shutil, "rmtree", denied)
+    with pytest.raises(PermissionError):
+        store.fold(4, {"a": _fold_writer}, None)
+    monkeypatch.undo()
+    assert _state(store) == want and not _clean(store)
+    reopened = EpochStore(store.root)
+    assert _state(reopened) == want and _clean(reopened)
 
 
 def test_replay_after_restart_replaces_the_run(tmp_path):

@@ -324,6 +324,12 @@ def test_lsh_fold_hundredfold_identical_batch(spark, tmp_path):
     assert list(store.runs("bands")) == [0, 1, 2]
     assert store.live("bands") == list(store.runs("bands").values())
     pair_dirs = store.live("pairs")
+    assert list(store.runs("pairs")) == [0, 1, 2]
+    # on disk: the six runs and the manifest, nothing else
+    assert sorted(os.listdir(store.root)) == sorted(
+        [os.path.basename(p) for p in store.live("bands") + pair_dirs]
+        + ["manifest.json"]
+    )
     got = {
         (r["a"], r["b"])
         for r in spark.read.parquet(*pair_dirs).distinct().collect()

@@ -468,6 +468,19 @@ def _store_shape(store, kind: str) -> tuple[int, int]:
     return len(store.live(kind)) - runs, runs
 
 
+def _disk_is_live(store, kinds) -> None:
+    """Nothing but the manifest and the live dirs of ``kinds`` is on
+    disk under the store that ran (not a reopened one: open would
+    remove unlisted dirs itself), so every superseded dir was
+    deleted."""
+    import os
+
+    live = [os.path.basename(p) for k in kinds for p in store.live(k)]
+    assert sorted(os.listdir(store.root)) == sorted(
+        live + ["manifest.json"]
+    )
+
+
 def test_stream_dsir_compact_state_layout_bounded(spark):
     """After compaction the store's live state is exactly ONE epoch
     and ONE live keyed partial — O(epochs + live batches), not
@@ -480,9 +493,7 @@ def test_stream_dsir_compact_state_layout_bounded(spark):
     sf = "/root/testdata/sf0.001"
     store = ss._dsir_compacted_state(spark, sf)
     assert _store_shape(store, "part") == (1, 1)
-    assert sorted(os.listdir(store.root)) == sorted(
-        [os.path.basename(p) for p in store.live("part")] + ["manifest.json"]
-    )
+    _disk_is_live(store, ["part"])
     got = ss._dsir_ratio_table(spark, store.live("part")).collect()
     want = ss.x_stream_dsir_maintain(spark, sf).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
@@ -505,6 +516,7 @@ def test_stream_sketch_maintain_state_layout_bounded(spark):
     ):
         store = build(spark, sf)
         assert _store_shape(store, "part") == (1, 1), os.listdir(store.root)
+        _disk_is_live(store, ["part"])
 
 
 def test_stream_lsh_compact_state_layout_bounded(spark):
@@ -525,11 +537,7 @@ def test_stream_lsh_compact_state_layout_bounded(spark):
     store = ss._lsh_compacted_state(spark, sf)
     assert _store_shape(store, "bands") == (1, 1)
     assert _store_shape(store, "pairs") == (1, 1)
-    assert sorted(os.listdir(store.root)) == sorted(
-        [os.path.basename(p) for p in store.live("bands")]
-        + [os.path.basename(p) for p in store.live("pairs")]
-        + ["manifest.json"]
-    )
+    _disk_is_live(store, ["bands", "pairs"])
     # DIRECTORY-structure pin: the epoch is band-partitioned and
     # multi-file (written by parallel tasks), not a single file
     epoch = store.live("bands")[0]
@@ -731,6 +739,7 @@ def test_stream_lsh_cadence_tiered_bounds(spark):
     assert folds, "no fold ever ran"
     assert all(f["inputs"] == K for f in folds), folds
     assert any(f["level"] >= 1 for f in folds), folds
+    _disk_is_live(store, ["bands", "pairs"])
     names = [os.path.basename(p) for p in store.live("bands")]
     # per-level epoch-count bound: < K at every level
     levels = {
@@ -1077,6 +1086,7 @@ def test_stream_multimodal_tiered_bounds(spark):
     assert max(live_counts) <= K + 1
     assert folds and all(f["inputs"] == K for f in folds), folds
     assert any(f["level"] >= 1 for f in folds), folds
+    _disk_is_live(store, ["bands", "pairs", "feat"])
     names = [
         os.path.basename(p)
         for kind in ("bands", "pairs", "feat")

@@ -39,17 +39,22 @@ MANIFEST = "manifest.json"
 
 
 def _remove(path: str) -> None:
+    """Delete a superseded or unlisted entry; a failure raises (after
+    the commit that superseded it, so state stays correct and the next
+    open retries the delete)."""
     if os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(path)
     elif os.path.exists(path):
         os.remove(path)
 
 
-def _overlap(calls: list) -> None:
-    """Run the calls, two at a time when there are several (the
-    writes read committed or persisted inputs and land in disjoint
-    dirs, so a later write back-fills the first one's task tail).
-    Returns only after every call ended; the first failure raises."""
+def overlap(calls: list) -> None:
+    """Run the run or epoch writes in ``calls``, two at a time when
+    there are several (they read committed or persisted inputs and
+    land in disjoint dirs, so a later write back-fills the first one's
+    task tail). Returns only after every call ended; the first failure
+    raises. Ops whose runs are written outside ``write_runs`` use it
+    too, then commit through ``commit_runs``."""
     if len(calls) == 1:
         calls[0]()
         return
@@ -147,7 +152,7 @@ class EpochStore:
         -> ``fn(path)``), overlapped on the 2-worker pool, and commit
         them together."""
         paths = {k: self.run_path(k, bid) for k in writers}
-        _overlap([partial(w, paths[k]) for k, w in writers.items()])
+        overlap([partial(w, paths[k]) for k, w in writers.items()])
         self.commit_runs(bid, paths)
 
     def fold(
@@ -196,16 +201,20 @@ class EpochStore:
                 f"do not match the folded dirs {sorted(g.values())}"
             )
         outs = {k: self._fresh(k, f"L{level}") for k in writers}
-        _overlap(
+        overlap(
             [
                 partial(w, [self._path(g[k]) for g in groups], outs[k])
                 for k, w in writers.items()
             ]
         )
         runs = {b: g for b, g in self._runs.items() if b not in bids}
-        kept = [e for e in self._epochs if not any(e is x for x in epochs)]
         new = (level, {k: os.path.basename(p) for k, p in outs.items()})
-        self._commit(runs, kept + [new], self.meta)
+        # the new epoch takes its oldest input's place, keeping epochs
+        # oldest first (folded runs are newer than every epoch)
+        folded = [any(e is x for x in epochs) for e in self._epochs]
+        at = folded.index(True) if epochs else len(folded)
+        kept = [e for e, f in zip(self._epochs, folded) if not f]
+        self._commit(runs, kept[:at] + [new] + kept[at:], self.meta)
         for g in groups:
             for name in g.values():
                 _remove(self._path(name))

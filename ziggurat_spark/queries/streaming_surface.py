@@ -67,7 +67,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ziggurat_spark.queries.epoch_store import EpochStore
+from ziggurat_spark.queries.epoch_store import EpochStore, overlap
 from ziggurat_spark.queries.registry import register
 from ziggurat_spark.scratch import release_checkpoint, scratch_dir
 from ziggurat_spark.tables import _nanos_ts_columns, ensure_runtime_confs
@@ -4876,8 +4876,8 @@ def _mm_stream_state(
             )
         )
         # pairs first (the one job that materializes the verify
-        # chain), then the two remaining runs overlap on a small
-        # pool (guide §2.6): both read already-persisted blocks, so
+        # chain), then the two remaining runs overlap on the store's
+        # 2-worker pool (guide §2.6): both read persisted blocks, so
         # the independent writes back-fill each other's task tails
         # instead of paying two full job latencies; one commit lists
         # all three
@@ -4885,20 +4885,17 @@ def _mm_stream_state(
         pairs.distinct().coalesce(1).write.mode("overwrite").parquet(
             runs["pairs"]
         )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [
-                pool.submit(
-                    lambda df_=df_, kind=kind: df_.coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(runs[kind])
-                )
+        overlap(
+            [
+                lambda df_=df_, kind=kind: df_.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(runs[kind])
                 for kind, df_ in (
                     ("bands", bands),
                     ("feat", feat.select("asset_id", "bv", "n2")),
                 )
             ]
-            for fu in futs:
-                fu.result()
+        )
         store.commit_runs(bid, runs)
         for df in spent:
             release_checkpoint(df)
@@ -6253,25 +6250,22 @@ def _pipe_stream_state(
             )
             spent.append(ver)
             # ver first (one job materializes lookup → estf → ver),
-            # then the remaining two runs overlap on a small pool
+            # then the remaining two runs overlap on the store's pool
             # (guide §2.6): both read already-persisted blocks, so
             # the independent writes back-fill each other's task
             # tails instead of paying two full job latencies
             ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
-            with ThreadPoolExecutor(max_workers=2) as wpool:
-                wfuts = [
-                    wpool.submit(
-                        lambda kind=kind, df_=df_: df_.coalesce(1)
-                        .write.mode("overwrite")
-                        .parquet(runs[kind])
-                    )
+            overlap(
+                [
+                    lambda kind=kind, df_=df_: df_.coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(runs[kind])
                     for kind, df_ in (
                         ("cand", pairs),
                         ("est", estf.select("a", "b")),
                     )
                 ]
-                for f in wfuts:
-                    f.result()
+            )
             # 5v) sketch-store upsert: fresh rows only, touched
             # buckets (integer sketches only — never the text). The
             # merge reads only fresh_docs' persisted blocks and
