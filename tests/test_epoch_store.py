@@ -8,14 +8,21 @@ live exactly the rows that were committed — none lost, none counted
 twice. The store-level writers are the driver-side pyarrow count
 writers, so these tests start no Spark job.
 
+The sketch policy's combined step (``write_runs`` with epoch writers:
+the batch's run and the fold of older state, one commit): either
+writer dying after the other finished, a crash between the commit and
+the deletes, and a re-delivery of the newest batch after the step.
+
 Op level: the CMS fold, the tiered LSH fold and ER's count state are
 cold-restarted — two batches through one closure, the third through a
-fresh closure over the same dir — and must equal a one-shot run.
+fresh closure over the same dir — and must equal a one-shot run. One
+CMS stream commits once per trigger.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 
@@ -302,6 +309,113 @@ def test_count_state_cold_restart(tmp_path):
     assert _count_rows(again.live("n")) == _count_rows(one.live("n"))
 
 
+def _step(store, bid, run=None, epoch=None):
+    """Batch ``bid``'s combined sketch step: its ten-key run and the
+    fold of every older run and epoch, under one commit."""
+    rows = {k: 1 for k in range(bid * 10, bid * 10 + 10)}
+    store.write_runs(
+        bid,
+        {"a": run or (lambda p: _write_counts(p, rows))},
+        {"a": epoch or _fold_writer},
+    )
+
+
+def _one_shot(n: int) -> dict:
+    """The state one batch carrying batches 0..n-1's rows commits."""
+    return {"a": {k: 1 for k in range(n * 10)}}
+
+
+def _stepped(tmp_path, n: int) -> EpochStore:
+    """Batches 0..n-1 through the combined step: one epoch holding
+    0..n-2 and the live run n-1."""
+    store = EpochStore(str(tmp_path / "st"))
+    for bid in range(n):
+        _step(store, bid)
+    assert _state(store) == _one_shot(n) and _clean(store)
+    assert list(store.runs("a")) == [n - 1] and len(store.live("a")) == 2
+    return store
+
+
+@pytest.mark.parametrize("dies", ["run", "epoch"])
+def test_combined_step_writer_dies_after_the_other_wrote(tmp_path, dies):
+    """One writer of the combined step raises after the other one's
+    dir is fully written: nothing commits, so a cold reopen holds the
+    state before the step; the re-delivered step then commits whole
+    and the store that ran it leaves only live dirs on disk."""
+    store = _stepped(tmp_path, 3)
+    before = _state(store)
+    wrote = threading.Event()
+
+    def survivor_run(p):
+        _write_counts(p, {k: 1 for k in range(30, 40)})
+        wrote.set()
+
+    def survivor_epoch(ins, out):
+        _fold_writer(ins, out)
+        wrote.set()
+
+    def torn_run(p):
+        assert wrote.wait(30)
+        _write_counts(p, {0: 999})
+        raise Crash
+
+    def torn_epoch(ins, out):
+        assert wrote.wait(30)
+        _write_counts(out, {0: 999})
+        raise Crash
+
+    if dies == "run":
+        run, epoch = torn_run, survivor_epoch
+    else:
+        run, epoch = survivor_run, torn_epoch
+    with pytest.raises(Crash):
+        _step(store, 3, run, epoch)
+    assert wrote.is_set()
+    reopened = EpochStore(store.root)
+    assert _state(reopened) == before and _clean(reopened)
+    _step(reopened, 3)
+    assert _clean(reopened)
+    assert _state(EpochStore(store.root)) == _one_shot(4)
+
+
+def test_combined_step_crash_between_commit_and_deletes(
+    tmp_path, monkeypatch
+):
+    """The combined step committed and its first delete dies: the
+    superseded epoch and run stay on disk but are not state, so a cold
+    reopen counts every row once; the reopened store goes on stepping
+    and deletes what each step supersedes."""
+    store = _stepped(tmp_path, 3)
+
+    def dying(path):
+        raise Crash
+
+    monkeypatch.setattr(es, "_remove", dying)
+    with pytest.raises(Crash):
+        _step(store, 3)
+    monkeypatch.undo()
+    assert _state(store) == _one_shot(4) and not _clean(store)
+    reopened = EpochStore(store.root)
+    assert _state(reopened) == _one_shot(4) and _clean(reopened)
+    _step(reopened, 4)
+    assert _clean(reopened)
+    assert _state(EpochStore(store.root)) == _one_shot(5)
+
+
+def test_combined_step_redelivery_replaces_only_its_run(tmp_path):
+    """The newest batch re-delivered after a combined step: it folds
+    nothing (no run is strictly older), so the epoch stays as it was
+    and only the batch's own run is replaced."""
+    store = _stepped(tmp_path, 4)
+    epoch = store.live("a")[0]
+    run = store.runs("a")[3]
+    _step(store, 3)
+    assert store.live("a")[0] == epoch
+    assert list(store.runs("a")) == [3] and store.runs("a")[3] != run
+    assert _state(store) == _one_shot(4) and _clean(store)
+    assert _state(EpochStore(store.root)) == _one_shot(4)
+
+
 def _thirds(df, col: str):
     from pyspark.sql import functions as F
 
@@ -385,3 +499,25 @@ def test_lsh_cadence_fold_cold_restart(spark, tmp_path):
     _lsh_fold(spark, one)(docs, 0)
     want = pairs(one)
     assert want and pairs(store) == want
+
+
+def test_cms_stream_commits_once_per_trigger(spark, monkeypatch):
+    """One CMS maintenance stream commits its store once per trigger
+    (the run and the fold of older state together) plus once for the
+    newest-batch replay: 6 triggers + 1 (a fold commit and a run
+    commit per trigger made it 12)."""
+    from ziggurat_spark.queries import streaming_surface as ss
+
+    from conftest import SF_SMALL
+
+    assert ss.STREAM_CMS_SRC_FILES == 6
+    real = EpochStore._commit
+    commits: list = []
+
+    def counted(self, *a):
+        commits.append(self.root)
+        real(self, *a)
+
+    monkeypatch.setattr(EpochStore, "_commit", counted)
+    store, _ev = ss._cms_stream_state(spark, SF_SMALL)
+    assert len(commits) == 7 and set(commits) == {store.root}

@@ -113,6 +113,11 @@ def skew_sf(spark, tmp_path_factory):
         # 55 — inside the verify tolerance: each segment's hot block
         # chains into one merged pseudo-entity
         cust.append((i, name, i % 25, float((i * 11) % 300), segs[i % 5]))
+    # one NULL name: its three registry records (custkey 152 keeps
+    # both variants) have a NULL digit string, which must still emit
+    # one deletion key ('' like a digitless name) — three candidate
+    # pairs in the oracle, none verified
+    cust.append((152, None, 2, 100.0, "MACHINERY"))
     pq.write_table(
         pa.table(
             {

@@ -33,7 +33,6 @@ from ziggurat_spark.functions import texthash as TH
 from ziggurat_spark.functions import texthash_udfs as THU
 from ziggurat_spark.queries.registry import register
 from ziggurat_spark.scratch import release_checkpoint
-from ziggurat_spark.queries.similarity import _cosine
 from ziggurat_spark.tables import load_table
 
 N_HASHES = 8

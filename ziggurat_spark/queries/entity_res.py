@@ -190,6 +190,9 @@ def _snm_pairs(feat: DataFrame, order_cols: list, n_parts: int) -> DataFrame:
 ER_CC_MAX_ITERS = 15
 
 
+#: the string the deletion keys are cut from (both engines)
+_KEYSTR = "coalesce(dstr, '')"
+
 #: Spark spelling of the symmetric-delete blocking neighborhood
 #: (SymSpell / Mor-Fraenkel): the zero-trimmed digit string plus
 #: every single-character deletion of it. Two strings within edit
@@ -199,11 +202,13 @@ ER_CC_MAX_ITERS = 15
 #: and fan-out bounded by len(dstr)+1. Used by the streaming twin
 #: (x_stream_entity_resolution); the batch op blocks by sorted
 #: neighborhood instead so the two ops prove both classic schemes.
+#: A NULL ``dstr`` (a NULL name) keys like a digitless name (''), so
+#: every record emits at least one key.
 ER_DELKEYS_SQL = (
-    "array_distinct(concat(array(dstr), "
-    "transform(sequence(1, length(dstr)), i -> "
-    "concat(substring(dstr, 1, i - 1), "
-    "substring(dstr, i + 1, length(dstr) - i)))))"
+    f"array_distinct(concat(array({_KEYSTR}), "
+    f"transform(sequence(1, length({_KEYSTR})), i -> "
+    f"concat(substring({_KEYSTR}, 1, i - 1), "
+    f"substring({_KEYSTR}, i + 1, length({_KEYSTR}) - i)))))"
 )
 
 
@@ -251,9 +256,10 @@ _SQL_SNM_CAND = (
 #: block sizes by the segment count before any pair materializes
 _SQL_DELKEY_CAND = (
     "keys AS (SELECT rec_id, seg, "
-    "unnest(list_distinct(list_prepend(dstr, "
-    "list_transform(range(1, length(dstr) + 1), i -> "
-    "substr(dstr, 1, i - 1) || substr(dstr, i + 1, length(dstr) - i))))) "
+    f"unnest(list_distinct(list_prepend({_KEYSTR}, "
+    f"list_transform(range(1, length({_KEYSTR}) + 1), i -> "
+    f"substr({_KEYSTR}, 1, i - 1) || "
+    f"substr({_KEYSTR}, i + 1, length({_KEYSTR}) - i))))) "
     "AS k FROM feat), "
     "cand AS (SELECT DISTINCT x.rec_id AS a, y.rec_id AS b "
     "FROM keys x JOIN keys y ON x.k = y.k AND x.seg = y.seg "

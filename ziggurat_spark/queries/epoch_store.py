@@ -17,6 +17,10 @@ it lists every live dir and the op's metadata. The contract:
   its new dirs, commits the manifest through a temp file and
   ``os.replace``, and only then deletes what the commit superseded, so
   after a crash at any point each committed row is live exactly once.
+  Under the sketch policy a trigger's run write and its fold are one
+  step (``write_runs`` with epoch writers): the run reads only the
+  micro-batch and the epoch only strictly-older committed dirs, so
+  both writes overlap and one commit lands the run and the epoch.
 - **Open removes unlisted dirs.** ``seq``, the live dirs and the
   metadata come from the manifest; every other entry under the root
   (a torn write, an uncommitted epoch, a half-done delete) is removed,
@@ -50,11 +54,12 @@ def _remove(path: str) -> None:
 
 def overlap(calls: list) -> None:
     """Run the run or epoch writes in ``calls``, two at a time when
-    there are several (they read committed or persisted inputs and
-    land in disjoint dirs, so a later write back-fills the first one's
-    task tail). Returns only after every call ended; the first failure
-    raises. Ops whose runs are written outside ``write_runs`` use it
-    too, then commit through ``commit_runs``."""
+    there are several (they read the micro-batch frame, persisted
+    blocks or committed dirs, and land in disjoint dirs, so a later
+    write back-fills the first one's task tail). Returns only after
+    every call ended; the first failure raises. Ops whose runs are
+    written outside ``write_runs`` use it too, then commit through
+    ``commit_runs``."""
     if len(calls) == 1:
         calls[0]()
         return
@@ -99,13 +104,19 @@ class EpochStore:
         self.seq += 1
         return self._path(f"{kind}_{tag}_{self.seq:06d}")
 
-    def _commit(self, runs: dict, epochs: list, meta: dict) -> None:
+    def _commit(
+        self, runs: dict, epochs: list, meta: dict, doomed: list
+    ) -> None:
+        """Make ``runs``, ``epochs`` and ``meta`` the committed state,
+        then delete the ``doomed`` dir names it superseded."""
         tmp = self._path(MANIFEST + ".tmp")
         m = {"seq": self.seq, "runs": runs, "epochs": epochs, "meta": meta}
         with open(tmp, "w") as fh:
             json.dump(m, fh)
         os.replace(tmp, self._path(MANIFEST))
         self._runs, self._epochs, self.meta = runs, epochs, meta
+        for name in doomed:
+            _remove(self._path(name))
 
     def live(self, kind: str, skip: int | None = None) -> list[str]:
         """The committed dirs of ``kind``: epochs oldest first, then
@@ -136,24 +147,33 @@ class EpochStore:
         run_path), replacing the runs of those kinds the batch already
         had, together with the batches in ``drop`` (removed) and
         ``meta`` (when given); then delete what the commit superseded."""
-        runs = dict(self._runs)
-        group = dict(runs.get(bid, {}))
-        doomed = [group[k] for k in paths if k in group]
-        group.update({k: os.path.basename(p) for k, p in paths.items()})
-        runs[bid] = group
-        for b in drop:
-            doomed += runs.pop(b).values()
-        self._commit(runs, self._epochs, self.meta if meta is None else meta)
-        for name in doomed:
-            _remove(self._path(name))
+        runs, doomed = _with_run(self._runs, bid, paths, drop)
+        self._commit(
+            runs, self._epochs, self.meta if meta is None else meta, doomed
+        )
 
-    def write_runs(self, bid: int, writers: dict) -> None:
+    def write_runs(
+        self, bid: int, writers: dict, epoch: dict | None = None
+    ) -> None:
         """Write batch ``bid``'s run of every kind in ``writers`` (kind
         -> ``fn(path)``), overlapped on the 2-worker pool, and commit
-        them together."""
+        them together. ``epoch`` (the sketch policy's epoch writers,
+        as ``fold`` takes them) makes this the trigger's fold too:
+        every run strictly older than ``bid`` plus the standing epochs
+        fold into one level-1 epoch on the same pool, and one commit
+        adds the run and replaces the folded dirs with the epoch."""
         paths = {k: self.run_path(k, bid) for k in writers}
-        overlap([partial(w, paths[k]) for k, w in writers.items()])
-        self.commit_runs(bid, paths)
+        calls = [partial(w, paths[k]) for k, w in writers.items()]
+        runs, epochs, doomed = self._runs, self._epochs, []
+        olds = [b for b in sorted(self._runs) if b < bid]
+        if epoch is not None and olds:
+            more, runs, epochs, doomed, _ev = self._fold_plan(
+                1, olds, list(self._epochs), epoch
+            )
+            calls += more
+        overlap(calls)
+        runs, replaced = _with_run(runs, bid, paths)
+        self._commit(runs, epochs, self.meta, doomed + replaced)
 
     def fold(
         self, current_bid: int, writers: dict, cadence: int | None = None
@@ -192,6 +212,20 @@ class EpochStore:
     def _fold_event(
         self, level: int, bids: list, epochs: list, writers: dict
     ) -> dict:
+        calls, runs, kept, doomed, event = self._fold_plan(
+            level, bids, epochs, writers
+        )
+        overlap(calls)
+        self._commit(runs, kept, self.meta, doomed)
+        return event
+
+    def _fold_plan(
+        self, level: int, bids: list, epochs: list, writers: dict
+    ) -> tuple:
+        """One fold event of runs ``bids`` and ``epochs`` into a new
+        level-``level`` epoch, not yet written: its epoch writes, the
+        runs and epochs its commit leaves, the dir names that commit
+        supersedes, and its ``{level, inputs}`` record."""
         groups = [g for _lv, g in epochs] + [self._runs[b] for b in bids]
         for g in groups:
             # lockstep: every batch wrote every kind, even empty ones —
@@ -201,12 +235,10 @@ class EpochStore:
                 f"do not match the folded dirs {sorted(g.values())}"
             )
         outs = {k: self._fresh(k, f"L{level}") for k in writers}
-        overlap(
-            [
-                partial(w, [self._path(g[k]) for g in groups], outs[k])
-                for k, w in writers.items()
-            ]
-        )
+        calls = [
+            partial(w, [self._path(g[k]) for g in groups], outs[k])
+            for k, w in writers.items()
+        ]
         runs = {b: g for b, g in self._runs.items() if b not in bids}
         new = (level, {k: os.path.basename(p) for k, p in outs.items()})
         # the new epoch takes its oldest input's place, keeping epochs
@@ -214,8 +246,20 @@ class EpochStore:
         folded = [any(e is x for x in epochs) for e in self._epochs]
         at = folded.index(True) if epochs else len(folded)
         kept = [e for e, f in zip(self._epochs, folded) if not f]
-        self._commit(runs, kept[:at] + [new] + kept[at:], self.meta)
-        for g in groups:
-            for name in g.values():
-                _remove(self._path(name))
-        return {"level": level - 1, "inputs": len(groups)}
+        doomed = [name for g in groups for name in g.values()]
+        event = {"level": level - 1, "inputs": len(groups)}
+        return calls, runs, kept[:at] + [new] + kept[at:], doomed, event
+
+
+def _with_run(runs: dict, bid: int, paths: dict, drop=()) -> tuple:
+    """``runs`` with batch ``bid``'s runs of the kinds in ``paths``
+    (kind -> dir) set and the batches in ``drop`` removed, and the dir
+    names that replaces."""
+    runs = dict(runs)
+    group = dict(runs.get(bid, {}))
+    doomed = [group[k] for k in paths if k in group]
+    group.update({k: os.path.basename(p) for k, p in paths.items()})
+    runs[bid] = group
+    for b in drop:
+        doomed += runs.pop(b).values()
+    return runs, doomed

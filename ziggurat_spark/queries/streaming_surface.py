@@ -963,15 +963,16 @@ def _sum_writer(spark: SparkSession, key_cols: tuple, sum_cols: tuple):
 
 
 def _sum_fold(spark: SparkSession, store: EpochStore, partial, key_cols):
-    """The SUM-sketch maintenance fold (loghist, CMS): fold committed
-    history into ONE epoch first, then write this batch's keyed
-    partial ``partial(b)`` (key_cols + a bigint ``c``): state on disk
-    stays 1 epoch + 1 live partial over an unbounded stream (round-7
-    judge #3: the sketch streams once kept one partial per batch)."""
+    """The SUM-sketch maintenance fold (loghist, CMS): each trigger
+    writes this batch's keyed partial ``partial(b)`` (key_cols + a
+    bigint ``c``) and folds committed history into ONE epoch in the
+    same store step — the two writes overlap and commit together.
+    State on disk stays 1 epoch + 1 live partial over an unbounded
+    stream (round-7 judge #3: the sketch streams once kept one
+    partial per batch)."""
     epoch = {"part": _sum_writer(spark, key_cols, ("c",))}
 
     def fold(b, bid):
-        store.fold(bid, epoch)
         store.write_runs(
             bid,
             {
@@ -980,6 +981,7 @@ def _sum_fold(spark: SparkSession, store: EpochStore, partial, key_cols):
                 .write.mode("overwrite")
                 .parquet(p)
             },
+            epoch,
         )
 
     return fold
@@ -1041,13 +1043,15 @@ def _write_counts(path: str, counts: dict) -> None:
 
 
 def _count_fold(store: EpochStore, bid: int, n: int) -> None:
-    """One trigger of a count state: fold the strictly-older counts
-    into the standing epoch (sum of sums), then write this batch's
-    one-row run (replay-idempotent: a re-delivery replaces it)."""
-    store.fold(
-        bid, {"n": lambda ins, out: _write_counts(out, _count_rows(ins))}
+    """One trigger of a count state: write this batch's one-row run
+    (replay-idempotent: a re-delivery replaces it) and fold the
+    strictly-older counts into the standing epoch (sum of sums), both
+    under one commit."""
+    store.write_runs(
+        bid,
+        {"n": lambda p: _write_counts(p, {0: n})},
+        {"n": lambda ins, out: _write_counts(out, _count_rows(ins))},
     )
-    store.write_runs(bid, {"n": lambda p: _write_counts(p, {0: n})})
 
 
 def bucketed_lww_merge(
@@ -3363,10 +3367,11 @@ def x_stream_dsir_maintain(spark: SparkSession, sf: str) -> DataFrame:
     return _dsir_ratio_table(spark, store.live("part"))
 
 
-def _dsir_fold(store: EpochStore):
+def _dsir_fold(store: EpochStore, epoch=None):
     """Write one micro-batch's DSIR partial as its keyed run: the
     crash re-delivery before grading replaces its own batch's run, it
-    never adds a new one."""
+    never adds a new one. With ``epoch`` (EpochStore epoch writers)
+    the same step also folds committed history into one epoch."""
 
     def fold(b, bid):
         store.write_runs(
@@ -3377,38 +3382,35 @@ def _dsir_fold(store: EpochStore):
                 .write.mode("overwrite")
                 .parquet(p)
             },
+            epoch,
         )
 
     return fold
 
 
 def _dsir_compacted_state(spark: SparkSession, sf: str) -> EpochStore:
-    """Run the DSIR maintenance stream, then COMPACT: every partial
-    for a batch strictly older than the newest committed batch is
-    summed into one epoch and deleted; only the newest batch's
-    partial stays keyed. Then the newest batch is re-delivered
-    verbatim (the only batch a checkpoint-coordinated engine can
-    legitimately replay — older ones are committed, which is exactly
-    why compacting them is safe: the changelog-truncation contract)."""
+    """Run the DSIR maintenance stream, then COMPACT as the newest
+    batch is re-delivered verbatim (the only batch a
+    checkpoint-coordinated engine can legitimately replay — older
+    ones are committed, which is exactly why compacting them is safe:
+    the changelog-truncation contract). The replay is one store step:
+    every partial for a batch strictly older than the newest is
+    summed into one epoch (the sum of sums is the sum) while the live
+    batch's partial is rewritten, and one commit replaces the folded
+    partials with the epoch and the live partial with its rewrite;
+    only the newest batch's partial stays keyed."""
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
     store = EpochStore(scratch_dir("zs_stream_dsirc_state_"))
-    fold = _dsir_fold(store)
-
-    def _compact_then_replay(b, bid):
-        # compact committed history into one epoch (the sum of sums
-        # is the sum), then re-deliver the LIVE batch: its keyed run
-        # is replaced, the epoch is untouched
-        store.fold(bid, {"part": _sum_writer(spark, ("b",), ("c_r", "c_t"))})
-        fold(b, bid)
-
     run_fold_stream(
         spark,
         docs.select("doc_id", "source", "text"),
         STREAM_DSIR_SRC_FILES,
-        fold,
-        replay=_compact_then_replay,
+        _dsir_fold(store),
+        replay=_dsir_fold(
+            store, {"part": _sum_writer(spark, ("b",), ("c_r", "c_t"))}
+        ),
     )
     return store
 
@@ -3428,9 +3430,10 @@ def _dsir_compacted_state(spark: SparkSession, sf: str) -> EpochStore:
         "contract: a streaming engine only replays batches at-or-"
         "after the last committed offset, so compacting strictly-"
         "older partials can never meet a replay — proven in-op by "
-        "re-delivering the LIVE batch verbatim AFTER compaction "
-        "(its keyed partial is replaced by commit; the epoch is "
-        "untouched). Graded: the post-compaction ratio table equals "
+        "compacting AS the LIVE batch is re-delivered verbatim (one "
+        "store step: its keyed partial is rewritten while the older "
+        "ones fold, and one commit replaces both). Graded: the "
+        "post-compaction ratio table equals "
         "the batch-computed one exactly — same oracle as "
         "x_stream_dsir_maintain; state on disk is one epoch + one "
         "live partial instead of one file per batch "
@@ -6642,8 +6645,8 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # probe's own (band, shard) collect over kdf) yields the
         # store-bucket touched set AND the probe's (band,
         # bucket-shard) set. Lossless fusion: every record emits >= 1
-        # deletion key (ER_DELKEYS_SQL always contains dstr itself),
-        # so kdf's rec_id set equals feat's.
+        # deletion key (ER_DELKEYS_SQL always contains dstr itself,
+        # '' for a NULL dstr), so kdf's rec_id set equals feat's.
         sync = kdf.agg(
             F.collect_set(
                 F.pmod(F.xxhash64("rec_id"), F.lit(ER_STORE_KB)).cast(
@@ -6774,10 +6777,10 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         )
         spent.append(ver)
         ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
-        # candidate count: fold older partials into the standing
-        # epoch, then write this batch's 1-row partial (a keyed run =
-        # replay-idempotent; see the kinds comment above) — ALL
-        # driver-side with pyarrow (_count_rows / _write_counts)
+        # candidate count: this batch's 1-row partial (a keyed run =
+        # replay-idempotent; see the kinds comment above) and the fold
+        # of older partials into the standing epoch, under one commit
+        # — ALL driver-side with pyarrow (_count_rows / _write_counts)
         _count_fold(candn, bid, n_pairs)
         # record-store upsert: touched buckets only (records are
         # immutable, so replay overwrites identical rows). The merge
