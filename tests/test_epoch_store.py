@@ -17,6 +17,14 @@ Op level: the CMS fold, the tiered LSH fold and ER's count state are
 cold-restarted — two batches through one closure, the third through a
 fresh closure over the same dir — and must equal a one-shot run. One
 CMS stream commits once per trigger.
+
+Bucketed state (``write_buckets``, the committed bucket map behind
+``bucketed_lww_merge``, the budget fold and the IVF serving index):
+untouched buckets carry over and emptied ones leave the map; a crash
+mid-write or before the commit keeps the old map; a crash between the
+commit and the prune counts each key once after a reopen; an LWW
+stream cold-reopened halfway equals the one-shot merge; and a
+re-delivered batch over the bucket it last wrote holds its contents.
 """
 
 from __future__ import annotations
@@ -521,3 +529,214 @@ def test_cms_stream_commits_once_per_trigger(spark, monkeypatch):
     monkeypatch.setattr(EpochStore, "_commit", counted)
     store, _ev = ss._cms_stream_state(spark, SF_SMALL)
     assert len(commits) == 7 and set(commits) == {store.root}
+
+
+# -- bucketed state: write_buckets and the committed bucket map --
+
+
+def _buckets_put(store, rows_by_kb, touched=None):
+    """One bucket version: bucket -> {key: n} rows, each written under
+    the version's ``kb=`` subdir; ``touched`` defaults to the buckets
+    written (a touched bucket left without rows empties)."""
+
+    def write(path):
+        for b, rows in rows_by_kb.items():
+            _write_counts(os.path.join(path, f"kb={b}"), rows)
+
+    store.write_buckets(
+        write, sorted(rows_by_kb if touched is None else touched)
+    )
+
+
+def _buckets_state(store) -> dict:
+    """key -> summed n over the live bucket dirs."""
+    return _count_rows(list(store.buckets().values()))
+
+
+def _buckets_clean(store) -> bool:
+    """Every entry under the root is the manifest or a version some
+    live bucket points into."""
+    live = {
+        os.path.relpath(d, store.root).split(os.sep)[0]
+        for d in store.buckets().values()
+    }
+    return set(os.listdir(store.root)) == live | {es.MANIFEST}
+
+
+def _two_versions(tmp_path) -> EpochStore:
+    """Buckets 0 and 1 written by the first version; bucket 1 then
+    rewritten with one more key (the LWW merge's content: the old
+    rows plus the new ones)."""
+    store = EpochStore(str(tmp_path / "bk"))
+    _buckets_put(store, {0: {0: 1, 2: 1}, 1: {1: 1}})
+    _buckets_put(store, {1: {1: 1, 3: 1}})
+    assert _buckets_state(store) == {0: 1, 1: 1, 2: 1, 3: 1}
+    assert _buckets_clean(store)
+    return store
+
+
+def test_write_buckets_carries_untouched_and_drops_emptied(tmp_path):
+    """Untouched buckets keep their dir by reference, a touched bucket
+    without a kb= subdir leaves the map, and a version no bucket
+    references any more is deleted once the map commits."""
+    store = _two_versions(tmp_path)
+    zero = store.buckets()[0]
+    _buckets_put(store, {2: {4: 1}}, touched=[1, 2])
+    assert store.buckets()[0] == zero
+    assert sorted(store.buckets()) == [0, 2]
+    assert _buckets_state(store) == {0: 1, 2: 1, 4: 1}
+    assert _buckets_clean(store)
+    # a version whose every touched bucket emptied is not kept either
+    _buckets_put(store, {}, touched=[2])
+    assert sorted(store.buckets()) == [0] and _buckets_clean(store)
+    reopened = EpochStore(store.root)
+    assert reopened.buckets() == store.buckets()
+
+
+@pytest.mark.parametrize("where", ["mid_write", "before_commit"])
+def test_bucket_crash_before_commit_keeps_the_old_map(
+    tmp_path, monkeypatch, where
+):
+    """A crash while the new version is written, or after it is
+    written and before the manifest commit: a reopened store holds the
+    old bucket map and no torn version dir."""
+    store = _two_versions(tmp_path)
+    before = store.buckets()
+    want = _buckets_state(store)
+
+    if where == "mid_write":
+
+        def write(path):
+            _write_counts(os.path.join(path, "kb=0"), {0: 999})
+            raise Crash
+
+        with pytest.raises(Crash):
+            store.write_buckets(write, [0, 2])
+    else:
+
+        def no_commit(*_a):
+            raise Crash
+
+        monkeypatch.setattr(es.os, "replace", no_commit)
+        with pytest.raises(Crash):
+            _buckets_put(store, {0: {0: 999}, 2: {5: 1}})
+        monkeypatch.undo()
+    assert not _buckets_clean(store)  # the torn version is on disk
+    reopened = EpochStore(store.root)
+    assert reopened.buckets() == before
+    assert _buckets_state(reopened) == want
+    assert _buckets_clean(reopened)
+
+
+def test_bucket_crash_between_commit_and_prune_counts_once(
+    tmp_path, monkeypatch
+):
+    """The new map committed and the prune of the version it
+    superseded dies: that version still holds bucket 1's old rows on
+    disk, but a reopen reads only the committed map — each key once —
+    and leaves only the manifest and the live versions."""
+    store = _two_versions(tmp_path)
+
+    def dying(path):
+        raise Crash
+
+    monkeypatch.setattr(es, "_remove", dying)
+    # rewrite both buckets: the first two versions are superseded
+    with pytest.raises(Crash):
+        _buckets_put(store, {0: {0: 1, 2: 1, 6: 1}, 1: {1: 1, 3: 1}})
+    monkeypatch.undo()
+    want = {0: 1, 1: 1, 2: 1, 3: 1, 6: 1}
+    assert _buckets_state(store) == want and not _buckets_clean(store)
+    reopened = EpochStore(store.root)
+    assert _buckets_state(reopened) == want
+    assert _buckets_clean(reopened)
+    assert len(os.listdir(reopened.root)) == 2  # manifest + 1 version
+
+
+def _lww_events():
+    """40 (user_id, ts, event_id, val) events over 10 keys, coarse ts
+    so the event_id tie-break matters."""
+    import random
+
+    rng = random.Random(20261019)
+    return [
+        (rng.randrange(10), rng.randrange(4), i, f"v{i}")
+        for i in range(40)
+    ]
+
+
+def _lww_merge(spark, store, rows):
+    from pyspark.sql import functions as F
+
+    from ziggurat_spark.queries.streaming_surface import bucketed_lww_merge
+
+    proj = spark.createDataFrame(
+        rows, "user_id long, ts long, event_id long, val string"
+    ).withColumn("kb", F.pmod(F.col("user_id"), F.lit(4)))
+    return bucketed_lww_merge(
+        spark,
+        store,
+        proj,
+        key="user_id",
+        order_cols=(F.desc("ts"), F.desc("event_id")),
+    )
+
+
+def _lww_rows(spark, store) -> list:
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(*store.buckets().values())
+        .select("user_id", "ts", "event_id", "val")
+        .collect()
+    )
+
+
+def test_lww_cold_reopen_between_halves_equals_one_shot(spark, tmp_path):
+    """Half an LWW stream, then a fresh store over the same root (the
+    process's pinned read schema dropped too, as in a new process)
+    takes the second half: the result equals one merge of the whole
+    log, and only the manifest and live versions are on disk."""
+    from ziggurat_spark.queries import streaming_surface as ss
+
+    events = _lww_events()
+    # the first batch alone writes bucket 3 (keys 3 and 7) and the rest
+    # of the first half never touches it, so the first version is
+    # still live at the reopen: a reopened store that named versions
+    # from zero again would overwrite it
+    pin = (3, 9, 99, "pin")
+    early = [e for e in events if e[0] % 4 != 3][:16]
+    late = [e for e in events if e not in early]
+    root = str(tmp_path / "lww")
+    first = EpochStore(root)
+    _lww_merge(spark, first, [pin])
+    for i in range(0, 16, 4):
+        _lww_merge(spark, first, early[i : i + 4])
+    ss._READ_SCHEMA.pop(("lww", root), None)
+    again = EpochStore(root)
+    assert again.buckets() == first.buckets()
+    for i in range(0, len(late), 6):
+        _lww_merge(spark, again, late[i : i + 6])
+    one = EpochStore(str(tmp_path / "one"))
+    _lww_merge(spark, one, events + [pin])
+    assert _lww_rows(spark, again) == _lww_rows(spark, one)
+    assert _buckets_clean(again)
+
+
+def test_lww_redelivery_over_the_bucket_it_last_wrote(spark, tmp_path):
+    """The newest batch re-delivered after it was the last writer of
+    its bucket: the merge reads that bucket's version and commits a
+    fresh one beside it (reusing the name would overwrite the dir the
+    merge is reading), so the contents hold and the replaced version
+    is deleted."""
+    store = EpochStore(str(tmp_path / "lww"))
+    _lww_merge(spark, store, [(1, 1, 1, "a"), (2, 1, 2, "b")])
+    last = [(2, 2, 3, "c"), (6, 2, 4, "d")]  # bucket 2 only
+    assert _lww_merge(spark, store, last) == [2]
+    want = _lww_rows(spark, store)
+    one, two = store.buckets()[1], store.buckets()[2]
+    assert _lww_merge(spark, store, last) == [2]
+    assert store.buckets()[1] == one and store.buckets()[2] != two
+    assert not os.path.exists(os.path.dirname(two))
+    assert _lww_rows(spark, store) == want
+    assert _buckets_clean(store)
+    assert _lww_rows(spark, EpochStore(store.root)) == want

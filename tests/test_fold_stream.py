@@ -233,8 +233,12 @@ FOLD_JOB_PINS = {
 
 #: the same census for the streams outside the fold ops above: the
 #: restart ops, the streams staged through _stage_src, the memory-sink
-#: drains and the budget fold
+#: drains, the budget fold and the bucketed-store folds
 STREAM_JOB_PINS = {
+    "x_stream_upsert_state": ("events", 25),
+    "x_stream_ann_maintain": ("embeddings", 39),
+    "x_stream_ivf_cadence": ("embeddings", 96),
+    "x_stream_select_corpus": ("documents", 52),
     "x_stream_budget_restart": ("documents", 70),
     "x_stream_budget_maintenance": ("documents", 60),
     "x_stream_dedup_historic_loop": ("documents", 43),

@@ -257,6 +257,7 @@ def test_budget_fold_hundredfold_batch_matches_one_shot(spark, tmp_path):
     carrying 100x the others must grade exactly like delivering
     everything in one batch, and the kept state's token mass stays
     <= the budget per source at every step."""
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
         STREAM_BUDGET_TOKENS,
         _budget_fold,
@@ -272,13 +273,11 @@ def test_budget_fold_hundredfold_batch_matches_one_shot(spark, tmp_path):
     )
 
     def run(batches, sub):
-        workdir = str(tmp_path / sub)
-        os.makedirs(workdir)
-        state: dict = {}
-        fold = _budget_fold(spark, workdir, state)
+        store = EpochStore(str(tmp_path / sub))
+        fold = _budget_fold(spark, store)
         for i, b in enumerate(batches):
             fold(b, i)
-            kept = _budget_state_kept(spark, state)
+            kept = _budget_state_kept(spark, store)
             mx = (
                 kept.groupBy("source")
                 .agg(F.sum("nt").alias("t"))
@@ -287,7 +286,7 @@ def test_budget_fold_hundredfold_batch_matches_one_shot(spark, tmp_path):
             )
             assert mx <= STREAM_BUDGET_TOKENS  # state stays bounded
         return sorted(
-            tuple(r) for r in _budget_grade(spark, docs, state).collect()
+            tuple(r) for r in _budget_grade(spark, docs, store).collect()
         )
 
     skewed = run(
@@ -352,6 +351,7 @@ def test_ann_upsert_hundredfold_hot_cell_batch(spark, tmp_path):
     arrivals into the same cell. Only that cell's directory ever
     exists/rewrites; the final index holds every vector exactly
     once (replay of the big batch included)."""
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
         _ann_upsert_batch,
     )
@@ -360,9 +360,7 @@ def test_ann_upsert_hundredfold_hot_cell_batch(spark, tmp_path):
         [(0, [127, 0, 0, 0]), (97, [0, 127, 0, 0])],
         "cent_id long, cq array<bigint>",
     )
-    workdir = str(tmp_path / "ann")
-    os.makedirs(workdir)
-    state: dict = {}
+    store = EpochStore(str(tmp_path / "ann"))
 
     def batch(ids):
         return spark.createDataFrame(
@@ -370,13 +368,14 @@ def test_ann_upsert_hundredfold_hot_cell_batch(spark, tmp_path):
             "vec_id long, embedding array<double>",
         )
 
-    t0 = _ann_upsert_batch(spark, workdir, state, batch(range(100)), 0, cent)
+    t0 = _ann_upsert_batch(spark, store, batch(range(100)), cent)
     assert t0 == [0]  # one hot cell
-    t1 = _ann_upsert_batch(spark, workdir, state, batch([500]), 1, cent)
-    t2 = _ann_upsert_batch(spark, workdir, state, batch([501]), 2, cent)
+    t1 = _ann_upsert_batch(spark, store, batch([500]), cent)
+    t2 = _ann_upsert_batch(spark, store, batch([501]), cent)
     assert t1 == [0] and t2 == [0]
     # replay the 100x batch: keyed overwrite, contents unchanged
-    _ann_upsert_batch(spark, workdir, state, batch(range(100)), 3, cent)
+    _ann_upsert_batch(spark, store, batch(range(100)), cent)
+    state = store.buckets()
     assert sorted(state) == [0]  # cell 97 never materialized
     vecs = sorted(
         r["vec_id"] for r in spark.read.parquet(state[0]).collect()
@@ -402,7 +401,7 @@ def test_select_corpus_state_bounded_on_skewed_corpus(spark, skew_sf):
     )
     from ziggurat_spark.tables import load_table
 
-    state, _ = _select_corpus_state(spark, skew_sf)
+    state = _select_corpus_state(spark, skew_sf).buckets()
     assert 1 <= len(state) <= 16  # hash-bucket dirs, never O(batches)
     rows = spark.read.parquet(*sorted(state.values()))
     n_rows = rows.count()

@@ -234,6 +234,7 @@ def test_stream_budget_state_bounded_under_skew(spark, duck, skew_dir):
 
     from pyspark.sql import functions as F
 
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
         STREAM_BUDGET_TOKENS,
         _budget_fold,
@@ -251,9 +252,8 @@ def test_stream_budget_state_bounded_under_skew(spark, duck, skew_dir):
         .cast("bigint")
         .alias("nt"),
     )
-    workdir = tempfile.mkdtemp(prefix="zs_skew_budget_")
-    state: dict = {}
-    fold = _budget_fold(spark, workdir, state)
+    store = EpochStore(tempfile.mkdtemp(prefix="zs_skew_budget_"))
+    fold = _budget_fold(spark, store)
     n = docs.count()
     for lo, hi in ((0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)):
         fold(
@@ -262,17 +262,17 @@ def test_stream_budget_state_bounded_under_skew(spark, duck, skew_dir):
             ),
             lo,
         )
-    kept = _budget_state_kept(spark, state)
+    kept = _budget_state_kept(spark, store)
     per_source = {
         r["source"]: r["n"]
         for r in kept.groupBy("source").agg(F.count("*").alias("n")).collect()
     }
     assert per_source[HOT] <= STREAM_BUDGET_TOKENS  # ≤ budget, not O(history)
     assert sum(per_source.values()) < 3 * STREAM_BUDGET_TOKENS
-    # the watermark actually formed for the hot source
-    cuts = spark.read.parquet(state["cuts"])
-    hot_cut = cuts.filter(F.col("source") == HOT).collect()
-    assert hot_cut and hot_cut[0]["cut"] is not None
+    # the watermark actually formed for the hot source: its cut
+    # (hk, doc_id) is in the committed cut map
+    hot_cut = store.meta["cuts"].get(HOT)
+    assert hot_cut is not None and len(hot_cut) == 2
 
 
 def test_mm_salted_candidates_equal_plain_join_under_degeneracy(spark):

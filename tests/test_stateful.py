@@ -110,13 +110,12 @@ class TestBucketedLwwMerge:
 
         from pyspark.sql import functions as F
 
+        from ziggurat_spark.queries.epoch_store import EpochStore
         from ziggurat_spark.queries.streaming_surface import (
             bucketed_lww_merge,
         )
 
-        workdir = str(tmp_path / "state")
-        os.makedirs(workdir)
-        state: dict = {}
+        store = EpochStore(str(tmp_path / "state"))
         order = (F.desc("ts"), F.desc("event_id"))
         # batch 0 touches buckets 1 (users 1, 17) and 2 (user 2)
         b0 = self._proj(
@@ -124,10 +123,10 @@ class TestBucketedLwwMerge:
             [(1, 10, 1, "a"), (17, 10, 2, "b"), (2, 10, 3, "c")],
         )
         t0 = bucketed_lww_merge(
-            spark, workdir, state, b0, 0, key="user_id", order_cols=order
+            spark, store, b0, key="user_id", order_cols=order
         )
         assert t0 == [1, 2]
-        bucket1_dir = state[1]
+        bucket1_dir = store.buckets()[1]
 
         def digest(d):
             out = {}
@@ -143,14 +142,15 @@ class TestBucketedLwwMerge:
         # batch 1 touches ONLY bucket 2 (user 6): bucket 1 must not move
         b1 = self._proj(spark, [(6, 20, 4, "d"), (2, 20, 5, "e")])
         t1 = bucketed_lww_merge(
-            spark, workdir, state, b1, 1, key="user_id", order_cols=order
+            spark, store, b1, key="user_id", order_cols=order
         )
         assert t1 == [2]
-        assert state[1] == bucket1_dir  # same directory, by reference
+        # same directory, by reference
+        assert store.buckets()[1] == bucket1_dir
         assert digest(bucket1_dir) == before  # bytes untouched
         # LWW correctness across the carried-over + rewritten buckets
         final = (
-            spark.read.parquet(*sorted(state.values()))
+            spark.read.parquet(*sorted(store.buckets().values()))
             .select("user_id", "val")
             .orderBy("user_id")
             .collect()
@@ -169,11 +169,11 @@ class TestBucketedLwwMergeProperty:
     last-write-wins result over the whole log."""
 
     def test_random_batchings_converge_to_lww(self, spark, tmp_path):
-        import os
         import random
 
         from pyspark.sql import functions as F
 
+        from ziggurat_spark.queries.epoch_store import EpochStore
         from ziggurat_spark.queries.streaming_surface import (
             bucketed_lww_merge,
         )
@@ -209,25 +209,21 @@ class TestBucketedLwwMergeProperty:
             for c in cuts + [len(perm)]:
                 batches.append(perm[prev:c])
                 prev = c
-            workdir = str(tmp_path / f"t{trial}")
-            os.makedirs(workdir)
-            state: dict = {}
-            for bid, rows in enumerate(batches):
+            store = EpochStore(str(tmp_path / f"t{trial}"))
+            for rows in batches:
                 proj = spark.createDataFrame(
                     rows, "user_id long, ts long, event_id long, val string"
                 ).withColumn("kb", F.pmod(F.col("user_id"), F.lit(4)))
                 bucketed_lww_merge(
                     spark,
-                    workdir,
-                    state,
+                    store,
                     proj,
-                    bid,
                     key="user_id",
                     order_cols=(F.desc("ts"), F.desc("event_id")),
                 )
             got = sorted(
                 (r.user_id, r.val)
-                for r in spark.read.parquet(*state.values())
+                for r in spark.read.parquet(*store.buckets().values())
                 .select("user_id", "val")
                 .collect()
             )
@@ -237,31 +233,26 @@ class TestBucketedLwwMergeProperty:
 def test_bucketed_lww_merge_empty_batch_is_noop(spark, tmp_path):
     """An empty micro-batch (restart replay) must not disturb state
     or crash on the zero-partition repartition."""
-    import os
-
     from pyspark.sql import functions as F
 
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import bucketed_lww_merge
 
-    workdir = str(tmp_path / "s")
-    os.makedirs(workdir)
-    state: dict = {}
+    store = EpochStore(str(tmp_path / "s"))
     order = (F.desc("ts"), F.desc("event_id"))
     b0 = spark.createDataFrame(
         [(1, 10, 1, "a")], "user_id long, ts long, event_id long, val string"
     ).withColumn("kb", F.pmod(F.col("user_id"), F.lit(4)))
-    bucketed_lww_merge(
-        spark, workdir, state, b0, 0, key="user_id", order_cols=order
-    )
-    snapshot = dict(state)
+    bucketed_lww_merge(spark, store, b0, key="user_id", order_cols=order)
+    snapshot = store.buckets()
     empty = b0.filter(F.lit(False))
     assert (
         bucketed_lww_merge(
-            spark, workdir, state, empty, 1, key="user_id", order_cols=order
+            spark, store, empty, key="user_id", order_cols=order
         )
         == []
     )
-    assert state == snapshot
+    assert store.buckets() == snapshot
 
 
 def test_stream_budget_maintenance_batching_independent(spark):
@@ -295,8 +286,8 @@ def test_stream_budget_bucketed_state_touched_only(spark, tmp_path):
     bucket directory over BY REFERENCE (same path, untouched
     bytes), and only the arrival's bucket may rewrite."""
     import hashlib
-    import os
 
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
         _budget_fold,
         _budget_state_kept,
@@ -307,29 +298,27 @@ def test_stream_budget_bucketed_state_touched_only(spark, tmp_path):
     docs = spark.createDataFrame(
         [("s0", i, 1) for i in range(200)], sch
     )
-    workdir = str(tmp_path / "st")
-    os.makedirs(workdir)
-    state: dict = {}
-    fold = _budget_fold(spark, workdir, state)
+    store = EpochStore(str(tmp_path / "st"))
+    fold = _budget_fold(spark, store)
     fold(docs, 0)
-    before = dict(state["buckets"])
+    before = store.buckets()
     assert len(before) > 4  # the state really spread across buckets
 
     new_doc = 10_001
     kb = int(hashlib.md5(str(new_doc).encode()).hexdigest()[0], 16)
     fold(spark.createDataFrame([("s0", new_doc, 1)], sch), 1)
-    after = state["buckets"]
+    after = store.buckets()
     untouched = [b for b in before if b != kb]
     assert untouched
     for b in untouched:
         assert after[b] == before[b]  # carried over by reference
     assert after[kb] != before.get(kb)  # the touched bucket moved
-    assert _budget_state_kept(spark, state).count() == 201
+    assert _budget_state_kept(spark, store).count() == 201
 
     # replay of the second batch is a no-op: no bucket moves at all
     snap = dict(after)
     fold(spark.createDataFrame([("s0", new_doc, 1)], sch), 1)
-    assert state["buckets"] == snap
+    assert store.buckets() == snap
 
 
 def test_stream_budget_maintenance_tiny_budget_watermark_churn(spark):
@@ -392,6 +381,7 @@ class TestAnnUpsertTouchedOnly:
         import hashlib
         import os
 
+        from ziggurat_spark.queries.epoch_store import EpochStore
         from ziggurat_spark.queries.streaming_surface import (
             _ann_upsert_batch,
         )
@@ -400,15 +390,13 @@ class TestAnnUpsertTouchedOnly:
             [(0, [127, 0, 0, 0]), (1, [0, 127, 0, 0])],
             "cent_id long, cq array<bigint>",
         )
-        workdir = str(tmp_path / "state")
-        os.makedirs(workdir)
-        state: dict = {}
+        store = EpochStore(str(tmp_path / "state"))
         b0 = self._batch(
             spark, [(1, [0.5, 0.0, 0.0, 0.0]), (2, [0.0, 0.5, 0.0, 0.0])]
         )
-        t0 = _ann_upsert_batch(spark, workdir, state, b0, 0, cent)
+        t0 = _ann_upsert_batch(spark, store, b0, cent)
         assert sorted(t0) == [0, 1]
-        cell0_dir = state[0]
+        cell0_dir = store.buckets()[0]
 
         def digest(d):
             return {
@@ -423,21 +411,24 @@ class TestAnnUpsertTouchedOnly:
         before = digest(cell0_dir)
         # batch 1 touches ONLY cell 1
         b1 = self._batch(spark, [(3, [0.0, 0.9, 0.0, 0.0])])
-        t1 = _ann_upsert_batch(spark, workdir, state, b1, 1, cent)
+        t1 = _ann_upsert_batch(spark, store, b1, cent)
         assert t1 == [1]
-        assert state[0] == cell0_dir  # carried over by reference
+        # carried over by reference
+        assert store.buckets()[0] == cell0_dir
         assert digest(cell0_dir) == before  # byte-identical
 
         def contents():
             return {
                 (r["vec_id"], r["cent_id"], tuple(r["q"]))
-                for r in spark.read.parquet(*state.values()).collect()
+                for r in spark.read.parquet(
+                    *store.buckets().values()
+                ).collect()
             }
 
         want = contents()
         assert {v for v, _, _ in want} == {1, 2, 3}
         # crash re-delivery: the same batch arrives again
-        _ann_upsert_batch(spark, workdir, state, b1, 2, cent)
+        _ann_upsert_batch(spark, store, b1, cent)
         assert contents() == want
 
 
@@ -663,29 +654,6 @@ class TestIvfRetrainTouchedOnly:
         assert set(got) == {0, 3, 4, 5, 97, 194, 20}
 
 
-def test_ann_dot_spellings_grade_identically(spark):
-    """ANN_DOT_ARROW picks a dot-product spelling for throughput;
-    both are integer-exact in any evaluation order, so the graded
-    frame must be identical under either flag."""
-    from ziggurat_spark.queries import streaming_surface as ss
-
-    sf = "/root/testdata/sf0.001"
-    prev = ss.ANN_DOT_ARROW
-    try:
-        ss.ANN_DOT_ARROW = False
-        interp = [
-            tuple(r) for r in ss.x_stream_ann_maintain(spark, sf).collect()
-        ]
-        ss.ANN_DOT_ARROW = True
-        arrow = [
-            tuple(r) for r in ss.x_stream_ann_maintain(spark, sf).collect()
-        ]
-    finally:
-        ss.ANN_DOT_ARROW = prev
-    assert interp == arrow
-    assert len(interp) > 0
-
-
 def test_stream_select_corpus_batching_independent(spark):
     """The streamed selection corpus must grade identically at ANY
     chunking — 1 file (= the batch pipeline by construction) vs 7
@@ -843,8 +811,8 @@ def test_qdot_arrow_twin_propagates_nulls(spark):
     """qdot_int_udf must agree with the interpreted
     aggregate(zip_with(...)) spelling on the FULL input domain:
     NULL arrays yield NULL (not an np.vstack crash failing the
-    Arrow batch) — the ANN_DOT_ARROW flip is safe even on paths
-    that can see a null embedding (round-6 ADVICE)."""
+    Arrow batch) — the corpus passes that use the twin are safe
+    even where they can see a null embedding (round-6 ADVICE)."""
     from ziggurat_spark.functions.texthash_udfs import qdot_int_udf
 
     rows = [
@@ -891,7 +859,7 @@ def test_stream_components_batching_independent(spark):
         seven = ss.x_stream_components_maintain(spark, sf).collect()
         # the forest state is node-hash-bucketed LWW (touched-only
         # writes): <= 16 bucket dirs, one CURRENT row per labeled node
-        _, state = ss._cc_forest_state(spark, sf)
+        state = ss._cc_forest_state(spark, sf).buckets()
         assert 1 <= len(state) <= 16
         rows = spark.read.parquet(*sorted(state.values()))
         n_rows = rows.count()
@@ -944,9 +912,8 @@ def test_stream_cc_forest_reads_touched_buckets_only(spark, tmp_path):
     in separate batches; the second component's triggers must not
     open any bucket holding only the first component's rows, and the
     final forest must still label both components exactly."""
-    import os
-
     from ziggurat_spark.queries import streaming_surface as ss
+    from ziggurat_spark.queries.epoch_store import EpochStore
 
     # compute (not assume) which bucket each candidate id hashes to,
     # then pick two components whose node sets occupy DISJOINT
@@ -964,12 +931,11 @@ def test_stream_cc_forest_reads_touched_buckets_only(spark, tmp_path):
     a_n = sorted(by_k[ka][:4])
     b_n = sorted(by_k[kb][:5])
 
-    statedir = str(tmp_path / "ccstate")
-    os.makedirs(statedir)
-    state: dict = {}
-    ridx: dict = {}
+    forest = EpochStore(str(tmp_path / "ccstate"))
     audit: list = []
-    fold = ss._cc_forest_fold(spark, statedir, state, ridx, audit)
+    fold = ss._cc_forest_fold(
+        spark, forest, EpochStore(str(tmp_path / "ridx")), audit
+    )
 
     def pdf(edges):
         return spark.createDataFrame(edges, "a long, b long")
@@ -986,11 +952,11 @@ def test_stream_cc_forest_reads_touched_buckets_only(spark, tmp_path):
     assert ka not in opened_2, (opened_2, ka)
     assert opened_2 <= {kb}
     # strict subset of the standing bucket set (A's bucket exists)
-    assert len(opened_2) < len(state)
+    assert len(opened_2) < len(forest.buckets())
 
     # the forest still labels both components exactly
-    forest = spark.read.parquet(*sorted(state.values()))
-    lab = {r["a"]: r["b"] for r in forest.collect()}
+    rows = spark.read.parquet(*sorted(forest.buckets().values()))
+    lab = {r["a"]: r["b"] for r in rows.collect()}
     for n in a_n:
         assert lab.get(n, n) == a_n[0]
     for n in b_n:
@@ -1022,10 +988,12 @@ def test_stream_ivf_cadence_refresh_contract(spark):
     """The in-stream Lloyd cadence: (a) refreshes actually fire
     MID-STREAM (not only at close), (b) the final in-op refresh —
     after the closing refresh and a replay of the newest batch — changes
-    ZERO cells (idempotence = replay proof), and (c) the post-stream
+    ZERO cells (idempotence = replay proof), (c) the post-stream
     SERVING state carries exactly the batch retrain's (vec, cell1)
-    assignment."""
-    from pyspark.sql import functions as F
+    assignment, and (d) the serving store holds on disk only its
+    manifest and the versions a live cell points into (every
+    superseded serving version was deleted)."""
+    import os
 
     from ziggurat_spark.queries import streaming_surface as ss
     from ziggurat_spark.queries.similarity import _ivf_retrain_state
@@ -1033,6 +1001,13 @@ def test_stream_ivf_cadence_refresh_contract(spark):
 
     sf = "/root/testdata/sf0.001"
     serve, log = ss._ivf_cadence_state(spark, sf, 2)
+    cells = serve.buckets()
+    # (d) only live serving versions remain
+    live = {
+        os.path.relpath(d, serve.root).split(os.sep)[0]
+        for d in cells.values()
+    }
+    assert set(os.listdir(serve.root)) == live | {"manifest.json"}
     # (a) at least one refresh before the closing pair of calls
     assert len(log) >= 3, log
     # (b) the idempotence-proof refresh rewrote nothing
@@ -1040,7 +1015,7 @@ def test_stream_ivf_cadence_refresh_contract(spark):
     # (c) serving assignment == batch retrain assignment
     got = {
         (r["vec_id"], r["cell1"])
-        for r in spark.read.parquet(*sorted(serve.values()))
+        for r in spark.read.parquet(*sorted(cells.values()))
         .select("vec_id", "cell1")
         .collect()
     }
@@ -1125,10 +1100,9 @@ def test_stream_budget_cold_restart_restores_state(spark, tmp_path):
     after a crash) must restore the live bucket manifest, cut
     table, and subtotals from the commit-log manifest and continue
     exactly — graded equal to a single fold that saw every batch."""
-    import os
-
     from pyspark.sql import functions as F
 
+    from ziggurat_spark.queries.epoch_store import EpochStore
     from ziggurat_spark.queries.streaming_surface import (
         _budget_fold,
         _budget_grade,
@@ -1144,27 +1118,24 @@ def test_stream_budget_cold_restart_restores_state(spark, tmp_path):
     b3 = docs.filter(F.col("doc_id") >= 520)
 
     workdir = str(tmp_path / "st")
-    os.makedirs(workdir)
-    a: dict = {}
-    fold_a = _budget_fold(spark, workdir, a)
+    a = EpochStore(workdir)
+    fold_a = _budget_fold(spark, a)
     fold_a(b1, 0)
     fold_a(b2, 1)
 
-    # "crash": a fresh state dict over the same workdir — restore
-    # must come from the manifest, not the in-process dict
-    b: dict = {}
-    fold_b = _budget_fold(spark, workdir, b)
+    # "crash": a fresh store over the same workdir — restore must
+    # come from the manifest, not the in-process fold
+    b = EpochStore(workdir)
+    fold_b = _budget_fold(spark, b)
     fold_b(b3, 2)
-    assert b["buckets"] and b["v"] >= a["v"]
+    assert b.buckets() and b.seq >= a.seq
     got = sorted(
         tuple(r) for r in _budget_grade(spark, docs, b).collect()
     )
 
     # one-shot reference over a separate workdir
-    workdir2 = str(tmp_path / "os")
-    os.makedirs(workdir2)
-    c: dict = {}
-    _budget_fold(spark, workdir2, c)(docs, 0)
+    c = EpochStore(str(tmp_path / "os"))
+    _budget_fold(spark, c)(docs, 0)
     want = sorted(
         tuple(r) for r in _budget_grade(spark, docs, c).collect()
     )
@@ -1239,9 +1210,8 @@ def test_stream_cc_forest_index_past_64_buckets(spark, tmp_path):
     the second component's triggers must not open the first
     component's buckets, labels stay exact, and the index rows carry
     ceil(128/64) = 2 words."""
-    import os
-
     from ziggurat_spark.queries import streaming_surface as ss
+    from ziggurat_spark.queries.epoch_store import EpochStore
 
     prev = ss.STREAM_CC_KB
     try:
@@ -1263,12 +1233,10 @@ def test_stream_cc_forest_index_past_64_buckets(spark, tmp_path):
         a_n = sorted(by_k[ka][:4])
         b_n = sorted(by_k[kb][:5])
 
-        statedir = str(tmp_path / "ccstate128")
-        os.makedirs(statedir)
-        state: dict = {}
-        ridx: dict = {}
+        forest = EpochStore(str(tmp_path / "ccstate128"))
+        ridx = EpochStore(str(tmp_path / "ridx128"))
         audit: list = []
-        fold = ss._cc_forest_fold(spark, statedir, state, ridx, audit)
+        fold = ss._cc_forest_fold(spark, forest, ridx, audit)
 
         def pdf(edges):
             return spark.createDataFrame(edges, "a long, b long")
@@ -1289,14 +1257,16 @@ def test_stream_cc_forest_index_past_64_buckets(spark, tmp_path):
         assert opened_2 <= {kb}
         assert kb in audit[2]["member_bks"], audit[2]  # word 2 read
 
-        forest = spark.read.parquet(*sorted(state.values()))
-        lab = {r["a"]: r["b"] for r in forest.collect()}
+        rows = spark.read.parquet(*sorted(forest.buckets().values()))
+        lab = {r["a"]: r["b"] for r in rows.collect()}
         for n in a_n:
             assert lab.get(n, n) == a_n[0]
         for n in b_n:
             assert lab.get(n, n) == b_n[0]
         # the index rows carry 2-word masks
-        bits = spark.read.parquet(*sorted(ridx.values())).select("bits")
+        bits = spark.read.parquet(
+            *sorted(ridx.buckets().values())
+        ).select("bits")
         assert all(len(r["bits"]) == 2 for r in bits.collect())
     finally:
         ss.STREAM_CC_KB = prev
@@ -1433,24 +1403,21 @@ class TestBucketedLwwMergeHints:
         return df.withColumn("kb", F.pmod(F.col("user_id"), F.lit(4)))
 
     def _run(self, spark, tmp_path, tag, touched_hint, preunion):
-        import os
-
         from pyspark.sql import functions as F
 
+        from ziggurat_spark.queries.epoch_store import EpochStore
         from ziggurat_spark.queries.streaming_surface import (
             bucketed_lww_merge,
         )
 
-        workdir = str(tmp_path / f"state_{tag}")
-        os.makedirs(workdir)
-        state: dict = {}
+        store = EpochStore(str(tmp_path / f"state_{tag}"))
         order = (F.desc("ts"), F.desc("event_id"))
         batches = [
             [(1, 10, 1, "a"), (17, 10, 2, "b"), (2, 10, 3, "c")],
             [(6, 20, 4, "d"), (2, 20, 5, "e")],
             [(1, 30, 6, "f"), (3, 30, 7, "g")],
         ]
-        for i, rows in enumerate(batches):
+        for rows in batches:
             proj = self._proj(spark, rows)
             kw = {}
             if touched_hint:
@@ -1461,7 +1428,8 @@ class TestBucketedLwwMergeHints:
                 # fold the old touched buckets in ourselves, exactly
                 # like the pipe fold's exact-hash merge does
                 tk = sorted({int(u % 4) for (u, *_rest) in rows})
-                old = [state[b] for b in tk if b in state]
+                live = store.buckets()
+                old = [live[b] for b in tk if b in live]
                 if old:
                     # state files store the bucket as kbc (kb is the
                     # partition directory, dropped on a direct read)
@@ -1477,16 +1445,14 @@ class TestBucketedLwwMergeHints:
                 kw["preunioned"] = True
             bucketed_lww_merge(
                 spark,
-                workdir,
-                state,
+                store,
                 proj,
-                i,
                 key="user_id",
                 order_cols=order,
                 **kw,
             )
         return (
-            spark.read.parquet(*sorted(state.values()))
+            spark.read.parquet(*sorted(store.buckets().values()))
             .select("user_id", "ts", "event_id", "val")
             .orderBy("user_id")
             .collect()

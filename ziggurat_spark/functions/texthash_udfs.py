@@ -132,8 +132,9 @@ def qdot_int_udf():
     Agrees with the interpreted spelling on the FULL input domain:
     a NULL array on either side yields NULL (the interpreted lambda
     propagates it) instead of crashing the Arrow batch in
-    np.vstack — so flipping ANN_DOT_ARROW into a path that can see
-    a null embedding degrades identically."""
+    np.vstack — so a corpus pass that meets a null embedding (the
+    IVF retrain and cadence refresh use this twin) degrades exactly
+    like the interpreted spelling."""
     import numpy as np
 
     @F.pandas_udf("bigint")

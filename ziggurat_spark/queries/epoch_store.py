@@ -1,5 +1,5 @@
-"""One store for batch-keyed fold state: per-batch runs, folded
-epochs, and the manifest that commits both.
+"""One store for fold state: per-batch runs, folded epochs, bucket
+versions, and the manifest that commits them.
 
 A streaming fold writes one *run* per micro-batch and state *kind*
 (``bands``, ``pairs``, ``part``, ...) and folds committed runs into
@@ -26,9 +26,20 @@ it lists every live dir and the op's metadata. The contract:
   (a torn write, an uncommitted epoch, a half-done delete) is removed,
   idempotently.
 
-Each dir gets a fresh name, ``{kind}_b{bid}_{seq}`` for a run and
-``{kind}_L{level}_{seq}`` for an epoch, so nothing is overwritten in
-place. The store owns its root: nothing else may write there.
+Bucketed state (the LWW merges, the budget fold, the IVF serving
+index) is not batch-keyed: ``write_buckets`` writes one fresh
+*version* dir partitioned by ``kb`` (listed as a run keyed by its
+``seq``), points every bucket it touched at
+that version's ``kb=`` subdir, commits the bucket map as the store's
+metadata, and only then deletes each version no live bucket still
+references. Untouched buckets carry over by reference, a re-delivered
+batch reads the version it last wrote and commits a new one beside it,
+and a fresh process resumes from the committed map.
+
+Each dir gets a fresh name, ``{kind}_b{bid}_{seq}`` for a run,
+``{kind}_L{level}_{seq}`` for an epoch and ``kb_v_{seq}`` for a bucket
+version, so nothing is overwritten in place. The store owns its root:
+nothing else may write there, and one thread at a time writes it.
 """
 
 from __future__ import annotations
@@ -70,8 +81,9 @@ def overlap(calls: list) -> None:
 
 
 class EpochStore:
-    """Batch-keyed runs and folded epochs under ``root``, committed
-    through ``root/manifest.json`` (see the module docstring)."""
+    """Batch-keyed runs and folded epochs, or bucket versions, under
+    ``root``, committed through ``root/manifest.json`` (see the module
+    docstring)."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -136,6 +148,40 @@ class EpochStore:
             for b, g in sorted(self._runs.items())
             if kind in g
         }
+
+    def buckets(self) -> dict[int, str]:
+        """bucket -> its live dir, as the last write_buckets committed
+        it."""
+        return {
+            int(b): self._path(d)
+            for b, d in self.meta.get("buckets", {}).items()
+        }
+
+    def write_buckets(self, write, touched, meta=None) -> None:
+        """Write one version of bucketed state: ``write(path)`` writes
+        a fresh dir partitioned by ``kb``; each bucket in ``touched``
+        then points at its ``kb=`` subdir, or is emptied when the write
+        left none. The bucket map commits as metadata, with ``meta``
+        (the op's own entries, when given) merged in; then every
+        version no live bucket references is deleted."""
+        path = self._fresh("kb", "v")
+        version = self.seq
+        write(path)
+        name = os.path.basename(path)
+        buckets = dict(self.meta.get("buckets", {}))
+        for b in touched:
+            if os.path.isdir(os.path.join(path, f"kb={b}")):
+                buckets[str(b)] = f"{name}/kb={b}"
+            else:
+                buckets.pop(str(b), None)
+        refs = {d.split("/", 1)[0] for d in buckets.values()}
+        versions = {**self._runs, version: {"kb": name}}
+        self.commit_runs(
+            version,
+            {"kb": path},
+            meta={**self.meta, **(meta or {}), "buckets": buckets},
+            drop=[v for v, g in versions.items() if g["kb"] not in refs],
+        )
 
     def run_path(self, kind: str, bid: int) -> str:
         """A fresh dir for batch ``bid``'s run of ``kind``; it becomes

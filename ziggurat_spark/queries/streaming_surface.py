@@ -1056,10 +1056,8 @@ def _count_fold(store: EpochStore, bid: int, n: int) -> None:
 
 def bucketed_lww_merge(
     spark: SparkSession,
-    workdir: str,
-    state: dict,
+    store: EpochStore,
     proj: DataFrame,
-    batch_id: int,
     key: str,
     order_cols: tuple,
     touched: list | None = None,
@@ -1070,8 +1068,12 @@ def bucketed_lww_merge(
     the batch touches are read back, merged last-write-wins per
     ``key`` (highest ``order_cols`` first), and rewritten — every
     other bucket directory carries over by reference, untouched
-    bytes on disk. ``state`` maps bucket -> current directory and is
-    updated in place. Returns the touched bucket ids.
+    bytes on disk. The bucket map commits through ``store``
+    (``EpochStore.write_buckets``: a fresh version dir, the map as
+    manifest metadata, superseded versions deleted after the
+    commit), so a re-delivered batch never overwrites the version it
+    reads and a fresh process resumes from the committed map.
+    Returns the touched bucket ids.
 
     ``touched``, when given, is the EXACT set of ``kb`` values in
     ``proj``, already known to the caller (usually collected as part
@@ -1107,13 +1109,12 @@ def bucketed_lww_merge(
         if ck is not None:
             release_checkpoint(ck)
         return []
-    old = [] if preunioned else [state[b] for b in touched if b in state]
-    if old:
+    if not preunioned and set(touched) & store.buckets().keys():
         # bucket-pruned read: ONLY the touched buckets' rows rejoin
         # the merge; every other bucket stays on disk. Schema comes
         # from the write-side capture below (reads only ever happen
         # after a write), so no footer job runs here.
-        prev = _pq_read(spark, ("lww", workdir), old).withColumn(
+        prev = _lww_read(spark, store, touched).withColumn(
             "kb", F.col("kbc")
         )
         cur = prev.unionByName(proj.withColumn("kbc", F.col("kb")))
@@ -1125,43 +1126,42 @@ def bucketed_lww_merge(
         .drop("rn")
     )
     # capture the FILE schema of this layout (merged minus the kb
-    # partition column) so every later read of this workdir — the
+    # partition column) so every later read of this store — the
     # merge's own prev reads, the fold's bucket-pruned reads, the
     # grade's union — skips parquet schema inference
     from pyspark.sql.types import StructType
 
-    _READ_SCHEMA[("lww", workdir)] = StructType(
+    _READ_SCHEMA[("lww", store.root)] = StructType(
         [f for f in _nullable_top(merged.schema) if f.name != "kb"]
     )
-    new_path = os.path.join(workdir, f"state_v{batch_id}")
     # one file per touched bucket: co-partition on kb before the
     # partitioned write so a bucket's rows land in a single task
-    merged.repartition(len(touched), "kb").write.partitionBy("kb").mode(
-        "overwrite"
-    ).parquet(new_path)
-    for b in touched:
-        state[b] = os.path.join(new_path, f"kb={b}")
-    # prune fully-superseded version dirs (round-8 ADVICE #4): a
-    # state_v* dir none of whose kb= partitions is referenced by the
-    # live state map holds only dead rows — deleting it keeps the
-    # on-disk footprint equal to the LIVE layout (the bench
-    # state_dirs record measures what it claims). Safe: the merge
-    # write above already materialized every row it read from the
-    # superseded buckets, and partially-live version dirs (some
-    # buckets carried over by reference) are kept.
-    import shutil as _sh
-
-    live_dirs = {os.path.dirname(d) for d in state.values()}
-    for d in os.listdir(workdir):
-        full = os.path.join(workdir, d)
-        if d.startswith("state_v") and full not in live_dirs:
-            _sh.rmtree(full, ignore_errors=True)
+    store.write_buckets(
+        lambda path: merged.repartition(len(touched), "kb")
+        .write.partitionBy("kb")
+        .mode("overwrite")
+        .parquet(path),
+        touched,
+    )
     if ck is not None:
         # both consumers (collect + write) are done. NB:
         # release_checkpoint, not DataFrame.unpersist — the latter
         # is a CacheManager no-op on checkpointed frames
         release_checkpoint(ck)
     return touched
+
+
+def _lww_read(
+    spark: SparkSession, store: EpochStore, kbs: list | None = None
+) -> DataFrame:
+    """The live rows of a bucketed store — only buckets ``kbs`` when
+    given — read with the schema its merges pinned."""
+    live = store.buckets()
+    if kbs is None:
+        dirs = sorted(live.values())
+    else:
+        dirs = [live[b] for b in kbs if b in live]
+    return _pq_read(spark, ("lww", store.root), dirs)
 
 
 @register(
@@ -1199,11 +1199,10 @@ def x_stream_upsert_state(spark: SparkSession, sf: str) -> DataFrame:
     # the per-batch file count proportionate at bench scale (at
     # 100 TB you'd raise both — the touched-only I/O bound is what
     # matters, not these two dials)
-    workdir = scratch_dir("zs_stream_upsert_")
+    store = EpochStore(scratch_dir("zs_stream_upsert_"))
     n_buckets = 8
-    state: dict[int, str] = {}  # key-bucket -> current directory
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def merge(batch_df: DataFrame, _bid: int) -> None:
         proj = batch_df.select(
             "user_id",
             "ts",
@@ -1213,17 +1212,15 @@ def x_stream_upsert_state(spark: SparkSession, sf: str) -> DataFrame:
         ).withColumn("kb", F.pmod(F.col("user_id"), F.lit(n_buckets)))
         bucketed_lww_merge(
             spark,
-            workdir,
-            state,
+            store,
             proj,
-            batch_id,
             key="user_id",
             order_cols=(F.desc("ts"), F.desc("event_id")),
         )
 
     run_fold_stream(spark, load_table(spark, sf, "events"), 4, merge)
     return (
-        _pq_read(spark, ("lww", workdir), sorted(state.values()))
+        _lww_read(spark, store)
         .select(
             "user_id",
             F.col("event_type").alias("last_type"),
@@ -2532,7 +2529,7 @@ def _cut_map_expr(cuts: dict):
     return F.create_map(*args)
 
 
-def _budget_fold(spark: SparkSession, workdir: str, state: dict):
+def _budget_fold(spark: SparkSession, store: EpochStore):
     """foreachBatch fold shared by x_stream_budget_maintenance and
     x_stream_budget_restart: merge a micro-batch into the budget-
     prefix state under the overflow-watermark construction.
@@ -2581,47 +2578,21 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
     bucket_schema = (
         "source string, doc_id bigint, nt bigint, hk string, kbc int"
     )
-    # each merge writes one state version as a store run keyed by its
-    # version number; the store's manifest metadata commits the
-    # bucket map, cut-table path and version counter with it
-    store = EpochStore(workdir)
-
-    if "buckets" not in state and store.meta:
-        # COLD-START RESTORE: the committed metadata names exactly the
-        # LIVE bucket dirs, so a fully evicted bucket never resurrects
-        # from a superseded version. Subtotals are derived state: one
-        # bounded read of the live buckets.
-        m = store.meta
-        state["buckets"] = {int(k): v for k, v in m["buckets"].items()}
-        state["cuts"] = m["cuts"]
-        state["v"] = m["v"]
-        state["subt"] = {}
-        if state["buckets"]:
-            for r in (
-                spark.read.schema(bucket_schema)
-                .parquet(*state["buckets"].values())
-                .groupBy("source", "kbc")
-                .agg(F.sum("nt").alias("s"))
-                .collect()
-            ):
-                state["subt"][(r["source"], r["kbc"])] = r["s"]
-    state.setdefault("buckets", {})
-    state.setdefault("cuts", None)
-    state.setdefault("subt", {})
-    state.setdefault("v", 0)
-    # the cut table is O(sources) control-plane metadata: the
-    # in-memory dict is authoritative within a process; the parquet
-    # twin (written driver-side, like a commit log) restores it on a
-    # cold start
-    if "cutsd" not in state:
-        state["cutsd"] = {}
-        if state["cuts"]:
-            for r in spark.read.parquet(state["cuts"]).collect():
-                if r["cut"] is not None:
-                    state["cutsd"][r["source"]] = (
-                        r["cut"]["hk"],
-                        r["cut"]["doc_id"],
-                    )
+    # subtotals are derived state (per (source, bucket) token mass):
+    # a fold over a store that already holds committed buckets — a
+    # fresh process after a crash — restores them with one bounded
+    # read of the live buckets, which the committed map names
+    # exactly, so a fully evicted bucket never resurrects
+    subt: dict = {}
+    if store.buckets():
+        for r in (
+            spark.read.schema(bucket_schema)
+            .parquet(*store.buckets().values())
+            .groupBy("source", "kbc")
+            .agg(F.sum("nt").alias("s"))
+            .collect()
+        ):
+            subt[(r["source"], r["kbc"])] = r["s"]
 
     wsrc = (
         W.partitionBy("source")
@@ -2630,7 +2601,8 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
     )
 
     def _read_buckets(idx):
-        dirs = [state["buckets"][x] for x in idx if x in state["buckets"]]
+        live = store.buckets()
+        dirs = [live[x] for x in idx if x in live]
         if not dirs:
             return None
         return (
@@ -2641,6 +2613,12 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
         )
 
     def _fold(b, _i):
+        nonlocal subt
+        # the O(sources) cut table commits with the bucket map, as
+        # JSON: source -> [hk, doc_id]
+        cuts = {
+            src: tuple(c) for src, c in store.meta.get("cuts", {}).items()
+        }
         cand = (
             b.select(
                 "source",
@@ -2653,12 +2631,12 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
                 "kb", _budget_kb_expr()
             )
         )
-        if state["cutsd"]:
+        if cuts:
             # Watermark reject: a doc whose (hk, doc_id) order key is
             # at-or-past its source's cut can never re-enter the
             # prefix — its true cumsum already crossed the budget
             # when the cut was recorded, and cumsums only grow.
-            cut = _cut_map_expr(state["cutsd"])[F.col("source")]
+            cut = _cut_map_expr(cuts)[F.col("source")]
             cand = cand.filter(
                 cut.isNull() | (F.struct("hk", "doc_id") < cut)
             )
@@ -2689,23 +2667,25 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
         if not delta:
             release_checkpoint(fresh)
             return  # pure replay: state already at the fixed point
-        subt = dict(state["subt"])
+        # the trigger works on a copy: the closure's subtotals move
+        # only once the new version has committed
+        sub = dict(subt)
         for r in delta:
             k = (r["source"], r["kb"])
-            subt[k] = subt.get(k, 0) + r["s"]
+            sub[k] = sub.get(k, 0) + r["s"]
         # overflow bucket per source: smallest bucket whose
         # bucket-prefix sum crosses the budget (driver-side walk of
         # the O(sources × buckets) subtotal table)
         crossing = {}
-        for src in {s for (s, _x) in subt}:
+        for src in {s for (s, _x) in sub}:
             run = 0
             for x in range(STREAM_BUDGET_KB):
-                m = subt.get((src, x), 0)
+                m = sub.get((src, x), 0)
                 if run + m > STREAM_BUDGET_TOKENS:
                     crossing[src] = (x, run)
                     break
                 run += m
-        new_cuts = dict(state["cutsd"])
+        new_cuts = dict(cuts)
         evict_touched = set()
         if crossing:
             cb_set = sorted({cb for (cb, _o) in crossing.values()})
@@ -2750,7 +2730,7 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
             # at-or-after the overflow bucket holding that source
             for s, (cb, _off) in crossing.items():
                 for x in range(cb, STREAM_BUDGET_KB):
-                    if subt.get((s, x), 0) > 0:
+                    if sub.get((s, x), 0) > 0:
                         evict_touched.add(x)
         all_touched = sorted(set(touched_ins) | evict_touched)
         merged = fresh.filter(F.col("kb").isin(all_touched))
@@ -2771,96 +2751,43 @@ def _budget_fold(spark: SparkSession, workdir: str, state: dict):
         # by construction, so the derived subtotals are identical to
         # a file re-read's)
         merged = merged.localCheckpoint(eager=False)
-        version = state["v"]
-        new_path = store.run_path("state", version)
-        state["v"] += 1
         # one file per touched bucket at normal parallelism — never a
-        # coalesce(1) single task over the whole kept set
-        merged.repartition(len(all_touched), "kb").write.partitionBy(
-            "kb"
-        ).mode("overwrite").parquet(new_path)
-        for x in all_touched:
-            d = os.path.join(new_path, f"kb={x}")
-            if os.path.isdir(d):
-                state["buckets"][x] = d
-            else:
-                state["buckets"].pop(x, None)  # bucket fully evicted
+        # coalesce(1) single task over the whole kept set; the commit
+        # carries the live bucket map and the cut table, so a cold
+        # restart restores EXACTLY the live state, nothing evicted
+        store.write_buckets(
+            lambda path: merged.repartition(len(all_touched), "kb")
+            .write.partitionBy("kb")
+            .mode("overwrite")
+            .parquet(path),
+            all_touched,
+            meta={"cuts": {src: list(c) for src, c in new_cuts.items()}},
+        )
         # exact subtotal refresh for the rewritten buckets only
-        for k in [k for k in subt if k[1] in set(all_touched)]:
-            del subt[k]
+        for k in [k for k in sub if k[1] in set(all_touched)]:
+            del sub[k]
         for r in (
             merged.groupBy("source", "kb")
             .agg(F.sum("nt").alias("s"))
             .collect()
         ):
-            subt[(r["source"], r["kb"])] = r["s"]
+            sub[(r["source"], r["kb"])] = r["s"]
         release_checkpoint(merged)
         release_checkpoint(fresh)
-        state["subt"] = subt
-        state["cutsd"] = new_cuts
-        if new_cuts:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            # durable twin of the O(sources) cut table, written
-            # driver-side (same class as a streaming commit log —
-            # no Spark job for control-plane metadata)
-            cuts_path = os.path.join(new_path, "cut")
-            os.makedirs(cuts_path, exist_ok=True)
-            srcs = sorted(new_cuts)
-            pq.write_table(
-                pa.table(
-                    {
-                        "source": pa.array(srcs, pa.string()),
-                        "cut": pa.array(
-                            [
-                                {
-                                    "hk": new_cuts[s_][0],
-                                    "doc_id": new_cuts[s_][1],
-                                }
-                                for s_ in srcs
-                            ],
-                            pa.struct(
-                                [
-                                    ("hk", pa.string()),
-                                    ("doc_id", pa.int64()),
-                                ]
-                            ),
-                        ),
-                    }
-                ),
-                os.path.join(cuts_path, "part-00000.parquet"),
-            )
-            state["cuts"] = cuts_path
-        # commit the new version with the live bucket map, cut path
-        # and version counter (a cold restart restores EXACTLY the live
-        # state, nothing evicted), dropping every older version that no
-        # live bucket and no cut table references any more
-        refs = {os.path.dirname(d) for d in state["buckets"].values()}
-        refs.add(os.path.dirname(state["cuts"] or ""))
-        store.commit_runs(
-            version,
-            {"state": new_path},
-            meta={
-                "buckets": {str(k): v for k, v in state["buckets"].items()},
-                "cuts": state["cuts"],
-                "v": state["v"],
-            },
-            drop=[b for b, d in store.runs("state").items() if d not in refs],
-        )
+        subt = sub
 
     return _fold
 
 
-def _budget_state_kept(spark: SparkSession, state: dict) -> DataFrame:
+def _budget_state_kept(spark: SparkSession, store: EpochStore) -> DataFrame:
     """Current kept set from the bucketed state layout (bucket dirs
     union; ``kbc`` is the in-data copy of the partition column)."""
-    return spark.read.parquet(*sorted(state["buckets"].values()))
+    return spark.read.parquet(*sorted(store.buckets().values()))
 
 
-def _budget_grade(spark: SparkSession, docs: DataFrame, state: dict):
+def _budget_grade(spark: SparkSession, docs: DataFrame, store: EpochStore):
     """Final per-source grade over the budget-prefix state."""
-    if not state.get("buckets"):  # zero micro-batches: empty selection
+    if not store.buckets():  # zero micro-batches: empty selection
         return (
             docs.select("source")
             .distinct()
@@ -2873,7 +2800,7 @@ def _budget_grade(spark: SparkSession, docs: DataFrame, state: dict):
             .orderBy("source")
         )
     sel = (
-        _budget_state_kept(spark, state)
+        _budget_state_kept(spark, store)
         .groupBy("source")
         .agg(
             F.count("*").cast("bigint").alias("docs_selected"),
@@ -2912,8 +2839,7 @@ def x_stream_budget_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    workdir = scratch_dir("zs_stream_budget_state_")
-    state: dict = {}
+    store = EpochStore(scratch_dir("zs_stream_budget_state_"))
     run_fold_stream(
         spark,
         docs.select(
@@ -2924,9 +2850,9 @@ def x_stream_budget_maintenance(spark: SparkSession, sf: str) -> DataFrame:
             .alias("nt"),
         ),
         STREAM_BUDGET_SRC_FILES,
-        _budget_fold(spark, workdir, state),
+        _budget_fold(spark, store),
     )
-    return _budget_grade(spark, docs, state)
+    return _budget_grade(spark, docs, store)
 
 
 @register(
@@ -2966,10 +2892,8 @@ def x_stream_budget_restart(spark: SparkSession, sf: str) -> DataFrame:
     mid = docs.agg(
         F.expr("percentile_approx(doc_id, 0.5, 100000)")
     ).collect()[0][0]
-    state: dict = {}
-    fold = _budget_fold(
-        spark, scratch_dir("zs_stream_budget_restart_"), state
-    )
+    store = EpochStore(scratch_dir("zs_stream_budget_restart_"))
+    fold = _budget_fold(spark, store)
     # run 1 folds the first half and STOPS; run 2 resumes from the
     # shared checkpoint and the on-disk state over the second half;
     # then the newest micro-batch is re-delivered through the same
@@ -2979,7 +2903,7 @@ def x_stream_budget_restart(spark: SparkSession, sf: str) -> DataFrame:
     run_fold_stream(
         spark, [proj.filter(c) for c in halves], 2, fold, replay=fold
     )
-    return _budget_grade(spark, docs, state)
+    return _budget_grade(spark, docs, store)
 
 
 #: streaming ANN maintenance: SQ8 quantization grid + IVF cell scheme
@@ -2993,36 +2917,22 @@ ANN_MAINT_K = 3
 ANN_MAINT_SRC_FILES = 4
 
 
-#: Dot-product spelling for the streaming ANN paths. MEASURED
-#: (round 6, sf0.1, median of 3 interleaved): the interpreted
-#: lambda runs x_stream_ann_maintain in 5.6 s, the Arrow UDF twin
-#: in 8.9 s — at micro-batch volume (~10k fan-out rows/trigger) the
-#: per-trigger Python worker round-trips cost more than the
-#: row-at-a-time lambda evaluation saves. The round-3 bloom lesson
-#: (58 s → 0.7 s) holds for CORPUS-sized passes, not per-trigger
-#: frames; flip this to True for routes whose batches carry
-#: millions of rows (and see x_ivf_retrain, whose corpus-wide
-#: passes use the Arrow twin unconditionally).
-ANN_DOT_ARROW = False
-
-
 def _qdot(a: str, b: str):
-    """Exact integer dot of two quantized vectors. Both spellings
-    are integer-exact in any evaluation order, so the oracle grade
-    is identical either way — ANN_DOT_ARROW picks the faster one
-    for the deployment's batch volume (see the constant's note for
-    the measured crossover)."""
-    if ANN_DOT_ARROW:
-        from ziggurat_spark.functions.texthash_udfs import qdot_int_udf
-
-        return qdot_int_udf()(F.col(a), F.col(b))
+    """Exact integer dot of two quantized vectors, interpreted. The
+    Arrow UDF twin (texthash_udfs.qdot_int_udf) grades identically
+    but MEASURED slower here (round 6, sf0.1, median of 3
+    interleaved: x_stream_ann_maintain 5.6 s interpreted vs 8.9 s
+    Arrow) — at micro-batch volume (~10k fan-out rows/trigger) the
+    per-trigger Python worker round-trips cost more than the
+    row-at-a-time lambda evaluation saves. Corpus-wide passes
+    (x_ivf_retrain, the IVF cadence refresh) use the Arrow twin."""
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
 
 
-def _ann_upsert_batch(spark, workdir, state, batch, bid, cent):
+def _ann_upsert_batch(spark, store, batch, cent):
     """One micro-batch of the streaming IVF maintenance: quantize,
     assign each vector to its cell (broadcast codebook, integer-dot
     argmax with the batch family's (cs DESC, cent_id ASC) tie-break),
@@ -3057,10 +2967,8 @@ def _ann_upsert_batch(spark, workdir, state, batch, bid, cent):
     proj = assigned.withColumn("kb", F.col("cent_id"))
     return bucketed_lww_merge(
         spark,
-        workdir,
-        state,
+        store,
         proj,
-        bid,
         key="vec_id",
         order_cols=(F.desc("vec_id"),),  # rows are identical per key
     )
@@ -3142,20 +3050,17 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
         # lazy: the first fold's use materializes it once
         .localCheckpoint(eager=False)
     )
-    workdir = scratch_dir("zs_stream_ann_state_")
-    state: dict = {}
+    store = EpochStore(scratch_dir("zs_stream_ann_state_"))
     run_fold_stream(
         spark,
         emb.select("vec_id", "embedding"),
         ANN_MAINT_SRC_FILES,
-        lambda b, bid: _ann_upsert_batch(
-            spark, workdir, state, b, bid, cent
-        ),
+        lambda b, _bid: _ann_upsert_batch(spark, store, b, cent),
     )
 
     # audit path: per-cell counts read the whole index (that IS the
     # audit); the QUERY path below must not
-    final = _pq_read(spark, ("lww", workdir), sorted(state.values()))
+    final = _lww_read(spark, store)
     cells = final.groupBy("cent_id").agg(
         F.count("*").cast("bigint").alias("a"),
         F.sum("vec_id").cast("bigint").alias("b"),
@@ -3184,7 +3089,8 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
         "a",
         "b",
     )
-    if qcell is None or qcell not in state:
+    cells_live = store.buckets()
+    if qcell is None or qcell not in cells_live:
         # no query vector (vec_id 0 absent) or its cell was never
         # touched by the stream: degrade to the cells-only audit
         # instead of crashing. The ORACLE degrades identically by
@@ -3195,7 +3101,7 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
         # mirrors_oracle on a vec-0-less corpus), it is not a
         # quiet grading failure
         return cells_out.orderBy("kind", "k")
-    cell_df = spark.read.parquet(state[qcell])
+    cell_df = spark.read.parquet(cells_live[qcell])
     q0 = cell_df.filter(F.col("vec_id") == 0).select(
         F.col("q").alias("qq")
     )
@@ -3982,11 +3888,9 @@ def _select_corpus_oracle() -> str:
 def x_stream_select_corpus(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.queries.training_ops import _dsir_budget_grade
 
-    state, wdir = _select_corpus_state(spark, sf)
-    if state:
-        dd = _pq_read(
-            spark, ("lww", wdir), sorted(state.values())
-        ).select("doc_id", "source", "text")
+    store = _select_corpus_state(spark, sf)
+    if store.buckets():
+        dd = _lww_read(spark, store).select("doc_id", "source", "text")
     else:
         # a corpus where NO document survives the QC gate leaves the
         # state empty — grade the empty corpus (the oracle's WHERE
@@ -3998,15 +3902,13 @@ def x_stream_select_corpus(spark: SparkSession, sf: str) -> DataFrame:
     return _dsir_budget_grade(dd.localCheckpoint(eager=False))
 
 
-def _select_corpus_state(
-    spark: SparkSession, sf: str
-) -> tuple[dict, str]:
+def _select_corpus_state(spark: SparkSession, sf: str) -> EpochStore:
     """Run the streaming selection-corpus maintenance (QC gate +
     bucketed min-id content-hash merge per micro-batch, in-op replay
-    of the newest batch included) and return (state, workdir): state
-    maps hash bucket → current directory — O(16) dirs, one row per
-    distinct content hash. Extracted so the skew-arrival drill can
-    assert the state bounds directly."""
+    of the newest batch included) and return its store, whose
+    buckets are the hash buckets — O(16) dirs, one row per distinct
+    content hash. Extracted so the skew-arrival drill can assert the
+    state bounds directly."""
     from ziggurat_spark.queries.training_ops import (
         QC_KEEP_MICRO,
         _qc_feature_frame,
@@ -4014,10 +3916,9 @@ def _select_corpus_state(
     from ziggurat_spark.tables import load_table
 
     docs = load_table(spark, sf, "documents")
-    workdir = scratch_dir("zs_stream_sel_state_")
-    state: dict = {}
+    store = EpochStore(scratch_dir("zs_stream_sel_state_"))
 
-    def _fold(b, bid):
+    def _fold(b, _bid):
         qc = (
             _qc_feature_frame(b)
             .filter(F.col("score_micro") >= QC_KEEP_MICRO)
@@ -4034,25 +3935,23 @@ def _select_corpus_state(
         )
         bucketed_lww_merge(
             spark,
-            workdir,
-            state,
+            store,
             proj,
-            bid,
             key="h",
             order_cols=(F.asc("doc_id"),),  # smallest id wins = batch dedup
         )
 
     # crash re-delivery before grading: the merge is a keyed
     # min-winner fold, so the replayed batch changes nothing (its
-    # merge writes under a fresh version id)
+    # merge commits a fresh store version over the one it read)
     run_fold_stream(
         spark,
         docs.select("doc_id", "source", "text"),
         STREAM_SEL_SRC_FILES,
         _fold,
-        replay=lambda b, bid: _fold(b, bid + 1000),
+        replay=_fold,
     )
-    return state, workdir
+    return store
 
 
 #: fold committed history into the epoch every K committed batches
@@ -4192,9 +4091,8 @@ def _cc_node_kb(col: str):
 
 def _cc_forest_fold(
     spark: SparkSession,
-    statedir: str,
-    state: dict,
-    ridx: dict,
+    forest: EpochStore,
+    ridx: EpochStore,
     audit: list,
 ):
     """The per-trigger CC-forest fold closure, O(touched + batch)
@@ -4207,7 +4105,8 @@ def _cc_forest_fold(
       the node itself (new nodes and roots — roots appear only as
       targets).
     - MEMBER GATHERING is pruned through a root→bucket BIT INDEX
-      maintained next to the forest: whenever a row targeting root
+      maintained next to the forest (its own store, ``ridx``):
+      whenever a row targeting root
       ``r`` is written into forest bucket ``kb``, bit ``kb`` is OR-ed
       into r's index row (itself bucketed LWW state keyed by r's
       hash). Gathering a component's members then opens only the
@@ -4225,8 +4124,6 @@ def _cc_forest_fold(
     pin)."""
     from ziggurat_spark.queries.dedup import _star_components
 
-    ridx_dir = os.path.join(statedir, "ridx")
-    os.makedirs(ridx_dir, exist_ok=True)
     kb_n = STREAM_CC_KB  # module attr read once — tests repoint it
     n_words = (kb_n + 63) // 64
     # one-hot word array for a bucket id, and the per-word bit_or
@@ -4254,7 +4151,8 @@ def _cc_forest_fold(
         # alphabetical neighbors of the streaming block paid ~1.7x
         # in GC pressure)
         spent: list = []
-        if state:
+        live = forest.buckets()
+        if live:
             # LAZY checkpoint: the bucket-id collect right below
             # materializes it in the SAME job (the _star_components
             # lesson — an eager checkpoint here is one extra
@@ -4276,13 +4174,11 @@ def _cc_forest_fold(
                 .distinct()
                 .collect()
             )
-            node_bks = [k for k in nkbs if k in state]
+            node_bks = [k for k in nkbs if k in live]
             if node_bks:
-                forest_n = _pq_read(
-                    spark,
-                    ("lww", statedir),
-                    [state[k] for k in node_bks],
-                ).select("a", "b")
+                forest_n = _lww_read(spark, forest, node_bks).select(
+                    "a", "b"
+                )
                 roots = (
                     batch_nodes.join(
                         forest_n.withColumnRenamed("a", "n"),
@@ -4305,11 +4201,10 @@ def _cc_forest_fold(
                 .distinct()
                 .collect()
             )
-            idx_dirs = [ridx[k] for k in rkbs if k in ridx]
             words = [0] * n_words
-            if idx_dirs:
+            if set(rkbs) & ridx.buckets().keys():
                 got = (
-                    _pq_read(spark, ("lww", ridx_dir), idx_dirs)
+                    _lww_read(spark, ridx, rkbs)
                     .join(F.broadcast(roots), "r", "left_semi")
                     .agg(F.expr(word_or).alias("m"))
                     .collect()[0]["m"]
@@ -4318,14 +4213,12 @@ def _cc_forest_fold(
             member_bks = [
                 k
                 for k in range(kb_n)
-                if words[k // 64] & (1 << (k % 64)) and k in state
+                if words[k // 64] & (1 << (k % 64)) and k in live
             ]
             if member_bks:
-                forest_m = _pq_read(
-                    spark,
-                    ("lww", statedir),
-                    [state[k] for k in member_bks],
-                ).select("a", "b")
+                forest_m = _lww_read(spark, forest, member_bks).select(
+                    "a", "b"
+                )
                 sub = forest_m.join(
                     F.broadcast(roots),
                     forest_m["b"] == roots["r"],
@@ -4358,18 +4251,17 @@ def _cc_forest_fold(
         f_touched = sorted({r["kb"] for r in kb_pairs})
         tikbs = sorted({r["rkb"] for r in kb_pairs})
         # the forest merge and the root-index chain below both read
-        # only proj's persisted blocks and touch DISJOINT state dirs
-        # — overlap them on a 1-worker pool (guide §2.6) so the index
+        # only proj's persisted blocks and write DISJOINT stores (the
+        # pool thread the forest, this thread the index) — overlap
+        # them on a 1-worker pool (guide §2.6) so the index
         # build/merge jobs back-fill the forest merge's task tails
         # instead of paying two serial job-chain latencies per trigger
         fpool = ThreadPoolExecutor(max_workers=1)
         f_fut = fpool.submit(
             bucketed_lww_merge,
             spark,
-            statedir,
-            state,
+            forest,
             proj,
-            bid,
             key="a",
             order_cols=(F.desc("v"),),  # newest re-label wins
             touched=f_touched,
@@ -4387,10 +4279,9 @@ def _cc_forest_fold(
             .localCheckpoint(eager=False)
         )
         spent.append(newbits)
-        old_idx = [ridx[k] for k in tikbs if k in ridx]
-        if old_idx:
+        if set(tikbs) & ridx.buckets().keys():
             oldi = (
-                _pq_read(spark, ("lww", ridx_dir), old_idx)
+                _lww_read(spark, ridx, tikbs)
                 .join(
                     F.broadcast(newbits.select("r")), "r", "left_semi"
                 )
@@ -4409,10 +4300,8 @@ def _cc_forest_fold(
         # merge's internal collect
         bucketed_lww_merge(
             spark,
-            ridx_dir,
             ridx,
             iproj,
-            bid,
             key="r",
             order_cols=(F.desc("v"),),
             touched=tikbs,
@@ -4424,7 +4313,7 @@ def _cc_forest_fold(
                 "bid": bid,
                 "node_bks": node_bks,
                 "member_bks": member_bks,
-                "state_n": len(state),
+                "state_n": len(forest.buckets()),
             }
         )
         for df in spent:  # all consumed above; release the blocks
@@ -4433,13 +4322,12 @@ def _cc_forest_fold(
     return _fold
 
 
-def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
+def _cc_forest_state(spark: SparkSession, sf: str) -> EpochStore:
     """Run the streaming CC maintenance (near-dup pairs arrive in
     micro-batches; the standing star forest unions with each batch
-    and re-converges) and return (statedir, state) where state maps
-    node-hash bucket → current forest directory (the
-    bucketed_lww_merge layout). Extracted so tests can drive the
-    chunking directly."""
+    and re-converges) and return the forest's store, whose buckets
+    are the node-hash buckets (the bucketed_lww_merge layout).
+    Extracted so tests can drive the chunking directly."""
     from ziggurat_spark.queries.dedup import _jaccard_pairs
 
     # the pair SOURCE is a corpus-scale computation (shingle index +
@@ -4463,9 +4351,8 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
     finally:
         spark.conf.set(sp_key, mb_parts)
     statedir = scratch_dir("zs_stream_cc_state_")
-    state: dict = {}
-    ridx: dict = {}
-    audit: list = []
+    forest = EpochStore(os.path.join(statedir, "forest"))
+    ridx = EpochStore(os.path.join(statedir, "ridx"))
     # converge ONLY the components the batch touches: a star fixed
     # point preserves connectivity exactly, so unioning the arrivals
     # with just the AFFECTED components' forest rows and
@@ -4476,12 +4363,13 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
     # root→bucket bit index for member gathering; bucketed_lww_merge
     # rewrites only buckets holding re-labeled nodes) — at 100 TB
     # per-trigger I/O is O(touched + batch), never O(forest)
-    fold = _cc_forest_fold(spark, statedir, state, ridx, audit)
+    fold = _cc_forest_fold(spark, forest, ridx, [])
     # crash re-delivery before grading: min-parent connectivity is
     # associative, commutative AND idempotent (re-unioning absorbed
     # pairs cannot move any component minimum), so the replayed batch
     # re-converges to the identical forest (the LWW merge overwrites
-    # re-labeled nodes with identical targets)
+    # re-labeled nodes with identical targets; its order stamp,
+    # bid + 1000, ranks after every delivered batch)
     run_fold_stream(
         spark,
         pairs,
@@ -4490,7 +4378,7 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> tuple[str, dict]:
         replay=lambda b, bid: fold(b, bid + 1000),
     )
     release_checkpoint(pairs)
-    return statedir, state
+    return forest
 
 
 @register(
@@ -4548,12 +4436,12 @@ def x_stream_components_maintain(
 
     from ziggurat_spark.queries.dedup import _forest_label
 
-    sdir, state = _cc_forest_state(spark, sf)
+    forest = _cc_forest_state(spark, sf)
     docs = load_table(spark, sf, "documents").select(
         F.col("doc_id").alias("id")
     )
-    if state:
-        stars = _pq_read(spark, ("lww", sdir), sorted(state.values()))
+    if forest.buckets():
+        stars = _lww_read(spark, forest)
     else:  # no near-dup pairs at all: every doc is a singleton
         stars = spark.createDataFrame([], "a long, b long")
     comp = _forest_label(docs, stars)
@@ -4760,20 +4648,19 @@ def _mm_stream_state(
         # Arrow decode, yielding both the batch asset count (was its
         # own feat.count() job) and the probe's (band, bucket-shard)
         # set (was the probe's own collect) — every decoded asset
-        # emits exactly MM_BANDS band rows, so count(distinct
-        # asset_id) over bands == feat row count, and feat rows are
-        # one per asset by construction
+        # emits exactly MM_BANDS band rows, so the band row count
+        # over MM_BANDS IS the feat row count
         feat = _feat(b).localCheckpoint(eager=False)
         bands = feat.select(
             "asset_id", F.posexplode("bks").alias("band", "bucket")
         ).localCheckpoint(eager=False)
         sync = bands.agg(
-            F.countDistinct("asset_id").alias("n"),
+            F.count(F.lit(1)).alias("n"),
             F.collect_set(
                 F.struct("band", _bucket_shard("bucket").alias("bs"))
             ).alias("ws"),
         ).collect()[0]
-        batch_assets = int(sync["n"])
+        batch_assets = int(sync["n"]) // MM_BANDS
         wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
         # candidates through the ONE shared probe spelling: tiny
         # within-batch self-join + arrivals BROADCAST vs history
@@ -5023,7 +4910,7 @@ def _ivf_cadence_oracle() -> str:
 
 def _ivf_cadence_state(
     spark: SparkSession, sf: str, cadence: int
-) -> tuple[dict, list]:
+) -> tuple[EpochStore, list]:
     """Streaming IVF maintenance WITH the Lloyd serving-state refresh
     run on cadence inside the loop. Two pieces of state:
 
@@ -5039,8 +4926,9 @@ def _ivf_cadence_state(
       full-outer join of the previous and new assignments, never a
       fingerprint).
 
-    Returns (serve, refresh_log): serve maps cell → current serving
-    directory; refresh_log records {changed, cells} per refresh —
+    Each index is its own store (bucket = cell). Returns (serve,
+    refresh_log): serve is the serving index's store; refresh_log
+    records {changed, cells} per refresh —
     the last entry is the in-op replay proof (a refresh after the
     closing refresh and a replay of the newest batch changes ZERO
     cells)."""
@@ -5057,9 +4945,9 @@ def _ivf_cadence_state(
         .localCheckpoint(eager=False)
     )
     workdir = scratch_dir("zs_stream_ivfcad_state_")
-    a0_state: dict = {}
-    serve: dict = {}
-    prev: dict = {"a1": None, "v": 0, "since": 0}
+    a0_store = EpochStore(os.path.join(workdir, "a0"))
+    serve = EpochStore(os.path.join(workdir, "serve"))
+    prev: dict = {"a1": None, "since": 0}
     refresh_log: list = []
 
     def _refresh() -> None:
@@ -5070,10 +4958,12 @@ def _ivf_cadence_state(
         # dot for corpus volume, the interpreted spelling only for
         # per-trigger batches (where worker round-trips dominate)
         qdot = qdot_int_udf()
-        # schema pinned per workdir: a refresh runs per cadence tick
+        # schema pinned per store: a refresh runs per cadence tick
         # and an unpinned read pays a footer-inference job each time
         a0 = _pq_read(
-            spark, ("ann_a0", workdir), sorted(a0_state.values())
+            spark,
+            ("ann_a0", a0_store.root),
+            sorted(a0_store.buckets().values()),
         ).select("vec_id", "q", F.col("cent_id").alias("cell0"))
         # Lloyd step: truncating integer mean per (cell, pos) —
         # cells × d longs to the driver (the x_kmeans_exact sync)
@@ -5154,42 +5044,41 @@ def _ivf_cadence_state(
             {"changed": len(changed), "cells": len(live)}
         )
         if changed:
-            prev["v"] += 1
-            vdir = os.path.join(workdir, f"serve_v{prev['v']}")
             # the cell id rides IN the data (cell1) as well as in the
             # partition path (kb) so a per-cell directory read keeps
-            # the label without path parsing
-            a1.filter(
-                F.col("cell1").isin([int(c) for c in changed])
-            ).select(
-                "vec_id", "q", "cell1", F.col("cell1").alias("kb")
-            ).repartition(
-                len(changed), "kb"
-            ).write.partitionBy("kb").mode("overwrite").parquet(vdir)
-            for c in changed:
-                if c in live:
-                    serve[c] = os.path.join(vdir, f"kb={c}")
-                else:
-                    serve.pop(c, None)  # cell emptied by the move
+            # the label without path parsing; a changed cell the new
+            # assignment left empty writes no kb= dir, so the commit
+            # drops it from the serving map
+            serve.write_buckets(
+                lambda path: a1.filter(
+                    F.col("cell1").isin([int(c) for c in changed])
+                )
+                .select("vec_id", "q", "cell1", F.col("cell1").alias("kb"))
+                .repartition(len(changed), "kb")
+                .write.partitionBy("kb")
+                .mode("overwrite")
+                .parquet(path),
+                changed,
+            )
         if prev["a1"] is not None:
             release_checkpoint(prev["a1"])
         prev["a1"] = a1
 
-    def _fold(b, bid):
-        _ann_upsert_batch(spark, workdir, a0_state, b, bid, cent)
+    def _fold(b, _bid):
+        _ann_upsert_batch(spark, a0_store, b, cent)
         prev["since"] += 1
         if prev["since"] >= cadence:
             _refresh()
             prev["since"] = 0
 
-    def _replay(b, bid):
+    def _replay(b, _bid):
         # closing refresh: the serving state now covers the FULL
         # corpus — i.e. exactly the batch x_ivf_retrain state
         _refresh()
         # crash re-delivery + idempotence proof: the newest batch
         # again (keyed upsert — a0 unchanged), refresh again — ZERO
         # cells may change
-        _ann_upsert_batch(spark, workdir, a0_state, b, bid + 1000, cent)
+        _ann_upsert_batch(spark, a0_store, b, cent)
         _refresh()
 
     # every non-empty stream replays, so the closing refresh rides the
@@ -5241,8 +5130,9 @@ def x_stream_ivf_cadence(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     serve, _ = _ivf_cadence_state(spark, sf, STREAM_IVF_CADENCE)
+    cells = serve.buckets()
     # audit path: per-cell counts read the whole serving index
-    final = spark.read.parquet(*sorted(serve.values()))
+    final = spark.read.parquet(*sorted(cells.values()))
     cells_out = (
         final.groupBy("cell1")
         .agg(
@@ -5268,7 +5158,7 @@ def x_stream_ivf_cadence(spark: SparkSession, sf: str) -> DataFrame:
         # oracle's q0 CTE is empty too (the ann_maintain mirror)
         return cells_out.orderBy("kind", "k")
     qcell = q0_rows[0]["cell1"]
-    cell_df = spark.read.parquet(serve[qcell])
+    cell_df = spark.read.parquet(cells[qcell])
     q0 = cell_df.filter(F.col("vec_id") == 0).select(
         F.col("q").alias("qq")
     )
@@ -5679,27 +5569,17 @@ def x_stream_snapshot_apply(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
     # v2 dump: the SAME deterministic hash frame the batch diff uses
     v2 = _snapshot_v2_hashes(docs)
-    workdir = scratch_dir("zs_stream_snap_state_")
+    store = EpochStore(scratch_dir("zs_stream_snap_state_"))
     n_buckets = 16
-    state: dict = {}
-    #: monotonic merge counter: a RE-DELIVERED batch id must still
-    #: get a fresh state version — reusing the original delivery's
-    #: version would make the merge overwrite the very directory its
-    #: bucket-pruned read is lazily scanning whenever a touched
-    #: bucket was last written by that same batch
-    seq = {"n": 0}
 
     def _fold(b, bid):
         proj = b.withColumn(
             "kb", F.pmod(F.col("doc_id"), F.lit(n_buckets))
         ).withColumn("ob", F.lit(int(bid)).cast("bigint"))
-        seq["n"] += 1
         bucketed_lww_merge(
             spark,
-            workdir,
-            state,
+            store,
             proj,
-            seq["n"],
             key="doc_id",
             order_cols=(F.desc("ob"), F.desc("doc_id")),
         )
@@ -5710,9 +5590,7 @@ def x_stream_snapshot_apply(spark: SparkSession, sf: str) -> DataFrame:
         spark, v2, STREAM_SNAP_SRC_FILES, _fold, replay=_fold
     )
 
-    cur = _pq_read(
-        spark, ("lww", workdir), sorted(state.values())
-    ).select("doc_id", "s2", "h2")
+    cur = _lww_read(spark, store).select("doc_id", "s2", "h2")
     # grade through the SHARED rollup — identical spelling (and
     # oracle) as the batch x_corpus_snapshot_diff
     return _snapshot_status_rollup(docs, cur)
@@ -5957,9 +5835,8 @@ def _pipe_stream_state(
     spark: SparkSession, sf: str, verify: bool = False
 ) -> dict:
     """Run the composed pipeline stream; returns the state handles:
-    {statedir, exact (bucket→dir), cc (bucket→dir), lsh (the tiered
-    EpochStore), cc_audit, folds, live_counts, io_audit, store
-    (bucket→dir)}. With
+    {exact, cc, store (bucketed EpochStores), lsh (the tiered
+    EpochStore), cc_audit, folds, live_counts, io_audit}. With
     ``verify`` each trigger runs the staged dedup funnel on its
     candidate pairs (estimate gate → exact Jaccard), maintains
     cand/est/ver pair state kinds (tier-compacted, graded as the
@@ -5980,22 +5857,16 @@ def _pipe_stream_state(
         "doc_id", "source", "text"
     )
     statedir = scratch_dir("zs_stream_pipe_state_")
-    exact_dir = os.path.join(statedir, "exact")
-    cc_dir = os.path.join(statedir, "cc")
-    store_dir = os.path.join(statedir, "store")
-    for d in (exact_dir, cc_dir, store_dir):
-        os.makedirs(d, exist_ok=True)
-    lsh = EpochStore(os.path.join(statedir, "lsh"))
-    exact_state: dict = {}
-    cc_state: dict = {}
-    cc_ridx: dict = {}
-    store_state: dict = {}
+    exact, cc, ridx, store, lsh = (
+        EpochStore(os.path.join(statedir, n))
+        for n in ("exact", "cc", "ridx", "store", "lsh")
+    )
     cc_audit: list = []
     folds: list = []
     live_counts: list = []
     io_audit: list = []
     seq = {"n": 0}
-    cc_fold = _cc_forest_fold(spark, cc_dir, cc_state, cc_ridx, cc_audit)
+    cc_fold = _cc_forest_fold(spark, cc, ridx, cc_audit)
     # in the unverified pipeline, bands is the ONLY tiered state
     # kind: detected pairs feed the forest absorb directly and are
     # never read back, so persisting a pairs history would be dead
@@ -6054,12 +5925,12 @@ def _pipe_stream_state(
             .distinct()
             .collect()
         )
-        old_dirs = [exact_state[k] for k in tkbs if k in exact_state]
+        exact_bks = len(set(tkbs) & exact.buckets().keys())
         merged = cand.select("h", "doc_id", "hid", "fb")
-        if old_dirs:
+        if exact_bks:
             # bucket-pruned read: only the touched buckets' rows
             # join the aggregate merge
-            prev = _pq_read(spark, ("lww", exact_dir), old_dirs).select(
+            prev = _lww_read(spark, exact, tkbs).select(
                 "h", "doc_id", "hid", "fb"
             )
             merged = merged.unionByName(prev)
@@ -6084,10 +5955,8 @@ def _pipe_stream_state(
         seq["n"] += 1
         bucketed_lww_merge(
             spark,
-            exact_dir,
-            exact_state,
+            exact,
             merged.withColumn("v", F.lit(seq["n"]).cast("long")),
-            seq["n"],
             key="h",
             order_cols=(F.desc("v"),),
             touched=tkbs,
@@ -6194,12 +6063,11 @@ def _pipe_stream_state(
                 .distinct()
                 .collect()
             )
-            sdirs = [store_state[k] for k in hkbs if k in store_state]
-            store_bks = len(sdirs)
+            store_bks = len(set(hkbs) & store.buckets().keys())
             lookup = fresh_docs.select("hid", "mhs", "shd")
-            if sdirs:
+            if store_bks:
                 lookup = lookup.unionByName(
-                    _pq_read(spark, ("lww", store_dir), sdirs)
+                    _lww_read(spark, store, hkbs)
                     .join(
                         F.broadcast(hist_members), "hid", "left_semi"
                     )
@@ -6280,8 +6148,7 @@ def _pipe_stream_state(
                 pool.submit(
                     bucketed_lww_merge,
                     spark,
-                    store_dir,
-                    store_state,
+                    store,
                     fresh_docs.select("hid", "mhs", "shd")
                     .withColumn(
                         "kb",
@@ -6290,7 +6157,6 @@ def _pipe_stream_state(
                         ),
                     )
                     .withColumn("v", F.lit(seq["n"]).cast("long")),
-                    seq["n"],
                     key="hid",
                     order_cols=(F.desc("v"),),
                 )
@@ -6315,7 +6181,7 @@ def _pipe_stream_state(
         io_audit.append(
             {
                 "bid": bid,
-                "exact_bks_read": len(old_dirs),
+                "exact_bks_read": exact_bks,
                 "store_bks_read": store_bks,
                 **pio[0],
             }
@@ -6327,7 +6193,9 @@ def _pipe_stream_state(
     # re-aggregates to identical rows (min is idempotent), the fb
     # construction reproduces the identical fresh set so the keyed
     # band runs rewrite in place, and the forest absorb re-converges
-    # to identical targets (under a fresh version id)
+    # to identical targets (each merge commits a fresh store version
+    # over the one it read; the forest's order stamp, cc_bid, ranks
+    # after every delivered batch)
     run_fold_stream(
         spark,
         docs,
@@ -6336,11 +6204,10 @@ def _pipe_stream_state(
         replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
     )
     return {
-        "statedir": statedir,
-        "exact": exact_state,
-        "cc": cc_state,
+        "exact": exact,
+        "cc": cc,
         "lsh": lsh,
-        "store": store_state,
+        "store": store,
         "cc_audit": cc_audit,
         "folds": folds,
         "live_counts": live_counts,
@@ -6378,17 +6245,11 @@ def _pipe_grade(
     gated = _pipe_gate(docs).select(
         "doc_id", "source", "h", F.expr(_PIPE_HID_SPARK).alias("hid")
     )
-    ek = _pq_read(
-        spark,
-        ("lww", os.path.join(st["statedir"], "exact")),
-        sorted(st["exact"].values()),
-    ).select("h", F.col("doc_id").alias("keeper"))
-    if st["cc"]:
-        stars = _pq_read(
-            spark,
-            ("lww", os.path.join(st["statedir"], "cc")),
-            sorted(st["cc"].values()),
-        )
+    ek = _lww_read(spark, st["exact"]).select(
+        "h", F.col("doc_id").alias("keeper")
+    )
+    if st["cc"].buckets():
+        stars = _lww_read(spark, st["cc"])
     else:
         stars = spark.createDataFrame([], "a long, b long")
     comp = _forest_label(
@@ -6540,9 +6401,8 @@ ER_STORE_KB = 8
 
 def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     """Run the online record-linkage stream; returns state handles
-    {statedir, lsh (the tiered EpochStore), candn (the count
-    EpochStore), cc (bucket→dir), store (bucket→dir), cc_audit, folds,
-    io_audit}.
+    {lsh (the tiered EpochStore), candn (the count EpochStore), cc,
+    store (bucketed EpochStores), cc_audit, folds, io_audit}.
 
     Per trigger: featurize the arriving registry records →
     symmetric-delete blocking keys (SymSpell deletion neighborhood
@@ -6572,20 +6432,15 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
 
     reg = _registry(spark, sf)
     statedir = scratch_dir("zs_stream_er_state_")
-    cc_dir = os.path.join(statedir, "cc")
-    store_dir = os.path.join(statedir, "store")
-    for d in (cc_dir, store_dir):
-        os.makedirs(d, exist_ok=True)
-    lsh = EpochStore(os.path.join(statedir, "lsh"))
-    candn = EpochStore(os.path.join(statedir, "candn"))
-    cc_state: dict = {}
-    cc_ridx: dict = {}
-    store_state: dict = {}
+    lsh, candn, cc, ridx, store = (
+        EpochStore(os.path.join(statedir, n))
+        for n in ("lsh", "candn", "cc", "ridx", "store")
+    )
     cc_audit: list = []
     folds: list = []
     io_audit: list = []
     seq = {"n": 0}
-    cc_fold = _cc_forest_fold(spark, cc_dir, cc_state, cc_ridx, cc_audit)
+    cc_fold = _cc_forest_fold(spark, cc, ridx, cc_audit)
     # "bands" is the blocking-key index (symmetric-delete keys ARE a
     # 1-band LSH whose bucket is the (segment, key) string); the ver
     # pair kind is maintained because its distinct union is graded
@@ -6725,11 +6580,11 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         ).collect()[0]
         n_pairs = stats["n"]
         hkbs = sorted(set(stats["ka"]) | set(stats["kb"]))
-        sdirs = [store_state[k] for k in hkbs if k in store_state]
+        store_bks = len(set(hkbs) & store.buckets().keys())
         attrs = feat.select("rec_id", "seg", "bal", "dstr", "tg")
-        if sdirs:
+        if store_bks:
             attrs = attrs.unionByName(
-                _pq_read(spark, ("lww", store_dir), sdirs)
+                _lww_read(spark, store, hkbs)
                 .join(F.broadcast(members), "rec_id", "left_semi")
                 .select("rec_id", "seg", "bal", "dstr", "tg")
             )
@@ -6792,8 +6647,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
             pool.submit(
                 bucketed_lww_merge,
                 spark,
-                store_dir,
-                store_state,
+                store,
                 feat.select("rec_id", "ck", "seg", "bal", "dstr", "tg")
                 .withColumn(
                     "kb",
@@ -6802,7 +6656,6 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
                     ).cast("int"),
                 )
                 .withColumn("v", F.lit(seq["n"]).cast("long")),
-                seq["n"],
                 key="rec_id",
                 order_cols=(F.desc("v"),),
                 # kb is a pure function of rec_id, so feat's
@@ -6822,7 +6675,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         pool.shutdown()
         lsh.commit_runs(bid, runs)
         io_audit.append(
-            {"bid": bid, "store_bks_read": len(sdirs), **pio[0]}
+            {"bid": bid, "store_bks_read": store_bks, **pio[0]}
         )
         for df in spent:
             release_checkpoint(df)
@@ -6830,8 +6683,9 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     # crash re-delivery before grading: blocking keys and pair sets
     # are pure functions of the records, the record store is keyed
     # LWW over immutable rows, and min-parent connectivity is
-    # idempotent — the replay must land identical state (the forest
-    # absorb writes under a fresh version id)
+    # idempotent — the replay must land identical state (each merge
+    # commits a fresh store version over the one it read; the
+    # forest's order stamp, cc_bid, ranks after every delivered batch)
     run_fold_stream(
         spark,
         reg,
@@ -6840,11 +6694,10 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
     )
     return {
-        "statedir": statedir,
         "lsh": lsh,
         "candn": candn,
-        "cc": cc_state,
-        "store": store_state,
+        "cc": cc,
+        "store": store,
         "cc_audit": cc_audit,
         "folds": folds,
         "io_audit": io_audit,
@@ -6910,12 +6763,8 @@ def x_stream_entity_resolution(
     _ER_LAST.clear()
     _ER_LAST.update(st)
     reg = _registry(spark, sf).select("rec_id", "ck")
-    if st["cc"]:
-        stars = _pq_read(
-            spark,
-            ("lww", os.path.join(st["statedir"], "cc")),
-            sorted(st["cc"].values()),
-        )
+    if st["cc"].buckets():
+        stars = _lww_read(spark, st["cc"])
     else:
         stars = spark.createDataFrame([], "a long, b long")
     comp = _forest_label(
@@ -6928,11 +6777,7 @@ def x_stream_entity_resolution(
     # the count state is control-plane rows — sum it driver-side (was
     # a read + agg + collect job chain over a few one-row files)
     n_cand = sum(_count_rows(st["candn"].live("n")).values())
-    store = _pq_read(
-        spark,
-        ("lww", os.path.join(st["statedir"], "store")),
-        sorted(st["store"].values()),
-    ).select("rec_id", "ck")
+    store = _lww_read(spark, st["store"]).select("rec_id", "ck")
     def _ver_counts():
         if verp is None:
             return 0, 0
