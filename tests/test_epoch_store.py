@@ -25,6 +25,15 @@ mid-write or before the commit keeps the old map; a crash between the
 commit and the prune counts each key once after a reopen; an LWW
 stream cold-reopened halfway equals the one-shot merge; and a
 re-delivered batch over the bucket it last wrote holds its contents.
+
+Single-version state (``_version_fold``, driven with the bottom-k
+step): a store reopened between two halves of a stream equals the
+one-shot sample and keeps one version on disk, and a crash between
+the version write and its commit leaves the old version live.
+
+Order stamps: a CC forest fold that re-delivers its newest batch and
+then relabels a node that re-delivery wrote labels it as a one-shot
+fold does.
 """
 
 from __future__ import annotations
@@ -740,3 +749,141 @@ def test_lww_redelivery_over_the_bucket_it_last_wrote(spark, tmp_path):
     assert _lww_rows(spark, store) == want
     assert _buckets_clean(store)
     assert _lww_rows(spark, EpochStore(store.root)) == want
+
+
+def _bottomk_fold(spark, store):
+    from ziggurat_spark.queries.streaming_surface import (
+        _bottomk_step,
+        _version_fold,
+    )
+
+    return _version_fold(spark, store, _bottomk_step(("hk", "doc_id"), 3))
+
+
+def _sample(spark, store) -> list:
+    from ziggurat_spark.queries.streaming_surface import _version_read
+
+    rows = _version_read(spark, store).select("source", "doc_id").collect()
+    return sorted(tuple(r) for r in rows)
+
+
+def _hashed_docs(spark):
+    from pyspark.sql import functions as F
+
+    from ziggurat_spark.tables import load_table
+
+    from conftest import SF_SMALL
+
+    return load_table(spark, SF_SMALL, "documents").select(
+        "source",
+        "doc_id",
+        F.md5(F.col("doc_id").cast("string")).alias("hk"),
+    )
+
+
+def _one_version(store) -> bool:
+    """Only the manifest and the one live version are on disk."""
+    (live,) = store.live("v")
+    return sorted(os.listdir(store.root)) == sorted(
+        [os.path.basename(live), es.MANIFEST]
+    )
+
+
+def test_version_fold_cold_reopen_between_halves(spark, tmp_path):
+    """The single-version fold with the bottom-k step: two batches,
+    then a fresh store over the same root (the pinned read schema
+    dropped too, as in a new process) takes the other two and a
+    re-delivery of the newest. The sample equals the one-shot sample,
+    and one version is all that is left on disk."""
+    from pyspark.sql import functions as F
+
+    from ziggurat_spark.queries import streaming_surface as ss
+
+    docs = _hashed_docs(spark)
+    h = F.pmod(F.xxhash64("doc_id"), F.lit(4))
+    b = [docs.filter(h == i) for i in range(4)]
+    root = str(tmp_path / "bk")
+    fold = _bottomk_fold(spark, EpochStore(root))
+    fold(b[0], 0)
+    fold(b[1], 1)
+    ss._READ_SCHEMA.pop(("st", root), None)
+    store = EpochStore(root)
+    fresh = _bottomk_fold(spark, store)
+    fresh(b[2], 2)
+    fresh(b[3], 3)
+    fresh(b[3], 3)  # the newest batch re-delivered
+    one = EpochStore(str(tmp_path / "one"))
+    _bottomk_fold(spark, one)(docs, 0)
+    want = _sample(spark, one)
+    assert want and _sample(spark, store) == want
+    assert list(store.runs("v")) == [3]
+    assert _one_version(store)
+
+
+def test_version_fold_crash_before_commit_keeps_old_version(
+    spark, tmp_path, monkeypatch
+):
+    """A trigger that dies after writing its version and before the
+    commit leaves the old version live: a reopen removes the
+    uncommitted dir and the sample is the committed one."""
+    from pyspark.sql import functions as F
+
+    docs = _hashed_docs(spark)
+    h = F.pmod(F.xxhash64("doc_id"), F.lit(2))
+    root = str(tmp_path / "bk")
+    store = EpochStore(root)
+    fold = _bottomk_fold(spark, store)
+    fold(docs.filter(h == 0), 0)
+    want = _sample(spark, store)
+
+    def boom(*_a, **_k):
+        raise Crash()
+
+    monkeypatch.setattr(store, "commit_runs", boom)
+    with pytest.raises(Crash):
+        fold(docs.filter(h == 1), 1)
+    assert len(os.listdir(root)) == 3  # the torn version is on disk
+    reopened = EpochStore(root)
+    assert list(reopened.runs("v")) == [0]
+    assert _sample(spark, reopened) == want
+    assert _one_version(reopened)
+
+
+def test_cc_replay_then_relabel_equals_one_shot(spark, tmp_path):
+    """A CC forest fold re-delivers its newest batch, then a later
+    batch relabels a node the re-delivery wrote (7 moves from root 5
+    to root 3). The forest labels every node as a one-shot fold does:
+    the later batch's order stamp outranks the re-delivery's. A
+    re-delivery stamped above the batches that follow it would keep
+    7 -> 5 here."""
+    from ziggurat_spark.queries.dedup import _forest_label
+    from ziggurat_spark.queries.streaming_surface import (
+        _cc_forest_fold,
+        _lww_read,
+    )
+
+    def forest_fold(name):
+        forest = EpochStore(str(tmp_path / name / "forest"))
+        ridx = EpochStore(str(tmp_path / name / "ridx"))
+        return forest, _cc_forest_fold(spark, forest, ridx, [])
+
+    def edges(*pairs):
+        return spark.createDataFrame(list(pairs), "a long, b long")
+
+    def labels(forest) -> dict:
+        nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "id long")
+        stars = _lww_read(spark, forest).select("a", "b")
+        return {
+            r["id"]: r["comp"] for r in _forest_label(nodes, stars).collect()
+        }
+
+    forest, fold = forest_fold("stream")
+    fold(edges((1, 2)), 0)
+    fold(edges((5, 7)), 1)
+    fold(edges((5, 7)), 1)  # the newest batch re-delivered
+    fold(edges((3, 5)), 2)
+    one, one_fold = forest_fold("one")
+    one_fold(edges((1, 2), (5, 7), (3, 5)), 0)
+    want = labels(one)
+    assert want[7] == 3
+    assert labels(forest) == want

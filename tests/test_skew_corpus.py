@@ -223,15 +223,15 @@ def test_simhash_hot_bucket_cap_under_10k_identical(spark, skew_dir):
     assert widths["n_tasks"] >= 55 * SIMHASH_BANDS
 
 
-def test_stream_budget_state_bounded_under_skew(spark, duck, skew_dir):
+def test_stream_budget_state_bounded_under_skew(
+    spark, duck, skew_dir, tmp_path
+):
     """The streaming budget fold over 10k+ hot-source history: the
     graded answer stays oracle-exact (x_stream_budget_maintenance on
     the fixture) AND — driving the shared fold directly — the
     on-disk state never exceeds the budget bound: every doc carries
     ≥ 1 token, so kept rows per source ≤ STREAM_BUDGET_TOKENS, two
     orders of magnitude below the 10k-doc history."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ziggurat_spark.queries.epoch_store import EpochStore
@@ -252,7 +252,7 @@ def test_stream_budget_state_bounded_under_skew(spark, duck, skew_dir):
         .cast("bigint")
         .alias("nt"),
     )
-    store = EpochStore(tempfile.mkdtemp(prefix="zs_skew_budget_"))
+    store = EpochStore(str(tmp_path / "budget"))
     fold = _budget_fold(spark, store)
     n = docs.count()
     for lo, hi in ((0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)):

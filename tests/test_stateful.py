@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from ziggurat_spark.streaming.stateful import (
@@ -470,6 +471,35 @@ def _disk_is_live(store, kinds) -> None:
     assert sorted(os.listdir(store.root)) == sorted(
         live + ["manifest.json"]
     )
+
+
+@pytest.mark.parametrize(
+    "op, prefix",
+    [
+        ("x_stream_bottomk_sample", "zs_stream_bottomk_state_"),
+        ("x_stream_hll_maintain", "zs_stream_hll_state_"),
+        ("x_stream_weighted_sample", "zs_stream_wbk_state_"),
+    ],
+)
+def test_stream_sketch_state_holds_one_version(spark, op, prefix):
+    """After one call of a single-version sketch stream its store
+    holds only the manifest and the one live version: every
+    superseded version was deleted after the commit that replaced
+    it."""
+    import os
+
+    from ziggurat_spark.queries import streaming_surface as ss
+    from ziggurat_spark.queries.epoch_store import EpochStore
+    from ziggurat_spark.scratch import track_scratch
+
+    from conftest import SF_SMALL
+
+    with track_scratch() as dirs:
+        assert getattr(ss, op)(spark, SF_SMALL).count() > 0
+    (root,) = [d for d in dirs if os.path.basename(d).startswith(prefix)]
+    on_disk = sorted(os.listdir(root))
+    (live,) = EpochStore(root).live("v")
+    assert on_disk == sorted([os.path.basename(live), "manifest.json"])
 
 
 def test_stream_dsir_compact_state_layout_bounded(spark):

@@ -36,6 +36,17 @@ references. Untouched buckets carry over by reference, a re-delivered
 batch reads the version it last wrote and commits a new one beside it,
 and a fresh process resumes from the committed map.
 
+Single-version state (the sample and HLL sketches) is one run per
+trigger, committed while every other batch's run is dropped.
+
+``seq`` is also the arrival-order stamp of last-write-wins state: a
+fold stamps the rows it merges with the target store's committed
+``seq``, read as it builds the frame. Every write raises ``seq``
+before its commit and a reopen restores it from the manifest, so a
+stamp read before a commit is below every stamp read after it, in any
+process: a re-delivered batch outranks the rows it replaces, and
+every later batch outranks it.
+
 Each dir gets a fresh name, ``{kind}_b{bid}_{seq}`` for a run,
 ``{kind}_L{level}_{seq}`` for an epoch and ``kb_v_{seq}`` for a bucket
 version, so nothing is overwritten in place. The store owns its root:

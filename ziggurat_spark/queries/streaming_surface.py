@@ -1054,6 +1054,80 @@ def _count_fold(store: EpochStore, bid: int, n: int) -> None:
     )
 
 
+#: the run kind of a single-version store (_version_fold)
+_VERSION = "v"
+
+
+def _version_read(spark: SparkSession, store: EpochStore) -> DataFrame:
+    """The committed version of a single-version store, read with the
+    schema pinned per store (a per-trigger read — unpinned it pays an
+    inference job each time)."""
+    return _pq_read(spark, ("st", store.root), store.live(_VERSION))
+
+
+def _version_fold(spark: SparkSession, store: EpochStore, step):
+    """The single-version sketch fold (the bottom-k samples, the HLL
+    registers): each trigger reads the committed version as ``prev``
+    (None before the first commit), writes ``step(b, prev)`` as batch
+    ``bid``'s run and commits it while dropping every other batch's,
+    so one version is live and a fresh process resumes from it. A
+    re-delivered batch folds over its own version, which each step
+    absorbs (the samples drop duplicate docs, registers merge by
+    MAX)."""
+
+    def fold(b, bid):
+        prev = _version_read(spark, store) if store.live(_VERSION) else None
+        path = store.run_path(_VERSION, bid)
+        # constant-size state: one file IS the right layout for a
+        # sketch (O(k·sources) or O(types·64) rows whatever arrives)
+        step(b, prev).coalesce(1).write.mode("overwrite").parquet(path)
+        others = [x for x in store.runs(_VERSION) if x != bid]
+        store.commit_runs(bid, {_VERSION: path}, drop=others)
+
+    return fold
+
+
+def _by_source(order: tuple):
+    """The per-source window ordered by ``order``."""
+    from pyspark.sql.window import Window as W
+
+    return W.partitionBy("source").orderBy(*order)
+
+
+def _bottomk_step(order: tuple, k: int):
+    """The merge step of the uniform and weighted bottom-k sample
+    folds, which differ only in ``order`` and ``k``: the batch keeps
+    its own k smallest rows per source first, then merges with the
+    (k·sources)-row committed version and re-truncates.
+    dropDuplicates keeps a re-delivered doc already in the version
+    from taking two of the k slots."""
+    w = _by_source(order)
+
+    def bottom(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= k)
+            .drop("rn")
+        )
+
+    def step(b, prev):
+        cand = bottom(b)
+        if prev is not None:
+            cand = cand.unionByName(prev).dropDuplicates(
+                ["source", "doc_id"]
+            )
+        return bottom(cand)
+
+    return step
+
+
+def _bottomk_ranked(spark: SparkSession, store: EpochStore, order):
+    """The committed sample with its per-source rank ``rnk`` (from 1)
+    under ``order``."""
+    rnk = F.row_number().over(_by_source(order)).cast("bigint")
+    return _version_read(spark, store).withColumn("rnk", rnk)
+
+
 def bucketed_lww_merge(
     spark: SparkSession,
     store: EpochStore,
@@ -2212,51 +2286,21 @@ def x_stream_mixture_monitor(spark: SparkSession, sf: str) -> DataFrame:
 )
 @_sized_state
 def x_stream_bottomk_sample(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from ziggurat_spark.tables import load_table
 
     k = 5
     docs = load_table(spark, sf, "documents")
-    workdir = scratch_dir("zs_stream_bottomk_state_")
-    state = {"path": None, "v": 0}
-    w = W.partitionBy("source").orderBy("hk", "doc_id")
-
-    def _fold(b, _i):
-        cand = b.select(
-            "source",
-            "doc_id",
-            F.md5(F.col("doc_id").cast("string")).alias("hk"),
-        )
-        # batch-local truncation first: only k rows per source leave
-        # the batch, then merge with the (k·sources)-row state
-        cand = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-        if state["path"]:
-            # dropDuplicates: idempotent under micro-batch replay (a
-            # re-delivered doc already in state must not occupy two
-            # of the k slots); schema pinned per workdir (per-trigger
-            # read — unpinned it pays an inference job each time)
-            cand = cand.unionByName(
-                _pq_read(spark, ("st", workdir), [state["path"]])
-            ).dropDuplicates(["source", "doc_id"])
-        merged = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )
-        new_path = os.path.join(workdir, f"v{state['v']}")
-        merged.coalesce(1).write.mode("overwrite").parquet(new_path)
-        state["path"], state["v"] = new_path, state["v"] + 1
-
-    run_fold_stream(spark, docs.select("doc_id", "source"), 4, _fold)
-    final = _pq_read(spark, ("st", workdir), [state["path"]])
+    store = EpochStore(scratch_dir("zs_stream_bottomk_state_"))
+    order = ("hk", "doc_id")
+    step = _bottomk_step(order, k)
+    hk = F.md5(F.col("doc_id").cast("string"))
+    fold = _version_fold(
+        spark, store, lambda b, prev: step(b.withColumn("hk", hk), prev)
+    )
+    run_fold_stream(spark, docs.select("doc_id", "source"), 4, fold)
     return (
-        final.withColumn("rnk", F.row_number().over(w))
-        .select("source", F.col("rnk").cast("bigint").alias("rnk"), "doc_id")
+        _bottomk_ranked(spark, store, order)
+        .select("source", "rnk", "doc_id")
         .orderBy("source", "rnk")
     )
 
@@ -4229,9 +4273,10 @@ def _cc_forest_fold(
         # reused twice below (forest merge + index update): cut once
         # — lazily, the control-plane collect right below
         # materializes it
+        # order stamps: each store's committed seq (see epoch_store)
         proj = (
             stars.withColumn("kb", _cc_node_kb("a"))
-            .withColumn("v", F.lit(bid).cast("long"))
+            .withColumn("v", F.lit(forest.seq).cast("long"))
             .localCheckpoint(eager=False)
         )
         spent.append(proj)
@@ -4293,7 +4338,7 @@ def _cc_forest_fold(
                 .agg(F.expr(word_or).alias("bits"))
             )
         iproj = newbits.withColumn("kb", _cc_node_kb("r")).withColumn(
-            "v", F.lit(bid).cast("long")
+            "v", F.lit(ridx.seq).cast("long")
         )
         # iproj's kb set is exactly the root-bucket set already
         # collected above (oldi rows share newbits' r set): skip the
@@ -4368,14 +4413,10 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> EpochStore:
     # associative, commutative AND idempotent (re-unioning absorbed
     # pairs cannot move any component minimum), so the replayed batch
     # re-converges to the identical forest (the LWW merge overwrites
-    # re-labeled nodes with identical targets; its order stamp,
-    # bid + 1000, ranks after every delivered batch)
+    # re-labeled nodes with identical targets under the store's
+    # current seq, which every later commit's stamp outranks)
     run_fold_stream(
-        spark,
-        pairs,
-        STREAM_CC_SRC_FILES,
-        fold,
-        replay=lambda b, bid: fold(b, bid + 1000),
+        spark, pairs, STREAM_CC_SRC_FILES, fold, replay=fold
     )
     release_checkpoint(pairs)
     return forest
@@ -4923,8 +4964,8 @@ def _ivf_cadence_state(
       function of the ingest index — so it is idempotent, which is
       what makes the cadence replay-safe — and rewrites ONLY the
       serving cells whose membership changed (computed EXACTLY via a
-      full-outer join of the previous and new assignments, never a
-      fingerprint).
+      full-outer join of the new assignment and the previous one,
+      read back from the serving store, never a fingerprint).
 
     Each index is its own store (bucket = cell). Returns (serve,
     refresh_log): serve is the serving index's store; refresh_log
@@ -4947,7 +4988,6 @@ def _ivf_cadence_state(
     workdir = scratch_dir("zs_stream_ivfcad_state_")
     a0_store = EpochStore(os.path.join(workdir, "a0"))
     serve = EpochStore(os.path.join(workdir, "serve"))
-    prev: dict = {"a1": None, "since": 0}
     refresh_log: list = []
 
     def _refresh() -> None:
@@ -4958,13 +4998,11 @@ def _ivf_cadence_state(
         # dot for corpus volume, the interpreted spelling only for
         # per-trigger batches (where worker round-trips dominate)
         qdot = qdot_int_udf()
-        # schema pinned per store: a refresh runs per cadence tick
-        # and an unpinned read pays a footer-inference job each time
-        a0 = _pq_read(
-            spark,
-            ("ann_a0", a0_store.root),
-            sorted(a0_store.buckets().values()),
-        ).select("vec_id", "q", F.col("cent_id").alias("cell0"))
+        # read with the schema the ingest merges pinned: a refresh
+        # runs per cadence tick and runs no footer-inference job
+        a0 = _lww_read(spark, a0_store).select(
+            "vec_id", "q", F.col("cent_id").alias("cell0")
+        )
         # Lloyd step: truncating integer mean per (cell, pos) —
         # cells × d longs to the driver (the x_kmeans_exact sync)
         upd = (
@@ -5008,19 +5046,20 @@ def _ivf_cadence_state(
         )
         # live cell set (reused for the changed-cell default, the
         # log's cell count, and the emptied-cell sweep) and the
-        # EXACT changed-cell set vs the previous serving assignment:
-        # ONE driver sync for both (tagged union — the two sets ride
-        # one distinct job instead of two full a1 scans)
+        # EXACT changed-cell set vs the previous assignment (the
+        # serving store's live cells): ONE driver sync for both (tagged
+        # union — the two sets ride one distinct job instead of two
+        # full a1 scans)
         live_tagged = a1.select(
             F.col("cell1").alias("c"), F.lit(1).alias("t")
         )
-        if prev["a1"] is None:
+        if not serve.buckets():
             sync = live_tagged.distinct().collect()
             live = {r["c"] for r in sync}
             changed = sorted(live)
         else:
             j = (
-                prev["a1"]
+                _lww_read(spark, serve)
                 .select("vec_id", F.col("cell1").alias("old"))
                 .join(
                     a1.select("vec_id", "cell1"), "vec_id", "full"
@@ -5048,28 +5087,28 @@ def _ivf_cadence_state(
             # partition path (kb) so a per-cell directory read keeps
             # the label without path parsing; a changed cell the new
             # assignment left empty writes no kb= dir, so the commit
-            # drops it from the serving map
+            # drops it from the serving map. Pinned schema: the next
+            # refresh's read-back runs no footer job
+            cells = a1.select("vec_id", "q", "cell1")
+            _READ_SCHEMA[("lww", serve.root)] = _nullable_top(cells.schema)
             serve.write_buckets(
-                lambda path: a1.filter(
+                lambda path: cells.filter(
                     F.col("cell1").isin([int(c) for c in changed])
                 )
-                .select("vec_id", "q", "cell1", F.col("cell1").alias("kb"))
+                .withColumn("kb", F.col("cell1"))
                 .repartition(len(changed), "kb")
                 .write.partitionBy("kb")
                 .mode("overwrite")
                 .parquet(path),
                 changed,
             )
-        if prev["a1"] is not None:
-            release_checkpoint(prev["a1"])
-        prev["a1"] = a1
+        release_checkpoint(a1)
 
-    def _fold(b, _bid):
+    def _fold(b, bid):
         _ann_upsert_batch(spark, a0_store, b, cent)
-        prev["since"] += 1
-        if prev["since"] >= cadence:
+        # run_fold_stream folds each batch once, from bid 0
+        if (bid + 1) % cadence == 0:
             _refresh()
-            prev["since"] = 0
 
     def _replay(b, _bid):
         # closing refresh: the serving state now covers the FULL
@@ -5293,11 +5332,10 @@ def x_stream_hll_maintain(spark: SparkSession, sf: str) -> DataFrame:
     from ziggurat_spark.tables import load_table
 
     events = load_table(spark, sf, "events")
-    workdir = scratch_dir("zs_stream_hll_state_")
-    state = {"path": None, "v": 0}
+    store = EpochStore(scratch_dir("zs_stream_hll_state_"))
     reg_e, rho_e = _hll_exprs("div")
 
-    def _fold(b, bid):
+    def _step(b, prev):
         regs = (
             b.select(
                 "event_type",
@@ -5307,36 +5345,29 @@ def x_stream_hll_maintain(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy("event_type", "reg")
             .agg(F.max("rho").alias("rho"))
         )
-        if state["path"]:
+        if prev is not None:
             regs = (
-                regs.unionByName(
-                    _pq_read(spark, ("st", workdir), [state["path"]])
-                )
+                regs.unionByName(prev)
                 .groupBy("event_type", "reg")
                 .agg(F.max("rho").alias("rho"))
             )
-        new_path = os.path.join(workdir, f"v{state['v']}")
-        # constant-size state: one file IS the right layout for a
-        # sketch (O(types * 64) rows regardless of stream volume)
-        regs.coalesce(1).write.mode("overwrite").parquet(new_path)
-        state["path"], state["v"] = new_path, state["v"] + 1
+        return regs
 
     # crash re-delivery: max-merge is idempotent, so re-folding the
     # newest batch must leave the graded registers unchanged
+    fold = _version_fold(spark, store, _step)
     run_fold_stream(
         spark,
         events.filter(F.col("user_id").isNotNull()).select(
             "event_type", "user_id"
         ),
         STREAM_HLL_SRC_FILES,
-        _fold,
-        replay=_fold,
+        fold,
+        replay=fold,
     )
 
     # grade via one SQL pass sharing the oracle's expression text
-    _pq_read(
-        spark, ("st", workdir), [state["path"]]
-    ).createOrReplaceTempView("zs_hll_m")
+    _version_read(spark, store).createOrReplaceTempView("zs_hll_m")
     grade = spark.sql(
         "SELECT event_type, "
         + _hll_grade_exprs("div", "shiftleft(CAST(1 AS BIGINT), {n})")
@@ -5459,8 +5490,8 @@ from ziggurat_spark.queries.corpus_ops import (  # noqa: E402
         "bottom-k (union two samples, re-truncate) and unlike the "
         "budget prefix needs NO watermark machinery. Each "
         "micro-batch truncates locally to k rows per source, merges "
-        "with the k·sources-row state, dropDuplicates for replay "
-        "idempotence, re-truncates, overwrites the tiny state. "
+        "with the committed k·sources-row version, dropDuplicates "
+        "for replay idempotence, re-truncates, commits one version. "
         "Graded under the IDENTICAL oracle as the batch op: "
         "batching must not move a single sampled doc."
     ),
@@ -5468,8 +5499,6 @@ from ziggurat_spark.queries.corpus_ops import (  # noqa: E402
 )
 @_sized_state
 def x_stream_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     from ziggurat_spark.queries.corpus_ops import _WBK_HV, WBK_K
     from ziggurat_spark.tables import load_table
 
@@ -5485,44 +5514,15 @@ def x_stream_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(1).cast("bigint"),
         ).alias("w"),
     ).select("source", "doc_id", F.expr("hv div w").alias("pri"))
-    workdir = scratch_dir("zs_stream_wbk_state_")
-    state = {"path": None, "v": 0}
-    w_ = W.partitionBy("source").orderBy("pri", "doc_id")
-
-    def _fold(b, bid):
-        cand = (
-            b.withColumn("rn", F.row_number().over(w_))
-            .filter(F.col("rn") <= WBK_K)
-            .drop("rn")
-        )
-        if state["path"]:
-            cand = cand.unionByName(
-                _pq_read(spark, ("st", workdir), [state["path"]])
-            ).dropDuplicates(["source", "doc_id"])
-        merged = (
-            cand.withColumn("rn", F.row_number().over(w_))
-            .filter(F.col("rn") <= WBK_K)
-            .drop("rn")
-        )
-        new_path = os.path.join(workdir, f"v{state['v']}")
-        merged.coalesce(1).write.mode("overwrite").parquet(new_path)
-        state["path"], state["v"] = new_path, state["v"] + 1
-
+    store = EpochStore(scratch_dir("zs_stream_wbk_state_"))
+    order = ("pri", "doc_id")
     # crash re-delivery: dropDuplicates + re-truncate make the merge
     # idempotent — the graded sample must not move
-    run_fold_stream(
-        spark, wsrc, STREAM_WBK_SRC_FILES, _fold, replay=_fold
-    )
-
-    final = _pq_read(spark, ("st", workdir), [state["path"]])
+    fold = _version_fold(spark, store, _bottomk_step(order, WBK_K))
+    run_fold_stream(spark, wsrc, STREAM_WBK_SRC_FILES, fold, replay=fold)
     return (
-        final.withColumn("rnk", F.row_number().over(w_))
-        .select(
-            "source",
-            F.col("rnk").cast("bigint").alias("rnk"),
-            "doc_id",
-            "pri",
-        )
+        _bottomk_ranked(spark, store, order)
+        .select("source", "rnk", "doc_id", "pri")
         .orderBy("source", "rnk")
     )
 
@@ -5572,10 +5572,10 @@ def x_stream_snapshot_apply(spark: SparkSession, sf: str) -> DataFrame:
     store = EpochStore(scratch_dir("zs_stream_snap_state_"))
     n_buckets = 16
 
-    def _fold(b, bid):
+    def _fold(b, _bid):
         proj = b.withColumn(
             "kb", F.pmod(F.col("doc_id"), F.lit(n_buckets))
-        ).withColumn("ob", F.lit(int(bid)).cast("bigint"))
+        ).withColumn("ob", F.lit(store.seq).cast("bigint"))
         bucketed_lww_merge(
             spark,
             store,
@@ -5865,7 +5865,6 @@ def _pipe_stream_state(
     folds: list = []
     live_counts: list = []
     io_audit: list = []
-    seq = {"n": 0}
     cc_fold = _cc_forest_fold(spark, cc, ridx, cc_audit)
     # in the unverified pipeline, bands is the ONLY tiered state
     # kind: detected pairs feed the forest absorb directly and are
@@ -5882,7 +5881,7 @@ def _pipe_stream_state(
         for k in ("cand", "est", "ver"):
             kinds[k] = _union_writer(spark, _lsh_write_pairs_epoch)
 
-    def _fold(b, bid, cc_bid=None):
+    def _fold(b, bid):
         # 0) size-tier the band history (strictly-older runs)
         folds.extend(lsh.fold(bid, kinds, STREAM_PIPE_CADENCE))
         # every localCheckpoint below is consumed within this fold —
@@ -5952,11 +5951,10 @@ def _pipe_stream_state(
             .localCheckpoint(eager=False)
         )
         spent.append(merged)
-        seq["n"] += 1
         bucketed_lww_merge(
             spark,
             exact,
-            merged.withColumn("v", F.lit(seq["n"]).cast("long")),
+            merged.withColumn("v", F.lit(exact.seq).cast("long")),
             key="h",
             order_cols=(F.desc("v"),),
             touched=tkbs,
@@ -6143,7 +6141,6 @@ def _pipe_stream_state(
             # touches state the forest absorb never looks at —
             # submitted on the pool so it overlaps the cc_fold below
             # (guide §2.6)
-            seq["n"] += 1
             futs.append(
                 pool.submit(
                     bucketed_lww_merge,
@@ -6156,7 +6153,7 @@ def _pipe_stream_state(
                             "int"
                         ),
                     )
-                    .withColumn("v", F.lit(seq["n"]).cast("long")),
+                    .withColumn("v", F.lit(store.seq).cast("long")),
                     key="hid",
                     order_cols=(F.desc("v"),),
                 )
@@ -6166,13 +6163,13 @@ def _pipe_stream_state(
             # side; an isEmpty() job re-computed what the write
             # already recorded)
             if _parquet_dir_rows(runs["ver"]):
-                cc_fold(ver, bid if cc_bid is None else cc_bid)
+                cc_fold(ver, bid)
         else:
             # 4) FOREST ABSORB this trigger's new pairs
             # (bucket-pruned reads + root→bucket index inside
             # _cc_forest_fold)
             if not pairs.isEmpty():
-                cc_fold(pairs, bid if cc_bid is None else cc_bid)
+                cc_fold(pairs, bid)
         for fu in futs:
             fu.result()
         pool.shutdown()
@@ -6194,14 +6191,10 @@ def _pipe_stream_state(
     # construction reproduces the identical fresh set so the keyed
     # band runs rewrite in place, and the forest absorb re-converges
     # to identical targets (each merge commits a fresh store version
-    # over the one it read; the forest's order stamp, cc_bid, ranks
-    # after every delivered batch)
+    # over the one it read, stamped with the store's current seq,
+    # which every later commit's stamp outranks)
     run_fold_stream(
-        spark,
-        docs,
-        STREAM_PIPE_SRC_FILES,
-        _fold,
-        replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
+        spark, docs, STREAM_PIPE_SRC_FILES, _fold, replay=_fold
     )
     return {
         "exact": exact,
@@ -6439,7 +6432,6 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     cc_audit: list = []
     folds: list = []
     io_audit: list = []
-    seq = {"n": 0}
     cc_fold = _cc_forest_fold(spark, cc, ridx, cc_audit)
     # "bands" is the blocking-key index (symmetric-delete keys ARE a
     # 1-band LSH whose bucket is the (segment, key) string); the ver
@@ -6461,7 +6453,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         "ver": _union_writer(spark, _lsh_write_pairs_epoch),
     }
 
-    def _fold(b, bid, cc_bid=None):
+    def _fold(b, bid):
         folds.extend(lsh.fold(bid, kinds, STREAM_ER_CADENCE))
         # every localCheckpoint below is consumed within this fold —
         # released at the end (the CC-fold GC lesson)
@@ -6642,7 +6634,6 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # reads only feat's persisted blocks and touches state the
         # forest absorb never looks at — submitted on the pool so it
         # overlaps the cc_fold below (guide §2.6)
-        seq["n"] += 1
         futs.append(
             pool.submit(
                 bucketed_lww_merge,
@@ -6655,7 +6646,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
                         F.xxhash64("rec_id"), F.lit(ER_STORE_KB)
                     ).cast("int"),
                 )
-                .withColumn("v", F.lit(seq["n"]).cast("long")),
+                .withColumn("v", F.lit(store.seq).cast("long")),
                 key="rec_id",
                 order_cols=(F.desc("v"),),
                 # kb is a pure function of rec_id, so feat's
@@ -6669,7 +6660,7 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
         # (driver-side; an isEmpty() job re-computed what the write
         # already recorded)
         if _parquet_dir_rows(runs["ver"]):
-            cc_fold(ver, bid if cc_bid is None else cc_bid)
+            cc_fold(ver, bid)
         for fu in futs:
             fu.result()
         pool.shutdown()
@@ -6684,15 +6675,10 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
     # are pure functions of the records, the record store is keyed
     # LWW over immutable rows, and min-parent connectivity is
     # idempotent — the replay must land identical state (each merge
-    # commits a fresh store version over the one it read; the
-    # forest's order stamp, cc_bid, ranks after every delivered batch)
-    run_fold_stream(
-        spark,
-        reg,
-        STREAM_ER_SRC_FILES,
-        _fold,
-        replay=lambda b, bid: _fold(b, bid, cc_bid=bid + 1000),
-    )
+    # commits a fresh store version over the one it read, stamped
+    # with the store's current seq, which every later commit's stamp
+    # outranks)
+    run_fold_stream(spark, reg, STREAM_ER_SRC_FILES, _fold, replay=_fold)
     return {
         "lsh": lsh,
         "candn": candn,
