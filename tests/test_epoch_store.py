@@ -34,12 +34,21 @@ the version write and its commit leaves the old version live.
 Order stamps: a CC forest fold that re-delivers its newest batch and
 then relabels a node that re-delivery wrote labels it as a one-shot
 fold does.
+
+Failure inside a fold (``Scope``): the CC forest fold and the plain
+corpus pipeline raise in the foreground while a background write is
+still in flight. When the raise reaches the caller no Spark job is
+active, every checkpoint of the trigger is released and the store no
+longer moves; re-delivering the batch over the reopened stores
+equals a one-shot run.
 """
 
 from __future__ import annotations
 
 import os
+import pathlib
 import threading
+import time
 
 import pytest
 
@@ -887,3 +896,163 @@ def test_cc_replay_then_relabel_equals_one_shot(spark, tmp_path):
     want = labels(one)
     assert want[7] == 3
     assert labels(forest) == want
+
+
+def _persisted(spark) -> int:
+    """RDDs holding persisted blocks (a materialized, unreleased local
+    checkpoint is one)."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _still(path) -> bytes:
+    """The store root's manifest and entry names, to compare across a
+    wait: a write still in flight after a failure changes them."""
+    names = sorted(os.listdir(path))
+    return (path / es.MANIFEST).read_bytes() + repr(names).encode()
+
+
+def test_cc_fold_failure_ends_its_background_write(
+    spark, tmp_path, monkeypatch
+):
+    """The CC forest fold's forest merge runs in the background (here:
+    1 s of sleep, then the real merge) while the root-index merge in
+    the foreground raises. When the raise reaches the caller no Spark
+    job is active and every checkpoint of the trigger is released, the
+    forest store no longer moves, and a fresh fold over the reopened
+    stores that re-delivers the batch and folds the rest labels every
+    node as a one-shot fold does."""
+    from ziggurat_spark.queries import streaming_surface as ss
+    from ziggurat_spark.queries.dedup import _forest_label
+
+    real_merge = ss.bucketed_lww_merge
+
+    def stores(name):
+        return (
+            EpochStore(str(tmp_path / name / "forest")),
+            EpochStore(str(tmp_path / name / "ridx")),
+        )
+
+    def edges(*pairs):
+        return spark.createDataFrame(list(pairs), "a long, b long")
+
+    def labels(forest) -> dict:
+        nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "id long")
+        stars = ss._lww_read(spark, forest).select("a", "b")
+        return {
+            r["id"]: r["comp"] for r in _forest_label(nodes, stars).collect()
+        }
+
+    def merge(spark_, store, *a, **kw):
+        if store.root.endswith("forest"):  # the background write
+            time.sleep(1)
+            return real_merge(spark_, store, *a, **kw)
+        raise Crash()  # the foreground index merge
+
+    forest, ridx = stores("stream")
+    fold = ss._cc_forest_fold(spark, forest, ridx, [])
+    fold(edges((1, 2)), 0)
+    monkeypatch.setattr(ss, "bucketed_lww_merge", merge)
+    held = _persisted(spark)
+    with pytest.raises(Crash):
+        fold(edges((5, 7)), 1)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert _persisted(spark) == held
+    before = _still(tmp_path / "stream" / "forest")
+    time.sleep(2)
+    assert _still(tmp_path / "stream" / "forest") == before
+    monkeypatch.setattr(ss, "bucketed_lww_merge", real_merge)
+
+    forest, ridx = stores("stream")  # a fresh process reopens both
+    fold = ss._cc_forest_fold(spark, forest, ridx, [])
+    fold(edges((5, 7)), 1)  # the failed batch re-delivered
+    fold(edges((3, 5)), 2)
+    one, one_ridx = stores("one")
+    ss._cc_forest_fold(spark, one, one_ridx, [])(
+        edges((1, 2), (5, 7), (3, 5)), 0
+    )
+    assert labels(forest) == labels(one)
+
+
+def test_pipeline_fold_failure_ends_its_background_write(
+    spark, sf_dir, monkeypatch
+):
+    """The plain corpus pipeline's band-run write runs in the
+    background (here: 1 s of sleep before the real write) while the
+    forest absorb raises on batch 1. When the raise reaches the caller
+    no Spark job is active, every checkpoint of the trigger is
+    released and the band store no longer moves; a fresh fold over
+    the reopened stores that re-delivers batch 1 and folds the rest
+    grades equal to the DuckDB oracle."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ziggurat_spark.oracle import compare, duck_connection
+    from ziggurat_spark.queries import all_queries
+    from ziggurat_spark.queries import streaming_surface as ss
+    from ziggurat_spark.tables import load_table
+
+    sf = sf_dir
+    load_table(spark, sf, "documents")
+    state: dict = {}
+    real_scratch, real_cc = ss.scratch_dir, ss._cc_forest_fold
+    real_parquet = DataFrameWriter.parquet
+
+    def scratch_dir(prefix):
+        if prefix == "zs_stream_pipe_state_":
+            if "dir" not in state:
+                state["dir"] = real_scratch(prefix)
+            return state["dir"]
+        return real_scratch(prefix)
+
+    def drive(first):
+        """Fold the staged source's part files from batch ``first``
+        on, one per batch: a restart over the same checkpoint."""
+
+        def run(spark_, src, n_files, fold, replay=None):
+            src_dir, schema = ss._stage_src(spark_, src, n_files)
+            parts = ss._part_files(src_dir)
+            for bid in range(first, len(parts)):
+                batch = spark_.read.schema(schema).parquet(
+                    os.path.join(src_dir, parts[bid])
+                )
+                fold(batch, bid)
+            return src_dir
+
+        return run
+
+    def failing_cc(*a):
+        fold = real_cc(*a)
+
+        def cc_fold(b, bid):
+            if bid == 1:
+                raise Crash()
+            return fold(b, bid)
+
+        return cc_fold
+
+    def slow_parquet(self, path, *a, **kw):
+        if "/lsh/bands_b1_" in path:
+            time.sleep(1)
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(ss, "scratch_dir", scratch_dir)
+    monkeypatch.setattr(ss, "run_fold_stream", drive(0))
+    monkeypatch.setattr(ss, "_cc_forest_fold", failing_cc)
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_parquet)
+    held = _persisted(spark)
+    with pytest.raises(Crash):
+        ss._pipe_stream_state(spark, sf)
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert _persisted(spark) == held
+    lsh_root = pathlib.Path(state["dir"], "lsh")
+    before = _still(lsh_root)
+    time.sleep(2)
+    assert _still(lsh_root) == before
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    monkeypatch.setattr(ss, "_cc_forest_fold", real_cc)
+
+    monkeypatch.setattr(ss, "run_fold_stream", drive(1))
+    st = ss._pipe_stream_state(spark, sf)  # reopens every store
+    name = "x_stream_corpus_pipeline"
+    want = duck_connection(sf).execute(all_queries()[name].oracle).df()
+    got = compare(name, ss._pipe_grade(spark, sf, st), want)
+    assert got.ok, got.detail

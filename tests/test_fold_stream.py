@@ -237,7 +237,7 @@ FOLD_JOB_PINS = {
 STREAM_JOB_PINS = {
     "x_stream_upsert_state": ("events", 25),
     "x_stream_ann_maintain": ("embeddings", 39),
-    "x_stream_ivf_cadence": ("embeddings", 89),
+    "x_stream_ivf_cadence": ("embeddings", 87),
     "x_stream_select_corpus": ("documents", 52),
     "x_stream_budget_restart": ("documents", 70),
     "x_stream_budget_maintenance": ("documents", 60),

@@ -1816,7 +1816,7 @@ def x_multimodal_neardup(spark: SparkSession, sf: str) -> DataFrame:
 
 #: round cap for the star alternation (the paper proves O(log² n)
 #: alternations suffice; near-dup quasi-cliques converge in 2-4)
-#: round-8 probe (examples/probe_caps.py): a 2^20-node PATH — the
+#: round-8 probe (SCALE.md §22): a 2^20-node PATH — the
 #: adversarial-diameter input — needed 21 alternations, EXCEEDING
 #: the old cap of 20; rounds track ~log2(diameter)+1, so 40 covers
 #: diameters past 2^38 (any conceivable 100 TB component) while

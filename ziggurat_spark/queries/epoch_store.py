@@ -51,6 +51,9 @@ Each dir gets a fresh name, ``{kind}_b{bid}_{seq}`` for a run,
 ``{kind}_L{level}_{seq}`` for an epoch and ``kb_v_{seq}`` for a bucket
 version, so nothing is overwritten in place. The store owns its root:
 nothing else may write there, and one thread at a time writes it.
+A fold's background writes end inside its ``Scope`` (scratch.py),
+on failure as on success, so a restart that re-delivers a failed
+batch is the store's only writer.
 """
 
 from __future__ import annotations
@@ -58,8 +61,9 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 from functools import partial
+
+from ziggurat_spark.scratch import Scope
 
 MANIFEST = "manifest.json"
 
@@ -85,10 +89,9 @@ def overlap(calls: list) -> None:
     if len(calls) == 1:
         calls[0]()
         return
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(c) for c in calls]
-    for f in futs:
-        f.result()
+    with Scope() as sc:
+        for c in calls:
+            sc.submit(c)
 
 
 class EpochStore:

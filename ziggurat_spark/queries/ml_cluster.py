@@ -663,7 +663,7 @@ def _lpa_converge(
 #: fixed point). Peel depth grows slowly with graph size; for
 #: unbounded-depth graphs the h-index iteration is the scale path
 #: (see the op docstring).
-#: round-8 probe (examples/probe_caps.py): sf0.1 kNN graph peels in
+#: round-8 probe (SCALE.md §22): sf0.1 kNN graph peels in
 #: 15 rounds; a 10x-denser jittered clone (the sf1 stand-in) in 3 —
 #: depth tracks the tree-like FRINGE, not size, and the old cap of
 #: 24 was within 2x of the observed 15. 40 gives >2.5x headroom;

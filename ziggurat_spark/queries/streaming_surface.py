@@ -62,14 +62,13 @@ import tempfile
 import time
 import uuid
 import warnings
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ziggurat_spark.queries.epoch_store import EpochStore, overlap
 from ziggurat_spark.queries.registry import register
-from ziggurat_spark.scratch import release_checkpoint, scratch_dir
+from ziggurat_spark.scratch import Scope, scratch_dir
 from ziggurat_spark.tables import _nanos_ts_columns, ensure_runtime_confs
 
 
@@ -873,7 +872,7 @@ def run_fold_stream(
     target, and a zero-row stream never replays. The call comes
     after the checkpoint is gone, with the recorded files re-read
     verbatim as a lazy local checkpoint (the replay's first action
-    materializes it)."""
+    materializes it), released when the replay returns."""
     from urllib.parse import unquote, urlparse
 
     import pyarrow.parquet as pq
@@ -926,12 +925,13 @@ def run_fold_stream(
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
     if target:
-        replay(
-            spark.read.schema(schema)
-            .parquet(*target["files"])
-            .localCheckpoint(eager=False),
-            target["bid"],
-        )
+        with Scope() as sc:
+            replay(
+                sc.checkpoint(
+                    spark.read.schema(schema).parquet(*target["files"])
+                ),
+                target["bid"],
+            )
     return src_dir
 
 
@@ -1166,63 +1166,55 @@ def bucketed_lww_merge(
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(key).orderBy(*order_cols)
-    ck = None
-    if touched is None:
-        # lazily checkpoint proj so the distinct-collect below
-        # materializes it in ONE job and the merge write reads the
-        # persisted blocks — without this, proj's upstream chain
-        # (e.g. a QC feature stack) computes TWICE per trigger
-        proj = proj.localCheckpoint(eager=False)
-        ck = proj
-        touched = sorted(
-            r["kb"] for r in proj.select("kb").distinct().collect()
+    with Scope() as sc:
+        if touched is None:
+            # lazily checkpoint proj so the distinct-collect below
+            # materializes it in ONE job and the merge write reads the
+            # persisted blocks — without this, proj's upstream chain
+            # (e.g. a QC feature stack) computes TWICE per trigger
+            proj = sc.checkpoint(proj)
+            touched = sorted(
+                r["kb"] for r in proj.select("kb").distinct().collect()
+            )
+        else:
+            touched = sorted(touched)
+        if not touched:  # empty micro-batch (e.g. restart replay): no-op
+            return []
+        if not preunioned and set(touched) & store.buckets().keys():
+            # bucket-pruned read: ONLY the touched buckets' rows rejoin
+            # the merge; every other bucket stays on disk. Schema comes
+            # from the write-side capture below (reads only ever happen
+            # after a write), so no footer job runs here.
+            prev = _lww_read(spark, store, touched).withColumn(
+                "kb", F.col("kbc")
+            )
+            cur = prev.unionByName(proj.withColumn("kbc", F.col("kb")))
+        else:
+            cur = proj.withColumn("kbc", F.col("kb"))
+        merged = (
+            cur.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
         )
-    else:
-        touched = sorted(touched)
-    if not touched:  # empty micro-batch (e.g. restart replay): no-op
-        if ck is not None:
-            release_checkpoint(ck)
-        return []
-    if not preunioned and set(touched) & store.buckets().keys():
-        # bucket-pruned read: ONLY the touched buckets' rows rejoin
-        # the merge; every other bucket stays on disk. Schema comes
-        # from the write-side capture below (reads only ever happen
-        # after a write), so no footer job runs here.
-        prev = _lww_read(spark, store, touched).withColumn(
-            "kb", F.col("kbc")
-        )
-        cur = prev.unionByName(proj.withColumn("kbc", F.col("kb")))
-    else:
-        cur = proj.withColumn("kbc", F.col("kb"))
-    merged = (
-        cur.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    # capture the FILE schema of this layout (merged minus the kb
-    # partition column) so every later read of this store — the
-    # merge's own prev reads, the fold's bucket-pruned reads, the
-    # grade's union — skips parquet schema inference
-    from pyspark.sql.types import StructType
+        # capture the FILE schema of this layout (merged minus the kb
+        # partition column) so every later read of this store — the
+        # merge's own prev reads, the fold's bucket-pruned reads, the
+        # grade's union — skips parquet schema inference
+        from pyspark.sql.types import StructType
 
-    _READ_SCHEMA[("lww", store.root)] = StructType(
-        [f for f in _nullable_top(merged.schema) if f.name != "kb"]
-    )
-    # one file per touched bucket: co-partition on kb before the
-    # partitioned write so a bucket's rows land in a single task
-    store.write_buckets(
-        lambda path: merged.repartition(len(touched), "kb")
-        .write.partitionBy("kb")
-        .mode("overwrite")
-        .parquet(path),
-        touched,
-    )
-    if ck is not None:
-        # both consumers (collect + write) are done. NB:
-        # release_checkpoint, not DataFrame.unpersist — the latter
-        # is a CacheManager no-op on checkpointed frames
-        release_checkpoint(ck)
-    return touched
+        _READ_SCHEMA[("lww", store.root)] = StructType(
+            [f for f in _nullable_top(merged.schema) if f.name != "kb"]
+        )
+        # one file per touched bucket: co-partition on kb before the
+        # partitioned write so a bucket's rows land in a single task
+        store.write_buckets(
+            lambda path: merged.repartition(len(touched), "kb")
+            .write.partitionBy("kb")
+            .mode("overwrite")
+            .parquet(path),
+            touched,
+        )
+        return touched
 
 
 def _lww_read(
@@ -2037,16 +2029,17 @@ def x_stream_dedup_historic_loop(spark: SparkSession, sf: str) -> DataFrame:
         surv = b.dropDuplicates(["h"]).join(
             F.broadcast(hist), "h", "left_anti"
         )
-        # lazy: the first write below materializes it; the second
-        # reads the persisted blocks (one compute, two writes — minus
-        # the eager checkpoint's own job)
-        surv = surv.localCheckpoint(eager=False)
-        surv.select("h").coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(hist_dir, key)
-        )
-        surv.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out_dir, key)
-        )
+        with Scope() as sc:
+            # lazy: the first write below materializes it; the second
+            # reads the persisted blocks (one compute, two writes —
+            # minus the eager checkpoint's own job)
+            surv = sc.checkpoint(surv)
+            surv.select("h").coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(hist_dir, key)
+            )
+            surv.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(out_dir, key)
+            )
 
     # run 1 folds arrival A and stops; arrival B lands; run 2 resumes
     # from the shared checkpoint; then the newest batch is re-delivered
@@ -2153,8 +2146,6 @@ def x_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("c").desc(), "w")
         .limit(STREAM_VOCAB_K)
         .select("w", F.lit(1).alias("in_vocab"))
-        # lazy: the first micro-batch's broadcast build materializes
-        .localCheckpoint(eager=False)
     )
     out_dir = _result_dir("zs_stream_qgate_")
 
@@ -2182,12 +2173,15 @@ def x_stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
         ).select("doc_id", "n_tok")
         keep.write.mode("append").parquet(out_dir)
 
-    run_fold_stream(
-        spark,
-        docs.filter(F.col("doc_id") >= 250).select("doc_id", "text"),
-        4,
-        _gate,
-    )
+    with Scope() as sc:
+        # lazy: the first micro-batch's broadcast build materializes
+        vocab = sc.checkpoint(vocab)
+        run_fold_stream(
+            spark,
+            docs.filter(F.col("doc_id") >= 250).select("doc_id", "text"),
+            4,
+            _gate,
+        )
     kept = spark.read.parquet(out_dir)
     return kept.agg(
         F.count("*").alias("kept_docs"),
@@ -2347,8 +2341,6 @@ def x_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 50 == 0)
         .select(F.expr(sh_expr).alias("sh"))
         .distinct()
-        # lazy: the first micro-batch's use materializes it once
-        .localCheckpoint(eager=False)
     )
     out_dir = _result_dir("zs_stream_decon_")
 
@@ -2358,12 +2350,15 @@ def x_stream_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
         clean = b.join(dirty, "doc_id", "left_anti").select("doc_id")
         clean.write.mode("append").parquet(out_dir)
 
-    run_fold_stream(
-        spark,
-        docs.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text"),
-        4,
-        _scrub,
-    )
+    with Scope() as sc:
+        # lazy: the first micro-batch's use materializes it once
+        ev = sc.checkpoint(ev)
+        run_fold_stream(
+            spark,
+            docs.filter(F.col("doc_id") % 50 != 0).select("doc_id", "text"),
+            4,
+            _scrub,
+        )
     kept = spark.read.parquet(out_dir)
     return kept.agg(
         F.count("*").alias("clean_docs"),
@@ -2701,124 +2696,122 @@ def _budget_fold(spark: SparkSession, store: EpochStore):
                 ["source", "doc_id"],
                 "left_anti",
             )
-        # lazy: the delta collect right below is a full aggregation
-        # over fresh and materializes it in the same job
-        fresh = fresh.localCheckpoint(eager=False)
-        # level-1 prefix: fold the fresh mass into the subtotal dict
-        delta = fresh.groupBy("source", "kb").agg(
-            F.sum("nt").alias("s")
-        ).collect()
-        if not delta:
-            release_checkpoint(fresh)
-            return  # pure replay: state already at the fixed point
-        # the trigger works on a copy: the closure's subtotals move
-        # only once the new version has committed
-        sub = dict(subt)
-        for r in delta:
-            k = (r["source"], r["kb"])
-            sub[k] = sub.get(k, 0) + r["s"]
-        # overflow bucket per source: smallest bucket whose
-        # bucket-prefix sum crosses the budget (driver-side walk of
-        # the O(sources × buckets) subtotal table)
-        crossing = {}
-        for src in {s for (s, _x) in sub}:
-            run = 0
-            for x in range(STREAM_BUDGET_KB):
-                m = sub.get((src, x), 0)
-                if run + m > STREAM_BUDGET_TOKENS:
-                    crossing[src] = (x, run)
-                    break
-                run += m
-        new_cuts = dict(cuts)
-        evict_touched = set()
-        if crossing:
-            cb_set = sorted({cb for (cb, _o) in crossing.values()})
-            cb_map = F.create_map(
-                *[
-                    x
-                    for s_, (cb, _o) in sorted(crossing.items())
-                    for x in (F.lit(s_), F.lit(cb))
-                ]
-            )[F.col("source")]
-            off_map = F.create_map(
-                *[
-                    x
-                    for s_, (_cb, off) in sorted(crossing.items())
-                    for x in (F.lit(s_), F.lit(off).cast("bigint"))
-                ]
-            )[F.col("source")]
-            rows_cb = fresh.filter(F.col("kb").isin(cb_set))
-            prev_cb = _read_buckets(cb_set)
-            if prev_cb is not None:
-                rows_cb = rows_cb.unionByName(prev_cb)
-            # exact first-overflow key INSIDE the overflow bucket:
-            # cumsum over one bucket + the bucket-prefix offset (map
-            # literals: no per-trigger local-relation broadcast)
-            firsts = (
-                rows_cb.filter(F.col("kb") == cb_map)
-                .withColumn("cum", F.sum("nt").over(wsrc) + off_map)
-                .filter(F.col("cum") > STREAM_BUDGET_TOKENS)
-                .groupBy("source")
-                .agg(F.min(F.struct("hk", "doc_id")).alias("ncut"))
+        with Scope() as sc:
+            # lazy: the delta collect right below is a full aggregation
+            # over fresh and materializes it in the same job
+            fresh = sc.checkpoint(fresh)
+            # level-1 prefix: fold the fresh mass into the subtotal dict
+            delta = fresh.groupBy("source", "kb").agg(
+                F.sum("nt").alias("s")
+            ).collect()
+            if not delta:
+                return  # pure replay: state already at the fixed point
+            # the trigger works on a copy: the closure's subtotals move
+            # only once the new version has committed
+            sub = dict(subt)
+            for r in delta:
+                k = (r["source"], r["kb"])
+                sub[k] = sub.get(k, 0) + r["s"]
+            # overflow bucket per source: smallest bucket whose
+            # bucket-prefix sum crosses the budget (driver-side walk of
+            # the O(sources × buckets) subtotal table)
+            crossing = {}
+            for src in {s for (s, _x) in sub}:
+                run = 0
+                for x in range(STREAM_BUDGET_KB):
+                    m = sub.get((src, x), 0)
+                    if run + m > STREAM_BUDGET_TOKENS:
+                        crossing[src] = (x, run)
+                        break
+                    run += m
+            new_cuts = dict(cuts)
+            evict_touched = set()
+            if crossing:
+                cb_set = sorted({cb for (cb, _o) in crossing.values()})
+                cb_map = F.create_map(
+                    *[
+                        x
+                        for s_, (cb, _o) in sorted(crossing.items())
+                        for x in (F.lit(s_), F.lit(cb))
+                    ]
+                )[F.col("source")]
+                off_map = F.create_map(
+                    *[
+                        x
+                        for s_, (_cb, off) in sorted(crossing.items())
+                        for x in (F.lit(s_), F.lit(off).cast("bigint"))
+                    ]
+                )[F.col("source")]
+                rows_cb = fresh.filter(F.col("kb").isin(cb_set))
+                prev_cb = _read_buckets(cb_set)
+                if prev_cb is not None:
+                    rows_cb = rows_cb.unionByName(prev_cb)
+                # exact first-overflow key INSIDE the overflow bucket:
+                # cumsum over one bucket + the bucket-prefix offset (map
+                # literals: no per-trigger local-relation broadcast)
+                firsts = (
+                    rows_cb.filter(F.col("kb") == cb_map)
+                    .withColumn("cum", F.sum("nt").over(wsrc) + off_map)
+                    .filter(F.col("cum") > STREAM_BUDGET_TOKENS)
+                    .groupBy("source")
+                    .agg(F.min(F.struct("hk", "doc_id")).alias("ncut"))
+                    .collect()
+                )
+                for r in firsts:
+                    cnd = (r["ncut"]["hk"], r["ncut"]["doc_id"])
+                    cur = new_cuts.get(r["source"])
+                    # a new cut is always at-or-before the old one
+                    # (only docs below the old cut competed); min() is
+                    # belt-and-braces
+                    if cur is None or cnd < cur:
+                        new_cuts[r["source"]] = cnd
+                # eviction is a contiguous bucket suffix: every bucket
+                # at-or-after the overflow bucket holding that source
+                for s, (cb, _off) in crossing.items():
+                    for x in range(cb, STREAM_BUDGET_KB):
+                        if sub.get((s, x), 0) > 0:
+                            evict_touched.add(x)
+            all_touched = sorted(set(touched_ins) | evict_touched)
+            merged = fresh.filter(F.col("kb").isin(all_touched))
+            prev_all = _read_buckets(all_touched)
+            if prev_all is not None:
+                merged = merged.unionByName(prev_all)
+            if new_cuts:
+                ncut = _cut_map_expr(new_cuts)[F.col("source")]
+                merged = merged.filter(
+                    ncut.isNull() | (F.struct("hk", "doc_id") < ncut)
+                )
+            merged = merged.withColumn("kbc", F.col("kb"))
+            # lazy: the partitioned write right below materializes merged
+            # ONCE; the subtotal refresh then aggregates the same
+            # persisted blocks instead of re-reading the just-written
+            # parquet (same job count, but no per-trigger file re-open +
+            # footer read — the written files hold exactly merged's rows
+            # by construction, so the derived subtotals are identical to
+            # a file re-read's)
+            merged = sc.checkpoint(merged)
+            # one file per touched bucket at normal parallelism — never a
+            # coalesce(1) single task over the whole kept set; the commit
+            # carries the live bucket map and the cut table, so a cold
+            # restart restores EXACTLY the live state, nothing evicted
+            store.write_buckets(
+                lambda path: merged.repartition(len(all_touched), "kb")
+                .write.partitionBy("kb")
+                .mode("overwrite")
+                .parquet(path),
+                all_touched,
+                meta={"cuts": {src: list(c) for src, c in new_cuts.items()}},
+            )
+            # exact subtotal refresh for the rewritten buckets only
+            for k in [k for k in sub if k[1] in set(all_touched)]:
+                del sub[k]
+            for r in (
+                merged.groupBy("source", "kb")
+                .agg(F.sum("nt").alias("s"))
                 .collect()
-            )
-            for r in firsts:
-                cnd = (r["ncut"]["hk"], r["ncut"]["doc_id"])
-                cur = new_cuts.get(r["source"])
-                # a new cut is always at-or-before the old one
-                # (only docs below the old cut competed); min() is
-                # belt-and-braces
-                if cur is None or cnd < cur:
-                    new_cuts[r["source"]] = cnd
-            # eviction is a contiguous bucket suffix: every bucket
-            # at-or-after the overflow bucket holding that source
-            for s, (cb, _off) in crossing.items():
-                for x in range(cb, STREAM_BUDGET_KB):
-                    if sub.get((s, x), 0) > 0:
-                        evict_touched.add(x)
-        all_touched = sorted(set(touched_ins) | evict_touched)
-        merged = fresh.filter(F.col("kb").isin(all_touched))
-        prev_all = _read_buckets(all_touched)
-        if prev_all is not None:
-            merged = merged.unionByName(prev_all)
-        if new_cuts:
-            ncut = _cut_map_expr(new_cuts)[F.col("source")]
-            merged = merged.filter(
-                ncut.isNull() | (F.struct("hk", "doc_id") < ncut)
-            )
-        merged = merged.withColumn("kbc", F.col("kb"))
-        # lazy: the partitioned write right below materializes merged
-        # ONCE; the subtotal refresh then aggregates the same
-        # persisted blocks instead of re-reading the just-written
-        # parquet (same job count, but no per-trigger file re-open +
-        # footer read — the written files hold exactly merged's rows
-        # by construction, so the derived subtotals are identical to
-        # a file re-read's)
-        merged = merged.localCheckpoint(eager=False)
-        # one file per touched bucket at normal parallelism — never a
-        # coalesce(1) single task over the whole kept set; the commit
-        # carries the live bucket map and the cut table, so a cold
-        # restart restores EXACTLY the live state, nothing evicted
-        store.write_buckets(
-            lambda path: merged.repartition(len(all_touched), "kb")
-            .write.partitionBy("kb")
-            .mode("overwrite")
-            .parquet(path),
-            all_touched,
-            meta={"cuts": {src: list(c) for src, c in new_cuts.items()}},
-        )
-        # exact subtotal refresh for the rewritten buckets only
-        for k in [k for k in sub if k[1] in set(all_touched)]:
-            del sub[k]
-        for r in (
-            merged.groupBy("source", "kb")
-            .agg(F.sum("nt").alias("s"))
-            .collect()
-        ):
-            sub[(r["source"], r["kb"])] = r["s"]
-        release_checkpoint(merged)
-        release_checkpoint(fresh)
-        subt = sub
+            ):
+                sub[(r["source"], r["kb"])] = r["s"]
+            subt = sub
 
     return _fold
 
@@ -3085,46 +3078,44 @@ def x_stream_ann_maintain(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     # the trained codebook, fixed before the stream starts (and
     # pinned: a per-batch-derived codebook would drift the cells)
-    cent = (
-        emb.filter(F.col("vec_id") % 97 == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.expr(ANN_MAINT_QUANT).alias("cq"),
-        )
-        # lazy: the first fold's use materializes it once
-        .localCheckpoint(eager=False)
+    cent = emb.filter(F.col("vec_id") % 97 == 0).select(
+        F.col("vec_id").alias("cent_id"),
+        F.expr(ANN_MAINT_QUANT).alias("cq"),
     )
     store = EpochStore(scratch_dir("zs_stream_ann_state_"))
-    run_fold_stream(
-        spark,
-        emb.select("vec_id", "embedding"),
-        ANN_MAINT_SRC_FILES,
-        lambda b, _bid: _ann_upsert_batch(spark, store, b, cent),
-    )
+    with Scope() as sc:
+        # lazy: the first fold's use materializes it once
+        cent = sc.checkpoint(cent)
+        run_fold_stream(
+            spark,
+            emb.select("vec_id", "embedding"),
+            ANN_MAINT_SRC_FILES,
+            lambda b, _bid: _ann_upsert_batch(spark, store, b, cent),
+        )
+        # serve path: locate the query's cell from the CODEBOOK (one
+        # 1-row broadcast argmax — a bounded control-plane read, the
+        # same class as a centroid sync), then read ONLY that cell's
+        # directory: touched-only applies to index READS as well as
+        # writes — at 100 TB this is the difference between scanning
+        # one partition and scanning the index
+        qrows = (
+            emb.filter(F.col("vec_id") == 0)
+            .select(F.expr(ANN_MAINT_QUANT).alias("qq"))
+            .crossJoin(F.broadcast(cent))
+            .select(
+                "cent_id",
+                _qdot("qq", "cq").alias("cs"),
+            )
+            .agg(F.expr("max_by(cent_id, struct(cs, -cent_id))").alias("c"))
+            .collect()
+        )
 
     # audit path: per-cell counts read the whole index (that IS the
-    # audit); the QUERY path below must not
+    # audit); the QUERY path above must not
     final = _lww_read(spark, store)
     cells = final.groupBy("cent_id").agg(
         F.count("*").cast("bigint").alias("a"),
         F.sum("vec_id").cast("bigint").alias("b"),
-    )
-    # serve path: locate the query's cell from the CODEBOOK (one
-    # 1-row broadcast argmax — a bounded control-plane read, the
-    # same class as a centroid sync), then read ONLY that cell's
-    # directory: touched-only applies to index READS as well as
-    # writes — at 100 TB this is the difference between scanning
-    # one partition and scanning the index
-    qrows = (
-        emb.filter(F.col("vec_id") == 0)
-        .select(F.expr(ANN_MAINT_QUANT).alias("qq"))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "cent_id",
-            _qdot("qq", "cq").alias("cs"),
-        )
-        .agg(F.expr("max_by(cent_id, struct(cs, -cent_id))").alias("c"))
-        .collect()
     )
     qcell = qrows[0]["c"] if qrows else None
     cells_out = cells.select(
@@ -3704,37 +3695,38 @@ def _lsh_fold(spark: SparkSession, store: EpochStore, io: list | None = None):
         )
 
     def fold(b, bid):
-        # LAZY checkpoint: the probe's (band, shard) control-plane
-        # collect scans the bands and materializes them in the same
-        # job as the MinHash UDF pass (per-trigger action count is
-        # wall-clock in a stream fold)
-        batch_bands = _bands(b).localCheckpoint(eager=False)
-        # historic index = every band entry EXCEPT this batch's own
-        # key (re-delivery must not self-join against itself twice);
-        # epoch reads prune to the batch's (band, bucket-shard) set
-        pairs = _lsh_probe_pairs(
-            spark,
-            store.live("bands", skip=bid),
-            batch_bands,
-            id_col="doc_id",
-            io=io,
-        )
-        # the two writes are independent (both read the persisted
-        # band blocks): the store overlaps them (guide §2.6) so the
-        # short bands dump back-fills the probe write's tail
-        store.write_runs(
-            bid,
-            {
-                "pairs": lambda p: pairs.distinct()
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(p),
-                "bands": lambda p: batch_bands.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(p),
-            },
-        )
-        release_checkpoint(batch_bands)  # both consumers done
+        with Scope() as sc:
+            # LAZY checkpoint: the probe's (band, shard) control-plane
+            # collect scans the bands and materializes them in the
+            # same job as the MinHash UDF pass (per-trigger action
+            # count is wall-clock in a stream fold)
+            batch_bands = sc.checkpoint(_bands(b))
+            # historic index = every band entry EXCEPT this batch's
+            # own key (re-delivery must not self-join against itself
+            # twice); epoch reads prune to the batch's (band,
+            # bucket-shard) set
+            pairs = _lsh_probe_pairs(
+                spark,
+                store.live("bands", skip=bid),
+                batch_bands,
+                id_col="doc_id",
+                io=io,
+            )
+            # the two writes are independent (both read the persisted
+            # band blocks): the store overlaps them (guide §2.6) so
+            # the short bands dump back-fills the probe write's tail
+            store.write_runs(
+                bid,
+                {
+                    "pairs": lambda p: pairs.distinct()
+                    .coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(p),
+                    "bands": lambda p: batch_bands.coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(p),
+                },
+            )
 
     return fold
 
@@ -3943,6 +3935,7 @@ def x_stream_select_corpus(spark: SparkSession, sf: str) -> DataFrame:
         dd = spark.createDataFrame(
             [], "doc_id bigint, source string, text string"
         )
+    # returned to the caller: the grade frame reads this checkpoint
     return _dsir_budget_grade(dd.localCheckpoint(eager=False))
 
 
@@ -4188,171 +4181,159 @@ def _cc_forest_fold(
         e_new = b.select("a", "b")
         node_bks: list = []
         member_bks: list = []
-        # every localCheckpoint below is consumed WITHIN this fold —
-        # release its blocks at the end, or an 8-trigger stream run 3
-        # bench passes deep accumulates hundreds of dead block sets
-        # in the shared local-mode heap (measured: the bench's
-        # alphabetical neighbors of the streaming block paid ~1.7x
-        # in GC pressure)
-        spent: list = []
-        live = forest.buckets()
-        if live:
-            # LAZY checkpoint: the bucket-id collect right below
-            # materializes it in the SAME job (the _star_components
-            # lesson — an eager checkpoint here is one extra
-            # driver-orchestrated job per trigger, and per-trigger
-            # job count IS wall-clock in a stream fold)
-            batch_nodes = (
-                e_new.select(F.col("a").alias("n"))
-                .unionByName(e_new.select(F.col("b").alias("n")))
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            spent.append(batch_nodes)
-            # (a) bucket-pruned root resolution
-            nkbs = sorted(
-                r["k"]
-                for r in batch_nodes.select(
-                    _cc_node_kb("n").alias("k")
-                )
-                .distinct()
-                .collect()
-            )
-            node_bks = [k for k in nkbs if k in live]
-            if node_bks:
-                forest_n = _lww_read(spark, forest, node_bks).select(
-                    "a", "b"
-                )
-                roots = (
-                    batch_nodes.join(
-                        forest_n.withColumnRenamed("a", "n"),
-                        "n",
-                        "left",
-                    )
-                    .select(F.coalesce("b", F.col("n")).alias("r"))
+        # every checkpoint below is released at the scope's exit: an
+        # 8-trigger stream run 3 bench passes deep otherwise keeps
+        # hundreds of dead block sets in the local-mode heap (measured
+        # ~1.7x GC pressure on the bench's streaming neighbors)
+        with Scope() as sc:
+            live = forest.buckets()
+            if live:
+                # LAZY checkpoint: the bucket-id collect right below
+                # materializes it in the SAME job (the _star_components
+                # lesson — an eager checkpoint here is one extra
+                # driver-orchestrated job per trigger, and per-trigger
+                # job count IS wall-clock in a stream fold)
+                batch_nodes = sc.checkpoint(
+                    e_new.select(F.col("a").alias("n"))
+                    .unionByName(e_new.select(F.col("b").alias("n")))
                     .distinct()
                 )
-            else:
-                roots = batch_nodes.select(F.col("n").alias("r"))
-            # lazy for the same reason: the rkbs collect (a full
-            # aggregation over every partition) materializes it
-            roots = roots.localCheckpoint(eager=False)
-            spent.append(roots)
-            # (b) member gathering via the root→bucket bit index
-            rkbs = sorted(
-                r["k"]
-                for r in roots.select(_cc_node_kb("r").alias("k"))
+                # (a) bucket-pruned root resolution
+                nkbs = sorted(
+                    r["k"]
+                    for r in batch_nodes.select(
+                        _cc_node_kb("n").alias("k")
+                    )
+                    .distinct()
+                    .collect()
+                )
+                node_bks = [k for k in nkbs if k in live]
+                if node_bks:
+                    forest_n = _lww_read(spark, forest, node_bks).select(
+                        "a", "b"
+                    )
+                    roots = (
+                        batch_nodes.join(
+                            forest_n.withColumnRenamed("a", "n"),
+                            "n",
+                            "left",
+                        )
+                        .select(F.coalesce("b", F.col("n")).alias("r"))
+                        .distinct()
+                    )
+                else:
+                    roots = batch_nodes.select(F.col("n").alias("r"))
+                # lazy for the same reason: the rkbs collect (a full
+                # aggregation over every partition) materializes it
+                roots = sc.checkpoint(roots)
+                # (b) member gathering via the root→bucket bit index
+                rkbs = sorted(
+                    r["k"]
+                    for r in roots.select(_cc_node_kb("r").alias("k"))
+                    .distinct()
+                    .collect()
+                )
+                words = [0] * n_words
+                if set(rkbs) & ridx.buckets().keys():
+                    got = (
+                        _lww_read(spark, ridx, rkbs)
+                        .join(F.broadcast(roots), "r", "left_semi")
+                        .agg(F.expr(word_or).alias("m"))
+                        .collect()[0]["m"]
+                    )
+                    words = [x or 0 for x in got]
+                member_bks = [
+                    k
+                    for k in range(kb_n)
+                    if words[k // 64] & (1 << (k % 64)) and k in live
+                ]
+                if member_bks:
+                    forest_m = _lww_read(spark, forest, member_bks).select(
+                        "a", "b"
+                    )
+                    sub = forest_m.join(
+                        F.broadcast(roots),
+                        forest_m["b"] == roots["r"],
+                        "left_semi",
+                    )
+                    e_new = e_new.unionByName(sub)
+            stars = _star_components(spark, e_new)
+            # reused twice below (forest merge + index update): cut once
+            # — lazily, the control-plane collect right below
+            # materializes it
+            # order stamps: each store's committed seq (see epoch_store)
+            proj = sc.checkpoint(
+                sc.adopt(stars)
+                .withColumn("kb", _cc_node_kb("a"))
+                .withColumn("v", F.lit(forest.seq).cast("long"))
+            )
+            # ONE control-plane sync for what used to be three jobs
+            # (proj's eager checkpoint + the forest merge's internal
+            # touched-collect + the index merge's bucket collect): the
+            # forest-touched bucket set is exactly proj's kb set, and
+            # the index-touched set is exactly the root buckets — both
+            # collected from one distinct pass over proj (≤ KB² id
+            # pairs, control-plane-sized)
+            kb_pairs = (
+                proj.select("kb", _cc_node_kb("b").alias("rkb"))
                 .distinct()
                 .collect()
             )
-            words = [0] * n_words
-            if set(rkbs) & ridx.buckets().keys():
-                got = (
-                    _lww_read(spark, ridx, rkbs)
-                    .join(F.broadcast(roots), "r", "left_semi")
-                    .agg(F.expr(word_or).alias("m"))
-                    .collect()[0]["m"]
-                )
-                words = [x or 0 for x in got]
-            member_bks = [
-                k
-                for k in range(kb_n)
-                if words[k // 64] & (1 << (k % 64)) and k in live
-            ]
-            if member_bks:
-                forest_m = _lww_read(spark, forest, member_bks).select(
-                    "a", "b"
-                )
-                sub = forest_m.join(
-                    F.broadcast(roots),
-                    forest_m["b"] == roots["r"],
-                    "left_semi",
-                )
-                e_new = e_new.unionByName(sub)
-        stars = _star_components(spark, e_new)
-        # reused twice below (forest merge + index update): cut once
-        # — lazily, the control-plane collect right below
-        # materializes it
-        # order stamps: each store's committed seq (see epoch_store)
-        proj = (
-            stars.withColumn("kb", _cc_node_kb("a"))
-            .withColumn("v", F.lit(forest.seq).cast("long"))
-            .localCheckpoint(eager=False)
-        )
-        spent.append(proj)
-        spent.append(stars)
-        # ONE control-plane sync for what used to be three jobs
-        # (proj's eager checkpoint + the forest merge's internal
-        # touched-collect + the index merge's bucket collect): the
-        # forest-touched bucket set is exactly proj's kb set, and
-        # the index-touched set is exactly the root buckets — both
-        # collected from one distinct pass over proj (≤ KB² id
-        # pairs, control-plane-sized)
-        kb_pairs = (
-            proj.select("kb", _cc_node_kb("b").alias("rkb"))
-            .distinct()
-            .collect()
-        )
-        f_touched = sorted({r["kb"] for r in kb_pairs})
-        tikbs = sorted({r["rkb"] for r in kb_pairs})
-        # the forest merge and the root-index chain below both read
-        # only proj's persisted blocks and write DISJOINT stores (the
-        # pool thread the forest, this thread the index) — overlap
-        # them on a 1-worker pool (guide §2.6) so the index
-        # build/merge jobs back-fill the forest merge's task tails
-        # instead of paying two serial job-chain latencies per trigger
-        fpool = ThreadPoolExecutor(max_workers=1)
-        f_fut = fpool.submit(
-            bucketed_lww_merge,
-            spark,
-            forest,
-            proj,
-            key="a",
-            order_cols=(F.desc("v"),),  # newest re-label wins
-            touched=f_touched,
-        )
-        # index maintenance (touched-only, O(touched roots) rows):
-        # OR the batch's (root, bucket) bits into the standing rows.
-        # Lazy checkpoint: the index merge's write job materializes
-        # it (its broadcast build side computes it first)
-        newbits = (
-            proj.select(F.col("b").alias("r"), "kb")
-            .distinct()
-            .select("r", F.expr(one_hot).alias("bits"))
-            .groupBy("r")
-            .agg(F.expr(word_or).alias("bits"))
-            .localCheckpoint(eager=False)
-        )
-        spent.append(newbits)
-        if set(tikbs) & ridx.buckets().keys():
-            oldi = (
-                _lww_read(spark, ridx, tikbs)
-                .join(
-                    F.broadcast(newbits.select("r")), "r", "left_semi"
-                )
-                .select("r", "bits")
+            f_touched = sorted({r["kb"] for r in kb_pairs})
+            tikbs = sorted({r["rkb"] for r in kb_pairs})
+            # the forest merge and the root-index chain below both read
+            # only proj's persisted blocks and write DISJOINT stores (the
+            # scope's pool the forest, this thread the index) — overlap
+            # them (guide §2.6) so the index build/merge jobs back-fill
+            # the forest merge's task tails instead of paying two serial
+            # job-chain latencies per trigger
+            sc.submit(
+                bucketed_lww_merge,
+                spark,
+                forest,
+                proj,
+                key="a",
+                order_cols=(F.desc("v"),),  # newest re-label wins
+                touched=f_touched,
             )
-            newbits = (
-                newbits.unionByName(oldi)
+            # index maintenance (touched-only, O(touched roots) rows):
+            # OR the batch's (root, bucket) bits into the standing rows.
+            # Lazy checkpoint: the index merge's write job materializes
+            # it (its broadcast build side computes it first)
+            newbits = sc.checkpoint(
+                proj.select(F.col("b").alias("r"), "kb")
+                .distinct()
+                .select("r", F.expr(one_hot).alias("bits"))
                 .groupBy("r")
                 .agg(F.expr(word_or).alias("bits"))
             )
-        iproj = newbits.withColumn("kb", _cc_node_kb("r")).withColumn(
-            "v", F.lit(ridx.seq).cast("long")
-        )
-        # iproj's kb set is exactly the root-bucket set already
-        # collected above (oldi rows share newbits' r set): skip the
-        # merge's internal collect
-        bucketed_lww_merge(
-            spark,
-            ridx,
-            iproj,
-            key="r",
-            order_cols=(F.desc("v"),),
-            touched=tikbs,
-        )
-        f_fut.result()
-        fpool.shutdown()
+            if set(tikbs) & ridx.buckets().keys():
+                oldi = (
+                    _lww_read(spark, ridx, tikbs)
+                    .join(
+                        F.broadcast(newbits.select("r")), "r", "left_semi"
+                    )
+                    .select("r", "bits")
+                )
+                newbits = (
+                    newbits.unionByName(oldi)
+                    .groupBy("r")
+                    .agg(F.expr(word_or).alias("bits"))
+                )
+            iproj = newbits.withColumn("kb", _cc_node_kb("r")).withColumn(
+                "v", F.lit(ridx.seq).cast("long")
+            )
+            # iproj's kb set is exactly the root-bucket set already
+            # collected above (oldi rows share newbits' r set): skip the
+            # merge's internal collect
+            bucketed_lww_merge(
+                spark,
+                ridx,
+                iproj,
+                key="r",
+                order_cols=(F.desc("v"),),
+                touched=tikbs,
+            )
         audit.append(
             {
                 "bid": bid,
@@ -4361,8 +4342,6 @@ def _cc_forest_fold(
                 "state_n": len(forest.buckets()),
             }
         )
-        for df in spent:  # all consumed above; release the blocks
-            release_checkpoint(df)
 
     return _fold
 
@@ -4375,26 +4354,6 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> EpochStore:
     Extracted so tests can drive the chunking directly."""
     from ziggurat_spark.queries.dedup import _jaccard_pairs
 
-    # the pair SOURCE is a corpus-scale computation (shingle index +
-    # joins) — build it at the caller's full shuffle parallelism,
-    # NOT under the micro-batch-sized conf the @_sized_state scope
-    # sets (measured 15.8 s vs ~2.5 s at sf0.1: the shingle joins
-    # starve at 8 partitions; only the per-trigger fold state is
-    # micro-batch-sized)
-    sp_key = "spark.sql.shuffle.partitions"
-    mb_parts = spark.conf.get(sp_key)
-    spark.conf.set(sp_key, str(spark.sparkContext.defaultParallelism))
-    try:
-        # a lazy checkpoint plans the pair joins NOW, under this
-        # conf (adaptive execution also runs their shuffle stages
-        # here); the source staging write runs the final stage
-        pairs = (
-            _jaccard_pairs(spark, sf)
-            .select("a", "b")
-            .localCheckpoint(eager=False)
-        )
-    finally:
-        spark.conf.set(sp_key, mb_parts)
     statedir = scratch_dir("zs_stream_cc_state_")
     forest = EpochStore(os.path.join(statedir, "forest"))
     ridx = EpochStore(os.path.join(statedir, "ridx"))
@@ -4409,16 +4368,33 @@ def _cc_forest_state(spark: SparkSession, sf: str) -> EpochStore:
     # rewrites only buckets holding re-labeled nodes) — at 100 TB
     # per-trigger I/O is O(touched + batch), never O(forest)
     fold = _cc_forest_fold(spark, forest, ridx, [])
-    # crash re-delivery before grading: min-parent connectivity is
-    # associative, commutative AND idempotent (re-unioning absorbed
-    # pairs cannot move any component minimum), so the replayed batch
-    # re-converges to the identical forest (the LWW merge overwrites
-    # re-labeled nodes with identical targets under the store's
-    # current seq, which every later commit's stamp outranks)
-    run_fold_stream(
-        spark, pairs, STREAM_CC_SRC_FILES, fold, replay=fold
-    )
-    release_checkpoint(pairs)
+    # the pair SOURCE is a corpus-scale computation (shingle index +
+    # joins) — build it at the caller's full shuffle parallelism,
+    # NOT under the micro-batch-sized conf the @_sized_state scope
+    # sets (measured 15.8 s vs ~2.5 s at sf0.1: the shingle joins
+    # starve at 8 partitions; only the per-trigger fold state is
+    # micro-batch-sized)
+    sp_key = "spark.sql.shuffle.partitions"
+    mb_parts = spark.conf.get(sp_key)
+    spark.conf.set(sp_key, str(spark.sparkContext.defaultParallelism))
+    with Scope() as sc:
+        try:
+            # a lazy checkpoint plans the pair joins NOW, under this
+            # conf (adaptive execution also runs their shuffle stages
+            # here); the source staging write runs the final stage
+            pairs = sc.checkpoint(_jaccard_pairs(spark, sf).select("a", "b"))
+        finally:
+            spark.conf.set(sp_key, mb_parts)
+        # crash re-delivery before grading: min-parent connectivity is
+        # associative, commutative AND idempotent (re-unioning absorbed
+        # pairs cannot move any component minimum), so the replayed
+        # batch re-converges to the identical forest (the LWW merge
+        # overwrites re-labeled nodes with identical targets under the
+        # store's current seq, which every later commit's stamp
+        # outranks)
+        run_fold_stream(
+            spark, pairs, STREAM_CC_SRC_FILES, fold, replay=fold
+        )
     return forest
 
 
@@ -4683,153 +4659,152 @@ def _mm_stream_state(
 
     def _fold(b, bid):
         folds.extend(store.fold(bid, writers, STREAM_MM_CADENCE))
-        # LAZY checkpoints (per-trigger action count IS wall-clock
-        # in a stream fold): ONE fused control-plane aggregation
-        # below materializes feat AND bands in the same job as the
-        # Arrow decode, yielding both the batch asset count (was its
-        # own feat.count() job) and the probe's (band, bucket-shard)
-        # set (was the probe's own collect) — every decoded asset
-        # emits exactly MM_BANDS band rows, so the band row count
-        # over MM_BANDS IS the feat row count
-        feat = _feat(b).localCheckpoint(eager=False)
-        bands = feat.select(
-            "asset_id", F.posexplode("bks").alias("band", "bucket")
-        ).localCheckpoint(eager=False)
-        sync = bands.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(
-                F.struct("band", _bucket_shard("bucket").alias("bs"))
-            ).alias("ws"),
-        ).collect()[0]
-        batch_assets = int(sync["n"]) // MM_BANDS
-        wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
-        # candidates through the ONE shared probe spelling: tiny
-        # within-batch self-join + arrivals BROADCAST vs history
-        # with epoch reads pruned to the batch's (band, bucket-shard)
-        # set — the hot-bucket guard in its streaming form (a hot
-        # history bucket costs a scan, never a quadratic task); a
-        # pathologically large arrival batch would fall back to the
-        # batch op's salted group-pair join
-        cand = (
-            _lsh_probe_pairs(
-                spark,
-                store.live("bands", skip=bid),
-                bands,
-                id_col="asset_id",
-                wanted=wanted,
+        with Scope() as sc:
+            # LAZY checkpoints (per-trigger action count IS wall-clock
+            # in a stream fold): ONE fused control-plane aggregation
+            # below materializes feat AND bands in the same job as the
+            # Arrow decode, yielding both the batch asset count (was its
+            # own feat.count() job) and the probe's (band, bucket-shard)
+            # set (was the probe's own collect) — every decoded asset
+            # emits exactly MM_BANDS band rows, so the band row count
+            # over MM_BANDS IS the feat row count
+            feat = sc.checkpoint(_feat(b))
+            bands = sc.checkpoint(
+                feat.select(
+                    "asset_id", F.posexplode("bks").alias("band", "bucket")
+                )
             )
-            .distinct()
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-        # verify sides: candidate members may live in history. A
-        # BULK trigger (≥ ~4 assets per feature bucket) touches
-        # every bucket with overwhelming probability, so pruning
-        # buys nothing — keep the old FUSED plan (lazy cand, one
-        # verify job over the whole feat history). A SELECTIVE
-        # trigger pays two bounded control-plane jobs (materialize
-        # candidates, collect their members' buckets) to read only
-        # the touched fkb= subdirectories — O(touched buckets), the
-        # read bound that survives 100 TB where the corpus dwarfs
-        # any trigger. Same regime split as the band-probe pruning
-        # (SCALE.md §23); batch assets are never in history (the
-        # batch's own run excluded, batches own disjoint assets).
-        hist = store.live("feat", skip=bid)
-        spent = [feat, bands]
-        feat_all = feat.select("asset_id", "bv", "n2")
-        if batch_assets >= MM_FEAT_KB * 4:
-            hist_feat = _mm_read_feat_pruned(
-                spark, hist, set(range(MM_FEAT_KB))
-            )
-            if hist_feat is not None:
-                feat_all = feat_all.unionByName(hist_feat)
-        else:
-            # lazy cand + ONE fused aggregation (was three jobs:
-            # eager cand checkpoint, eager members checkpoint, then
-            # the bucket distinct-collect): a member's bucket is a
-            # pure function of its id, so the union of the two
-            # endpoint bucket sets IS the members' bucket set, and
-            # the aggregation materializes cand's blocks for the
-            # members broadcast below
-            cand = cand.localCheckpoint(eager=False)
-            spent.append(cand)
-            stats = cand.agg(
+            sync = bands.agg(
+                F.count(F.lit(1)).alias("n"),
                 F.collect_set(
-                    F.pmod(F.xxhash64("a"), F.lit(MM_FEAT_KB)).cast(
-                        "int"
-                    )
-                ).alias("ka"),
-                F.collect_set(
-                    F.pmod(F.xxhash64("b"), F.lit(MM_FEAT_KB)).cast(
-                        "int"
-                    )
-                ).alias("kb"),
+                    F.struct("band", _bucket_shard("bucket").alias("bs"))
+                ).alias("ws"),
             ).collect()[0]
-            fkbs = set(stats["ka"]) | set(stats["kb"])
-            # no distinct: members only feeds a broadcast left-semi
-            # build, which dedups by key anyway (round-10 — the
-            # distinct was a full exchange of the pair endpoints)
-            members = cand.select(
-                F.col("a").alias("asset_id")
-            ).unionByName(cand.select(F.col("b").alias("asset_id")))
-            hist_feat = _mm_read_feat_pruned(spark, hist, fkbs)
-            if hist_feat is not None:
-                feat_all = feat_all.unionByName(
-                    hist_feat.join(
-                        F.broadcast(members), "asset_id", "left_semi"
+            batch_assets = int(sync["n"]) // MM_BANDS
+            wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
+            # candidates through the ONE shared probe spelling: tiny
+            # within-batch self-join + arrivals BROADCAST vs history
+            # with epoch reads pruned to the batch's (band, bucket-shard)
+            # set — the hot-bucket guard in its streaming form (a hot
+            # history bucket costs a scan, never a quadratic task); a
+            # pathologically large arrival batch would fall back to the
+            # batch op's salted group-pair join
+            cand = (
+                _lsh_probe_pairs(
+                    spark,
+                    store.live("bands", skip=bid),
+                    bands,
+                    id_col="asset_id",
+                    wanted=wanted,
+                )
+                .distinct()
+                .repartition(spark.sparkContext.defaultParallelism)
+            )
+            # verify sides: candidate members may live in history. A
+            # BULK trigger (≥ ~4 assets per feature bucket) touches
+            # every bucket with overwhelming probability, so pruning
+            # buys nothing — keep the old FUSED plan (lazy cand, one
+            # verify job over the whole feat history). A SELECTIVE
+            # trigger pays two bounded control-plane jobs (materialize
+            # candidates, collect their members' buckets) to read only
+            # the touched fkb= subdirectories — O(touched buckets), the
+            # read bound that survives 100 TB where the corpus dwarfs
+            # any trigger. Same regime split as the band-probe pruning
+            # (SCALE.md §23); batch assets are never in history (the
+            # batch's own run excluded, batches own disjoint assets).
+            hist = store.live("feat", skip=bid)
+            feat_all = feat.select("asset_id", "bv", "n2")
+            if batch_assets >= MM_FEAT_KB * 4:
+                hist_feat = _mm_read_feat_pruned(
+                    spark, hist, set(range(MM_FEAT_KB))
+                )
+                if hist_feat is not None:
+                    feat_all = feat_all.unionByName(hist_feat)
+            else:
+                # lazy cand + ONE fused aggregation (was three jobs:
+                # eager cand checkpoint, eager members checkpoint, then
+                # the bucket distinct-collect): a member's bucket is a
+                # pure function of its id, so the union of the two
+                # endpoint bucket sets IS the members' bucket set, and
+                # the aggregation materializes cand's blocks for the
+                # members broadcast below
+                cand = sc.checkpoint(cand)
+                stats = cand.agg(
+                    F.collect_set(
+                        F.pmod(F.xxhash64("a"), F.lit(MM_FEAT_KB)).cast(
+                            "int"
+                        )
+                    ).alias("ka"),
+                    F.collect_set(
+                        F.pmod(F.xxhash64("b"), F.lit(MM_FEAT_KB)).cast(
+                            "int"
+                        )
+                    ).alias("kb"),
+                ).collect()[0]
+                fkbs = set(stats["ka"]) | set(stats["kb"])
+                # no distinct: members only feeds a broadcast left-semi
+                # build, which dedups by key anyway (round-10 — the
+                # distinct was a full exchange of the pair endpoints)
+                members = cand.select(
+                    F.col("a").alias("asset_id")
+                ).unionByName(cand.select(F.col("b").alias("asset_id")))
+                hist_feat = _mm_read_feat_pruned(spark, hist, fkbs)
+                if hist_feat is not None:
+                    feat_all = feat_all.unionByName(
+                        hist_feat.join(
+                            F.broadcast(members), "asset_id", "left_semi"
+                        )
+                    )
+            fa = feat_all.select(
+                F.col("asset_id").alias("a"),
+                F.col("bv").alias("av"),
+                F.col("n2").alias("na2"),
+            )
+            fb = feat_all.select(
+                F.col("asset_id").alias("b"),
+                F.col("bv").alias("cv"),
+                F.col("n2").alias("nb2"),
+            )
+            pairs = (
+                cand.join(fa, "a")
+                .join(fb, "b")
+                .withColumn("dt", F.expr(_mm_dot("av", "cv", 0)))
+                .filter(
+                    F.expr(
+                        f"{MM_T2_DEN} * dt * dt >= {MM_T2_NUM} * na2 * nb2"
                     )
                 )
-        fa = feat_all.select(
-            F.col("asset_id").alias("a"),
-            F.col("bv").alias("av"),
-            F.col("n2").alias("na2"),
-        )
-        fb = feat_all.select(
-            F.col("asset_id").alias("b"),
-            F.col("bv").alias("cv"),
-            F.col("n2").alias("nb2"),
-        )
-        pairs = (
-            cand.join(fa, "a")
-            .join(fb, "b")
-            .withColumn("dt", F.expr(_mm_dot("av", "cv", 0)))
-            .filter(
-                F.expr(
-                    f"{MM_T2_DEN} * dt * dt >= {MM_T2_NUM} * na2 * nb2"
+                .select(
+                    "a",
+                    "b",
+                    F.expr(
+                        "CAST((1000000 * dt * dt) div (na2 * nb2) "
+                        "AS BIGINT)"
+                    ).alias("cos2_ppm"),
                 )
             )
-            .select(
-                "a",
-                "b",
-                F.expr(
-                    "CAST((1000000 * dt * dt) div (na2 * nb2) "
-                    "AS BIGINT)"
-                ).alias("cos2_ppm"),
+            # pairs first (the one job that materializes the verify
+            # chain), then the two remaining runs overlap on the store's
+            # 2-worker pool (guide §2.6): both read persisted blocks, so
+            # the independent writes back-fill each other's task tails
+            # instead of paying two full job latencies; one commit lists
+            # all three
+            runs = {k: store.run_path(k, bid) for k in writers}
+            pairs.distinct().coalesce(1).write.mode("overwrite").parquet(
+                runs["pairs"]
             )
-        )
-        # pairs first (the one job that materializes the verify
-        # chain), then the two remaining runs overlap on the store's
-        # 2-worker pool (guide §2.6): both read persisted blocks, so
-        # the independent writes back-fill each other's task tails
-        # instead of paying two full job latencies; one commit lists
-        # all three
-        runs = {k: store.run_path(k, bid) for k in writers}
-        pairs.distinct().coalesce(1).write.mode("overwrite").parquet(
-            runs["pairs"]
-        )
-        overlap(
-            [
-                lambda df_=df_, kind=kind: df_.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(runs[kind])
-                for kind, df_ in (
-                    ("bands", bands),
-                    ("feat", feat.select("asset_id", "bv", "n2")),
-                )
-            ]
-        )
+            overlap(
+                [
+                    lambda df_=df_, kind=kind: df_.coalesce(1)
+                    .write.mode("overwrite")
+                    .parquet(runs[kind])
+                    for kind, df_ in (
+                        ("bands", bands),
+                        ("feat", feat.select("asset_id", "bv", "n2")),
+                    )
+                ]
+            )
         store.commit_runs(bid, runs)
-        for df in spent:
-            release_checkpoint(df)
         live_counts.append(len(store.runs("bands")))
 
     # crash re-delivery before grading: keyed runs + own-key-excluded
@@ -4976,14 +4951,9 @@ def _ivf_cadence_state(
     from ziggurat_spark.tables import load_table
 
     emb = load_table(spark, sf, "embeddings")
-    cent = (
-        emb.filter(F.col("vec_id") % 97 == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.expr(ANN_MAINT_QUANT).alias("cq"),
-        )
-        # lazy: the first fold's use materializes it once
-        .localCheckpoint(eager=False)
+    cent = emb.filter(F.col("vec_id") % 97 == 0).select(
+        F.col("vec_id").alias("cent_id"),
+        F.expr(ANN_MAINT_QUANT).alias("cq"),
     )
     workdir = scratch_dir("zs_stream_ivfcad_state_")
     a0_store = EpochStore(os.path.join(workdir, "a0"))
@@ -5025,84 +4995,83 @@ def _ivf_cadence_state(
             ),
             "cid bigint, cq array<bigint>",
         )
-        a1 = (
-            a0.repartition(spark.sparkContext.defaultParallelism)
-            .crossJoin(F.broadcast(c1))
-            .select(
-                "vec_id",
-                "q",
-                "cid",
-                qdot(F.col("q"), F.col("cq")).alias("cs"),
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.expr("max_by(cid, struct(cs, -cid))").alias("cell1"),
-                F.any_value("q").alias("q"),  # identical per key
-            )
-            # LAZY: the live/changed control-plane collect right
-            # below is a full pass over a1 and materializes it in
-            # the same job (per-refresh action count is wall-clock)
-            .localCheckpoint(eager=False)
-        )
-        # live cell set (reused for the changed-cell default, the
-        # log's cell count, and the emptied-cell sweep) and the
-        # EXACT changed-cell set vs the previous assignment (the
-        # serving store's live cells): ONE driver sync for both (tagged
-        # union — the two sets ride one distinct job instead of two
-        # full a1 scans)
-        live_tagged = a1.select(
-            F.col("cell1").alias("c"), F.lit(1).alias("t")
-        )
-        if not serve.buckets():
-            sync = live_tagged.distinct().collect()
-            live = {r["c"] for r in sync}
-            changed = sorted(live)
-        else:
-            j = (
-                _lww_read(spark, serve)
-                .select("vec_id", F.col("cell1").alias("old"))
-                .join(
-                    a1.select("vec_id", "cell1"), "vec_id", "full"
+        with Scope() as sc:
+            # LAZY: the live/changed control-plane collect right below
+            # is a full pass over a1 and materializes it in the same
+            # job (per-refresh action count is wall-clock)
+            a1 = sc.checkpoint(
+                a0.repartition(spark.sparkContext.defaultParallelism)
+                .crossJoin(F.broadcast(c1))
+                .select(
+                    "vec_id",
+                    "q",
+                    "cid",
+                    qdot(F.col("q"), F.col("cq")).alias("cs"),
                 )
-                .filter(
-                    F.col("old").isNull()
-                    | F.col("cell1").isNull()
-                    | (F.col("old") != F.col("cell1"))
+                .groupBy("vec_id")
+                .agg(
+                    F.expr("max_by(cid, struct(cs, -cid))").alias("cell1"),
+                    F.any_value("q").alias("q"),  # identical per key
                 )
             )
-            chg_tagged = (
-                j.select(F.col("old").alias("c"))
-                .unionByName(j.select(F.col("cell1").alias("c")))
-                .filter(F.col("c").isNotNull())
-                .withColumn("t", F.lit(0))
+            # live cell set (reused for the changed-cell default, the
+            # log's cell count, and the emptied-cell sweep) and the
+            # EXACT changed-cell set vs the previous assignment (the
+            # serving store's live cells): ONE driver sync for both (tagged
+            # union — the two sets ride one distinct job instead of two
+            # full a1 scans)
+            live_tagged = a1.select(
+                F.col("cell1").alias("c"), F.lit(1).alias("t")
             )
-            sync = live_tagged.unionByName(chg_tagged).distinct().collect()
-            live = {r["c"] for r in sync if r["t"] == 1}
-            changed = sorted({r["c"] for r in sync if r["t"] == 0})
-        refresh_log.append(
-            {"changed": len(changed), "cells": len(live)}
-        )
-        if changed:
-            # the cell id rides IN the data (cell1) as well as in the
-            # partition path (kb) so a per-cell directory read keeps
-            # the label without path parsing; a changed cell the new
-            # assignment left empty writes no kb= dir, so the commit
-            # drops it from the serving map. Pinned schema: the next
-            # refresh's read-back runs no footer job
-            cells = a1.select("vec_id", "q", "cell1")
-            _READ_SCHEMA[("lww", serve.root)] = _nullable_top(cells.schema)
-            serve.write_buckets(
-                lambda path: cells.filter(
-                    F.col("cell1").isin([int(c) for c in changed])
+            if not serve.buckets():
+                sync = live_tagged.distinct().collect()
+                live = {r["c"] for r in sync}
+                changed = sorted(live)
+            else:
+                j = (
+                    _lww_read(spark, serve)
+                    .select("vec_id", F.col("cell1").alias("old"))
+                    .join(
+                        a1.select("vec_id", "cell1"), "vec_id", "full"
+                    )
+                    .filter(
+                        F.col("old").isNull()
+                        | F.col("cell1").isNull()
+                        | (F.col("old") != F.col("cell1"))
+                    )
                 )
-                .withColumn("kb", F.col("cell1"))
-                .repartition(len(changed), "kb")
-                .write.partitionBy("kb")
-                .mode("overwrite")
-                .parquet(path),
-                changed,
+                chg_tagged = (
+                    j.select(F.col("old").alias("c"))
+                    .unionByName(j.select(F.col("cell1").alias("c")))
+                    .filter(F.col("c").isNotNull())
+                    .withColumn("t", F.lit(0))
+                )
+                sync = live_tagged.unionByName(chg_tagged).distinct().collect()
+                live = {r["c"] for r in sync if r["t"] == 1}
+                changed = sorted({r["c"] for r in sync if r["t"] == 0})
+            refresh_log.append(
+                {"changed": len(changed), "cells": len(live)}
             )
-        release_checkpoint(a1)
+            if changed:
+                # the cell id rides IN the data (cell1) as well as in the
+                # partition path (kb) so a per-cell directory read keeps
+                # the label without path parsing; a changed cell the new
+                # assignment left empty writes no kb= dir, so the commit
+                # drops it from the serving map. Pinned schema: the next
+                # refresh's read-back runs no footer job
+                cells = a1.select("vec_id", "q", "cell1")
+                _READ_SCHEMA[("lww", serve.root)] = _nullable_top(cells.schema)
+                serve.write_buckets(
+                    lambda path: cells.filter(
+                        F.col("cell1").isin([int(c) for c in changed])
+                    )
+                    .withColumn("kb", F.col("cell1"))
+                    .repartition(len(changed), "kb")
+                    .write.partitionBy("kb")
+                    .mode("overwrite")
+                    .parquet(path),
+                    changed,
+                )
 
     def _fold(b, bid):
         _ann_upsert_batch(spark, a0_store, b, cent)
@@ -5122,13 +5091,16 @@ def _ivf_cadence_state(
 
     # every non-empty stream replays, so the closing refresh rides the
     # replay call; an empty one has no ingest index to refresh
-    run_fold_stream(
-        spark,
-        emb.select("vec_id", "embedding"),
-        ANN_MAINT_SRC_FILES,
-        _fold,
-        replay=_replay,
-    )
+    with Scope() as sc:
+        # lazy: the first fold's use materializes it once
+        cent = sc.checkpoint(cent)
+        run_fold_stream(
+            spark,
+            emb.select("vec_id", "embedding"),
+            ANN_MAINT_SRC_FILES,
+            _fold,
+            replay=_replay,
+        )
     return serve, refresh_log
 
 
@@ -5169,9 +5141,8 @@ def x_stream_ivf_cadence(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     serve, _ = _ivf_cadence_state(spark, sf, STREAM_IVF_CADENCE)
-    cells = serve.buckets()
     # audit path: per-cell counts read the whole serving index
-    final = spark.read.parquet(*sorted(cells.values()))
+    final = _lww_read(spark, serve)
     cells_out = (
         final.groupBy("cell1")
         .agg(
@@ -5197,7 +5168,7 @@ def x_stream_ivf_cadence(spark: SparkSession, sf: str) -> DataFrame:
         # oracle's q0 CTE is empty too (the ann_maintain mirror)
         return cells_out.orderBy("kind", "k")
     qcell = q0_rows[0]["cell1"]
-    cell_df = spark.read.parquet(cells[qcell])
+    cell_df = _lww_read(spark, serve, [qcell])
     q0 = cell_df.filter(F.col("vec_id") == 0).select(
         F.col("q").alias("qq")
     )
@@ -5884,265 +5855,250 @@ def _pipe_stream_state(
     def _fold(b, bid):
         # 0) size-tier the band history (strictly-older runs)
         folds.extend(lsh.fold(bid, kinds, STREAM_PIPE_CADENCE))
-        # every localCheckpoint below is consumed within this fold —
-        # released at the end (the CC-fold lesson: dead block sets
-        # accumulate across triggers x bench passes otherwise)
-        spent: list = []
-        # 1) GATE: spread the one-file batch across the pool first
-        # (the classifier + MinHash UDF otherwise run in one task).
-        # LAZY checkpoint: the tkbs collect below is a full
-        # aggregation and materializes it in the same job — per-
-        # trigger action count is wall-clock in a stream fold
-        gated = _pipe_gate(
-            b.repartition(spark.sparkContext.defaultParallelism)
-        ).localCheckpoint(eager=False)
-        spent.append(gated)
-        # 2) EXACT-HASH MERGE: per content hash keep (min doc_id =
-        # the keeper, min fb = the batch that FIRST saw the hash).
-        # fb makes the fresh-set replay-stable: a re-delivered batch
-        # recomputes the identical fresh set (fb == its own bid), so
-        # its keyed band runs rewrite in place with identical
-        # content — while a genuinely new batch never re-bands a
-        # text seen before (the dedup FUNNEL: each distinct text is
-        # shingled exactly once across the stream).
-        cand = (
-            gated.groupBy("h")
-            .agg(F.min("doc_id").alias("doc_id"))
-            .withColumn("hid", F.expr(_PIPE_HID_SPARK))
-            .withColumn("fb", F.lit(bid).cast("long"))
-            .withColumn(
-                "kb", F.pmod(F.xxhash64("h"), F.lit(16)).cast("int")
+        with Scope() as sc:
+            # 1) GATE: spread the one-file batch across the pool first
+            # (the classifier + MinHash UDF otherwise run in one task).
+            # LAZY checkpoint: the tkbs collect below is a full
+            # aggregation and materializes it in the same job — per-
+            # trigger action count is wall-clock in a stream fold
+            gated = sc.checkpoint(
+                _pipe_gate(b.repartition(spark.sparkContext.defaultParallelism))
             )
-        )
-        # exact-state touched buckets: kb is a pure function of h,
-        # so gated's kb set == cand's kb set
-        tkbs = sorted(
-            r["kb"]
-            for r in gated.select(
-                F.pmod(F.xxhash64("h"), F.lit(16)).cast("int").alias("kb")
+            # 2) EXACT-HASH MERGE: per content hash keep (min doc_id =
+            # the keeper, min fb = the batch that FIRST saw the hash).
+            # fb makes the fresh-set replay-stable: a re-delivered batch
+            # recomputes the identical fresh set (fb == its own bid), so
+            # its keyed band runs rewrite in place with identical
+            # content — while a genuinely new batch never re-bands a
+            # text seen before (the dedup FUNNEL: each distinct text is
+            # shingled exactly once across the stream).
+            cand = (
+                gated.groupBy("h")
+                .agg(F.min("doc_id").alias("doc_id"))
+                .withColumn("hid", F.expr(_PIPE_HID_SPARK))
+                .withColumn("fb", F.lit(bid).cast("long"))
+                .withColumn(
+                    "kb", F.pmod(F.xxhash64("h"), F.lit(16)).cast("int")
+                )
             )
-            .distinct()
-            .collect()
-        )
-        exact_bks = len(set(tkbs) & exact.buckets().keys())
-        merged = cand.select("h", "doc_id", "hid", "fb")
-        if exact_bks:
-            # bucket-pruned read: only the touched buckets' rows
-            # join the aggregate merge
-            prev = _lww_read(spark, exact, tkbs).select(
-                "h", "doc_id", "hid", "fb"
-            )
-            merged = merged.unionByName(prev)
-        # lazy: the LWW write job below materializes it, and the
-        # merge's touched set is EXACTLY tkbs (cand's buckets, plus
-        # prev rows re-read from those same buckets — h→kb is a pure
-        # function, so no row can land outside), so the merge's
-        # internal distinct-collect job is skipped too
-        merged = (
-            merged.groupBy("h")
-            .agg(
-                F.min("doc_id").alias("doc_id"),
-                F.min("hid").alias("hid"),
-                F.min("fb").alias("fb"),
-            )
-            .withColumn(
-                "kb", F.pmod(F.xxhash64("h"), F.lit(16)).cast("int")
-            )
-            .localCheckpoint(eager=False)
-        )
-        spent.append(merged)
-        bucketed_lww_merge(
-            spark,
-            exact,
-            merged.withColumn("v", F.lit(exact.seq).cast("long")),
-            key="h",
-            order_cols=(F.desc("v"),),
-            touched=tkbs,
-            preunioned=True,
-        )
-        # 3) MINHASH/PROBE the fresh texts only
-        fresh = merged.filter(F.col("fb") == bid).select("h", "hid")
-        fresh_docs = (
-            gated.dropDuplicates(["h"])
-            .join(F.broadcast(fresh), "h")
-            .select("hid", "text")
-        )
-        if verify:
-            # the verified pipeline also sketches the fresh texts —
-            # the estimate gate's MinHash signature AND the exact
-            # stage's DISTINCT shingle set (k=JACCARD_SHINGLE_K),
-            # each computed ONCE per distinct text at arrival: the
-            # doc store holds only these integer sketches (never the
-            # text — no second corpus copy at 100 TB), and a hot doc
-            # named by many candidate pairs is never re-shingled
-            # lazy (as is bands below): the probe's shard-set
-            # collect is a full aggregation over bands and
-            # materializes the whole fresh_docs → bands chain in one
-            # job — each eager checkpoint here was a separate one
-            fresh_docs = fresh_docs.withColumn(
-                "mhs",
-                THU.minhash_sig_udf(MINHASH_SHINGLE_K)("text"),
-            ).withColumn(
-                "shd",
-                F.array_distinct(
-                    THU.shingles_udf(JACCARD_SHINGLE_K)("text")
-                ),
-            ).localCheckpoint(eager=False)
-            spent.append(fresh_docs)
-        bands = fresh_docs.select(
-            "hid",
-            F.posexplode(
-                THU.lsh_buckets_udf(
-                    MINHASH_SHINGLE_K, BANDS, ROWS_PER_BAND
-                )("text")
-            ).alias("band", "bucket"),
-        ).localCheckpoint(eager=False)
-        spent.append(bands)
-        runs = {k: lsh.run_path(k, bid) for k in kinds}
-        # the ONE shared probe spelling (round-8 judge #2): epoch
-        # reads pruned to the fresh set's (band, bucket-shard) set
-        pio: list = []
-        # lazy: materialized by the first full action over it (the
-        # verify branch's member-bucket collect, or the pair count
-        # in the plain branch)
-        pairs = (
-            _lsh_probe_pairs(
-                spark,
-                lsh.live("bands", skip=bid),
-                bands,
-                id_col="hid",
-                io=pio,
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        spent.append(pairs)
-        # the bands run write only reads bands' already-persisted
-        # blocks (the probe's shard collect materialized them) and
-        # nothing in this trigger reads it back — submitted on a
-        # small pool so the funnel/absorb chain's jobs back-fill it
-        # instead of paying its full job latency serially (guide
-        # §2.6); joined before the fold returns
-        pool = ThreadPoolExecutor(max_workers=2)
-        futs = [
-            pool.submit(
-                lambda: bands.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(runs["bands"])
-            )
-        ]
-        store_bks = 0
-        if verify:
-            # 3v) STAGED FUNNEL in-stream (x_neardup_staged composed
-            # online): estimate gate over MinHash signatures, exact
-            # distinct-shingle Jaccard for survivors only. Partner
-            # rows (signature + text) for HISTORIC pair members come
-            # from the keyed doc store, bucket-pruned — O(candidate
-            # members), never a corpus re-read; batch members are at
-            # hand. This is the production drop rule: documents fall
-            # on VERIFIED pairs, not raw LSH candidates.
-            # no distinct: members feeds the anti-join (whose hkbs
-            # collect dedups anyway) and a broadcast left-semi build
-            # (dedups by key) — the distinct was a full exchange of
-            # the pair endpoints inside this action (round-10)
-            members = pairs.select(F.col("a").alias("hid")).unionByName(
-                pairs.select(F.col("b").alias("hid"))
-            )
-            hist_members = members.join(
-                fresh_docs.select("hid"), "hid", "left_anti"
-            )
-            hkbs = sorted(
-                r["k"]
-                for r in hist_members.select(
-                    F.pmod(F.xxhash64("hid"), F.lit(16))
-                    .cast("int")
-                    .alias("k")
+            # exact-state touched buckets: kb is a pure function of h,
+            # so gated's kb set == cand's kb set
+            tkbs = sorted(
+                r["kb"]
+                for r in gated.select(
+                    F.pmod(F.xxhash64("h"), F.lit(16)).cast("int").alias("kb")
                 )
                 .distinct()
                 .collect()
             )
-            store_bks = len(set(hkbs) & store.buckets().keys())
-            lookup = fresh_docs.select("hid", "mhs", "shd")
-            if store_bks:
-                lookup = lookup.unionByName(
-                    _lww_read(spark, store, hkbs)
-                    .join(
-                        F.broadcast(hist_members), "hid", "left_semi"
-                    )
-                    .select("hid", "mhs", "shd")
+            exact_bks = len(set(tkbs) & exact.buckets().keys())
+            merged = cand.select("h", "doc_id", "hid", "fb")
+            if exact_bks:
+                # bucket-pruned read: only the touched buckets' rows
+                # join the aggregate merge
+                prev = _lww_read(spark, exact, tkbs).select(
+                    "h", "doc_id", "hid", "fb"
                 )
-            # the lookup → estimate-gate → exact-verify chain is
-            # checkpointed LAZILY end to end: the ver write below is
-            # the one job that materializes all three (estf's later
-            # readers then hit the persisted blocks)
-            lookup = lookup.localCheckpoint(eager=False)
-            spent.append(lookup)
-            la = lookup.select(
-                F.col("hid").alias("a"),
-                F.col("mhs").alias("ma"),
-                F.col("shd").alias("sa"),
+                merged = merged.unionByName(prev)
+            # lazy: the LWW write job below materializes it, and the
+            # merge's touched set is EXACTLY tkbs (cand's buckets, plus
+            # prev rows re-read from those same buckets — h→kb is a pure
+            # function, so no row can land outside), so the merge's
+            # internal distinct-collect job is skipped too
+            merged = sc.checkpoint(
+                merged.groupBy("h")
+                .agg(
+                    F.min("doc_id").alias("doc_id"),
+                    F.min("hid").alias("hid"),
+                    F.min("fb").alias("fb"),
+                )
+                .withColumn(
+                    "kb", F.pmod(F.xxhash64("h"), F.lit(16)).cast("int")
+                )
             )
-            lb = lookup.select(
-                F.col("hid").alias("b"),
-                F.col("mhs").alias("mb"),
-                F.col("shd").alias("sb"),
+            bucketed_lww_merge(
+                spark,
+                exact,
+                merged.withColumn("v", F.lit(exact.seq).cast("long")),
+                key="h",
+                order_cols=(F.desc("v"),),
+                touched=tkbs,
+                preunioned=True,
             )
-            # estimate gate: codegen'd agreement count over the two
-            # already-computed signatures (x_neardup_staged spelling)
-            estf = (
-                pairs.join(F.broadcast(la), "a")
-                .join(F.broadcast(lb), "b")
-                .where(
-                    F.expr(
-                        "aggregate(zip_with(ma, mb, "
-                        "(x, y) -> CAST(x = y AS INT)), "
-                        f"0, (acc, v) -> acc + v) >= {_EST_GATE}"
+            # 3) MINHASH/PROBE the fresh texts only
+            fresh = merged.filter(F.col("fb") == bid).select("h", "hid")
+            fresh_docs = (
+                gated.dropDuplicates(["h"])
+                .join(F.broadcast(fresh), "h")
+                .select("hid", "text")
+            )
+            if verify:
+                # the verified pipeline also sketches the fresh texts —
+                # the estimate gate's MinHash signature AND the exact
+                # stage's DISTINCT shingle set (k=JACCARD_SHINGLE_K),
+                # each computed ONCE per distinct text at arrival: the
+                # doc store holds only these integer sketches (never the
+                # text — no second corpus copy at 100 TB), and a hot doc
+                # named by many candidate pairs is never re-shingled
+                # lazy (as is bands below): the probe's shard-set
+                # collect is a full aggregation over bands and
+                # materializes the whole fresh_docs → bands chain in one
+                # job — each eager checkpoint here was a separate one
+                fresh_docs = sc.checkpoint(
+                    fresh_docs.withColumn(
+                        "mhs",
+                        THU.minhash_sig_udf(MINHASH_SHINGLE_K)("text"),
+                    ).withColumn(
+                        "shd",
+                        F.array_distinct(
+                            THU.shingles_udf(JACCARD_SHINGLE_K)("text")
+                        ),
                     )
                 )
-                .localCheckpoint(eager=False)
-            )
-            spent.append(estf)
-            # exact verify of survivors: distinct-shingle Jaccard
-            # straight off the STORED sketch arrays — per-pair
-            # array_intersect, uncapped, no re-shingling
-            vd = estf.withColumn(
-                "i", F.size(F.array_intersect("sa", "sb"))
-            )
-            ver = (
-                vd.where(
-                    F.col("i").cast("double")
-                    / (F.size("sa") + F.size("sb") - F.col("i"))
-                    >= F.lit(JACCARD_THRESHOLD)
+            bands = sc.checkpoint(
+                fresh_docs.select(
+                    "hid",
+                    F.posexplode(
+                        THU.lsh_buckets_udf(
+                            MINHASH_SHINGLE_K, BANDS, ROWS_PER_BAND
+                        )("text")
+                    ).alias("band", "bucket"),
                 )
-                .select("a", "b")
-                .localCheckpoint(eager=False)
             )
-            spent.append(ver)
-            # ver first (one job materializes lookup → estf → ver),
-            # then the remaining two runs overlap on the store's pool
-            # (guide §2.6): both read already-persisted blocks, so
-            # the independent writes back-fill each other's task
-            # tails instead of paying two full job latencies
-            ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
-            overlap(
-                [
-                    lambda kind=kind, df_=df_: df_.coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(runs[kind])
-                    for kind, df_ in (
-                        ("cand", pairs),
-                        ("est", estf.select("a", "b")),
+            runs = {k: lsh.run_path(k, bid) for k in kinds}
+            # the ONE shared probe spelling (round-8 judge #2): epoch
+            # reads pruned to the fresh set's (band, bucket-shard) set
+            pio: list = []
+            # lazy: materialized by the first full action over it (the
+            # verify branch's member-bucket collect, or the pair count
+            # in the plain branch)
+            pairs = sc.checkpoint(
+                _lsh_probe_pairs(
+                    spark,
+                    lsh.live("bands", skip=bid),
+                    bands,
+                    id_col="hid",
+                    io=pio,
+                )
+                .distinct()
+            )
+            # the bands run write only reads bands' already-persisted
+            # blocks (the probe's shard collect materialized them) and
+            # nothing in this trigger reads it back — submitted on the
+            # scope's pool so the funnel/absorb chain's jobs back-fill it
+            # instead of paying its full job latency serially (guide
+            # §2.6); the scope joins it before the commit
+            sc.submit(
+                lambda: bands.coalesce(1)
+                .write.mode("overwrite")
+                .parquet(runs["bands"])
+            )
+            store_bks = 0
+            if verify:
+                # 3v) STAGED FUNNEL in-stream (x_neardup_staged composed
+                # online): estimate gate over MinHash signatures, exact
+                # distinct-shingle Jaccard for survivors only. Partner
+                # rows (signature + text) for HISTORIC pair members come
+                # from the keyed doc store, bucket-pruned — O(candidate
+                # members), never a corpus re-read; batch members are at
+                # hand. This is the production drop rule: documents fall
+                # on VERIFIED pairs, not raw LSH candidates.
+                # no distinct: members feeds the anti-join (whose hkbs
+                # collect dedups anyway) and a broadcast left-semi build
+                # (dedups by key) — the distinct was a full exchange of
+                # the pair endpoints inside this action (round-10)
+                members = pairs.select(F.col("a").alias("hid")).unionByName(
+                    pairs.select(F.col("b").alias("hid"))
+                )
+                hist_members = members.join(
+                    fresh_docs.select("hid"), "hid", "left_anti"
+                )
+                hkbs = sorted(
+                    r["k"]
+                    for r in hist_members.select(
+                        F.pmod(F.xxhash64("hid"), F.lit(16))
+                        .cast("int")
+                        .alias("k")
                     )
-                ]
-            )
-            # 5v) sketch-store upsert: fresh rows only, touched
-            # buckets (integer sketches only — never the text). The
-            # merge reads only fresh_docs' persisted blocks and
-            # touches state the forest absorb never looks at —
-            # submitted on the pool so it overlaps the cc_fold below
-            # (guide §2.6)
-            futs.append(
-                pool.submit(
+                    .distinct()
+                    .collect()
+                )
+                store_bks = len(set(hkbs) & store.buckets().keys())
+                lookup = fresh_docs.select("hid", "mhs", "shd")
+                if store_bks:
+                    lookup = lookup.unionByName(
+                        _lww_read(spark, store, hkbs)
+                        .join(
+                            F.broadcast(hist_members), "hid", "left_semi"
+                        )
+                        .select("hid", "mhs", "shd")
+                    )
+                # the lookup → estimate-gate → exact-verify chain is
+                # checkpointed LAZILY end to end: the ver write below is
+                # the one job that materializes all three (estf's later
+                # readers then hit the persisted blocks)
+                lookup = sc.checkpoint(lookup)
+                la = lookup.select(
+                    F.col("hid").alias("a"),
+                    F.col("mhs").alias("ma"),
+                    F.col("shd").alias("sa"),
+                )
+                lb = lookup.select(
+                    F.col("hid").alias("b"),
+                    F.col("mhs").alias("mb"),
+                    F.col("shd").alias("sb"),
+                )
+                # estimate gate: codegen'd agreement count over the two
+                # already-computed signatures (x_neardup_staged spelling)
+                estf = sc.checkpoint(
+                    pairs.join(F.broadcast(la), "a")
+                    .join(F.broadcast(lb), "b")
+                    .where(
+                        F.expr(
+                            "aggregate(zip_with(ma, mb, "
+                            "(x, y) -> CAST(x = y AS INT)), "
+                            f"0, (acc, v) -> acc + v) >= {_EST_GATE}"
+                        )
+                    )
+                )
+                # exact verify of survivors: distinct-shingle Jaccard
+                # straight off the STORED sketch arrays — per-pair
+                # array_intersect, uncapped, no re-shingling
+                vd = estf.withColumn(
+                    "i", F.size(F.array_intersect("sa", "sb"))
+                )
+                ver = sc.checkpoint(
+                    vd.where(
+                        F.col("i").cast("double")
+                        / (F.size("sa") + F.size("sb") - F.col("i"))
+                        >= F.lit(JACCARD_THRESHOLD)
+                    )
+                    .select("a", "b")
+                )
+                # ver first (one job materializes lookup → estf → ver),
+                # then the remaining two runs overlap (epoch_store.overlap)
+                # (guide §2.6): both read already-persisted blocks, so
+                # the independent writes back-fill each other's task
+                # tails instead of paying two full job latencies
+                ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
+                overlap(
+                    [
+                        lambda kind=kind, df_=df_: df_.coalesce(1)
+                        .write.mode("overwrite")
+                        .parquet(runs[kind])
+                        for kind, df_ in (
+                            ("cand", pairs),
+                            ("est", estf.select("a", "b")),
+                        )
+                    ]
+                )
+                # 5v) sketch-store upsert: fresh rows only, touched
+                # buckets (integer sketches only — never the text). The
+                # merge reads only fresh_docs' persisted blocks and
+                # touches state the forest absorb never looks at —
+                # submitted on the scope so it overlaps the cc_fold below
+                # (guide §2.6)
+                sc.submit(
                     bucketed_lww_merge,
                     spark,
                     store,
@@ -6157,22 +6113,19 @@ def _pipe_stream_state(
                     key="hid",
                     order_cols=(F.desc("v"),),
                 )
-            )
-            # 4v) forest absorbs VERIFIED pairs only — emptiness
-            # from the footers of the ver run written above (driver-
-            # side; an isEmpty() job re-computed what the write
-            # already recorded)
-            if _parquet_dir_rows(runs["ver"]):
-                cc_fold(ver, bid)
-        else:
-            # 4) FOREST ABSORB this trigger's new pairs
-            # (bucket-pruned reads + root→bucket index inside
-            # _cc_forest_fold)
-            if not pairs.isEmpty():
-                cc_fold(pairs, bid)
-        for fu in futs:
-            fu.result()
-        pool.shutdown()
+                # 4v) forest absorbs VERIFIED pairs only — emptiness
+                # from the footers of the ver run written above (driver-
+                # side; an isEmpty() job re-computed what the write
+                # already recorded)
+                if _parquet_dir_rows(runs["ver"]):
+                    cc_fold(ver, bid)
+            else:
+                # 4) FOREST ABSORB this trigger's new pairs
+                # (bucket-pruned reads + root→bucket index inside
+                # _cc_forest_fold)
+                if not pairs.isEmpty():
+                    cc_fold(pairs, bid)
+        # the commit waits for every write the scope joined
         lsh.commit_runs(bid, runs)
         live_counts.append(len(lsh.runs("bands")))
         io_audit.append(
@@ -6183,8 +6136,6 @@ def _pipe_stream_state(
                 **pio[0],
             }
         )
-        for df in spent:  # all consumed above; release the blocks
-            release_checkpoint(df)
 
     # crash re-delivery before grading: the exact merge
     # re-aggregates to identical rows (min is idempotent), the fb
@@ -6280,18 +6231,15 @@ def _pipe_grade(
         # the three funnel counts are independent single-pass
         # aggregations over disjoint state kinds — overlap them
         # (guide §2.6) instead of paying three serial job latencies
-        kinds_ = ("cand", "est", "ver")
-        with ThreadPoolExecutor(max_workers=3) as cpool:
-            counts = list(cpool.map(_kind_count, kinds_))
-        for (kind, alias), n in zip(
-            (
-                ("cand", "n_candidates"),
-                ("est", "n_estimate_pass"),
-                ("ver", "n_verified"),
-            ),
-            counts,
-        ):
-            out = out.withColumn(alias, F.lit(n).cast("long"))
+        stages = (
+            ("cand", "n_candidates"),
+            ("est", "n_estimate_pass"),
+            ("ver", "n_verified"),
+        )
+        with Scope() as sc:
+            futs = [sc.submit(_kind_count, kind) for kind, _ in stages]
+        for (_, alias), fut in zip(stages, futs):
+            out = out.withColumn(alias, F.lit(fut.result()).cast("long"))
             cols.append(alias)
     return out.select(*cols).orderBy("doc_id")
 
@@ -6455,187 +6403,173 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
 
     def _fold(b, bid):
         folds.extend(lsh.fold(bid, kinds, STREAM_ER_CADENCE))
-        # every localCheckpoint below is consumed within this fold —
-        # released at the end (the CC-fold GC lesson)
-        spent: list = []
-        # LAZY checkpoint (the CC-fold lesson: per-trigger action
-        # count IS wall-clock in a stream fold): the store-bucket
-        # collect right below materializes feat in the same job,
-        # and its result doubles as the record-store merge's
-        # touched set (skipping that merge's internal collect job)
-        feat = featurize_records(
-            b.repartition(spark.sparkContext.defaultParallelism)
-        ).localCheckpoint(eager=False)
-        spent.append(feat)
-        # blocking keys as a 1-band index: bucket = the (segment,
-        # deletion-key) STRING — the probe joins on bucket equality,
-        # so parity with the oracle's (seg, key) join is exact, and
-        # segment equality never materializes a cross-segment pair.
-        kdf = (
-            feat.select(
-                "rec_id",
-                "seg",
-                F.explode(F.expr(ER_DELKEYS_SQL)).alias("dk"),
-            )
-            .select(
-                "rec_id",
-                F.concat_ws("|", "seg", "dk").alias("bucket"),
-            )
-            .withColumn("band", F.lit(0).cast("int"))
-            # lazy: the fused control-plane sync right below scans
-            # kdf and materializes it (and feat, its ancestor)
-            .localCheckpoint(eager=False)
-        )
-        spent.append(kdf)
-        # ONE control-plane aggregation (round-10: was TWO full
-        # passes — a store-bucket distinct-collect over feat plus the
-        # probe's own (band, shard) collect over kdf) yields the
-        # store-bucket touched set AND the probe's (band,
-        # bucket-shard) set. Lossless fusion: every record emits >= 1
-        # deletion key (ER_DELKEYS_SQL always contains dstr itself,
-        # '' for a NULL dstr), so kdf's rec_id set equals feat's.
-        sync = kdf.agg(
-            F.collect_set(
-                F.pmod(F.xxhash64("rec_id"), F.lit(ER_STORE_KB)).cast(
-                    "int"
+        with Scope() as sc:
+            # LAZY checkpoint (the CC-fold lesson: per-trigger action
+            # count IS wall-clock in a stream fold): the store-bucket
+            # collect right below materializes feat in the same job,
+            # and its result doubles as the record-store merge's
+            # touched set (skipping that merge's internal collect job)
+            feat = sc.checkpoint(
+                featurize_records(
+                    b.repartition(spark.sparkContext.defaultParallelism)
                 )
-            ).alias("ks"),
-            F.collect_set(
-                F.struct("band", _bucket_shard("bucket").alias("bs"))
-            ).alias("ws"),
-        ).collect()[0]
-        fkbs = sorted(sync["ks"])
-        wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
-        runs = {k: lsh.run_path(k, bid) for k in kinds}
-        pio: list = []
-        # lazy: the fused members/count aggregation below is a full
-        # pass over pairs and materializes it
-        pairs = (
-            _lsh_probe_pairs(
-                spark,
-                lsh.live("bands", skip=bid),
-                kdf,
-                id_col="rec_id",
-                io=pio,
-                wanted=wanted,
             )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        spent.append(pairs)
-        # the kdf run write only reads kdf's already-persisted blocks
-        # (the fused sync materialized them) and nothing in this
-        # trigger reads it back — submit it on a small pool so the
-        # verify/absorb chain's jobs back-fill it instead of paying
-        # its full job latency serially (guide §2.6); joined before
-        # the fold returns
-        pool = ThreadPoolExecutor(max_workers=2)
-        futs = [
-            pool.submit(
+            # blocking keys as a 1-band index: bucket = the (segment,
+            # deletion-key) STRING — the probe joins on bucket equality,
+            # so parity with the oracle's (seg, key) join is exact, and
+            # segment equality never materializes a cross-segment pair.
+            kdf = sc.checkpoint(
+                feat.select(
+                    "rec_id",
+                    "seg",
+                    F.explode(F.expr(ER_DELKEYS_SQL)).alias("dk"),
+                )
+                .select(
+                    "rec_id",
+                    F.concat_ws("|", "seg", "dk").alias("bucket"),
+                )
+                .withColumn("band", F.lit(0).cast("int"))
+                # lazy: the fused control-plane sync right below scans
+                # kdf and materializes it (and feat, its ancestor)
+            )
+            # ONE control-plane aggregation (round-10: was TWO full
+            # passes — a store-bucket distinct-collect over feat plus the
+            # probe's own (band, shard) collect over kdf) yields the
+            # store-bucket touched set AND the probe's (band,
+            # bucket-shard) set. Lossless fusion: every record emits >= 1
+            # deletion key (ER_DELKEYS_SQL always contains dstr itself,
+            # '' for a NULL dstr), so kdf's rec_id set equals feat's.
+            sync = kdf.agg(
+                F.collect_set(
+                    F.pmod(F.xxhash64("rec_id"), F.lit(ER_STORE_KB)).cast(
+                        "int"
+                    )
+                ).alias("ks"),
+                F.collect_set(
+                    F.struct("band", _bucket_shard("bucket").alias("bs"))
+                ).alias("ws"),
+            ).collect()[0]
+            fkbs = sorted(sync["ks"])
+            wanted = {(r["band"], r["bs"]) for r in sync["ws"]}
+            runs = {k: lsh.run_path(k, bid) for k in kinds}
+            pio: list = []
+            # lazy: the fused members/count aggregation below is a full
+            # pass over pairs and materializes it
+            pairs = sc.checkpoint(
+                _lsh_probe_pairs(
+                    spark,
+                    lsh.live("bands", skip=bid),
+                    kdf,
+                    id_col="rec_id",
+                    io=pio,
+                    wanted=wanted,
+                )
+                .distinct()
+            )
+            # the kdf run write only reads kdf's already-persisted blocks
+            # (the fused sync materialized them) and nothing in this
+            # trigger reads it back — submit it on the scope's pool so
+            # the verify/absorb chain's jobs back-fill it instead of
+            # paying its full job latency serially (guide §2.6); the
+            # scope joins it before the commit
+            sc.submit(
                 lambda: kdf.coalesce(1)
                 .write.mode("overwrite")
                 .parquet(runs["bands"])
             )
-        ]
-        # VERIFY: batch members' attributes are at hand; historic
-        # members' come from the record store, bucket-pruned. The
-        # bucket set is computed over ALL candidate members (batch
-        # members' buckets over-read only — cheaper than an
-        # anti-join job per trigger); dropDuplicates keeps the
-        # attribute table exact under replay, when the re-delivered
-        # batch's own rows are already in the store.
-        # no distinct: members only ever feeds a broadcast left-semi
-        # build, which dedups by key anyway — the distinct was a full
-        # exchange of the pair endpoints inside the verify action at
-        # any scale (round-10)
-        members = pairs.select(F.col("a").alias("rec_id")).unionByName(
-            pairs.select(F.col("b").alias("rec_id"))
-        )
-        # ONE aggregation job yields BOTH the candidate count (the
-        # graded per-batch count row below — was its own
-        # pairs.count() job) and the candidate members' store-bucket
-        # set (was a distinct-collect over members): a member's
-        # bucket is a pure function of its id, so the union of the
-        # two endpoint bucket sets IS the members' bucket set
-        stats = pairs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(
-                F.pmod(F.xxhash64("a"), F.lit(ER_STORE_KB)).cast(
-                    "int"
+            # VERIFY: batch members' attributes are at hand; historic
+            # members' come from the record store, bucket-pruned. The
+            # bucket set is computed over ALL candidate members (batch
+            # members' buckets over-read only — cheaper than an
+            # anti-join job per trigger); dropDuplicates keeps the
+            # attribute table exact under replay, when the re-delivered
+            # batch's own rows are already in the store.
+            # no distinct: members only ever feeds a broadcast left-semi
+            # build, which dedups by key anyway — the distinct was a full
+            # exchange of the pair endpoints inside the verify action at
+            # any scale (round-10)
+            members = pairs.select(F.col("a").alias("rec_id")).unionByName(
+                pairs.select(F.col("b").alias("rec_id"))
+            )
+            # ONE aggregation job yields BOTH the candidate count (the
+            # graded per-batch count row below — was its own
+            # pairs.count() job) and the candidate members' store-bucket
+            # set (was a distinct-collect over members): a member's
+            # bucket is a pure function of its id, so the union of the
+            # two endpoint bucket sets IS the members' bucket set
+            stats = pairs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.collect_set(
+                    F.pmod(F.xxhash64("a"), F.lit(ER_STORE_KB)).cast(
+                        "int"
+                    )
+                ).alias("ka"),
+                F.collect_set(
+                    F.pmod(F.xxhash64("b"), F.lit(ER_STORE_KB)).cast(
+                        "int"
+                    )
+                ).alias("kb"),
+            ).collect()[0]
+            n_pairs = stats["n"]
+            hkbs = sorted(set(stats["ka"]) | set(stats["kb"]))
+            store_bks = len(set(hkbs) & store.buckets().keys())
+            attrs = feat.select("rec_id", "seg", "bal", "dstr", "tg")
+            if store_bks:
+                attrs = attrs.unionByName(
+                    _lww_read(spark, store, hkbs)
+                    .join(F.broadcast(members), "rec_id", "left_semi")
+                    .select("rec_id", "seg", "bal", "dstr", "tg")
                 )
-            ).alias("ka"),
-            F.collect_set(
-                F.pmod(F.xxhash64("b"), F.lit(ER_STORE_KB)).cast(
-                    "int"
+            # lazy: the first verify-broadcast build (la) materializes
+            # it; lb then reads the persisted blocks
+            attrs = sc.checkpoint(attrs.dropDuplicates(["rec_id"]))
+            la = attrs.select(
+                F.col("rec_id").alias("a"),
+                F.col("seg").alias("sega"),
+                F.col("bal").alias("bala"),
+                F.col("dstr").alias("dstra"),
+                F.col("tg").alias("tga"),
+            )
+            lb = attrs.select(
+                F.col("rec_id").alias("b"),
+                F.col("seg").alias("segb"),
+                F.col("bal").alias("balb"),
+                F.col("dstr").alias("dstrb"),
+                F.col("tg").alias("tgb"),
+            )
+            vd = (
+                pairs.join(F.broadcast(la), "a")
+                .join(F.broadcast(lb), "b")
+                .filter(
+                    (F.col("sega") == F.col("segb"))
+                    & (F.abs(F.col("bala") - F.col("balb")) <= ER_BAL_TOL)
+                    & (F.levenshtein("dstra", "dstrb") <= ER_DIGIT_EDIT_MAX)
                 )
-            ).alias("kb"),
-        ).collect()[0]
-        n_pairs = stats["n"]
-        hkbs = sorted(set(stats["ka"]) | set(stats["kb"]))
-        store_bks = len(set(hkbs) & store.buckets().keys())
-        attrs = feat.select("rec_id", "seg", "bal", "dstr", "tg")
-        if store_bks:
-            attrs = attrs.unionByName(
-                _lww_read(spark, store, hkbs)
-                .join(F.broadcast(members), "rec_id", "left_semi")
-                .select("rec_id", "seg", "bal", "dstr", "tg")
+                .withColumn("i", F.size(F.array_intersect("tga", "tgb")))
             )
-        # lazy: the first verify-broadcast build (la) materializes
-        # it; lb then reads the persisted blocks
-        attrs = attrs.dropDuplicates(["rec_id"]).localCheckpoint(
-            eager=False
-        )
-        spent.append(attrs)
-        la = attrs.select(
-            F.col("rec_id").alias("a"),
-            F.col("seg").alias("sega"),
-            F.col("bal").alias("bala"),
-            F.col("dstr").alias("dstra"),
-            F.col("tg").alias("tga"),
-        )
-        lb = attrs.select(
-            F.col("rec_id").alias("b"),
-            F.col("seg").alias("segb"),
-            F.col("bal").alias("balb"),
-            F.col("dstr").alias("dstrb"),
-            F.col("tg").alias("tgb"),
-        )
-        vd = (
-            pairs.join(F.broadcast(la), "a")
-            .join(F.broadcast(lb), "b")
-            .filter(
-                (F.col("sega") == F.col("segb"))
-                & (F.abs(F.col("bala") - F.col("balb")) <= ER_BAL_TOL)
-                & (F.levenshtein("dstra", "dstrb") <= ER_DIGIT_EDIT_MAX)
+            ver = sc.checkpoint(
+                vd.filter(
+                    F.col("i").cast("double")
+                    / (F.size("tga") + F.size("tgb") - F.col("i"))
+                    >= ER_JACCARD_MIN
+                )
+                .select("a", "b")
+                # lazy: the ver write right below materializes it; the
+                # isEmpty probe and the forest absorb then read the
+                # persisted blocks
             )
-            .withColumn("i", F.size(F.array_intersect("tga", "tgb")))
-        )
-        ver = (
-            vd.filter(
-                F.col("i").cast("double")
-                / (F.size("tga") + F.size("tgb") - F.col("i"))
-                >= ER_JACCARD_MIN
-            )
-            .select("a", "b")
-            # lazy: the ver write right below materializes it; the
-            # isEmpty probe and the forest absorb then read the
-            # persisted blocks
-            .localCheckpoint(eager=False)
-        )
-        spent.append(ver)
-        ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
-        # candidate count: this batch's 1-row partial (a keyed run =
-        # replay-idempotent; see the kinds comment above) and the fold
-        # of older partials into the standing epoch, under one commit
-        # — ALL driver-side with pyarrow (_count_rows / _write_counts)
-        _count_fold(candn, bid, n_pairs)
-        # record-store upsert: touched buckets only (records are
-        # immutable, so replay overwrites identical rows). The merge
-        # reads only feat's persisted blocks and touches state the
-        # forest absorb never looks at — submitted on the pool so it
-        # overlaps the cc_fold below (guide §2.6)
-        futs.append(
-            pool.submit(
+            ver.coalesce(1).write.mode("overwrite").parquet(runs["ver"])
+            # candidate count: this batch's 1-row partial (a keyed run =
+            # replay-idempotent; see the kinds comment above) and the fold
+            # of older partials into the standing epoch, under one commit
+            # — ALL driver-side with pyarrow (_count_rows / _write_counts)
+            _count_fold(candn, bid, n_pairs)
+            # record-store upsert: touched buckets only (records are
+            # immutable, so replay overwrites identical rows). The merge
+            # reads only feat's persisted blocks and touches state the
+            # forest absorb never looks at — submitted on the scope so
+            # it overlaps the cc_fold below (guide §2.6)
+            sc.submit(
                 bucketed_lww_merge,
                 spark,
                 store,
@@ -6654,22 +6588,17 @@ def _er_stream_state(spark: SparkSession, sf: str) -> dict:
                 # touched set
                 touched=fkbs,
             )
-        )
-        # forest absorbs VERIFIED matches only — emptiness comes
-        # from the footers of the ver run written just above
-        # (driver-side; an isEmpty() job re-computed what the write
-        # already recorded)
-        if _parquet_dir_rows(runs["ver"]):
-            cc_fold(ver, bid)
-        for fu in futs:
-            fu.result()
-        pool.shutdown()
+            # forest absorbs VERIFIED matches only — emptiness comes
+            # from the footers of the ver run written just above
+            # (driver-side; an isEmpty() job re-computed what the write
+            # already recorded)
+            if _parquet_dir_rows(runs["ver"]):
+                cc_fold(ver, bid)
+        # the commit waits for every write the scope joined
         lsh.commit_runs(bid, runs)
         io_audit.append(
             {"bid": bid, "store_bks_read": store_bks, **pio[0]}
         )
-        for df in spent:
-            release_checkpoint(df)
 
     # crash re-delivery before grading: blocking keys and pair sets
     # are pure functions of the records, the record store is keyed
@@ -6800,10 +6729,10 @@ def x_stream_entity_resolution(
         )
 
     # two independent grade aggregations — overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as gpool:
-        vf = gpool.submit(_ver_counts)
-        tf = gpool.submit(_truth_count)
-        (n_ver, n_tp), n_truth = vf.result(), tf.result()
+    with Scope() as sc:
+        vf = sc.submit(_ver_counts)
+        tf = sc.submit(_truth_count)
+    (n_ver, n_tp), n_truth = vf.result(), tf.result()
     return (
         reg.join(comp.select(F.col("id").alias("rec_id"), "comp"), "rec_id")
         .select(

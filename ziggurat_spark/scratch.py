@@ -18,6 +18,7 @@ import contextlib
 import os
 import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 _SESSION_ROOT: str | None = None
 _TRACK: list | None = None
@@ -78,8 +79,8 @@ def release_checkpoint(df) -> None:
     ContextCleaner collect the unreachable RDD (default period:
     30 min — effectively never inside a bench pass). Reaching the
     LogicalRDD's RDD through the analyzed plan and unpersisting IT
-    releases the blocks immediately, which is what the fold-local
-    ``spent`` lists and the iterative loops' round releases intend.
+    releases the blocks immediately, which is what ``Scope``'s exit
+    and the iterative loops' round releases rely on.
 
     Best-effort: a frame that is not a materialized checkpoint (or a
     plan that is not a bare LogicalRDD) is left alone."""
@@ -89,3 +90,52 @@ def release_checkpoint(df) -> None:
             plan.rdd().unpersist(False)
     except Exception:  # noqa: BLE001 — release is advisory
         pass
+
+
+class Scope:
+    """The barrier of one unit of fold work (Drizzle's micro-batch
+    barrier; Ziggurat commits a batch only after all of its work has
+    ended, R6). ``submit(fn, *a, **kw)`` runs ``fn`` on a 2-worker
+    pool made on the first submit; ``checkpoint(df)`` returns
+    ``df.localCheckpoint(eager=False)`` and registers it. Exit, on
+    success and on failure alike, joins every future (a raising body
+    first cancels those not yet started), then releases every
+    registered checkpoint, then re-raises the body's exception, else
+    the first submitted future's. So a failed trigger has no write in
+    flight when the failure reaches the caller, and no write reads a
+    released frame. Scopes nest; each releases only its own."""
+
+    def __init__(self) -> None:
+        self._pool: ThreadPoolExecutor | None = None
+        self._futures: list = []
+        self._frames: list = []
+
+    def __enter__(self) -> "Scope":
+        return self
+
+    def submit(self, fn, *args, **kwargs):
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(max_workers=2)
+        fut = self._pool.submit(fn, *args, **kwargs)
+        self._futures.append(fut)
+        return fut
+
+    def checkpoint(self, df):
+        return self.adopt(df.localCheckpoint(eager=False))
+
+    def adopt(self, df):
+        """Register a checkpoint another call returned (the star
+        alternation's final edge set) for release at exit."""
+        self._frames.append(df)
+        return df
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        try:
+            if self._pool is not None:
+                self._pool.shutdown(cancel_futures=exc is not None)
+        finally:
+            for df in self._frames:
+                release_checkpoint(df)
+        if exc is None:
+            for fut in self._futures:
+                fut.result()
